@@ -21,7 +21,11 @@ Everything is DataFrame-first; per-row compute is vectorized Arrow/pandas
 UDFs; no per-row Python in hot paths.
 """
 
+from ela_lib_spark.worker_imports import pin_zip_importers
+
 __version__ = "0.1.0"
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+
+pin_zip_importers()

@@ -105,6 +105,11 @@ def doc_fingerprint_md5(text_col) -> Column:
 
 @F.pandas_udf(T.StringType())
 def detect_lang(text: pd.Series) -> pd.Series:
+    """Stopword-profile language ID; see detect_lang_series."""
+    return detect_lang_series(text)
+
+
+def detect_lang_series(text: pd.Series) -> pd.Series:
     """Stopword-profile language ID (deterministic heuristic).
 
     Returns the language whose stopword hit-count over the first 200

@@ -247,6 +247,13 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
+def _audio_impl(payload: bytes) -> tuple[int, int, np.ndarray]:
+    digest = hashlib.sha256(payload).digest()
+    dur_ms = len(payload) * 8 // 16  # nominal 16 kbit/s stub
+    mfcc = np.frombuffer(digest, np.uint8)[:13].astype(np.float32) / 255.0
+    return dur_ms, 16000, mfcc
+
+
 def extract_audio_features(media: DataFrame) -> DataFrame:
     """Audio twin of extract_image_features: Arrow batches of binary
     payloads → typed feature rows. The DECODER is stubbed (duration
@@ -254,12 +261,6 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     deterministically from the digest) — swap `_audio_impl` for
     soundfile/librosa on a cluster that ships them; schema, batching
     and partitioning are the real contract."""
-
-    def _audio_impl(payload: bytes) -> tuple[int, int, np.ndarray]:
-        digest = hashlib.sha256(payload).digest()
-        dur_ms = len(payload) * 8 // 16  # nominal 16 kbit/s stub
-        mfcc = np.frombuffer(digest, np.uint8)[:13].astype(np.float32) / 255.0
-        return dur_ms, 16000, mfcc
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -30,49 +30,75 @@ from ela_lib_spark.functions.text import tokenize_col
 
 
 def _spread_input(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Project to `cols` and round-robin repartition when the source
-    scan yields fewer partitions than the cluster has slots (guide
-    §2.5 input skew: a small parquet file is one row group, so the
-    whole signature UDF otherwise runs on ONE task regardless of core
+    """Project to `cols` and hash-repartition on the doc key when the
+    input would run on fewer partitions than the cluster has slots
+    (guide §2.5 input skew: a small parquet file is one row group, so
+    the signature UDF otherwise runs on ONE task regardless of core
     count — measured 8.3 s single-task vs <1 s spread at sf1.0). The
-    shuffle moves only the projected (key, text) columns and is a
-    no-op decision at scale, where input splits already exceed
-    parallelism.
+    shuffle moves only the projected (key, text) columns and is not
+    taken at scale, where input partitions already exceed parallelism.
 
-    The spread hash-partitions on the doc key (cols[0]) instead of
-    round-robin (r6): a keyless repartition first pays a LOCAL SORT of
-    every input partition's full rows — text payload included — so
-    retried tasks reproduce the same row→partition assignment
-    (spark.sql.execution.sortBeforeRepartition, on by default since
-    SPARK-23207). Hashing the unique doc key spreads just as evenly,
-    is retry-deterministic by construction, and skips that sort."""
+    The decision runs no job. Without AQE the plan fixes the partition
+    count (scan splits or a shuffle width). Behind an AQE shuffle it is
+    fixed only at run time, and asking for it executes the upstream
+    stages (2 jobs, ~0.4 s when `near_dup` spreads `dedup_exact`
+    output). AQE's default parallelism-first coalescing yields fewer
+    than defaultParallelism partitions only when the shuffle holds
+    under defaultParallelism × minPartitionSize bytes, so the plan's
+    size estimate is compared with that; an unknown size (driver rows,
+    an RDD) counts as large. A wrong estimate costs speed, never a
+    result.
+
+    Hashing the unique doc key (r6) spreads as evenly as round-robin
+    and skips round-robin's retry-determinism LOCAL SORT of every input
+    partition's full rows, text included
+    (spark.sql.execution.sortBeforeRepartition, SPARK-23207)."""
     out = df.select(*cols)
-    sc = df.sparkSession.sparkContext
-    try:
-        cur = out.rdd.getNumPartitions()
-    except Exception:
-        return out
-    par = sc.defaultParallelism
-    if cur < par:
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    qe = out._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        min_part = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+        narrow = int(str(qe.optimizedPlan().stats().sizeInBytes())) < par * min_part
+    else:
+        narrow = out.rdd.getNumPartitions() < par
+    if narrow:
         out = out.repartition(2 * par, F.col(cols[0]))
     return out
 
 
 def _materialized_rowcount(df: DataFrame) -> int:
-    """Exact row count of an already-materialized cached frame without
-    running a job: a fully-built InMemoryRelation carries the row count
-    in its batch statistics, surfaced through the optimized plan's
-    stats (r6 — the count() this replaces re-scanned and decompressed
-    the whole cache, ~0.3-1 s per dedup query, purely to feed the
-    broadcast-size gate). Falls back to count() when the statistic is
-    unavailable (frame not cached / not yet materialized)."""
-    try:
-        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        if rc is not None and not rc.isEmpty():
-            return int(str(rc.get()))
-    except Exception:
-        pass
+    """Row count of a persisted frame, read without a job from its
+    cache's row counter (r6 — count() re-scanned and
+    decompressed the whole cache, ~0.3-1 s per dedup query, just to
+    feed the broadcast-size gate).
+
+    The counter is exact only on a FULLY materialized cache: a cache
+    that some job built partly (a limit, a failed action) has counted
+    only the partitions built so far. So it is read only after Spark
+    confirms that every partition's buffers are stored (one
+    driver-side block-status lookup per partition); otherwise, and for
+    frames that are not cached, this falls back to count(). A
+    partition rebuilt after losing its blocks is counted again, which
+    can only over-count — the safe side of the broadcast gate."""
+    cached = (df.sparkSession._jsparkSession.sharedState().cacheManager()
+              .lookupCachedData(df._jdf))
+    if cached.isDefined():
+        cache = cached.get().cachedRepresentation().cacheBuilder()
+        if cache.isCachedColumnBuffersLoaded():
+            return int(cache.rowCountStats().value())
     return df.count()
+
+
+# Size budget of this module's broadcast hints (guide §3.1): a frame is
+# hinted for broadcast only when its exact size, known on the driver,
+# fits. Above it the join stays shuffled.
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
+
+def _broadcast_if_fits(df: DataFrame, nbytes: int) -> DataFrame:
+    return F.broadcast(df) if nbytes <= BROADCAST_MAX_BYTES else df
 
 
 def dedup_exact(df: DataFrame, key: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -284,17 +310,21 @@ def _driver_union_find(pdf, edges: DataFrame) -> DataFrame:
     ntype = edges.schema["a"].dataType
     schema = T.StructType([T.StructField("node", ntype),
                            T.StructField("comp", ntype)])
+    rows = [(n, find(n)) for n in sorted(nodes)]
     # createDataFrame over driver data plans as a LogicalRDD whose size
     # statistics are UNKNOWN (Long.Max), so every downstream join
     # against it picks a shuffle — measured: the caller's tiny losers
     # anti-join shuffled the full corpus key column instead of
-    # broadcasting a few thousand labels (r6). The frame is bounded by
-    # the driver short-circuit cap by construction (nodes ≤ 2 edges ≤
-    # 2·DRIVER_CC_MAX_EDGES), so a broadcast hint is always safe here
-    # and propagates through the caller's filter/select to the join.
-    return F.broadcast(spark.createDataFrame(
-        [(n, find(n)) for n in sorted(nodes)], schema
-    ))
+    # broadcasting a few thousand labels (r6). The driver holds the
+    # labels, so their size is exact: an UnsafeRow spends 8 B of null
+    # bits and an 8 B slot per column, plus the bytes of string keys.
+    # The hint propagates through the caller's filter/select to the
+    # join; labels over the budget (e.g. long string keys) stay
+    # shuffled.
+    nbytes = 24 * len(rows)
+    if isinstance(ntype, T.StringType):
+        nbytes += sum(len(n.encode()) + len(c.encode()) for n, c in rows)
+    return _broadcast_if_fits(spark.createDataFrame(rows, schema), nbytes)
 
 
 def connected_components(edges: DataFrame, max_iter: int = 10,
@@ -414,7 +444,7 @@ def dedup_minhash_lsh(
         # sigs.count() paid a full scan+UDF pass whose only purpose
         # was cache population; folding it into the guard job saves
         # that pass at every scale). The row count for the broadcast
-        # gate comes from the materialized cache's own statistics —
+        # gate comes from the fully materialized cache's row counter —
         # zero jobs (r6; count() re-read the whole cache).
         n_sigs = _materialized_rowcount(sigs)
         # Broadcast the attach sides when the signature frame provably
@@ -424,11 +454,11 @@ def dedup_minhash_lsh(
         # shuffle joins of the sig frame (4.0 s → 2.2 s at sf1.0).
         # Above the cap the attach joins stay shuffled — at 10⁹ docs
         # the frame is ~0.5 TB and must never be broadcast.
-        bc_attach = n_sigs * (num_hashes * 8 + 24) <= 64 * 1024 * 1024
-        a = sigs.select(F.col(key).alias("a"), F.col("sig").alias("sig_a"))
-        b = sigs.select(F.col(key).alias("b"), F.col("sig").alias("sig_b"))
-        if bc_attach:
-            a, b = F.broadcast(a), F.broadcast(b)
+        sig_bytes = n_sigs * (num_hashes * 8 + 24)
+        a = _broadcast_if_fits(
+            sigs.select(F.col(key).alias("a"), F.col("sig").alias("sig_a")), sig_bytes)
+        b = _broadcast_if_fits(
+            sigs.select(F.col(key).alias("b"), F.col("sig").alias("sig_b")), sig_bytes)
         eq = F.size(F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
         ))
@@ -527,15 +557,15 @@ def simhash_near_dup_pairs(
         key, F.posexplode(F.array(*pair_keys)).alias("kid", "kval")
     )
     pairs, _ = _guarded_pairs(stacked, key, ["kid", "kval"], max_bucket_size)
-    # exact count from the materialized cache's statistics — zero jobs
-    # (r6; the count() it replaces re-read the whole cache)
+    # exact count from the fully materialized cache's row counter —
+    # zero jobs (r6; the count() it replaces re-read the whole cache)
     n_sigs = _materialized_rowcount(sigs)
-    ha = sigs.select(F.col(key).alias("a"), F.col("simhash").alias("ha"))
-    hb = sigs.select(F.col(key).alias("b"), F.col("simhash").alias("hb"))
-    if n_sigs * 24 <= 64 * 1024 * 1024:
-        # measured-size broadcast gate, same rationale as the LSH
-        # attach (guide §3.1); (key, simhash) is 16 B + row overhead
-        ha, hb = F.broadcast(ha), F.broadcast(hb)
+    # measured-size broadcast gate, same rationale as the LSH attach
+    # (guide §3.1); (key, simhash) is 16 B + row overhead
+    ha = _broadcast_if_fits(
+        sigs.select(F.col(key).alias("a"), F.col("simhash").alias("ha")), n_sigs * 24)
+    hb = _broadcast_if_fits(
+        sigs.select(F.col(key).alias("b"), F.col("simhash").alias("hb")), n_sigs * 24)
     return (
         pairs.join(ha, "a").join(hb, "b")
         .withColumn("hamming", hamming64(F.col("ha"), F.col("hb")))

@@ -84,6 +84,11 @@ def _srp_bucket_expr(vec_col, planes: np.ndarray) -> Column:
     return out
 
 
+def _stack_vectors(vecs: pd.Series) -> np.ndarray:
+    """An Arrow batch of array<double> vectors as one (batch × dim) matrix."""
+    return np.vstack([np.asarray(v, np.float64) for v in vecs])
+
+
 def _srp_bucket_udf(planes: np.ndarray):
     """Arrow pandas UDF: one (batch × dim) @ (dim × planes) matmul."""
     pt = np.ascontiguousarray(planes.T)
@@ -93,7 +98,7 @@ def _srp_bucket_udf(planes: np.ndarray):
     def bucket(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="int64")
-        m = np.vstack([np.asarray(v, np.float64) for v in vecs])
+        m = _stack_vectors(vecs)
         signs = (m @ pt) >= 0
         return pd.Series(signs @ weights)
 
@@ -334,7 +339,7 @@ def ivf_assign_col(vec_col, centroids: np.ndarray):
     def assign(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="int32")
-        m = np.vstack([np.asarray(v, np.float64) for v in vecs])
+        m = _stack_vectors(vecs)
         scores = c2[None, :] - 2.0 * (m @ ct)
         return pd.Series(scores.argmin(axis=1).astype(np.int32))
 

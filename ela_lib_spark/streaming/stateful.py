@@ -80,6 +80,15 @@ def _dedup_fn(key, pdfs, state: GroupState):
 _BLOOM_K = 4
 
 
+def _bloom_probes(h: np.ndarray, n_bits: np.uint64) -> list[np.ndarray]:
+    """The _BLOOM_K bit positions of each uint64 content hash."""
+    # odd-constant mix (bijective): shard rows share low bits
+    # (shard = hash mod n_shards), which would cluster probes
+    hm = h * np.uint64(0x9E3779B97F4A7C15)
+    h2 = ((hm >> np.uint64(33)) ^ hm) | np.uint64(1)
+    return [(hm + np.uint64(j) * h2) % n_bits for j in range(_BLOOM_K)]
+
+
 def _bloom_fn(n_words: int):
     """Per-shard fixed-size Bloom filter packed in int64 words.
     k=4 double-hashed probes derived from the 64-bit content hash
@@ -94,16 +103,9 @@ def _bloom_fn(n_words: int):
         changed = False
         for pdf in pdfs:
             h = pdf["content_hash"].to_numpy(np.int64).astype(np.uint64)
-            # odd-constant mix (bijective): shard rows share low bits
-            # (shard = hash mod n_shards), which would cluster probes
-            hm = h * np.uint64(0x9E3779B97F4A7C15)
-            h1 = hm
-            h2 = ((hm >> np.uint64(33)) ^ hm) | np.uint64(1)
+            pos_all = _bloom_probes(h, n_bits)
             present = np.ones(len(h), bool)
-            pos_all = []
-            for j in range(_BLOOM_K):
-                pos = (h1 + np.uint64(j) * h2) % n_bits
-                pos_all.append(pos)
+            for pos in pos_all:
                 present &= (
                     (words[(pos >> np.uint64(6)).astype(np.int64)]
                      >> (pos & np.uint64(63))) & np.uint64(1)

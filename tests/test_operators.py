@@ -1,5 +1,8 @@
 """Dedup, similarity, diff, DSL, export/import, analysis, multimodal."""
 
+import uuid
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -486,6 +489,79 @@ def test_connected_components_paths_agree(spark):
     assert drv == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
                    (20, 20), (21, 20), (22, 20)]
 
+
+
+@contextmanager
+def _jobs_in(spark):
+    """Collects the ids of the Spark jobs the block runs."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spread_input_runs_no_job(spark, docs, tmp_path):
+    """The spread is decided from the plan: asking an AQE-shuffled
+    input for its partition count would execute the upstream stages."""
+    from ela_lib_spark.operators.dedup import _spread_input
+
+    docs.write.parquet(str(tmp_path / "docs"))
+    df = spark.read.parquet(str(tmp_path / "docs"))
+    with _jobs_in(spark) as probe:
+        dedup_exact(df).select("doc_id", "text").rdd.getNumPartitions()
+    assert probe  # the old decision's cost; also shows the counter sees jobs
+    with _jobs_in(spark) as jobs:
+        out = _spread_input(dedup_exact(df), ["doc_id", "text"])
+    assert jobs == []
+    # a few rows behind a shuffle: AQE would coalesce them to one task
+    assert out.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
+    assert sorted(r.doc_id for r in out.collect()) == [1, 3, 4, 5, 6, 7]
+
+
+def test_materialized_rowcount_needs_a_full_cache(spark):
+    from ela_lib_spark.operators.dedup import _materialized_rowcount
+
+    df = spark.range(0, 1000, 1, 4).persist()
+    try:
+        df.limit(1).collect()  # builds only part of the cache
+        assert _materialized_rowcount(df) == 1000
+        with _jobs_in(spark) as jobs:  # now fully built: read without a job
+            assert _materialized_rowcount(df) == 1000
+        assert jobs == []
+    finally:
+        df.unpersist()
+
+
+def test_union_find_labels_broadcast_only_under_budget(spark, monkeypatch):
+    from ela_lib_spark.operators import dedup
+
+    keys = [f"{'k' * 200}{i:03d}" for i in range(20)]
+    edges = spark.createDataFrame([(keys[i], keys[i + 1]) for i in range(0, 20, 2)],
+                                  "a string, b string")
+    corpus = spark.createDataFrame([(k,) for k in keys], "doc_id string")
+
+    def anti_join_plan():
+        comps = dedup.connected_components(edges)
+        losers = comps.filter(F.col("node") != F.col("comp")).select(
+            F.col("node").alias("doc_id"))
+        out = corpus.join(losers, "doc_id", "left_anti")
+        return out._jdf.queryExecution().executedPlan().toString(), out
+
+    plan, out = anti_join_plan()
+    assert "BroadcastHashJoin" in plan
+    assert sorted(r.doc_id for r in out.collect()) == keys[0::2]
+    # ~8 KB of string labels against a 4 KB budget: shuffle join instead
+    monkeypatch.setattr(dedup, "BROADCAST_MAX_BYTES", 4096)
+    plan, out = anti_join_plan()
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan
+    assert sorted(r.doc_id for r in out.collect()) == keys[0::2]
 
 def test_png_codec_roundtrip_all_filters():
     """decode_png inverts encode_png across every filter type and

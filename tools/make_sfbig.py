@@ -23,6 +23,7 @@ import sys
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
@@ -69,7 +70,7 @@ def tiled(name: str, key_cols: dict[str, int], out_dir: str, k: int) -> None:
         for c in t.column_names:
             arr = t[c]
             if c in key_cols and i > 0:
-                cols[c] = pa.compute.add(arr, i * key_cols[c])
+                cols[c] = pc.add(arr, i * key_cols[c])
             else:
                 cols[c] = arr
         parts.append(pa.table(cols))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 import ela_lib_spark  # noqa: F401  (repo root on sys.path)
 from ela_lib_spark import BM25_B, BM25_K1
 from ela_lib_spark.functions.text import tokenize_col
+from ela_lib_spark.session import spread
 
 # Tokenizer contract shared with DuckDB oracles (functions/text.py).
 _TOK_SQL = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"
@@ -34,36 +35,6 @@ MATCH_OR_TERMS = ["window", "sort"]
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-def _spread(df: DataFrame, cols: list[str] | None = None,
-            key: str | None = None) -> DataFrame:
-    """Repartition (after projecting to `cols`) when the source scan
-    yields fewer partitions than the cluster has slots. The driver
-    testdata tables are single-digit-row-group parquet files, so every
-    map stage (tokenize, window sort, hash) otherwise runs on 1-6
-    tasks regardless of core count (guide §2.5, input skew:
-    repartition right after an unsplittable read). Scale-adaptive: at
-    real input sizes the scan has more splits than cores and this is
-    a no-op decision, so no config is tuned to local mode.
-
-    With `key` (a high-cardinality column) the spread hash-partitions
-    on it instead of round-robin (r6): a keyless repartition first
-    pays a local sort of each input partition's full rows for retry
-    determinism (spark.sql.execution.sortBeforeRepartition); hashing a
-    unique key spreads as evenly without the sort (A/B at 10x sf0.1:
-    the q_topk_per_group partial-window stage 1.37-1.55 → 0.90-1.11 s)."""
-    out = df.select(*cols) if cols else df
-    sc = df.sparkSession.sparkContext
-    try:
-        cur = out.rdd.getNumPartitions()
-    except Exception:
-        return out
-    par = sc.defaultParallelism
-    if cur < par:
-        out = (out.repartition(2 * par, F.col(key)) if key
-               else out.repartition(2 * par))
-    return out
 
 
 def _t(spark, sf_dir, name) -> DataFrame:
@@ -111,7 +82,7 @@ def q_token_stats(spark, sf_dir):
 
 def q_term_df(spark, sf_dir):
     """Document frequency per term (corpus-stats aggregation A5)."""
-    d = _spread(_docs(spark, sf_dir), ["text"])
+    d = spread(_docs(spark, sf_dir), ["doc_id", "text"])
     ex = d.select(F.explode(F.array_distinct(tokenize_col(F.col("text")))).alias("term"))
     return ex.groupBy("term").agg(F.count("*").cast("long").alias("df"))
 
@@ -409,9 +380,8 @@ def q_topk_per_group(spark, sf_dir):
     """Top-3 orders by price per order-priority (window top-k)."""
     from pyspark.sql import Window as W
 
-    o = _spread(_t(spark, sf_dir, "orders"),
-                ["o_orderpriority", "o_orderkey", "o_totalprice"],
-                key="o_orderkey")
+    o = spread(_t(spark, sf_dir, "orders"),
+               ["o_orderkey", "o_orderpriority", "o_totalprice"])
     w = W.partitionBy("o_orderpriority").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )

@@ -956,11 +956,6 @@ def collect_tombstones(spark: SparkSession, out_dir: str,
     return np.unique(t.toPandas()["doc_id"].to_numpy(np.int64))
 
 
-def postings_path(out_dir: str) -> str:
-    m = read_manifest(out_dir)
-    return os.path.join(out_dir, (m or {}).get("postings_dir", "postings"))
-
-
 def chunks_path(out_dir: str) -> str:
     m = read_manifest(out_dir)
     return os.path.join(out_dir, (m or {}).get("chunks_dir", "chunks"))

@@ -27,45 +27,7 @@ from ela_lib_spark.functions.hashing import (
     with_shingle_hashes,
 )
 from ela_lib_spark.functions.text import tokenize_col
-
-
-def _spread_input(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Project to `cols` and hash-repartition on the doc key when the
-    input would run on fewer partitions than the cluster has slots
-    (guide §2.5 input skew: a small parquet file is one row group, so
-    the signature UDF otherwise runs on ONE task regardless of core
-    count — measured 8.3 s single-task vs <1 s spread at sf1.0). The
-    shuffle moves only the projected (key, text) columns and is not
-    taken at scale, where input partitions already exceed parallelism.
-
-    The decision runs no job. Without AQE the plan fixes the partition
-    count (scan splits or a shuffle width). Behind an AQE shuffle it is
-    fixed only at run time, and asking for it executes the upstream
-    stages (2 jobs, ~0.4 s when `near_dup` spreads `dedup_exact`
-    output). AQE's default parallelism-first coalescing yields fewer
-    than defaultParallelism partitions only when the shuffle holds
-    under defaultParallelism × minPartitionSize bytes, so the plan's
-    size estimate is compared with that; an unknown size (driver rows,
-    an RDD) counts as large. A wrong estimate costs speed, never a
-    result.
-
-    Hashing the unique doc key (r6) spreads as evenly as round-robin
-    and skips round-robin's retry-determinism LOCAL SORT of every input
-    partition's full rows, text included
-    (spark.sql.execution.sortBeforeRepartition, SPARK-23207)."""
-    out = df.select(*cols)
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    qe = out._jdf.queryExecution()
-    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        min_part = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
-        narrow = int(str(qe.optimizedPlan().stats().sizeInBytes())) < par * min_part
-    else:
-        narrow = out.rdd.getNumPartitions() < par
-    if narrow:
-        out = out.repartition(2 * par, F.col(cols[0]))
-    return out
+from ela_lib_spark.session import spread
 
 
 def _materialized_rowcount(df: DataFrame) -> int:
@@ -122,9 +84,9 @@ def minhash_signatures(
     xxhash64 over token hashes (with_shingle_hashes) — no shingle
     strings are ever built (~6× less JVM allocation per shingle).
     Input is spread across the cluster first when the scan is
-    under-parallel (_spread_input)."""
+    under-parallel (session.spread)."""
     staged = with_shingle_hashes(
-        _spread_input(df, [key, text_col]), tokenize_col(F.col(text_col)),
+        spread(df, [key, text_col]), tokenize_col(F.col(text_col)),
         shingle_n, "_sh", keep=[key]
     )
     mh = make_minhash_udf(num_hashes)
@@ -133,76 +95,22 @@ def minhash_signatures(
 
 def lsh_candidate_pairs(
     sigs: DataFrame, key: str = "doc_id", num_bands: int = 16, rows_per_band: int = 4,
-    max_bucket_size: int = 10_000, carry_sig: bool = False,
+    max_bucket_size: int = 10_000,
 ) -> DataFrame:
-    """Docs sharing any band hash → candidate pair (a < b).
+    """Docs sharing any band hash → distinct candidate pairs (a, b),
+    a < b.
 
     Scale guard: a degenerate bucket of n docs yields n²/2 pairs, so
     buckets over `max_bucket_size` are dropped (a bucket that large is
     a boilerplate cluster; its members still pair up through their
     other, more selective bands).
 
-    Default (carry_sig=False, the 100-TB path): the band explode,
-    bucket-size guard and pair self-join all run over a KEY-ONLY
-    frame (~24 B per (doc, band) row) — signatures are attached by
-    the caller exactly once per pair side (dedup_minhash_lsh), never
-    multiplied through the band explode. The guarded bucket-member
-    frame is persisted so the guard aggregate computes once and both
-    self-join sides read it from cache (_guarded_pairs; the r5 shape
-    recomputed the banded frame for every AQE leaf branch — measured
-    four ~24 MB banded exchanges + two guard chains per query at
-    sf1.0, r6).
-
-    `carry_sig=True` (kept for callers that verify inline at small
-    scale) carries the full signature array through the band explode
-    so est-Jaccard can be computed on the join output directly
-    (VERDICT r4 #2). Cost: the banded shuffle carries num_hashes×8 B
-    per (doc, band) row — measured 346 MB per join side at sf1.0
-    against a 26 MB signature frame, which is why the default path no
-    longer does this (r6). Output rows are NOT deduplicated across
-    bands when carry_sig=True. Its r5 collision pruning is unchanged:
-    bucket sizes from a key-only projection; only 2..max_bucket_size
-    buckets survive; AQE broadcasts the surviving set when it fits.
-
-    Dropping singleton buckets is output-invariant: a bucket of one
-    doc can never produce a pair."""
-    if not carry_sig:
-        return _lsh_key_pairs(sigs, key, num_bands, rows_per_band,
-                              max_bucket_size)[0]
-    cols = [key, "sig"]
-    banded = sigs.select(*cols, *band_cols(F.col("sig"), num_bands, rows_per_band))
-    stacked = banded.selectExpr(
-        *cols,
-        "stack({}, {}) as (band, bh)".format(
-            num_bands, ", ".join(f"{b}, band_{b}" for b in range(num_bands))
-        ),
-    )
-    colliding = (
-        stacked.select("band", "bh")
-        .groupBy("band", "bh")
-        .agg(F.count("*").alias("_n"))
-        .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
-        .drop("_n")
-    )
-    stacked = stacked.join(colliding, ["band", "bh"])
-    l = stacked.select(F.col(key).alias("a"), F.col("sig").alias("sig_a"),
-                       "band", "bh")
-    r = stacked.select(F.col(key).alias("b"), F.col("sig").alias("sig_b"),
-                       "band", "bh")
-    return (
-        l.join(r, ["band", "bh"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "sig_a", "sig_b")
-    )
-
-
-def _lsh_key_pairs(
-    sigs: DataFrame, key: str, num_bands: int, rows_per_band: int,
-    max_bucket_size: int = 10_000,
-) -> tuple[DataFrame, DataFrame]:
-    """Key-only LSH candidate pairs + the persisted guarded handle
-    (so lifecycle-owning callers can unpersist it — see
-    _guarded_pairs)."""
+    The band explode, bucket-size guard and pair self-join all run
+    over a KEY-ONLY frame (~24 B per (doc, band) row): signatures are
+    attached by the caller exactly once per pair side
+    (dedup_minhash_lsh), never multiplied through the band explode
+    (r6; carrying them measured 346 MB per join side at sf1.0 against
+    a 26 MB signature frame)."""
     banded = sigs.select(key, *band_cols(F.col("sig"), num_bands, rows_per_band))
     stacked = banded.selectExpr(
         key,
@@ -214,10 +122,10 @@ def _lsh_key_pairs(
 
 
 def _guarded_pairs(stacked: DataFrame, key: str, bucket_cols: list[str],
-                   max_bucket_size: int) -> tuple[DataFrame, DataFrame]:
+                   max_bucket_size: int) -> DataFrame:
     """Distinct candidate pairs (a < b) from a KEY-ONLY stacked frame
     (key, *bucket_cols), restricted to buckets with 2..max_bucket_size
-    members. Returns (pairs, guarded_handle).
+    members.
 
     Guard = a count window over the bucket key: because the stacked
     frame is KEY-ONLY (~24 B/row), windowing it is cheap, computes the
@@ -229,19 +137,18 @@ def _guarded_pairs(stacked: DataFrame, key: str, bucket_cols: list[str],
     attach to the distinct pair set afterwards, see dedup_minhash_lsh).
 
     The guarded frame — bucket members surviving the size filter — is
-    persisted and materialized EAGERLY before the self-join: without
-    it, both join sides are independent AQE leaf stages that each
-    recompute the banded frame from scratch (measured at sf1.0, r6:
-    four ~24 MB banded exchanges per query, because exchange reuse
-    never de-duplicated them). In the sparse-dup case the guarded
-    frame is tiny (colliding-bucket members only — 69k of 800k banded
-    rows at sf1.0), so both self-join sides read a few MB from cache.
-    Callers that can scope the lifetime (dedup_minhash_lsh) unpersist
-    the handle when their edge set is materialized; pipeline-style
-    callers keep it pinned for the plan's lifetime (same policy as the
-    persisted signature frame). Dropping singleton buckets is
-    output-invariant: a bucket of one doc can never produce a pair."""
-    from pyspark import StorageLevel
+    checkpointed EAGERLY before the self-join: without it, both join
+    sides are independent AQE leaf stages that each recompute the
+    banded frame from scratch (measured at sf1.0, r6: four ~24 MB
+    banded exchanges per query, because exchange reuse never
+    de-duplicated them). In the sparse-dup case the guarded frame is
+    tiny (colliding-bucket members only — 69k of 800k banded rows at
+    sf1.0), so both self-join sides read a few MB of local blocks. The
+    blocks live as long as the returned pairs frame and leave no
+    session cache entry behind; as with every local checkpoint, a lost
+    executor fails a later read instead of recomputing it. Dropping
+    singleton buckets is output-invariant: a bucket of one doc can
+    never produce a pair."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy(*bucket_cols)
@@ -249,27 +156,15 @@ def _guarded_pairs(stacked: DataFrame, key: str, bucket_cols: list[str],
         stacked.withColumn("_n", F.count("*").over(w))
         .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
         .drop("_n")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    guarded.count()  # pin before the self-join fan-out (see docstring)
+    ).localCheckpoint(eager=True)
     l = guarded.select(F.col(key).alias("a"), *bucket_cols)
     r = guarded.select(F.col(key).alias("b"), *bucket_cols)
-    pairs = (
+    return (
         l.join(r, bucket_cols)
         .filter(F.col("a") < F.col("b"))
         .select("a", "b")
         .distinct()
     )
-    return pairs, guarded
-
-
-def minhash_jaccard(sigs: DataFrame, pairs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Estimated Jaccard = fraction of agreeing signature positions."""
-    a = sigs.select(F.col(key).alias("a"), F.col("sig").alias("sig_a"))
-    b = sigs.select(F.col(key).alias("b"), F.col("sig").alias("sig_b"))
-    j = pairs.join(a, "a").join(b, "b")
-    eq = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                         lambda v: v))
-    return j.select("a", "b", (eq / F.size("sig_a")).alias("est_jaccard"))
 
 
 # Driver short-circuit bound for connected_components: 2M edges ≈
@@ -411,10 +306,11 @@ def dedup_minhash_lsh(
 ) -> DataFrame:
     """Near-dup removal: keep min-key doc per near-dup cluster.
 
-    Signatures are persisted for the pipeline's lifetime — the UDF
-    kernel runs once even though the fused band join reads them on
-    both sides. 64×8 B per doc ⇒ ~0.5 TB cluster-wide at 10⁹ docs:
-    MEMORY_AND_DISK is the right level at scale."""
+    Signatures are persisted for the duration of the call and released
+    before it returns — the UDF kernel runs once even though the guard
+    and both attach joins read them, and the returned frame reads only
+    the component labels. 64×8 B per doc ⇒ ~0.5 TB cluster-wide at 10⁹
+    docs: MEMORY_AND_DISK is the right level at scale."""
     from pyspark import StorageLevel
 
     sigs = minhash_signatures(df, key, text_col, num_hashes, shingle_n).persist(
@@ -435,9 +331,8 @@ def dedup_minhash_lsh(
         # the sig frame both sides — gone since r5's key-only collision
         # pruning. Verification math is unchanged: est-Jaccard =
         # fraction of agreeing positions, ≥ threshold keeps the edge.
-        cand, guarded = _lsh_key_pairs(sigs, key, num_bands,
-                                       num_hashes // num_bands)
-        # The guard materialization above (one linear job: scan → UDF →
+        cand = lsh_candidate_pairs(sigs, key, num_bands, num_hashes // num_bands)
+        # The guard checkpoint above (one linear job: scan → UDF →
         # band explode → count window) populates the lazily-persisted
         # sigs cache en route — the UDF runs exactly once, with no
         # standalone warm-up action (r6: the previous eager
@@ -476,18 +371,14 @@ def dedup_minhash_lsh(
         return df.join(losers, key, "left_anti")
     finally:
         sigs.unpersist()
-        try:
-            guarded.unpersist()
-        except NameError:
-            pass  # failed before candidate generation
 
 
 def simhash_signatures(df: DataFrame, key: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Token hashing runs JVM-side; the UDF only does the bit votes.
     Input is spread across the cluster first when the scan is
-    under-parallel (_spread_input)."""
+    under-parallel (session.spread)."""
     sh = make_simhash_udf()
-    return _spread_input(df, [key, text_col]).select(
+    return spread(df, [key, text_col]).select(
         key, sh(token_hash_col(tokenize_col(F.col(text_col)))).alias("simhash")
     )
 
@@ -507,20 +398,15 @@ def simhash_near_dup_pairs(
     blowup per bucket) bounded at 10⁹⁺ docs where 16-bit chunk keys
     degenerate. `max_bucket_size` additionally drops pathological
     buckets (boilerplate clusters)."""
-    from pyspark import StorageLevel
-
-    # Pin the signature frame before the fan-out: the guard aggregate
-    # and both self-join sides are independent AQE leaf stages, so an
-    # unpersisted input re-runs the signature computation (UDF + full
-    # corpus scan) once per branch — measured 3 executions per query
-    # at sf1.0 (r6). The frame is (key, simhash) — 16 B/doc, cheap to
-    # keep for the pipeline's lifetime (same policy as the LSH path's
-    # signature persist). The persist is LAZY here: the guard
-    # materialization below is one linear job over sigs, so it
-    # populates this cache en route and no standalone warm-up action
-    # is needed (the n_sigs count for the broadcast gate then reads
-    # cached 16 B rows — see _guarded_pairs / dedup_minhash_lsh).
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    # Pin the signature frame before the fan-out: the guard window
+    # and both attach joins read it, and an unpinned input re-runs the
+    # signature computation (UDF + full corpus scan) once per branch —
+    # measured 3 executions per query at sf1.0 (r6). The frame is
+    # (key, simhash) — 16 B/doc. It is checkpointed, not cached: the
+    # returned pairs frame reads it, so its blocks live as long as that
+    # frame and no session cache entry outlives the call
+    # (see _guarded_pairs).
+    sigs = sigs.localCheckpoint(eager=True)
     n_blocks = max_hamming + 2
     widths = [(64 // n_blocks) + (1 if i < 64 % n_blocks else 0)
               for i in range(n_blocks)]
@@ -539,13 +425,13 @@ def simhash_near_dup_pairs(
                 F.shiftleft(F.col(f"blk{i}").cast("long"), 32)
                 .bitwiseOR(F.col(f"blk{j}"))
             )
-    # Key-only candidate generation (r6, mirrors _lsh_key_pairs): the
+    # Key-only candidate generation (r6, mirrors lsh_candidate_pairs): the
     # stacked frame, guard aggregate and pair self-join see only
     # (key, kid, kval) — the simhash payload is attached to the
     # DISTINCT pair set afterwards via two equi-joins against the
-    # persisted signature frame, so it is never multiplied through the
+    # pinned signature frame, so it is never multiplied through the
     # 10-way key explode or shuffled with the banded rows. The guarded
-    # bucket-member frame is persisted so the guard computes once
+    # bucket-member frame is checkpointed so the guard computes once
     # (_guarded_pairs; the r5 shape recomputed the exploded frame for
     # every AQE leaf branch). Pair set and hamming filter are
     # unchanged, so the output rows are identical: distinct bucket
@@ -556,10 +442,9 @@ def simhash_near_dup_pairs(
     stacked = base.select(
         key, F.posexplode(F.array(*pair_keys)).alias("kid", "kval")
     )
-    pairs, _ = _guarded_pairs(stacked, key, ["kid", "kval"], max_bucket_size)
-    # exact count from the fully materialized cache's row counter —
-    # zero jobs (r6; the count() it replaces re-read the whole cache)
-    n_sigs = _materialized_rowcount(sigs)
+    pairs = _guarded_pairs(stacked, key, ["kid", "kval"], max_bucket_size)
+    # exact count, one job over the checkpointed 16 B rows
+    n_sigs = sigs.count()
     # measured-size broadcast gate, same rationale as the LSH attach
     # (guide §3.1); (key, simhash) is 16 B + row overhead
     ha = _broadcast_if_fits(
@@ -598,18 +483,14 @@ def winnow_overlap_pairs(
     keep = (F.col("_df") >= 2) if max_fp_df is None \
         else (F.col("_df") >= 2) & (F.col("_df") <= max_fp_df)
     dfreq = ex.groupBy("fp").agg(F.count("*").alias("_df"))
-    # pin the guarded frame (r6): the guard aggregate and both
+    # checkpoint the guarded frame (r6): the guard aggregate and both
     # self-join sides are independent AQE leaf stages that would each
     # recompute the winnowing UDF + explode from scratch (same failure
     # mode measured on the LSH path — see _guarded_pairs); the
     # surviving shared-fingerprint members are small in the sparse
-    # case, so both sides read a few MB from cache instead
-    from pyspark import StorageLevel
-
-    ex = ex.join(dfreq.filter(keep).drop("_df"), "fp").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    ex.count()
+    # case, so both sides read a few MB of blocks that live as long as
+    # the returned frame
+    ex = ex.join(dfreq.filter(keep).drop("_df"), "fp").localCheckpoint(eager=True)
     l = ex.select(F.col(key).alias("a"), "fp")
     r = ex.select(F.col(key).alias("b"), "fp")
     return (
@@ -646,15 +527,11 @@ def ngram_jaccard_pairs(
     keep = (F.col("_df") >= 2) if max_shingle_df is None \
         else (F.col("_df") >= 2) & (F.col("_df") <= max_shingle_df)
     dfreq = ex.groupBy("g").agg(F.count("*").alias("_df"))
-    # pin the guarded frame (r6): same AQE leaf-stage recompute fix as
-    # winnow_overlap_pairs / _guarded_pairs — without it the shingle
-    # explode is recomputed for the guard and both self-join sides
-    from pyspark import StorageLevel
-
-    ex = ex.join(dfreq.filter(keep).drop("_df"), "g").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    ex.count()
+    # checkpoint the guarded frame (r6): same AQE leaf-stage recompute
+    # fix as winnow_overlap_pairs / _guarded_pairs — without it the
+    # shingle explode is recomputed for the guard and both self-join
+    # sides
+    ex = ex.join(dfreq.filter(keep).drop("_df"), "g").localCheckpoint(eager=True)
     l = ex.select(F.col(key).alias("a"), "g")
     r = ex.select(F.col(key).alias("b"), "g")
     common = (

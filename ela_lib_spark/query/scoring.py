@@ -34,8 +34,3 @@ def bm25_contrib(
         * tf
         / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avg_dl))
     )
-
-
-def max_impact_bound(block_max_impact: float, idf_val: float) -> float:
-    """Block upper bound: idf * (k1+1) * max(tf/(tf + k1*norm))."""
-    return idf_val * (BM25_K1 + 1.0) * block_max_impact

@@ -13,7 +13,8 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -73,3 +74,43 @@ def get_spark(
     if ship_package:
         _ship_package(spark)
     return spark
+
+
+def spread(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Project to `cols` and hash-repartition on `cols[0]` when the
+    input would run on fewer partitions than the cluster has slots
+    (guide §2.5 input skew: a small parquet file is one row group, so
+    every map stage after the read — a signature UDF, tokenize, a
+    window sort — otherwise runs on ONE task regardless of core count;
+    measured 8.3 s single-task vs <1 s spread for the minhash UDF at
+    sf1.0). The shuffle moves only the projected columns and is not
+    taken at scale, where input partitions already exceed parallelism.
+
+    `cols[0]` must be a high-cardinality key (the doc id): hashing a
+    unique key spreads as evenly as round-robin and skips round-robin's
+    retry-determinism LOCAL SORT of every input partition's full rows
+    (spark.sql.execution.sortBeforeRepartition, SPARK-23207).
+
+    The decision runs no job. Without AQE the plan fixes the partition
+    count (scan splits or a shuffle width). Behind an AQE shuffle it is
+    fixed only at run time, and asking for it executes the upstream
+    stages (2 jobs, ~0.4 s when `near_dup` spreads `dedup_exact`
+    output). AQE's default parallelism-first coalescing yields fewer
+    than defaultParallelism partitions only when the shuffle holds
+    under defaultParallelism × minPartitionSize bytes, so the plan's
+    size estimate is compared with that; an unknown size (driver rows,
+    an RDD) counts as large. A wrong estimate costs speed, never a
+    result."""
+    out = df.select(*cols)
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    qe = out._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        min_part = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+        narrow = int(str(qe.optimizedPlan().stats().sizeInBytes())) < par * min_part
+    else:
+        narrow = out.rdd.getNumPartitions() < par
+    if narrow:
+        out = out.repartition(2 * par, F.col(cols[0]))
+    return out

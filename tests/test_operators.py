@@ -510,7 +510,7 @@ def _jobs_in(spark):
 def test_spread_input_runs_no_job(spark, docs, tmp_path):
     """The spread is decided from the plan: asking an AQE-shuffled
     input for its partition count would execute the upstream stages."""
-    from ela_lib_spark.operators.dedup import _spread_input
+    from ela_lib_spark.session import spread
 
     docs.write.parquet(str(tmp_path / "docs"))
     df = spark.read.parquet(str(tmp_path / "docs"))
@@ -518,11 +518,40 @@ def test_spread_input_runs_no_job(spark, docs, tmp_path):
         dedup_exact(df).select("doc_id", "text").rdd.getNumPartitions()
     assert probe  # the old decision's cost; also shows the counter sees jobs
     with _jobs_in(spark) as jobs:
-        out = _spread_input(dedup_exact(df), ["doc_id", "text"])
+        out = spread(dedup_exact(df), ["doc_id", "text"])
     assert jobs == []
     # a few rows behind a shuffle: AQE would coalesce them to one task
     assert out.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
     assert sorted(r.doc_id for r in out.collect()) == [1, 3, 4, 5, 6, 7]
+
+
+def test_dedup_operators_leave_no_session_cache(spark, docs):
+    """Every frame a dedup operator pins is either checkpointed (read
+    by the lazy result) or persisted and released before it returns,
+    so repeated calls on distinct inputs add no CacheManager entry."""
+    from ela_lib_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        winnow_overlap_pairs,
+    )
+
+    ops = {
+        "lsh_candidate_pairs": lambda d: lsh_candidate_pairs(minhash_signatures(d)),
+        "simhash_near_dup_pairs": lambda d: simhash_near_dup_pairs(simhash_signatures(d)),
+        "winnow_overlap_pairs": winnow_overlap_pairs,
+        "ngram_jaccard_pairs": ngram_jaccard_pairs,
+        "dedup_minhash_lsh": dedup_minhash_lsh,
+    }
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    # the shared test session may hold other tests' caches
+    n_before = cm.numCachedEntries()
+    leaked = {}
+    for i, (name, op) in enumerate(ops.items()):
+        n = cm.numCachedEntries()
+        op(docs.filter(F.col("doc_id") != i)).collect()
+        leaked[name] = cm.numCachedEntries() - n
+    assert leaked == dict.fromkeys(ops, 0)
+    assert cm.isEmpty() == (n_before == 0)
 
 
 def test_materialized_rowcount_needs_a_full_cache(spark):

@@ -281,31 +281,6 @@ def test_upsert_probe_bucket_pushdown(spark, tmp_root):
             assert (col[1:] >= col[:-1]).all(), fn
 
 
-def test_lsh_guard_never_shuffles_signatures(spark, pages_path):
-    """Collision pruning (r5): the bucket-size guard must aggregate a
-    key-only projection and broadcast the surviving bucket set — the
-    signature-carrying frame must reach BOTH pair-join sides without an
-    Exchange or Window over it. Executed (AQE-final) plan asserted, so
-    the broadcast conversion is the one that actually ran."""
-    from ela_lib_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures
-
-    pages = spark.read.parquet(pages_path)
-    sigs = minhash_signatures(pages, key="url", num_hashes=32, shingle_n=3)
-    fused = lsh_candidate_pairs(sigs, key="url", num_bands=8, rows_per_band=4,
-                                carry_sig=True)
-    fused.count()  # let AQE finalize
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, plan[:3000]
-    assert "BroadcastHashJoin" in plan
-    # every Exchange in the plan partitions the key-only guard aggregate
-    # (band, bh) — none may carry a `sig` column
-    import re
-
-    for ln in plan.splitlines():
-        if re.search(r"\bExchange hashpartitioning", ln):
-            assert "sig" not in ln, ln
-
-
 def test_simhash_guard_never_shuffles_signatures(spark, pages_path):
     """Collision-pruning invariant for the simhash pair generator,
     updated for the r6 key-only shape: the signature payload must

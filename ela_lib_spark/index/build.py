@@ -55,6 +55,7 @@ durable for resume (north rule: per-partition lineage).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -68,8 +69,10 @@ from ela_lib_spark import BM25_B, BM25_K1
 from ela_lib_spark.functions.text import extract_text, tokenize_col
 from ela_lib_spark.index.codecs import (
     CODEC_VARINT,
+    decode_chunks,
     encode_block,
-    varint_decode,
+    encode_chunks,
+    isin_sorted,
     varint_encode_segmented,
 )
 from ela_lib_spark.schemas import BLOCK_SIZE, POSTING_CHUNKS, POSTINGS
@@ -88,8 +91,9 @@ METRICS_TERM_ID = -(1 << 63)
 #   n_docs       → docs seen in the bucket        (its normal meaning)
 #   first_doc_id → tokens seen in the bucket
 #   shard        → elapsed millis of the producing read-split
-# Writers go through metrics_rows_pdf; readers through
-# ledger_rows_from_metrics. Nothing else may touch the mapping.
+# Writers go through metrics_rows_pdf (and metrics_rows_decremented
+# for GC rewrites); readers through ledger_rows_from_metrics. Nothing
+# else may touch the mapping.
 _METRICS_N_TOKENS_COL = "first_doc_id"
 _METRICS_ELAPSED_MS_COL = "shard"
 
@@ -113,6 +117,20 @@ def metrics_rows_pdf(bucket_docs: dict, bucket_tokens: dict,
                                     for x in bucket_docs],
         }
     )
+
+
+def metrics_rows_decremented(m: "pd.DataFrame",
+                             decrements: dict) -> "pd.DataFrame":
+    """Metrics rows with each bucket's {part_id: (n_docs, n_tokens)}
+    tombstone decrements subtracted (the GC rewrite's side of the
+    carrier mapping)."""
+    dn, dt = (np.array([decrements.get(int(b), (0, 0))[i]
+                        for b in m["part_id"]], np.int64) for i in (0, 1))
+    return m.assign(**{
+        "n_docs": m["n_docs"].to_numpy(np.int64) - dn,
+        _METRICS_N_TOKENS_COL:
+            m[_METRICS_N_TOKENS_COL].to_numpy(np.int64) - dt,
+    })
 
 
 def ledger_rows_from_metrics(metrics_df: DataFrame) -> list:
@@ -304,8 +322,8 @@ def _spimi_fn(bucket_group: int = 1):
 
     All-int64 numpy: batches accumulate (bucket, term_id, doc_id,
     doc_len) posting streams; flush() does ONE lexsort + run-length
-    pass over up to FLUSH_POSTINGS entries and varint-encodes each
-    chunk with a single segmented encode call.
+    pass over up to FLUSH_POSTINGS entries and encodes all chunks with
+    one encode_chunks call.
 
     Chunk granularity = `bucket_group` consecutive buckets (r3): the
     merge groups by shard = bucket//group anyway, and doc ids embed
@@ -357,20 +375,17 @@ def _spimi_fn(bucket_group: int = 1):
                 new_chunk[1:] = (pg[1:] != pg[:-1]) | (pt[1:] != pt[:-1])
             cs = np.flatnonzero(new_chunk)
             counts = np.diff(np.append(cs, len(ps)))
-            deltas = np.empty(len(ps), np.int64)
-            deltas[0] = 0
-            np.subtract(pdoc[1:], pdoc[:-1], out=deltas[1:])
-            deltas[cs] = 0  # chunk delta streams start at 0 (decoder contract)
+            enc_d, enc_t, enc_l, first = encode_chunks(pdoc, tf, pl, counts)
             return pd.DataFrame(
                 {
                     "term_id": pt[cs],
                     "part_id": (pg[cs] * bucket_group).astype(np.int32),
                     "shard": np.zeros(len(cs), np.int32),
-                    "doc_ids": varint_encode_segmented(deltas, counts),
-                    "tfs": varint_encode_segmented(tf, counts),
-                    "dls": varint_encode_segmented(pl, counts),
+                    "doc_ids": enc_d,
+                    "tfs": enc_t,
+                    "dls": enc_l,
                     "n_docs": counts.astype(np.int64),
-                    "first_doc_id": pdoc[cs],
+                    "first_doc_id": first,
                 }
             )
 
@@ -453,36 +468,27 @@ def chunks_from_docs(docs_df: DataFrame, skip_buckets=None,
 # ------------------------------------------------------------- stage B
 
 
-def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float,
+def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float, codec: str,
                             block_size: int,
                             deleted: np.ndarray | None = None) -> pd.DataFrame:
     """Whole-batch merge with ~20 numpy calls total, independent of the
     number of (term, shard) groups — the zipf tail makes most groups
-    tiny, so per-group work must be O(0). varint codec only.
+    tiny, so per-group work must be O(0). Decode, in-group sort,
+    tombstone purge, impacts and block tiling are codec-independent;
+    only the final block encode depends on `codec`.
 
     `deleted` (sorted int64 doc ids) purges tombstoned postings during
     the merge: postings are dropped after id reconstruction and chunk
     lengths recomputed, so emitted blocks contain live docs only."""
     k1, b = BM25_K1, BM25_B
     n = pdf["n_docs"].to_numpy(np.int64)
-    total = int(n.sum())
     nrows = len(pdf)
     term_arr = pdf["term_id"].to_numpy(np.int64)
     shard_arr = pdf["shard"].to_numpy(np.int64)
-    first_arr = pdf["first_doc_id"].to_numpy(np.int64)
-
-    # decode the concatenated streams in one call each
-    deltas = varint_decode(b"".join(pdf["doc_ids"]), total).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs"]), total).astype(np.int64)
-    dls = varint_decode(b"".join(pdf["dls"]), total).astype(np.int64)
-
-    chunk_starts = np.zeros(nrows, np.int64)
-    np.cumsum(n[:-1], out=chunk_starts[1:])
-    # ids: within-chunk cumsum (chunk delta streams start with 0)
-    cs = np.cumsum(deltas)
-    ids = cs - np.repeat(cs[chunk_starts] - deltas[chunk_starts], n) + np.repeat(
-        first_arr, n
-    )
+    ids, tfs, dls = decode_chunks(pdf["doc_ids"], pdf["tfs"], pdf["dls"], n,
+                                  pdf["first_doc_id"].to_numpy(np.int64))
+    total = len(ids)
+    chunk_starts = np.cumsum(n) - n
 
     # postings must be doc-id-ascending WITHIN each (term, shard)
     # group before block tiling. Chunks arrive sorted by first_doc_id,
@@ -509,17 +515,16 @@ def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float,
         order = np.lexsort((ids, post_group))
         ids, tfs, dls = ids[order], tfs[order], dls[order]
 
-    if deleted is not None and len(deleted) and total:
-        pos = np.searchsorted(deleted, ids)
-        dead = (pos < len(deleted)) & (deleted[np.minimum(pos, len(deleted) - 1)] == ids)
+    if deleted is not None and total:
+        dead = isin_sorted(ids, deleted)
         if dead.any():
             keep = ~dead
-            n = np.add.reduceat(keep.astype(np.int64), chunk_starts) \
-                if nrows else n
+            # per-chunk live counts; after the in-group sort only their
+            # per-group sums are meaningful, which is all tiling uses
+            n = np.add.reduceat(keep.astype(np.int64), chunk_starts)
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
             total = int(n.sum())
-            chunk_starts = np.zeros(nrows, np.int64)
-            np.cumsum(n[:-1], out=chunk_starts[1:])
+            chunk_starts = np.cumsum(n) - n
             # a chunk may now be empty; groups/blocks below handle n=0
             # rows naturally (zero blocks are emitted for them)
 
@@ -553,26 +558,30 @@ def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float,
 
     # per-block metadata (blocks tile [0, total) in order → reduceat)
     bmax = np.maximum.reduceat(impact, b_start) if total_blk else np.zeros(0)
-    first_ids = ids[b_start]
-    last_ids = ids[b_end - 1]
 
-    # per-block encoded streams: ONE encode per stream, sliced per block
-    d_all = np.empty(total, np.int64)
-    d_all[0] = 0
-    np.subtract(ids[1:], ids[:-1], out=d_all[1:])
-    keep = np.ones(total, bool)
-    keep[b_start] = False  # first id of each block lives in metadata
-    tf_enc = varint_encode_segmented(tfs, b_n)
-    dl_enc = varint_encode_segmented(dls, b_n)
-    d_enc = varint_encode_segmented(d_all[keep], b_n - 1)
+    if codec == CODEC_VARINT:
+        # ONE encode per stream, sliced per block; the first id of each
+        # block lives in metadata, so its delta is left out
+        d_all = np.empty(total, np.int64)
+        d_all[0] = 0
+        np.subtract(ids[1:], ids[:-1], out=d_all[1:])
+        keep = np.ones(total, bool)
+        keep[b_start] = False
+        d_enc = varint_encode_segmented(d_all[keep], b_n - 1)
+        tf_enc = varint_encode_segmented(tfs, b_n)
+        dl_enc = varint_encode_segmented(dls, b_n)
+    else:
+        blocks = [encode_block(ids[s:e], tfs[s:e], dls[s:e], codec)
+                  for s, e in zip(b_start, b_end)]
+        d_enc, tf_enc, dl_enc = ([blk[i] for blk in blocks] for i in range(3))
 
     return pd.DataFrame(
         {
             "term_id": term_arr[g_chunk][blk_group],
             "shard": shard_arr[g_chunk][blk_group].astype(np.int32),
             "block_id": blk_idx.astype(np.int32),
-            "first_doc_id": first_ids,
-            "last_doc_id": last_ids,
+            "first_doc_id": ids[b_start],
+            "last_doc_id": ids[b_end - 1],
             "doc_ids_delta": d_enc,
             "tfs": tf_enc,
             "dls": dl_enc,
@@ -583,70 +592,14 @@ def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float,
     )
 
 
-def _merge_group(out: dict, term_id: int, shard: int, df_val: int,
-                 g: pd.DataFrame, avg_dl: float, codec: str,
-                 block_size: int, deleted: np.ndarray | None = None) -> None:
-    """Merge one (term, shard) group's chunks into encoded blocks
-    (non-varint codecs; the varint path is batch-vectorized above)."""
-    k1, b = BM25_K1, BM25_B
-    ids_l, tfs_l, dls_l = [], [], []
-    for r in g.itertuples(index=False):
-        deltas = varint_decode(r.doc_ids, r.n_docs).astype(np.int64)
-        ids = np.cumsum(deltas) + (r.first_doc_id - int(deltas[0]))
-        ids_l.append(ids)
-        tfs_l.append(varint_decode(r.tfs, r.n_docs).astype(np.int64))
-        dls_l.append(varint_decode(r.dls, r.n_docs).astype(np.int64))
-    ids = np.concatenate(ids_l) if len(ids_l) > 1 else ids_l[0]
-    tfs = np.concatenate(tfs_l) if len(tfs_l) > 1 else tfs_l[0]
-    dls = np.concatenate(dls_l) if len(dls_l) > 1 else dls_l[0]
-    # same in-group ordering requirement as the vectorized path: chunk
-    # doc RANGES can interleave (hash-scattered buckets per read
-    # split), so concatenation order is not doc-id order
-    if len(ids) > 1 and (ids[1:] <= ids[:-1]).any():
-        order = np.argsort(ids, kind="stable")
-        ids, tfs, dls = ids[order], tfs[order], dls[order]
-    if deleted is not None and len(deleted) and len(ids):
-        pos = np.searchsorted(deleted, ids)
-        keep = ~((pos < len(deleted))
-                 & (deleted[np.minimum(pos, len(deleted) - 1)] == ids))
-        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if len(ids) == 0:
-            return
-    impact = tfs / (tfs + k1 * (1 - b + b * dls / avg_dl))
-    for blk, s in enumerate(range(0, len(ids), block_size)):
-        e = min(s + block_size, len(ids))
-        d_enc, t_enc, l_enc, first, last = encode_block(
-            ids[s:e], tfs[s:e], dls[s:e], codec
-        )
-        out["term_id"].append(term_id)
-        out["shard"].append(shard)
-        out["block_id"].append(blk)
-        out["first_doc_id"].append(first)
-        out["last_doc_id"].append(last)
-        out["doc_ids_delta"].append(d_enc)
-        out["tfs"].append(t_enc)
-        out["dls"].append(l_enc)
-        out["n_docs"].append(e - s)
-        out["block_max_impact"].append(float(impact[s:e].max()))
-        out["df"].append(df_val)
-
-
 def _merge_stream_fn(avg_dl: float, codec: str, block_size: int = BLOCK_SIZE,
                      deleted: np.ndarray | None = None):
     """mapInPandas merge: the input partition is sorted by
     (term_id, shard, first_doc_id); groups are detected by key change
-    and the trailing (possibly batch-spanning) group is buffered. This
-    avoids applyInPandas's per-group JVM round trip — critical because
-    the zipf long tail makes most groups tiny."""
-
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        if codec == CODEC_VARINT:
-            return _merge_batch_vectorized(pdf, avg_dl, block_size, deleted)
-        out = {k: [] for k in POSTINGS.fieldNames()}
-        for (term_id, shard), g in pdf.groupby(["term_id", "shard"], sort=False):
-            _merge_group(out, int(term_id), int(shard), int(g["df"].iloc[0]),
-                         g, avg_dl, codec, block_size, deleted)
-        return pd.DataFrame(out)
+    and the trailing (possibly batch-spanning) group is buffered, so
+    every batch handed to _merge_batch_vectorized holds whole groups.
+    This avoids applyInPandas's per-group JVM round trip — critical
+    because the zipf long tail makes most groups tiny."""
 
     def fn(it):
         buf = None
@@ -661,9 +614,11 @@ def _merge_stream_fn(avg_dl: float, codec: str, block_size: int = BLOCK_SIZE,
             buf = pdf[mask_last]
             body = pdf[~mask_last]
             if len(body):
-                yield process(body)
+                yield _merge_batch_vectorized(body, avg_dl, codec, block_size,
+                                              deleted)
         if buf is not None and len(buf):
-            yield process(buf)
+            yield _merge_batch_vectorized(buf, avg_dl, codec, block_size,
+                                          deleted)
 
     return fn
 
@@ -674,7 +629,6 @@ def merge_chunks(
     n_shards: int,
     n_buckets: int,
     codec: str = CODEC_VARINT,
-    merge_partitions: int | None = None,
     deleted: np.ndarray | None = None,
 ) -> DataFrame:
     """Stage B: salted merge. shard = bucket-range group (order-preserving
@@ -699,19 +653,14 @@ def merge_chunks(
     # turns this into a broadcast join when it fits, leaving the
     # repartition below as the ONLY shuffle of chunk bytes.
     joined = pre.join(df_tbl, "term_id")
-    if merge_partitions is None:
-        # explicit count — a bare repartition(cols) is subject to AQE
-        # coalescing, which can collapse the merge to a near-serial
-        # task. 1× slots (r6, was 2×): the merge kernel pays a fixed
-        # Python/Arrow cost per task and the shard salting bounds any
-        # (term, shard) group far below a partition, so one wave of
-        # full-width tasks wins (A/B at 32 cores: merge 4.7 → 3.1 s).
-        # Production merges over TB-scale chunk stores should pass
-        # merge_partitions sized by chunk bytes (≈256 MB/partition,
-        # guide §2.2) rather than cores.
-        spark = chunks.sparkSession
-        merge_partitions = max(spark.sparkContext.defaultParallelism, 16)
-    part = joined.repartition(merge_partitions, "term_id", "shard")
+    # explicit count — a bare repartition(cols) is subject to AQE
+    # coalescing, which can collapse the merge to a near-serial task.
+    # 1× slots (r6, was 2×): the merge kernel pays a fixed Python/Arrow
+    # cost per task and the shard salting bounds any (term, shard)
+    # group far below a partition, so one wave of full-width tasks wins
+    # (A/B at 32 cores: merge 4.7 → 3.1 s).
+    n_parts = max(chunks.sparkSession.sparkContext.defaultParallelism, 16)
+    part = joined.repartition(n_parts, "term_id", "shard")
     part = part.sortWithinPartitions("term_id", "shard", "first_doc_id")
     return part.mapInPandas(_merge_stream_fn(avg_dl, codec, deleted=deleted),
                             schema=POSTINGS)
@@ -739,6 +688,36 @@ def _write_small_parquet(path: str, columns: dict, schema_str: str) -> None:
     os.makedirs(path)
     pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
     open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def write_control_tables(index_dir: str, ledger_rows: list, snapshot: str,
+                         ledger_name: str, cs_name: str) -> tuple[int, float]:
+    """Write the ledger (one row per bucket: part_id, n_docs, n_tokens,
+    secs) and corpus_stats tables under `index_dir` — the one writer
+    for both the build (`ledger`/`corpus_stats`) and maintenance
+    (versioned `-{snapshot}` dirs). Returns (n_docs, avg_dl)."""
+    n_docs = sum(r.n_docs for r in ledger_rows)
+    n_tokens = sum(r.n_tokens for r in ledger_rows)
+    avg_dl = float(n_tokens) / float(n_docs) if n_docs else 0.0
+    _write_small_parquet(
+        os.path.join(index_dir, ledger_name),
+        {
+            "part_id": [int(r.part_id) for r in ledger_rows],
+            "status": ["done"] * len(ledger_rows),
+            "n_docs": [int(r.n_docs) for r in ledger_rows],
+            "n_tokens": [int(r.n_tokens) for r in ledger_rows],
+            "secs": [float(r.secs) for r in ledger_rows],
+            "snapshot_id": [snapshot] * len(ledger_rows),
+        },
+        "part_id int32, status string, n_docs int64, n_tokens int64, "
+        "secs double, snapshot_id string",
+    )
+    _write_small_parquet(
+        os.path.join(index_dir, cs_name),
+        {"n_docs": [int(n_docs)], "avg_dl": [float(avg_dl)]},
+        "n_docs int64, avg_dl double",
+    )
+    return int(n_docs), avg_dl
 
 
 def _read_if_exists(spark, path):
@@ -914,15 +893,43 @@ def delta_deletes_path(out_dir: str, manifest: dict | None = None) -> str:
     return os.path.join(out_dir, m.get("delta_deletes_dir") or "delta_deletes")
 
 
-def delete_epochs_on_disk(out_dir: str,
-                          manifest: dict | None = None) -> list[int]:
-    p = delta_deletes_path(out_dir, manifest)
-    if not os.path.exists(p):
+def read_delta_doc_stats(spark: SparkSession, out_dir: str,
+                         manifest: dict | None = None) -> DataFrame | None:
+    """Union of the delta doc-dictionary dirs (doc_id, url, doc_len,
+    bucket, epoch), or None when there are none. Callers apply their
+    own epoch filter and projection."""
+    out = None
+    for d in delta_doc_stats_dirs(out_dir, manifest):
+        part = spark.read.option("basePath", d).parquet(d)
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def postings_dirs(out_dir: str, manifest: dict) -> list[str]:
+    """The manifest's postings dirs: the base dir, then each tier's."""
+    return [os.path.join(out_dir, manifest.get("postings_dir", "postings"))] + [
+        os.path.join(out_dir, t["postings_dir"])
+        for t in manifest.get("tiers", [])
+    ]
+
+
+def covered_epochs(manifest: dict) -> set[int]:
+    """Delta epochs the manifest's postings cover (base + tiers)."""
+    out = set(manifest.get("base_epochs", []))
+    for t in manifest.get("tiers", []):
+        out.update(t.get("epochs", []))
+    return out
+
+
+def epochs_on_disk(root: str) -> list[int]:
+    """Sorted N of the `epoch=N` subdirs of `root` ([] if absent) —
+    delta_chunks and the delete log use this layout."""
+    if not os.path.exists(root):
         return []
     return sorted(
         int(e.split("=", 1)[1])
-        for e in os.listdir(p)
-        if e.startswith("epoch=") and os.path.isdir(os.path.join(p, e))
+        for e in os.listdir(root)
+        if e.startswith("epoch=") and os.path.isdir(os.path.join(root, e))
     )
 
 
@@ -971,8 +978,6 @@ def build_index(
     codec: str = CODEC_VARINT,
     use_html: bool = False,
     resume: bool = False,
-    docs_partitions: int | None = None,
-    merge_partitions: int | None = None,
 ) -> dict:
     """Full build: docs (ids+term_ids) → chunks (resumable) → ledger →
     merged postings. Returns the manifest dict.
@@ -986,19 +991,15 @@ def build_index(
     stage_secs: dict[str, float] = {}
     done: set[int] = done_buckets(spark, out_dir) if resume else set()
     sc = spark.sparkContext
-    par = sc.defaultParallelism
-    if docs_partitions is None:
-        # 1× slots (r6, was 3× then 2×): the chunks stage pays a fixed
-        # Arrow boundary cost per read split and the merge scans one
-        # chunk file per chunk task, so fewer/larger docs files win as
-        # long as splits still cover the cluster — A/Bs at 32 cores:
-        # 3×→2× full build 8.4 → 6.6 s, then 2×→1× 7.5-7.7 → 6.3-6.7 s
-        # clean-window (the win shows in the merge stage, 3.4-3.6 →
-        # 2.7-3.0 s). Still parameterised on parallelism; floor 48
-        # keeps the resume/SPIMI granularity of small runs and leaves
-        # the 1c/4c scaling levels byte-identical (floor dominates
-        # there).
-        docs_partitions = max(par, 48)
+    # 1× slots (r6, was 3× then 2×): the chunks stage pays a fixed
+    # Arrow boundary cost per read split and the merge scans one chunk
+    # file per chunk task, so fewer/larger docs files win as long as
+    # splits still cover the cluster — A/Bs at 32 cores: 3×→2× full
+    # build 8.4 → 6.6 s, then 2×→1× 7.5-7.7 → 6.3-6.7 s clean-window
+    # (the win shows in the merge stage, 3.4-3.6 → 2.7-3.0 s). Floor 48
+    # keeps the resume/SPIMI granularity of small runs and leaves the
+    # 1c/4c scaling levels byte-identical (floor dominates there).
+    n_docs_parts = max(sc.defaultParallelism, 48)
 
     # job 1: the docs table (skip if resuming and committed — ids are
     # (bucket, url)-deterministic; _SUCCESS guards a crashed write).
@@ -1023,7 +1024,7 @@ def build_index(
         # the probe win. Row-group pruning gives the same IO bound with
         # zero write-path cost.
         docs_with_term_ids(
-            pages, n_buckets, use_html, num_partitions=docs_partitions
+            pages, n_buckets, use_html, num_partitions=n_docs_parts
         ).write.mode("overwrite").parquet(docs_dir)
     stage_secs["docs"] = round(time.monotonic() - _t, 2)
     docs = spark.read.parquet(docs_dir)
@@ -1073,27 +1074,8 @@ def build_index(
                       & (F.col("term_id") == METRICS_TERM_ID))
     )
     snapshot = new_snapshot_id("build")
-    _write_small_parquet(
-        os.path.join(out_dir, "ledger"),
-        {
-            "part_id": [int(r.part_id) for r in ledger_rows],
-            "status": ["done"] * len(ledger_rows),
-            "n_docs": [int(r.n_docs) for r in ledger_rows],
-            "n_tokens": [int(r.n_tokens) for r in ledger_rows],
-            "secs": [float(r.secs) for r in ledger_rows],
-            "snapshot_id": [snapshot] * len(ledger_rows),
-        },
-        "part_id int32, status string, n_docs int64, n_tokens int64, "
-        "secs double, snapshot_id string",
-    )
-    n_docs = sum(r.n_docs for r in ledger_rows)
-    n_tokens = sum(r.n_tokens for r in ledger_rows)
-    avg_dl = float(n_tokens) / float(n_docs) if n_docs else 0.0
-    _write_small_parquet(
-        os.path.join(out_dir, "corpus_stats"),
-        {"n_docs": [int(n_docs)], "avg_dl": [float(avg_dl)]},
-        "n_docs int64, avg_dl double",
-    )
+    n_docs, avg_dl = write_control_tables(out_dir, ledger_rows, snapshot,
+                                          "ledger", "corpus_stats")
     stage_secs["ledger"] = round(time.monotonic() - _t, 2)
 
     # job 3: salted merge → final postings. Written directly: each merge
@@ -1102,8 +1084,7 @@ def build_index(
     # without an extra repartition shuffle.
     _t = time.monotonic()
     sc.setJobDescription("build:merge")
-    merged = merge_chunks(chunks, float(avg_dl), n_shards, n_buckets, codec,
-                          merge_partitions)
+    merged = merge_chunks(chunks, avg_dl, n_shards, n_buckets, codec)
     merged.write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
     stage_secs["merge"] = round(time.monotonic() - _t, 2)
     sc.setJobDescription(None)
@@ -1131,7 +1112,7 @@ def build_index(
         "corpus_stats_dir": "corpus_stats",
         "docs_dir": os.path.basename(docs_dir),
         "snapshot_id": snapshot,
-        "delete_epochs": delete_epochs_on_disk(out_dir),
+        "delete_epochs": epochs_on_disk(delta_deletes_path(out_dir)),
     }
     write_manifest(out_dir, manifest)
     return manifest
@@ -1186,17 +1167,12 @@ def load_index(spark: SparkSession, out_dir: str,
         # points at): epochs ingested after the snapshot are invisible
         # to its postings, so they must be invisible to its doc
         # surface too. Live loads see everything on disk.
-        pinned_epochs = None
-        if snapshot_id is not None:
-            pinned_epochs = {-1} | set(manifest.get("base_epochs", []))
-            for t in manifest.get("tiers", []):
-                pinned_epochs.update(t.get("epochs", []))
-        for delta_ds in delta_doc_stats_dirs(out_dir, manifest):
-            extra = spark.read.option("basePath", delta_ds).parquet(delta_ds)
-            if pinned_epochs is not None:
+        extra = read_delta_doc_stats(spark, out_dir, manifest)
+        if extra is not None:
+            if snapshot_id is not None:
+                pinned = {-1} | covered_epochs(manifest)
                 extra = extra.filter(
-                    F.col("epoch").isin([int(e) for e in pinned_epochs])
-                )
+                    F.col("epoch").isin([int(e) for e in pinned]))
             doc_stats = doc_stats.unionByName(
                 extra.select("doc_id", "url", "doc_len", "bucket")
             )
@@ -1245,13 +1221,8 @@ def load_index(spark: SparkSession, out_dir: str,
                 deleted_df = tomb
         else:
             deleted_ids = np.zeros(0, np.int64)
-        postings = spark.read.parquet(
-            os.path.join(out_dir, manifest.get("postings_dir", "postings"))
-        )
-        for tier in manifest.get("tiers", []):
-            postings = postings.unionByName(
-                spark.read.parquet(os.path.join(out_dir, tier["postings_dir"]))
-            )
+        postings = functools.reduce(DataFrame.unionByName, (
+            spark.read.parquet(p) for p in postings_dirs(out_dir, manifest)))
         if snapshot_id is not None:
             corpus_stats = spark.createDataFrame(
                 [(int(manifest["n_docs"]), float(manifest["avg_dl"]))],

@@ -129,6 +129,65 @@ def varint_encode_segmented(values: np.ndarray, seg_value_counts: np.ndarray) ->
     return [enc[s:e] for s, e in zip(byte_starts, byte_ends)]
 
 
+def isin_sorted(values: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
+    """Boolean mask of which `values` occur in the sorted array
+    `sorted_ids` (the tombstone membership test; empty-set safe)."""
+    if len(sorted_ids) == 0:
+        return np.zeros(len(values), bool)
+    pos = np.minimum(np.searchsorted(sorted_ids, values), len(sorted_ids) - 1)
+    return sorted_ids[pos] == values
+
+
+# ----------------------------------------------------------- chunk codec
+# A SPIMI chunk row (schemas.POSTING_CHUNKS) holds one doc-ascending
+# posting run as three varint streams: doc-id deltas restarting at 0
+# per chunk (the first id lives in the first_doc_id column), tfs and
+# doc lengths. Every writer and reader of chunk rows goes through the
+# pair below, each one encode/decode call per stream for a whole batch.
+
+
+def encode_chunks(
+    ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, counts: np.ndarray
+) -> tuple[list[bytes], list[bytes], list[bytes], np.ndarray]:
+    """Encode consecutive runs of `counts[i]` postings (ids ascending
+    within a run) as chunk rows → (doc_ids, tfs, dls, first_doc_id).
+    A zero-count chunk gets empty streams and first_doc_id 0."""
+    counts = np.asarray(counts, np.int64)
+    starts = np.cumsum(counts) - counts
+    live = counts > 0
+    deltas = np.empty(len(ids), np.int64)
+    if len(ids):
+        deltas[0] = 0
+        np.subtract(ids[1:], ids[:-1], out=deltas[1:])
+        deltas[starts[live]] = 0
+    first = np.zeros(len(counts), np.int64)
+    first[live] = ids[starts[live]]
+    return (
+        varint_encode_segmented(deltas, counts),
+        varint_encode_segmented(tfs, counts),
+        varint_encode_segmented(dls, counts),
+        first,
+    )
+
+
+def decode_chunks(doc_ids, tfs, dls, n, first_doc_id
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode a sequence of chunk rows (byte-string columns plus the
+    n_docs and first_doc_id columns; every n_docs ≥ 1, as stored) →
+    concatenated int64 (ids, tfs, dls), chunk after chunk."""
+    n = np.asarray(n, np.int64)
+    total = int(n.sum())
+    deltas = varint_decode(b"".join(doc_ids), total).astype(np.int64)
+    tf = varint_decode(b"".join(tfs), total).astype(np.int64)
+    dl = varint_decode(b"".join(dls), total).astype(np.int64)
+    # within-chunk cumsum: subtract the running sum before each chunk
+    starts = np.cumsum(n) - n
+    cs = np.cumsum(deltas)
+    ids = (cs - np.repeat(cs[starts] - deltas[starts], n)
+           + np.repeat(np.asarray(first_doc_id, np.int64), n))
+    return ids, tf, dl
+
+
 # ------------------------------------------------------------- bitpacking
 
 

@@ -28,9 +28,10 @@ Returns {"ok": bool, "checks": {name: {"ok", "detail"}}}; CLI
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -44,6 +45,7 @@ def validate_index(spark: SparkSession, index_dir: str,
         corpus_stats_path,
         docs_dir_path,
         ledger_path,
+        postings_dirs,
         read_manifest,
     )
 
@@ -63,16 +65,16 @@ def validate_index(spark: SparkSession, index_dir: str,
         return {"ok": False, "checks": checks}
 
     # 1. referenced dirs exist
+    base, *tiers = postings_dirs(index_dir, manifest)
     dirs = {
-        "postings": os.path.join(index_dir, manifest["postings_dir"]),
+        "postings": base,
         "chunks": os.path.join(index_dir, manifest["chunks_dir"]),
         "docs": docs_dir_path(index_dir, manifest),
         "ledger": ledger_path(index_dir, manifest),
         "corpus_stats": corpus_stats_path(index_dir, manifest),
     }
-    for t in manifest.get("tiers", []):
-        dirs[f"tier:{t['postings_dir']}"] = os.path.join(
-            index_dir, t["postings_dir"])
+    for p in tiers:
+        dirs[f"tier:{os.path.basename(p)}"] = p
     gone = [k for k, p in dirs.items() if not os.path.exists(p)]
     _check(checks, "data_dirs", not gone,
            f"missing: {gone}" if gone else f"{len(dirs)} dirs present")
@@ -93,7 +95,10 @@ def validate_index(spark: SparkSession, index_dir: str,
 def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
                     checks: dict, deep: bool) -> None:
     from ela_lib_spark.index.build import (
-        delta_doc_stats_dirs,
+        covered_epochs,
+        delta_deletes_path,
+        epochs_on_disk,
+        read_delta_doc_stats,
         read_tombstones,
     )
 
@@ -116,9 +121,9 @@ def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
 
     # 3. doc-stats surface: n rows + unique ids (bulk + delta − tombs)
     docs = spark.read.parquet(dirs["docs"]).select("doc_id")
-    for d in delta_doc_stats_dirs(index_dir, manifest):
-        docs = docs.unionByName(
-            spark.read.option("basePath", d).parquet(d).select("doc_id"))
+    extra = read_delta_doc_stats(spark, index_dir, manifest)
+    if extra is not None:
+        docs = docs.unionByName(extra.select("doc_id"))
     tomb = read_tombstones(spark, index_dir)
     live = docs.join(tomb, "doc_id", "left_anti") if tomb is not None else docs
     agg = live.agg(
@@ -128,14 +133,11 @@ def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
     # manifest n_docs refreshes at compaction; delta/delete epochs not
     # yet covered by a publish legitimately shift the live count — an
     # expected pre-compaction state, not corruption
-    from ela_lib_spark.index.build import delete_epochs_on_disk
-    from ela_lib_spark.streaming.incremental import delta_epochs_on_disk
-
-    covered = set(manifest.get("base_epochs", []))
-    for t in manifest.get("tiers", []):
-        covered.update(t["epochs"])
-    pending = (set(delta_epochs_on_disk(index_dir)) - covered) or (
-        set(delete_epochs_on_disk(index_dir))
+    pending = (
+        set(epochs_on_disk(os.path.join(index_dir, "delta_chunks")))
+        - covered_epochs(manifest)
+    ) or (
+        set(epochs_on_disk(delta_deletes_path(index_dir)))
         - set(manifest.get("delete_epochs", []))
     )
     if pending:
@@ -165,16 +167,16 @@ def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
     _check(checks, "snapshot_archived", os.path.exists(spath), str(snap))
 
     if deep:
-        checks.update(_deep_postings_check(spark, dirs["postings"],
-                                           manifest, index_dir))
+        checks.update(_deep_postings_check(spark, manifest, index_dir))
 
 
-def _deep_postings_check(spark, postings_dir: str, manifest: dict,
-                         index_dir: str) -> dict:
+def _deep_postings_check(spark, manifest: dict, index_dir: str) -> dict:
     """Distributed block-decode audit: every block must satisfy the
     decoder contract. Pure map over the postings (one pass, no
     shuffle); returns aggregate violation counts."""
     import pandas as pd
+
+    from ela_lib_spark.index.build import postings_dirs
 
     codec = manifest["codec"]
 
@@ -204,10 +206,8 @@ def _deep_postings_check(spark, postings_dir: str, manifest: dict,
                             "bad_decode": [bad_decode],
                             "bad_order": [bad_order]})
 
-    postings = spark.read.parquet(postings_dir)
-    for t in manifest.get("tiers", []):
-        postings = postings.unionByName(
-            spark.read.parquet(os.path.join(index_dir, t["postings_dir"])))
+    postings = functools.reduce(DataFrame.unionByName, (
+        spark.read.parquet(p) for p in postings_dirs(index_dir, manifest)))
     tot = (
         postings.mapInPandas(
             fn, "n_blocks long, bad_meta long, bad_decode long, bad_order long"

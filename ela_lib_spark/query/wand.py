@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ela_lib_spark import BM25_K1
 from ela_lib_spark.functions.xxh import spark_xxhash64
-from ela_lib_spark.index.codecs import decode_block
+from ela_lib_spark.index.codecs import decode_block, isin_sorted
 from ela_lib_spark.query.scoring import bm25_contrib, idf
 
 RESULT_SCHEMA = "doc_id long, score double"
@@ -159,9 +159,7 @@ def _shard_topk_fn(terms: list[str], mode: str, k: int, n_docs: int,
             if deleted is not None and len(deleted) and len(union):
                 # tombstone filter INSIDE the shard top-k: a deleted
                 # doc must never displace a live one from the heap
-                pos = np.searchsorted(deleted, union)
-                live = ~((pos < len(deleted))
-                         & (deleted[np.minimum(pos, len(deleted) - 1)] == union))
+                live = ~isin_sorted(union, deleted)
                 union, score = union[live], score[live]
             if len(union) == 0:
                 continue

@@ -42,10 +42,10 @@ DOC_TERMS = T.StructType(
     ]
 )
 
-# SPIMI per-partition posting chunk (stage 1 output). doc_ids within a
-# chunk are strictly increasing; a chunk covers one input split's
-# doc_id range, so chunks of the same term never overlap and concatenate
-# into a sorted list by first_doc_id order.
+# SPIMI per-partition posting chunk (stage 1 output), written and read
+# only through index/codecs.encode_chunks/decode_chunks. doc_ids within
+# a chunk are strictly increasing; chunks of one (term, shard) group
+# may cover interleaved doc ranges (see index/build.chunks_from_docs).
 POSTING_CHUNKS = T.StructType(
     [
         T.StructField("term_id", T.LongType(), False),

@@ -166,7 +166,7 @@ def _existing_doc_dict(spark, index_dir: str,
     set does not map onto them."""
     import os as _os
 
-    from ela_lib_spark.index.build import delta_doc_stats_dirs, docs_dir_path
+    from ela_lib_spark.index.build import docs_dir_path, read_delta_doc_stats
 
     out = None
     bulk = docs_dir_path(index_dir)
@@ -177,8 +177,8 @@ def _existing_doc_dict(spark, index_dir: str,
                 F.col("bucket").isin([int(b) for b in probe_buckets])
             )
         out = df.select("url", "doc_id")
-    for delta_ds in delta_doc_stats_dirs(index_dir):
-        extra = spark.read.option("basePath", delta_ds).parquet(delta_ds)
+    extra = read_delta_doc_stats(spark, index_dir)
+    if extra is not None:
         if exclude_epoch is not None:
             extra = extra.filter(F.col("epoch") != int(exclude_epoch))
         extra = extra.select("url", "doc_id")
@@ -327,17 +327,6 @@ def read_delta_postings(spark: SparkSession, index_dir: str) -> DataFrame | None
     if not os.path.exists(p):
         return None
     return spark.read.option("basePath", p).parquet(p)
-
-
-def delta_epochs_on_disk(index_dir: str) -> list[int]:
-    p = os.path.join(index_dir, "delta_chunks")
-    if not os.path.exists(p):
-        return []
-    return sorted(
-        int(e.split("=", 1)[1])
-        for e in os.listdir(p)
-        if e.startswith("epoch=") and os.path.isdir(os.path.join(p, e))
-    )
 
 
 # -------------------------------------------------- snapshot retention
@@ -691,9 +680,11 @@ def _tombstone_decrements(spark, index_dir: str) -> dict[int, tuple[int, int]]:
     so compacted corpus stats count LIVE docs only."""
     from pyspark.sql import functions as F2
 
-    from ela_lib_spark.index.build import read_tombstones
-
-    from ela_lib_spark.index.build import delta_doc_stats_dirs, docs_dir_path
+    from ela_lib_spark.index.build import (
+        docs_dir_path,
+        read_delta_doc_stats,
+        read_tombstones,
+    )
 
     tomb = read_tombstones(spark, index_dir)
     if tomb is None:
@@ -702,9 +693,9 @@ def _tombstone_decrements(spark, index_dir: str) -> dict[int, tuple[int, int]]:
     bulk = docs_dir_path(index_dir)
     if os.path.exists(bulk):
         dims = spark.read.parquet(bulk).select("doc_id", "bucket", "doc_len")
-    for delta_ds in delta_doc_stats_dirs(index_dir):
-        extra = (spark.read.option("basePath", delta_ds).parquet(delta_ds)
-                 .select("doc_id", "bucket", "doc_len"))
+    extra = read_delta_doc_stats(spark, index_dir)
+    if extra is not None:
+        extra = extra.select("doc_id", "bucket", "doc_len")
         dims = extra if dims is None else dims.unionByName(extra)
     if dims is None:
         return {}
@@ -732,8 +723,8 @@ def _refresh_control_tables(spark, index_dir: str, metrics, snapshot: str,
     load_index saw new stats under the old manifest). Returns
     (n_docs, avg_dl, ledger_name, corpus_stats_name)."""
     from ela_lib_spark.index.build import (
-        _write_small_parquet,
         ledger_rows_from_metrics,
+        write_control_tables,
     )
 
     # named decode of the metrics carrier columns lives in build.py
@@ -748,30 +739,11 @@ def _refresh_control_tables(spark, index_dir: str, metrics, snapshot: str,
             adj.append(SimpleNamespace(part_id=r.part_id, n_docs=r.n_docs - dn,
                                        n_tokens=r.n_tokens - dt, secs=r.secs))
         ledger_rows = adj
-    n_docs = sum(r.n_docs for r in ledger_rows)
-    n_tokens = sum(r.n_tokens for r in ledger_rows)
-    avg_dl = float(n_tokens) / float(n_docs) if n_docs else 0.0
     ledger_name = f"ledger-{snapshot}"
     cs_name = f"corpus_stats-{snapshot}"
-    _write_small_parquet(
-        os.path.join(index_dir, ledger_name),
-        {
-            "part_id": [int(r.part_id) for r in ledger_rows],
-            "status": ["done"] * len(ledger_rows),
-            "n_docs": [int(r.n_docs) for r in ledger_rows],
-            "n_tokens": [int(r.n_tokens) for r in ledger_rows],
-            "secs": [float(r.secs) for r in ledger_rows],
-            "snapshot_id": [snapshot] * len(ledger_rows),
-        },
-        "part_id int32, status string, n_docs int64, n_tokens int64, "
-        "secs double, snapshot_id string",
-    )
-    _write_small_parquet(
-        os.path.join(index_dir, cs_name),
-        {"n_docs": [int(n_docs)], "avg_dl": [float(avg_dl)]},
-        "n_docs int64, avg_dl double",
-    )
-    return int(n_docs), avg_dl, ledger_name, cs_name
+    n_docs, avg_dl = write_control_tables(index_dir, ledger_rows, snapshot,
+                                          ledger_name, cs_name)
+    return n_docs, avg_dl, ledger_name, cs_name
 
 
 def _flip_control_tables(index_dir: str, manifest: dict,
@@ -790,77 +762,46 @@ def _flip_control_tables(index_dir: str, manifest: dict,
 
 
 def _gc_transform(pdf, deleted, decrements: dict) -> list:
-    """Chunk-store rewrite kernel body: decode each posting chunk's
-    streams, drop tombstoned docs, re-encode (delta stream restarts at
-    0 per chunk — the decoder contract); adjust per-bucket METRICS rows
-    by the tombstone decrements. Shared by the mapInPandas path
-    (tombstones ≤ TOMBSTONE_DRIVER_CAP, closure-shipped array, no
-    shuffle) and the cogrouped path (unbounded tombstones, per-group
-    array). Returns a list of output frames."""
+    """Chunk-store rewrite kernel body: decode the posting chunks, drop
+    tombstoned docs, re-encode (index/codecs chunk codec); adjust
+    per-bucket METRICS rows by the tombstone decrements. Shared by the
+    mapInPandas path (tombstones ≤ TOMBSTONE_DRIVER_CAP, closure-shipped
+    array, no shuffle) and the cogrouped path (unbounded tombstones,
+    per-group array). Returns a list of output frames."""
     import numpy as np
     import pandas as pd
 
     from ela_lib_spark.index.build import (
         METRICS_TERM_ID,
-        _METRICS_N_TOKENS_COL,
+        metrics_rows_decremented,
     )
     from ela_lib_spark.index.codecs import (
-        varint_decode,
-        varint_encode_segmented,
+        decode_chunks,
+        encode_chunks,
+        isin_sorted,
     )
 
     is_m = pdf["term_id"].to_numpy() == METRICS_TERM_ID
     out_parts = []
     m = pdf[is_m]
     if len(m):
-        m = m.copy()
-        dn = np.array([decrements.get(int(b), (0, 0))[0]
-                       for b in m["part_id"]], np.int64)
-        dt = np.array([decrements.get(int(b), (0, 0))[1]
-                       for b in m["part_id"]], np.int64)
-        m["n_docs"] = m["n_docs"].to_numpy(np.int64) - dn
-        m[_METRICS_N_TOKENS_COL] = (
-            m[_METRICS_N_TOKENS_COL].to_numpy(np.int64) - dt)
-        out_parts.append(m)
+        out_parts.append(metrics_rows_decremented(m, decrements))
     c = pdf[~is_m]
     if len(c) and (deleted is None or len(deleted) == 0):
-        # nothing tombstoned (e.g. CLI `gc` run purely to
-        # consolidate delta fragmentation): pass chunks through
-        # unchanged — the searchsorted membership test below
-        # would index an empty array (ADVICE r3)
+        # nothing tombstoned (e.g. CLI `gc` run purely to consolidate
+        # delta fragmentation): pass chunks through unchanged
         out_parts.append(c)
     elif len(c):
         n = c["n_docs"].to_numpy(np.int64)
-        total = int(n.sum())
-        starts = np.zeros(len(c), np.int64)
-        np.cumsum(n[:-1], out=starts[1:])
-        deltas = varint_decode(b"".join(c["doc_ids"]), total).astype(np.int64)
-        tfs = varint_decode(b"".join(c["tfs"]), total).astype(np.int64)
-        dls = varint_decode(b"".join(c["dls"]), total).astype(np.int64)
-        csum = np.cumsum(deltas)
-        ids = csum - np.repeat(csum[starts] - deltas[starts], n) \
-            + np.repeat(c["first_doc_id"].to_numpy(np.int64), n)
-        pos = np.searchsorted(deleted, ids)
-        keep = ~((pos < len(deleted))
-                 & (deleted[np.minimum(pos, len(deleted) - 1)] == ids))
+        ids, tfs, dls = decode_chunks(c["doc_ids"], c["tfs"], c["dls"], n,
+                                      c["first_doc_id"].to_numpy(np.int64))
+        keep = ~isin_sorted(ids, deleted)
         if keep.all():
             out_parts.append(c)
         else:
-            new_n = np.add.reduceat(keep.astype(np.int64), starts)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            live_chunk = new_n > 0
-            new_starts = np.zeros(len(c), np.int64)
-            np.cumsum(new_n[:-1], out=new_starts[1:])
-            nd = np.empty(len(ids), np.int64)
-            if len(ids):
-                nd[0] = 0
-                np.subtract(ids[1:], ids[:-1], out=nd[1:])
-                nd[new_starts[live_chunk]] = 0
-            first = np.zeros(len(c), np.int64)
-            first[live_chunk] = ids[new_starts[live_chunk]]
-            enc_d = varint_encode_segmented(nd, new_n)
-            enc_t = varint_encode_segmented(tfs, new_n)
-            enc_l = varint_encode_segmented(dls, new_n)
+            new_n = np.add.reduceat(keep.astype(np.int64), np.cumsum(n) - n)
+            enc_d, enc_t, enc_l, first = encode_chunks(
+                ids[keep], tfs[keep], dls[keep], new_n)
             cc = pd.DataFrame({
                 "term_id": c["term_id"].to_numpy(),
                 "part_id": c["part_id"].to_numpy(),
@@ -870,7 +811,7 @@ def _gc_transform(pdf, deleted, decrements: dict) -> list:
                 "dls": enc_l,
                 "n_docs": new_n,
                 "first_doc_id": first,
-            })[live_chunk]
+            })[new_n > 0]
             if len(cc):
                 out_parts.append(cc)
     return [
@@ -1031,6 +972,7 @@ def _gc_index_impl(spark: SparkSession, index_dir: str,
     from ela_lib_spark.index.build import (
         delta_doc_stats_dirs,
         docs_dir_path,
+        read_delta_doc_stats,
     )
 
     old_docs_dir = docs_dir_path(index_dir, manifest)
@@ -1049,11 +991,8 @@ def _gc_index_impl(spark: SparkSession, index_dir: str,
     new_dds_name = None
     if old_dds_dirs:
         new_dds_name = f"delta_doc_stats-g{gen}"
-        dds = None
-        for d in old_dds_dirs:
-            part = (spark.read.option("basePath", d).parquet(d)
-                    .select("doc_id", "url", "doc_len", "bucket"))
-            dds = part if dds is None else dds.unionByName(part)
+        dds = read_delta_doc_stats(spark, index_dir, manifest).select(
+            "doc_id", "url", "doc_len", "bucket")
         if tomb is not None:
             dds = dds.join(tomb, "doc_id", "left_anti")
         dds.withColumn("epoch", F.lit(-1)).write.mode("overwrite") \
@@ -1194,6 +1133,9 @@ def _compact_index_impl(
     from ela_lib_spark.index.build import (
         TOMBSTONE_DRIVER_CAP,
         TOMBSTONE_GC_CAP,
+        covered_epochs,
+        delta_deletes_path,
+        epochs_on_disk,
         read_tombstones,
     )
 
@@ -1221,10 +1163,8 @@ def _compact_index_impl(
                 "mode='major' (or gc), which re-merges all postings"
             )
     tiers = list(manifest.get("tiers", []))
-    covered = set(manifest.get("base_epochs", []))
-    for t in tiers:
-        covered.update(t["epochs"])
-    epochs = delta_epochs_on_disk(index_dir)
+    covered = covered_epochs(manifest)
+    epochs = epochs_on_disk(os.path.join(index_dir, "delta_chunks"))
     new_epochs = [e for e in epochs if e not in covered]
 
     tomb = read_tombstones(spark, index_dir)
@@ -1244,12 +1184,9 @@ def _compact_index_impl(
                                   driver_tombstone_cap=driver_tombstone_cap)
         pending_tiers = len(tiers) + (1 if new_epochs else 0)
         mode = "major" if pending_tiers > major_after_tiers else "minor"
-    from ela_lib_spark.index.build import (
-        delete_epochs_on_disk as _deod,
-    )
-
     new_delete_epochs = bool(
-        set(_deod(index_dir)) - set(manifest.get("delete_epochs", []))
+        set(epochs_on_disk(delta_deletes_path(index_dir)))
+        - set(manifest.get("delete_epochs", []))
     )
     if mode == "minor" and not new_epochs and not new_delete_epochs:
         return {"compacted_epochs": 0, "mode": "minor"}
@@ -1262,10 +1199,7 @@ def _compact_index_impl(
     )
     metrics = all_chunks.filter(F2.col("term_id") == METRICS_TERM_ID)
 
-    from ela_lib_spark.index.build import (
-        collect_tombstones,
-        delete_epochs_on_disk,
-    )
+    from ela_lib_spark.index.build import collect_tombstones
 
     # merge-time purge only while the set fits the closure-ship cap;
     # above it, postings keep tombstoned rows (the query path filters
@@ -1286,7 +1220,7 @@ def _compact_index_impl(
         # still counts purged docs — route queries through the live-df
         # recompute (same branch tiered reads use)
         manifest["df_stale"] = True
-    manifest["delete_epochs"] = delete_epochs_on_disk(index_dir)
+    manifest["delete_epochs"] = epochs_on_disk(delta_deletes_path(index_dir))
 
     if mode == "minor":
         if new_epochs:  # merge the uncovered delta epochs into a tier
@@ -1297,8 +1231,7 @@ def _compact_index_impl(
             ).drop("epoch")
             merged = merge_chunks(tier_chunks, avg_dl, n_shards,
                                   manifest["n_buckets"], manifest["codec"],
-                                  deleted=(deleted if deleted is not None and len(deleted)
-                                           else None))
+                                  deleted=deleted)
             merged.write.mode("overwrite").parquet(
                 os.path.join(index_dir, tier_name)
             )
@@ -1333,9 +1266,7 @@ def _compact_index_impl(
         os.path.join(index_dir, t["postings_dir"]) for t in tiers
     ]
     merged = merge_chunks(all_chunks, avg_dl, n_shards, manifest["n_buckets"],
-                          manifest["codec"],
-                          deleted=(deleted if deleted is not None and len(deleted)
-                                           else None))
+                          manifest["codec"], deleted=deleted)
     merged.write.mode("overwrite").parquet(
         os.path.join(index_dir, new_postings_name)
     )

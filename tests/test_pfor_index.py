@@ -1,5 +1,5 @@
-"""End-to-end index with the PForDelta codec (slow-path merge) —
-rank-identity must hold for both codecs."""
+"""End-to-end index with the PForDelta codec (the merge kernel's
+per-block encode) — rank-identity must hold for both codecs."""
 
 import os
 

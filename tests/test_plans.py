@@ -309,7 +309,7 @@ def test_simhash_guard_never_shuffles_signatures(spark, pages_path):
 
 
 def test_lsh_dedup_edges_key_only_band_shuffle(spark, pages_path):
-    """r6 shape pin for the default (carry_sig=False) LSH path: every
+    """r6 shape pin for the LSH path: every
     banded Exchange and the guard Window operate on the key-only
     frame — the `sig` array must never ride a (band, bh)-keyed
     shuffle. Signatures may appear only in the pair-attach joins

@@ -158,6 +158,16 @@ FLUSH_POSTINGS = 2_000_000  # SPIMI in-memory segment bound per partition
 #   delete-log state is where rewrite-and-truncate beats carrying it).
 TOMBSTONE_DRIVER_CAP = 10_000_000
 TOMBSTONE_GC_CAP = 100_000_000
+# Maintenance triggers (streaming/incremental.compact_index). Read as
+# module attributes at call time, so tests can monkeypatch them:
+# - auto mode runs GC once tombstones exceed GC_AFTER_DELETED_FRAC of
+#   the live corpus (or TOMBSTONE_GC_CAP, whichever is smaller),
+# - else major once the tier count would exceed MAJOR_AFTER_TIERS,
+# - the GC cogroup path (past the driver cap) salts each part's chunk
+#   group by term into GC_COGROUP_SALTS groups to bound group memory.
+GC_AFTER_DELETED_FRAC = 0.25
+MAJOR_AFTER_TIERS = 4
+GC_COGROUP_SALTS = 16
 
 
 def bucket_expr(n_buckets: int):
@@ -950,17 +960,31 @@ def read_tombstones(spark: SparkSession, out_dir: str,
     return df.select("doc_id")
 
 
-def collect_tombstones(spark: SparkSession, out_dir: str,
-                       epochs: list[int] | None = None) -> np.ndarray:
-    """Sorted int64 tombstone array for merge-time purge / query-time
-    filtering. Callers must gate on TOMBSTONE_DRIVER_CAP first (the
-    distributed deleted_df / cogroup paths take over above it) — this
-    materializes the whole set driver-side (Arrow toPandas, not
-    row-at-a-time collect)."""
-    t = read_tombstones(spark, out_dir, epochs)
-    if t is None:
-        return np.zeros(0, np.int64)
-    return np.unique(t.toPandas()["doc_id"].to_numpy(np.int64))
+def tombstone_set(spark: SparkSession, out_dir: str,
+                  epochs: list[int] | None = None,
+                  manifest: dict | None = None):
+    """The delete log as `(ids, df)` — the one place the
+    TOMBSTONE_DRIVER_CAP decision is made (load_index, compaction and
+    GC all call it). `df` is read_tombstones' frame (None without a
+    delete log). `ids` is the sorted distinct int64 array when the set
+    fits the cap, else None: past the cap the set stays a DataFrame —
+    queries co-group it with postings by shard (query/wand.py), GC with
+    chunks by part (streaming/incremental.py).
+
+    ONE bounded job: pull at most cap+1 DISTINCT ids; under the cap
+    that IS the tombstone array (no separate count job). distinct()
+    matters (ADVICE r4): the delete log holds duplicates (each upsert
+    epoch re-tombstones a still-present bulk doc), so probing raw rows
+    would push indexes with a small distinct set but a long epoch
+    history onto the expensive full-shuffle cogroup path."""
+    tomb = read_tombstones(spark, out_dir, epochs, manifest)
+    if tomb is None:
+        return np.zeros(0, np.int64), None
+    head = tomb.distinct().limit(TOMBSTONE_DRIVER_CAP + 1).toPandas()[
+        "doc_id"].to_numpy(np.int64)
+    if len(head) > TOMBSTONE_DRIVER_CAP:
+        return None, tomb
+    return np.unique(head), tomb
 
 
 def chunks_path(out_dir: str) -> str:
@@ -1119,8 +1143,7 @@ def build_index(
 
 
 def load_index(spark: SparkSession, out_dir: str,
-               snapshot_id: str | None = None,
-               driver_tombstone_cap: int | None = None) -> dict:
+               snapshot_id: str | None = None) -> dict:
     """Open a published index. `snapshot_id` time-travels to an
     archived snapshot manifest (snapshots/<id>.json) — readable as
     long as compaction hasn't pruned the data dirs it references.
@@ -1134,8 +1157,8 @@ def load_index(spark: SparkSession, out_dir: str,
     resolve; rows added after the snapshot may also be present).
 
     With tiered delta compaction (streaming/incremental.py) the
-    manifest may carry `tier_postings`: extra postings directories
-    merged from delta segments. `postings` is the union; tier rows
+    manifest may carry `tiers`: extra postings directories merged from
+    delta segments. `postings` is the union; tier rows
     may carry per-tier df values — query paths recompute global df
     per term when `manifest['tiers']` is present (query/wand.py)."""
     from ela_lib_spark.errors import IndexCorruptError, IndexNotFoundError
@@ -1181,7 +1204,8 @@ def load_index(spark: SparkSession, out_dir: str,
         # pinned in the snapshot manifest (absent field = none existed)
         del_epochs = (manifest.get("delete_epochs", [])
                       if snapshot_id is not None else None)
-        tomb = read_tombstones(spark, out_dir, del_epochs, manifest)
+        deleted_ids, tomb = tombstone_set(spark, out_dir, del_epochs,
+                                          manifest)
         if del_epochs and tomb is None:
             # the snapshot PINS delete epochs but its delete log is
             # gone — treating that as "no tombstones" would silently
@@ -1195,32 +1219,9 @@ def load_index(spark: SparkSession, out_dir: str,
                 "maintenance op to replay a crashed relocation, or "
                 "the snapshot has been expired"
             )
-        deleted_df = None
         if tomb is not None:
             doc_stats = doc_stats.join(tomb, "doc_id", "left_anti")
-            cap = (TOMBSTONE_DRIVER_CAP if driver_tombstone_cap is None
-                   else driver_tombstone_cap)
-            # ONE bounded job: pull at most cap+1 DISTINCT ids; under
-            # the cap that IS the tombstone array (no separate count
-            # job). distinct() matters (ADVICE r4): the delete log
-            # holds duplicates (each upsert epoch re-tombstones a
-            # still-present bulk doc), so probing raw rows would push
-            # indexes with a small distinct set but a long epoch
-            # history onto the expensive full-shuffle cogroup path —
-            # the same distinct-count gating _gc_index_impl uses.
-            head = tomb.distinct().limit(cap + 1).toPandas()["doc_id"] \
-                .to_numpy(np.int64)
-            if len(head) <= cap:
-                deleted_ids = np.unique(head)
-            else:
-                # absolute driver bound (VERDICT r3 #1): past the cap
-                # the tombstone set stays a DataFrame — query paths
-                # apply it via a shard-co-grouped filter (wand.py), GC
-                # via a part-co-grouped chunk rewrite (incremental.py)
-                deleted_ids = None
-                deleted_df = tomb
-        else:
-            deleted_ids = np.zeros(0, np.int64)
+        deleted_df = tomb if deleted_ids is None else None
         postings = functools.reduce(DataFrame.unionByName, (
             spark.read.parquet(p) for p in postings_dirs(out_dir, manifest)))
         if snapshot_id is not None:
@@ -1254,7 +1255,6 @@ def load_index(spark: SparkSession, out_dir: str,
             # snapshot_id against its pin before each query
             "dir": out_dir,
             "time_travel": snapshot_id is not None,
-            "driver_tombstone_cap": driver_tombstone_cap,
         }
     except Exception as e:  # manifest points at missing/unreadable data
         raise IndexCorruptError(

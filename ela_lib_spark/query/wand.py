@@ -339,10 +339,7 @@ def _revalidate_serving(index: dict) -> None:
                 pass  # cache may already be invalid post-GC
     index.pop("envelopes_driver", None)
     index.pop("tombstones_sharded", None)
-    index.update(load_index(
-        spark, index["dir"],
-        driver_tombstone_cap=index.get("driver_tombstone_cap"),
-    ))
+    index.update(load_index(spark, index["dir"]))
     prepare_serving(index)
 
 

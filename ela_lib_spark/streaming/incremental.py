@@ -332,12 +332,12 @@ def read_delta_postings(spark: SparkSession, index_dir: str) -> DataFrame | None
 # -------------------------------------------------- snapshot retention
 #
 # Iceberg-style expire_snapshots semantics (VERDICT r4 #3): with
-# `retention_keep_snapshots = N` set on the manifest, GC / major
-# compaction defer deleting data dirs still referenced by the N newest
-# archived snapshots, so `load_index(snapshot_id=...)` keeps working
-# across maintenance; `expire_snapshots` later drops old snapshots and
-# frees everything only they referenced. Without the setting (default)
-# maintenance frees superseded dirs immediately, exactly as before.
+# `retention_keep_snapshots = N` set on the manifest, maintenance
+# (_free_superseded) defers deleting data dirs still referenced by the
+# N newest archived snapshots, so `load_index(snapshot_id=...)` keeps
+# working across maintenance; `expire_snapshots` later drops old
+# snapshots and frees everything only they referenced. Without the
+# setting (default) maintenance frees superseded dirs immediately.
 #
 # Versioned dirs (postings-*, docs-g*, chunks-g*, tiers, …) are simply
 # left in place while protected. The literal live-ingest dirs the GC
@@ -674,21 +674,13 @@ def _expire_snapshots_impl(index_dir: str,
             "kept": manifest["history"]}
 
 
-def _tombstone_decrements(spark, index_dir: str) -> dict[int, tuple[int, int]]:
-    """{bucket: (n_docs, n_tokens)} of tombstoned docs — joins the
-    delete log against the doc dictionary (bulk docs + delta epochs),
-    so compacted corpus stats count LIVE docs only."""
-    from pyspark.sql import functions as F2
+def _tombstone_decrements(spark, index_dir: str,
+                          tomb: DataFrame) -> dict[int, tuple[int, int]]:
+    """{bucket: (n_docs, n_tokens)} of the tombstoned docs in `tomb` —
+    joins the delete log against the doc dictionary (bulk docs + delta
+    epochs), so compacted corpus stats count LIVE docs only."""
+    from ela_lib_spark.index.build import docs_dir_path, read_delta_doc_stats
 
-    from ela_lib_spark.index.build import (
-        docs_dir_path,
-        read_delta_doc_stats,
-        read_tombstones,
-    )
-
-    tomb = read_tombstones(spark, index_dir)
-    if tomb is None:
-        return {}
     dims = None
     bulk = docs_dir_path(index_dir)
     if os.path.exists(bulk):
@@ -702,8 +694,8 @@ def _tombstone_decrements(spark, index_dir: str) -> dict[int, tuple[int, int]]:
     rows = (
         dims.join(tomb, "doc_id", "left_semi")
         .groupBy("bucket")
-        .agg(F2.count("*").alias("dn"),
-             F2.sum("doc_len").cast("long").alias("dt"))
+        .agg(F.count("*").alias("dn"),
+             F.sum("doc_len").cast("long").alias("dt"))
         .collect()
     )
     return {int(r.bucket): (int(r.dn), int(r.dt)) for r in rows}
@@ -868,63 +860,60 @@ def _chunk_gc_cogroup_fn(decrements: dict):
     return fn
 
 
-def _gc_index_impl(spark: SparkSession, index_dir: str,
-                   n_shards: int | None = None,
-                   driver_tombstone_cap: int | None = None,
-                   cogroup_salts: int = 16) -> dict:
-    """Chunk-store garbage collection — the Lucene segment-rewrite
-    analog and the amortized reclaim path for tombstones and delta
-    fragmentation. One O(chunk store) pass (NO text re-extraction or
-    re-tokenization — 10-50× cheaper than a rebuild at web scale):
+def _free_superseded(index_dir: str, manifest: dict,
+                     superseded: list[str]) -> set[str]:
+    """Post-commit cleanup, one rule for every mode: delete each
+    superseded dir unless the live manifest or a snapshot inside the
+    retention window references it (expire_snapshots frees those
+    later). Orphaned versioned control tables are swept by the same
+    rule: a run that crashed between writing ledger-*/corpus_stats-*
+    and the manifest flip leaves dirs nothing references (snapshot
+    archives keep their own ledger copies). Returns the names retained
+    snapshots reference."""
+    protected = _referenced_dir_names(
+        _retained_old_snapshots(index_dir, manifest))
+    keep = protected | _referenced_dir_names([manifest])
+    orphans = [os.path.join(index_dir, e) for e in os.listdir(index_dir)
+               if e.startswith(("ledger-", "corpus_stats-"))]
+    for d in superseded + orphans:
+        if os.path.basename(d) not in keep:
+            shutil.rmtree(d, ignore_errors=True)
+    return protected
 
-    1. rewrite base ∪ delta chunks minus tombstoned postings into a
-       fresh `chunks-g{gen}` dir (pure map: decode→filter→re-encode),
-       metrics rows adjusted per bucket;
+
+def _gc_index_impl(spark: SparkSession, index_dir: str, manifest: dict,
+                   store: DataFrame, deleted, tomb: DataFrame | None,
+                   decrements: dict) -> tuple[DataFrame, dict, list[str]]:
+    """GC's own steps — the Lucene segment-rewrite analog and the
+    amortized reclaim path for tombstones and delta fragmentation. One
+    O(chunk store) pass (NO text re-extraction or re-tokenization —
+    10-50× cheaper than a rebuild at web scale):
+
+    1. rewrite `store` minus tombstoned postings into a fresh
+       `chunks-g{gen}` dir (decode→filter→re-encode), metrics rows
+       decremented per bucket;
     2. rewrite the doc dictionaries minus tombstones (bulk docs table;
-       delta doc-stats consolidated into one epoch=-1 dir);
-    3. major-merge the clean chunks → fresh postings (stored df is
-       exact again → `df_stale` clears);
-    4. single manifest flip, then delete the old chunk dirs, delta
-       epochs, and the whole delete log.
+       delta doc-stats consolidated into one epoch=-1 dir).
 
-    After GC the index is indistinguishable from a fresh bulk build of
-    the live corpus (same doc ids — postings reference them, so ids
-    are never remapped)."""
-    import shutil
+    _compact_index_impl then major-merges the clean store into fresh
+    postings (stored df is exact again → `df_stale` clears), flips the
+    manifest, frees the superseded dirs and clears the literal delta
+    dirs (_archive_literal_delta_dirs). After GC the index is
+    indistinguishable from a fresh bulk build of the live corpus (same
+    doc ids — postings reference them, so ids are never remapped).
 
+    Returns (clean store, GC's manifest fields, superseded dirs)."""
+    from ela_lib_spark.index import build
     from ela_lib_spark.index.build import (
-        DOC_BITS,
         METRICS_TERM_ID,
-        TOMBSTONE_DRIVER_CAP,
-        chunks_path,
-        collect_tombstones,
-        merge_chunks,
-        new_snapshot_id,
-        read_manifest,
-        read_tombstones,
-        write_manifest,
+        delta_doc_stats_dirs,
+        docs_dir_path,
+        read_delta_doc_stats,
+        tombstone_part_expr,
     )
     from ela_lib_spark.schemas import POSTING_CHUNKS
 
-    manifest = read_manifest(index_dir)
-    if n_shards is None:
-        n_shards = int(manifest.get("n_shards", 8))
-    from ela_lib_spark.index.build import stamp_chunk_bucket_group
-
-    stamp_chunk_bucket_group(manifest)
-    cap = (TOMBSTONE_DRIVER_CAP if driver_tombstone_cap is None
-           else driver_tombstone_cap)
-    tomb = read_tombstones(spark, index_dir)
-    n_tomb = tomb.distinct().count() if tomb is not None else 0
-    decrements = _tombstone_decrements(spark, index_dir) if n_tomb else {}
     gen = int(manifest.get("gc_gen", 0)) + 1
-
-    base_chunks = spark.read.parquet(chunks_path(index_dir))
-    delta = read_delta_postings(spark, index_dir)
-    all_chunks = (
-        base_chunks.unionByName(delta.drop("epoch"))
-        if delta is not None else base_chunks
-    )
 
     # 1. clean chunk store (is_m recomputed after the rewrite).
     # Two physical strategies, one kernel (_gc_transform):
@@ -936,24 +925,21 @@ def _gc_index_impl(spark: SparkSession, index_dir: str,
     #   ids); the salt bounds group memory to ~bucket_bytes/salts at
     #   the price of replicating each bucket's tombstones salts× in
     #   the shuffle.
-    new_chunks_name = f"chunks-g{gen}"
-    if n_tomb <= cap:
-        deleted = collect_tombstones(spark, index_dir)
-        cleaned = all_chunks.drop("is_m").mapInPandas(
+    chunks_name = f"chunks-g{gen}"
+    if deleted is not None:
+        cleaned = store.drop("is_m").mapInPandas(
             _chunk_gc_fn(deleted, decrements), schema=POSTING_CHUNKS
         )
     else:
-        left = all_chunks.drop("is_m").withColumn(
-            "_salt", F.pmod(F.col("term_id"), F.lit(cogroup_salts)).cast("int")
+        salts = build.GC_COGROUP_SALTS
+        left = store.drop("is_m").withColumn(
+            "_salt", F.pmod(F.col("term_id"), F.lit(salts)).cast("int")
         )
-        from ela_lib_spark.index.build import tombstone_part_expr
-
         right = tomb.select(
             "doc_id",
             tombstone_part_expr(manifest).cast("int").alias("part_id"),
         ).withColumn(
-            "_salt",
-            F.explode(F.array(*[F.lit(i) for i in range(cogroup_salts)])),
+            "_salt", F.explode(F.array(*[F.lit(i) for i in range(salts)])),
         )
         cleaned = left.groupBy("part_id", "_salt").cogroup(
             right.groupBy("part_id", "_salt")
@@ -963,20 +949,13 @@ def _gc_index_impl(spark: SparkSession, index_dir: str,
         "is_m", (F.col("term_id") == F.lit(METRICS_TERM_ID)).cast("int")
     )
     cleaned.write.mode("overwrite").partitionBy("is_m").parquet(
-        os.path.join(index_dir, new_chunks_name)
+        os.path.join(index_dir, chunks_name)
     )
-    chunks = spark.read.parquet(os.path.join(index_dir, new_chunks_name))
 
     # 2. clean doc dictionaries (left_anti joins — distributed at any
     # tombstone count)
-    from ela_lib_spark.index.build import (
-        delta_doc_stats_dirs,
-        docs_dir_path,
-        read_delta_doc_stats,
-    )
-
     old_docs_dir = docs_dir_path(index_dir, manifest)
-    new_docs_name = f"docs-g{gen}"
+    docs_name = f"docs-g{gen}"
     docs = spark.read.parquet(old_docs_dir)
     # re-cluster by bucket + sort so parquet row-group stats keep
     # serving the bucket-pushdown probe after the rewrite (the
@@ -986,101 +965,43 @@ def _gc_index_impl(spark: SparkSession, index_dir: str,
     docs_parts = max(spark.sparkContext.defaultParallelism, 8)
     clean_docs.repartition(docs_parts, "bucket") \
         .sortWithinPartitions("bucket", "url") \
-        .write.mode("overwrite").parquet(os.path.join(index_dir, new_docs_name))
+        .write.mode("overwrite").parquet(os.path.join(index_dir, docs_name))
     old_dds_dirs = delta_doc_stats_dirs(index_dir, manifest)
-    new_dds_name = None
+    dds_name = None
     if old_dds_dirs:
-        new_dds_name = f"delta_doc_stats-g{gen}"
+        dds_name = f"delta_doc_stats-g{gen}"
         dds = read_delta_doc_stats(spark, index_dir, manifest).select(
             "doc_id", "url", "doc_len", "bucket")
         if tomb is not None:
             dds = dds.join(tomb, "doc_id", "left_anti")
         dds.withColumn("epoch", F.lit(-1)).write.mode("overwrite") \
-            .partitionBy("epoch").parquet(os.path.join(index_dir, new_dds_name))
+            .partitionBy("epoch").parquet(os.path.join(index_dir, dds_name))
 
-    # 3. stats + fresh postings from the clean store (metrics rows were
-    # ALREADY decremented by the rewrite kernel — no double subtraction)
-    metrics = chunks.filter(F.col("term_id") == METRICS_TERM_ID)
-    snapshot = new_snapshot_id("gc")
-    n_docs, avg_dl, led_name, cs_name = _refresh_control_tables(
-        spark, index_dir, metrics, snapshot
-    )
-    new_postings_name = f"postings-gc{gen}"
-    merged = merge_chunks(chunks, avg_dl, n_shards, manifest["n_buckets"],
-                          manifest["codec"])
-    merged.write.mode("overwrite").parquet(
-        os.path.join(index_dir, new_postings_name)
-    )
-
-    # 4. commit + cleanup
-    old_dirs = [os.path.join(index_dir, manifest["postings_dir"]),
-                os.path.join(index_dir, manifest["chunks_dir"]),
-                old_docs_dir] + old_dds_dirs + [
-        os.path.join(index_dir, t["postings_dir"])
-        for t in manifest.get("tiers", [])
-    ]
-    old_dirs += _flip_control_tables(index_dir, manifest, led_name, cs_name)
-    manifest.update({
-        "postings_dir": new_postings_name,
-        "chunks_dir": new_chunks_name,
-        "docs_dir": new_docs_name,
-        "delta_doc_stats_dir": new_dds_name,
-        "tiers": [],
+    fields = {
+        "chunks_dir": chunks_name,
+        "docs_dir": docs_name,
+        "delta_doc_stats_dir": dds_name,
         "base_epochs": [],
         "delete_epochs": [],
         "df_stale": False,
         "gc_gen": gen,
-        "n_shards": n_shards,
-        "n_docs": n_docs,
-        "avg_dl": avg_dl,
-        "avg_dl_at_merge": avg_dl,
-        "snapshot_id": snapshot,
-    })
-    manifest = write_manifest(index_dir, manifest)
-    # snapshot retention (VERDICT r4 #3): dirs still referenced by
-    # retained archived snapshots are preserved; the literal delta
-    # dirs are relocated to the snapshot archive instead of deleted
-    retained = _retained_old_snapshots(index_dir, manifest)
-    protected = _referenced_dir_names(retained)
-    keep_new = {
-        os.path.abspath(os.path.join(index_dir, n))
-        for n in (new_postings_name, new_chunks_name, new_docs_name)
     }
-    for d in old_dirs:
-        if (os.path.abspath(d) not in keep_new
-                and os.path.basename(d) not in protected):
-            shutil.rmtree(d, ignore_errors=True)
-    _archive_literal_delta_dirs(index_dir, snapshot, protected)
-    # sweep orphaned versioned control tables (a compaction that
-    # crashed between writing them and the manifest flip leaves
-    # ledger-*/corpus_stats-* dirs nothing references — snapshot
-    # archives keep their own copies, so unreferenced = garbage)
-    for e in os.listdir(index_dir):
-        if (e.startswith(("ledger-", "corpus_stats-"))
-                and e not in (led_name, cs_name)
-                and e not in protected):
-            shutil.rmtree(os.path.join(index_dir, e), ignore_errors=True)
-    return {"mode": "gc", "n_docs": n_docs, "purged": int(n_tomb),
-            "chunks_dir": new_chunks_name}
+    superseded = [os.path.join(index_dir, manifest["chunks_dir"]),
+                  old_docs_dir] + old_dds_dirs
+    return (spark.read.parquet(os.path.join(index_dir, chunks_name)),
+            fields, superseded)
 
 
-def _compact_index_impl(
-    spark: SparkSession,
-    index_dir: str,
-    n_shards: int | None = None,
-    mode: str = "auto",
-    major_after_tiers: int = 4,
-    gc_after_deleted_frac: float = 0.25,
-    tombstone_gc_cap: int | None = None,
-    driver_tombstone_cap: int | None = None,
-) -> dict:
+def _compact_index_impl(spark: SparkSession, index_dir: str,
+                        n_shards: int | None = None,
+                        mode: str = "auto") -> dict:
     """Tiered (Lucene/LSM-style) compaction — per-compaction IO is
     proportional to the DELTA, never the base index (VERDICT r2 #2).
 
     Storage model: the bulk build's `chunks` dir plus the streamed
     `delta_chunks/epoch=N` dirs are the PERMANENT chunk store — no
-    compaction ever rewrites or moves them. What compaction produces is
-    query-ready postings:
+    compaction ever rewrites or moves them (only GC does). What
+    compaction produces is query-ready postings:
 
     - **minor** (the steady-state op): salt-merge ONLY the delta epochs
       not yet covered by a tier → a new `postings-t{g}` tier dir; the
@@ -1089,11 +1010,21 @@ def _compact_index_impl(
       byte-for-byte by tests/test_compaction.py.
     - **major** (amortized, when tiers pile up): one merge over base
       chunks ∪ all delta epochs → a single `postings-c{gen}`; tiers
-      reset; superseded postings dirs (base + tiers) are deleted
+      reset; superseded postings dirs (base + tiers) are freed
       post-commit. Chunk store still untouched.
-    - **auto**: major once the tier count would exceed
-      `major_after_tiers`, else minor — the classic size/count-tiered
-      trigger.
+    - **gc**: rewrite the chunk store and doc dictionaries minus the
+      tombstones (_gc_index_impl), then merge like major →
+      `postings-gc{gen}`.
+    - **auto**: GC once tombstones exceed GC_AFTER_DELETED_FRAC of the
+      live corpus or TOMBSTONE_GC_CAP; else major once the tier count
+      would exceed MAJOR_AFTER_TIERS; else minor — the classic
+      size/count-tiered triggers (constants in index/build.py).
+
+    Every mode runs one pipeline: read the tombstones once
+    (build.tombstone_set), write the control tables, merge the mode's
+    chunk input, flip the manifest, free what it superseded
+    (_free_superseded). A mode supplies only its chunk input, postings
+    dir name, manifest fields and superseded dirs.
 
     Query correctness across tiers: each doc's postings live entirely
     in one tier (a doc is ingested in exactly one epoch) and shard key
@@ -1107,16 +1038,21 @@ def _compact_index_impl(
     Crash safety: every data write targets a deterministic, versioned
     dir with mode=overwrite (replay-idempotent); the manifest pointer
     flip (os.replace) is the single commit point; deletes happen only
-    post-commit and only in major mode.
+    post-commit.
     """
-    from pyspark.sql import functions as F2
-
+    from ela_lib_spark.index import build
     from ela_lib_spark.index.build import (
         METRICS_TERM_ID,
         chunks_path,
+        covered_epochs,
+        delta_deletes_path,
+        epochs_on_disk,
         merge_chunks,
         new_snapshot_id,
+        postings_dirs,
         read_manifest,
+        stamp_chunk_bucket_group,
+        tombstone_set,
         write_manifest,
     )
 
@@ -1126,22 +1062,7 @@ def _compact_index_impl(
         raise ValueError(
             f"compact_index mode must be auto/minor/major/gc, got {mode!r}"
         )
-    if mode == "gc":
-        return _gc_index_impl(spark, index_dir, n_shards=n_shards,
-                              driver_tombstone_cap=driver_tombstone_cap)
-
-    from ela_lib_spark.index.build import (
-        TOMBSTONE_DRIVER_CAP,
-        TOMBSTONE_GC_CAP,
-        covered_epochs,
-        delta_deletes_path,
-        epochs_on_disk,
-        read_tombstones,
-    )
-
     manifest = read_manifest(index_dir)
-    from ela_lib_spark.index.build import stamp_chunk_bucket_group
-
     # record the build-time chunk granularity BEFORE any re-shard can
     # change n_shards — legacy (pre-r4) manifests derive it from the
     # still-original n_shards (review r4)
@@ -1151,159 +1072,119 @@ def _compact_index_impl(
         # across all merges keeps the doc_id→shard formula exact for
         # the distributed tombstone filter (query/wand.py)
         n_shards = int(manifest.get("n_shards", 8))
-    elif n_shards != int(manifest.get("n_shards", n_shards)):
+    elif (n_shards != int(manifest.get("n_shards", n_shards))
+          and mode not in ("major", "gc")):
         # re-sharding is only coherent when EVERYTHING re-merges: a
         # minor tier at a different n_shards than the base would break
         # the single doc_id→shard mapping the distributed tombstone
         # filter derives from the manifest (review r4)
-        if mode != "major":
-            raise ValueError(
-                f"n_shards={n_shards} differs from the index's "
-                f"{manifest.get('n_shards')} — re-sharding requires "
-                "mode='major' (or gc), which re-merges all postings"
-            )
+        raise ValueError(
+            f"n_shards={n_shards} differs from the index's "
+            f"{manifest.get('n_shards')} — re-sharding requires "
+            "mode='major' (or gc), which re-merges all postings"
+        )
+    manifest["n_shards"] = n_shards
     tiers = list(manifest.get("tiers", []))
-    covered = covered_epochs(manifest)
     epochs = epochs_on_disk(os.path.join(index_dir, "delta_chunks"))
-    new_epochs = [e for e in epochs if e not in covered]
+    new_epochs = [e for e in epochs if e not in covered_epochs(manifest)]
+    delete_epochs = epochs_on_disk(delta_deletes_path(index_dir))
 
-    tomb = read_tombstones(spark, index_dir)
-    n_tomb = tomb.distinct().count() if tomb is not None else 0
+    # Above the driver cap `deleted` is None: merges keep tombstoned
+    # rows (the query path filters them via deleted_df) until GC
+    # rewrites the store — and auto mode forces that GC at the absolute
+    # cap. Only the frame is known then: count it (the auto trigger and
+    # GC's report need the exact number).
+    deleted, tomb = tombstone_set(spark, index_dir)
+    n_tomb = len(deleted) if deleted is not None else tomb.distinct().count()
     if mode == "auto":
-        # size/count-tiered triggers: escalate to GC once tombstones
-        # exceed gc_after_deleted_frac of the live corpus (the
-        # LSM/Lucene reclaim policy) OR the ABSOLUTE tombstone cap
-        # (VERDICT r3 #1: a fraction-only trigger lets a 10^12-doc
-        # corpus accumulate ~10^11 tombstones of delete-log state
-        # before reclaiming); to major once tiers pile up
+        # GC at a live-fraction OR an ABSOLUTE tombstone cap (VERDICT
+        # r3 #1: a fraction-only trigger lets a 10^12-doc corpus
+        # accumulate ~10^11 tombstones of delete-log state before
+        # reclaiming); major once tiers pile up
         n_live = int(manifest.get("n_docs", 0)) or 1
-        gc_cap = (TOMBSTONE_GC_CAP if tombstone_gc_cap is None
-                  else tombstone_gc_cap)
-        if n_tomb > min(gc_after_deleted_frac * n_live, gc_cap):
-            return _gc_index_impl(spark, index_dir, n_shards=n_shards,
-                                  driver_tombstone_cap=driver_tombstone_cap)
-        pending_tiers = len(tiers) + (1 if new_epochs else 0)
-        mode = "major" if pending_tiers > major_after_tiers else "minor"
-    new_delete_epochs = bool(
-        set(epochs_on_disk(delta_deletes_path(index_dir)))
-        - set(manifest.get("delete_epochs", []))
-    )
-    if mode == "minor" and not new_epochs and not new_delete_epochs:
+        if n_tomb > min(build.GC_AFTER_DELETED_FRAC * n_live,
+                        build.TOMBSTONE_GC_CAP):
+            mode = "gc"
+        else:
+            pending_tiers = len(tiers) + (1 if new_epochs else 0)
+            mode = ("major" if pending_tiers > build.MAJOR_AFTER_TIERS
+                    else "minor")
+    if (mode == "minor" and not new_epochs
+            and set(delete_epochs) <= set(manifest.get("delete_epochs", []))):
         return {"compacted_epochs": 0, "mode": "minor"}
 
-    base_chunks = spark.read.parquet(chunks_path(index_dir))
+    decrements = _tombstone_decrements(spark, index_dir, tomb) if n_tomb else {}
+    # the chunk store every mode starts from: base chunks ∪ delta epochs
+    base = spark.read.parquet(chunks_path(index_dir))
     delta = read_delta_postings(spark, index_dir)
-    all_chunks = (
-        base_chunks.unionByName(delta.drop("epoch"))
-        if delta is not None else base_chunks
-    )
-    metrics = all_chunks.filter(F2.col("term_id") == METRICS_TERM_ID)
-
-    from ela_lib_spark.index.build import collect_tombstones
-
-    # merge-time purge only while the set fits the closure-ship cap;
-    # above it, postings keep tombstoned rows (the query path filters
-    # them distributively via deleted_df) until GC rewrites the store —
-    # and auto mode forces that GC at the absolute cap above
-    drv_cap = (TOMBSTONE_DRIVER_CAP if driver_tombstone_cap is None
-               else driver_tombstone_cap)
-    deleted = (collect_tombstones(spark, index_dir)
-               if n_tomb <= drv_cap else None)
-    decrements = _tombstone_decrements(spark, index_dir) if n_tomb else {}
-    snapshot = new_snapshot_id("compact")
-    n_docs, avg_dl, led_name, cs_name = _refresh_control_tables(
-        spark, index_dir, metrics, snapshot, decrements
-    )
-    old_ctrl = _flip_control_tables(index_dir, manifest, led_name, cs_name)
+    store = base if delta is None else base.unionByName(delta.drop("epoch"))
+    fields: dict = {"delete_epochs": delete_epochs}
     if n_tomb:
         # stored per-block df comes from immutable chunk metadata and
         # still counts purged docs — route queries through the live-df
-        # recompute (same branch tiered reads use)
-        manifest["df_stale"] = True
-    manifest["delete_epochs"] = epochs_on_disk(delta_deletes_path(index_dir))
-
+        # recompute (same branch tiered reads use). Minor purges only
+        # its new tier: the base keeps the superseded versions.
+        fields["df_stale"] = True
+    superseded: list[str] = []
+    if mode == "gc":
+        store, gc_fields, superseded = _gc_index_impl(
+            spark, index_dir, manifest, store, deleted, tomb, decrements)
+        fields.update(gc_fields)
+        # the rewrite already purged the postings and decremented the
+        # metrics rows — no second purge, no double subtraction
+        deleted, decrements = None, {}
+    snapshot = new_snapshot_id("gc" if mode == "gc" else "compact")
+    n_docs, avg_dl, led_name, cs_name = _refresh_control_tables(
+        spark, index_dir, store.filter(F.col("term_id") == METRICS_TERM_ID),
+        snapshot, decrements,
+    )
     if mode == "minor":
+        gen = int(manifest.get("tier_gen", 0)) + 1
+        postings_name = f"postings-t{gen}"
+        chunk_input = None
         if new_epochs:  # merge the uncovered delta epochs into a tier
-            gen = int(manifest.get("tier_gen", 0)) + 1
-            tier_name = f"postings-t{gen}"
-            tier_chunks = delta.filter(
-                F2.col("epoch").isin(new_epochs)
-            ).drop("epoch")
-            merged = merge_chunks(tier_chunks, avg_dl, n_shards,
-                                  manifest["n_buckets"], manifest["codec"],
-                                  deleted=deleted)
-            merged.write.mode("overwrite").parquet(
-                os.path.join(index_dir, tier_name)
-            )
-            manifest["tiers"] = tiers + [
-                {"postings_dir": tier_name, "epochs": new_epochs,
-                 "avg_dl": avg_dl}
-            ]
-            manifest["tier_gen"] = gen
+            chunk_input = delta.filter(
+                F.col("epoch").isin(new_epochs)).drop("epoch")
+            fields["tiers"] = tiers + [{"postings_dir": postings_name,
+                                        "epochs": new_epochs,
+                                        "avg_dl": avg_dl}]
+            fields["tier_gen"] = gen
         # else: delete-only epochs arrived — a stats-only publish (the
         # refreshed corpus stats + delete-epoch accounting) with no
         # postings change; the query-side tombstone filter already
         # hides the docs, this records the shrunken live stats
-        manifest["n_docs"] = n_docs
-        manifest["avg_dl"] = avg_dl
-        manifest["snapshot_id"] = snapshot
-        write_manifest(index_dir, manifest)
-        import shutil
+        res = {"compacted_epochs": len(new_epochs), "mode": "minor",
+               "tier": postings_name if new_epochs else None}
+    else:  # major and GC: one merge over the whole store → new base
+        if mode == "major":
+            gen = int(manifest.get("compaction_gen", 0)) + 1
+            postings_name = f"postings-c{gen}"
+            fields.update(compaction_gen=gen, base_epochs=epochs)
+            res = {"compacted_epochs": len(epochs), "mode": "major"}
+        else:
+            postings_name = f"postings-gc{fields['gc_gen']}"
+            res = {"mode": "gc", "purged": int(n_tomb),
+                   "chunks_dir": fields["chunks_dir"]}
+        chunk_input = store
+        superseded += postings_dirs(index_dir, manifest)
+        fields.update(postings_dir=postings_name, tiers=[],
+                      avg_dl_at_merge=avg_dl)
 
-        for d in old_ctrl:  # post-commit: superseded control tables
-            shutil.rmtree(d, ignore_errors=True)
-        return {
-            "compacted_epochs": len(new_epochs),
-            "mode": "minor",
-            "tier": manifest["tiers"][-1]["postings_dir"] if new_epochs else None,
-            "n_docs": n_docs,
-        }
-
-    # major: one merge over the whole chunk store → single postings dir
-    gen = int(manifest.get("compaction_gen", 0)) + 1
-    new_postings_name = f"postings-c{gen}"
-    old_dirs = [os.path.join(index_dir, manifest["postings_dir"])] + [
-        os.path.join(index_dir, t["postings_dir"]) for t in tiers
-    ]
-    merged = merge_chunks(all_chunks, avg_dl, n_shards, manifest["n_buckets"],
-                          manifest["codec"], deleted=deleted)
-    merged.write.mode("overwrite").parquet(
-        os.path.join(index_dir, new_postings_name)
-    )
-    manifest["postings_dir"] = new_postings_name
-    manifest["compaction_gen"] = gen
-    manifest["tiers"] = []
-    manifest["base_epochs"] = epochs
-    manifest["n_shards"] = n_shards  # major re-merges everything: the
-    # doc_id→shard mapping is uniform again under the new value
-    manifest["avg_dl_at_merge"] = avg_dl
-    manifest["n_docs"] = n_docs
-    manifest["avg_dl"] = avg_dl
-    manifest["snapshot_id"] = snapshot
+    if chunk_input is not None:
+        merge_chunks(chunk_input, avg_dl, n_shards, manifest["n_buckets"],
+                     manifest["codec"], deleted=deleted) \
+            .write.mode("overwrite").parquet(
+                os.path.join(index_dir, postings_name))
+    superseded += _flip_control_tables(index_dir, manifest, led_name, cs_name)
+    manifest.update(fields, n_docs=n_docs, avg_dl=avg_dl, snapshot_id=snapshot)
     manifest = write_manifest(index_dir, manifest)
-
-    # post-commit cleanup (safe: readers resolve via the manifest);
-    # the chunk store (chunks dir + delta_chunks epochs) is retained —
-    # it is the merge input for every future major compaction. With
-    # snapshot retention, superseded postings dirs still referenced by
-    # retained archived snapshots are preserved for time travel
-    # (expire_snapshots frees them later).
-    import shutil
-
-    protected = _referenced_dir_names(
-        _retained_old_snapshots(index_dir, manifest)
-    )
-    old_dirs += old_ctrl
-    for d in old_dirs:
-        if (os.path.abspath(d) != os.path.abspath(
-                os.path.join(index_dir, new_postings_name))
-                and os.path.basename(d) not in protected):
-            shutil.rmtree(d, ignore_errors=True)
-    return {
-        "compacted_epochs": len(epochs),
-        "mode": "major",
-        "n_docs": n_docs,
-    }
+    protected = _free_superseded(index_dir, manifest, superseded)
+    if mode == "gc":
+        # the chunk store no longer needs delta_chunks; the literal live
+        # delta dirs are relocated for retained snapshots, else deleted
+        _archive_literal_delta_dirs(index_dir, snapshot, protected)
+    res["n_docs"] = n_docs
+    return res
 
 
 def _auto_expire(index_dir: str, res: dict) -> None:
@@ -1322,46 +1203,23 @@ def _auto_expire(index_dir: str, res: dict) -> None:
         res["expired_snapshots"] = out["expired"]
 
 
-def gc_index(spark: SparkSession, index_dir: str,
-             n_shards: int | None = None,
-             driver_tombstone_cap: int | None = None,
-             cogroup_salts: int = 16) -> dict:
-    """Single-writer-guarded public entry — see _gc_index_impl for the
-    rewrite itself and _maintenance_lock for the exclusion rationale
-    (a concurrent compaction would race the manifest flip)."""
-    with _maintenance_lock(index_dir):
-        _replay_relocations(index_dir)
-        res = _gc_index_impl(spark, index_dir, n_shards=n_shards,
-                             driver_tombstone_cap=driver_tombstone_cap,
-                             cogroup_salts=cogroup_salts)
-        _auto_expire(index_dir, res)
-        return res
-
-
-def compact_index(
-    spark: SparkSession,
-    index_dir: str,
-    n_shards: int | None = None,
-    mode: str = "auto",
-    major_after_tiers: int = 4,
-    gc_after_deleted_frac: float = 0.25,
-    tombstone_gc_cap: int | None = None,
-    driver_tombstone_cap: int | None = None,
-) -> dict:
+def compact_index(spark: SparkSession, index_dir: str,
+                  n_shards: int | None = None, mode: str = "auto") -> dict:
     """Single-writer-guarded public entry — see _compact_index_impl
-    for compaction semantics. Two concurrent minor compactions would
-    each tier the same uncovered epochs and double-count them at the
-    second manifest flip; the lock (stale-stealing, crash-safe)
+    for the modes (auto/minor/major/gc). Two concurrent minor
+    compactions would each tier the same uncovered epochs and
+    double-count them at the second manifest flip; the lock (a kernel
+    flock the holder's exit or crash releases — see _maintenance_lock)
     excludes that. Raises MaintenanceLockError if maintenance is
     already running on this index."""
     with _maintenance_lock(index_dir):
         _replay_relocations(index_dir)
-        res = _compact_index_impl(
-            spark, index_dir, n_shards=n_shards, mode=mode,
-            major_after_tiers=major_after_tiers,
-            gc_after_deleted_frac=gc_after_deleted_frac,
-            tombstone_gc_cap=tombstone_gc_cap,
-            driver_tombstone_cap=driver_tombstone_cap,
-        )
+        res = _compact_index_impl(spark, index_dir, n_shards, mode)
         _auto_expire(index_dir, res)
         return res
+
+
+def gc_index(spark: SparkSession, index_dir: str,
+             n_shards: int | None = None) -> dict:
+    """Chunk-store garbage collection: compact_index(mode="gc")."""
+    return compact_index(spark, index_dir, n_shards=n_shards, mode="gc")

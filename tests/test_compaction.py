@@ -4,7 +4,9 @@ periodic major merge; queries stay rank-identical over the combined
 corpus at every step."""
 
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from ela_lib_spark.index.build import DOC_BITS, build_index, ids_with_tokens, load_index
@@ -196,7 +198,7 @@ def test_upsert_delete_tombstones_and_purge(spark, tmp_root):
     after); corpus stats exclude them from the next compaction on; a
     major compaction physically removes their postings and restores
     exact rank-identity vs brute force over the LIVE corpus."""
-    from ela_lib_spark.index.build import collect_tombstones
+    from ela_lib_spark.index.build import tombstone_set
 
     idx_dir = os.path.join(tmp_root, "upsert_idx")
     pages = synth_pages_df(spark, 400).cache()
@@ -249,7 +251,7 @@ def test_upsert_delete_tombstones_and_purge(spark, tmp_root):
     # epoch 1 (delete): drop 30 of the new docs by url
     apply_delta_batch(new50.limit(30).select("url"), 1, idx_dir,
                       n_buckets=4, mode="delete")
-    assert len(collect_tombstones(spark, idx_dir)) == 80
+    assert len(tombstone_set(spark, idx_dir)[0]) == 80
 
     # major compaction: postings physically purged, df recomputed live
     res = compact_index(spark, idx_dir, n_shards=2, mode="major")
@@ -286,13 +288,52 @@ def test_upsert_delete_tombstones_and_purge(spark, tmp_root):
         assert got == want, (terms, mode)
 
 
+@pytest.mark.xfail(strict=True, raises=AssertionError, reason=(
+    "known scoring defect: query/wand.py recomputes df as sum(n_docs) "
+    "over base + tier blocks, but minor compaction purges tombstones "
+    "only from the new tier, so the base still holds the 50 superseded "
+    "versions; df exceeds the live doc count and idf goes negative "
+    "once df > N + 0.5"))
+def test_wand_rank_identity_after_upsert_minor(spark, tmp_root):
+    """WAND over an upserted, minor-compacted index against brute force
+    over the live corpus (the latest version of each url)."""
+    idx_dir = os.path.join(tmp_root, "upsert_minor_idx")
+    pages = synth_pages_df(spark, 400).cache()
+    base = pages.limit(300).cache()
+    extra = pages.subtract(base).cache()
+    build_index(spark, base, idx_dir, n_buckets=4, n_shards=2, use_html=True)
+    changed = base.limit(50).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" zzupdated zzupdated"))
+    )
+    batch = changed.unionByName(extra.limit(50))
+    apply_delta_batch(batch, 0, idx_dir, n_buckets=4, mode="upsert")
+    assert compact_index(spark, idx_dir, n_shards=2,
+                         mode="minor")["n_docs"] == 350
+
+    replaced = {r.url for r in changed.select("url").collect()}
+    toks = {
+        r.doc_id: list(r.tokens)
+        for r in ids_with_tokens(base, 4, use_html=True)
+        .select("url", "doc_id", "tokens").collect()
+        if r.url not in replaced
+    }
+    for r in (
+        ids_with_tokens(batch, 4)
+        .withColumn("doc_id", F.col("doc_id") + (DELTA_BUCKET_BASE << DOC_BITS))
+        .select("doc_id", "tokens").collect()
+    ):
+        toks[r.doc_id] = list(r.tokens)
+    assert len(toks) == 350
+    _check_rank_identity(load_index(spark, idx_dir), toks)
+
+
 def test_gc_index_reclaims_tombstones_and_deltas(spark, tmp_root):
     """gc_index (r3): one chunk-store rewrite purges tombstoned
     postings, consolidates delta epochs and doc dictionaries, clears
     the delete log and df_stale, and leaves the index equivalent to a
     fresh bulk build of the live corpus (same doc ids). Maintenance
     continues normally afterwards."""
-    from ela_lib_spark.index.build import collect_tombstones
+    from ela_lib_spark.index.build import tombstone_set
     from ela_lib_spark.streaming.incremental import gc_index
 
     idx_dir = os.path.join(tmp_root, "gc_idx")
@@ -310,7 +351,7 @@ def test_gc_index_reclaims_tombstones_and_deltas(spark, tmp_root):
     apply_delta_batch(new40.limit(20).select("url"), 1, idx_dir,
                       n_buckets=4, mode="delete")
     compact_index(spark, idx_dir, n_shards=2)  # minor, pre-GC state
-    assert len(collect_tombstones(spark, idx_dir)) == 60
+    assert len(tombstone_set(spark, idx_dir)[0]) == 60
 
     res = gc_index(spark, idx_dir, n_shards=2)
     assert res["mode"] == "gc" and res["purged"] == 60
@@ -741,3 +782,63 @@ def test_maintenance_lock_multiprocess_mutual_exclusion(tmp_root):
         assert p.exitcode == 0
     with open(counter) as f:
         assert int(f.read()) == n_procs * iters
+
+
+_ARTIFACT_DIR = re.compile(
+    r"^(postings|chunks|docs|delta_doc_stats|ledger|corpus_stats)(-|$)")
+
+
+def test_maintenance_leaves_only_referenced_artifacts(spark, tmp_root):
+    """One cleanup rule for minor, major and GC: with retention off,
+    after every step each top-level artifact dir is one the live
+    manifest references, and an orphaned control-table pair (a
+    compaction that crashed before its manifest flip) is swept by the
+    next minor compaction."""
+    from ela_lib_spark.index.build import (
+        METRICS_TERM_ID,
+        chunks_path,
+        read_manifest,
+    )
+    from ela_lib_spark.streaming.incremental import (
+        _refresh_control_tables,
+        gc_index,
+        read_delta_postings,
+    )
+
+    def unreferenced():
+        m = read_manifest(idx_dir)
+        refs = {m.get(f) for f in ("postings_dir", "chunks_dir", "docs_dir",
+                                   "delta_doc_stats_dir", "ledger_dir",
+                                   "corpus_stats_dir")}
+        refs |= {t["postings_dir"] for t in m.get("tiers", [])}
+        refs.add("delta_doc_stats")  # the live ingest dir
+        return sorted(e for e in os.listdir(idx_dir)
+                      if _ARTIFACT_DIR.match(e) and e not in refs)
+
+    idx_dir = os.path.join(tmp_root, "cleanup_rule_idx")
+    pages = synth_pages_df(spark, 240).cache()
+    base = pages.limit(200).cache()
+    build_index(spark, base, idx_dir, n_buckets=4, n_shards=2)
+    assert unreferenced() == []
+    changed = base.limit(30).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" zzcleanup"))
+    )
+    apply_delta_batch(changed.unionByName(pages.subtract(base)), 0, idx_dir,
+                      n_buckets=4, mode="upsert")
+    assert unreferenced() == []
+
+    metrics = spark.read.parquet(chunks_path(idx_dir)).unionByName(
+        read_delta_postings(spark, idx_dir).drop("epoch")
+    ).filter(F.col("term_id") == METRICS_TERM_ID)
+    _refresh_control_tables(spark, idx_dir, metrics, "crashed-snap")
+    assert unreferenced() == ["corpus_stats-crashed-snap",
+                              "ledger-crashed-snap"]
+
+    assert compact_index(spark, idx_dir, n_shards=2,
+                         mode="minor")["mode"] == "minor"
+    assert unreferenced() == []
+    assert compact_index(spark, idx_dir, n_shards=2,
+                         mode="major")["mode"] == "major"
+    assert unreferenced() == []
+    assert gc_index(spark, idx_dir, n_shards=2)["purged"] == 30
+    assert unreferenced() == []

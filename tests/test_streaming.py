@@ -80,7 +80,7 @@ def test_streaming_upsert_end_to_end(spark, tmp_root):
     idx = load_index(spark, idx_dir)
     assert len(idx["deleted_ids"]) == 40  # re-crawled urls tombstoned
 
-    compact_index(spark, idx_dir, n_shards=2, gc_after_deleted_frac=0.9)
+    compact_index(spark, idx_dir, n_shards=2, mode="minor")
     idx = load_index(spark, idx_dir)
     assert idx["manifest"]["n_docs"] == 280  # 250 - 40 + 40 + 30
     upd = wand_topk(idx, ["zzstreamup"], "OR", 100)

@@ -11,6 +11,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from ela_lib_spark.index import build
 from ela_lib_spark.index.build import build_index, load_index
 from ela_lib_spark.query.wand import prepare_serving, wand_topk
 from ela_lib_spark.sources.synth import synth_pages_df
@@ -48,17 +49,18 @@ def _mk_index_with_tombstones(spark, tmp_root, name):
     )
     apply_delta_batch(changed, 0, idx_dir, n_buckets=4, mode="upsert")
     compact_index(spark, idx_dir, n_shards=2,
-                  gc_after_deleted_frac=0.9)  # keep tombstones (no GC)
+                  mode="minor")  # keep tombstones (no GC)
     return idx_dir
 
 
-def test_query_path_identical_past_driver_cap(spark, tmp_root):
+def test_query_path_identical_past_driver_cap(spark, tmp_root, monkeypatch):
     idx_dir = _mk_index_with_tombstones(spark, tmp_root, "tscale_idx")
 
     idx_arr = load_index(spark, idx_dir)
     assert idx_arr["deleted_df"] is None and len(idx_arr["deleted_ids"]) == 50
 
-    idx_df = load_index(spark, idx_dir, driver_tombstone_cap=5)
+    monkeypatch.setattr(build, "TOMBSTONE_DRIVER_CAP", 5)
+    idx_df = load_index(spark, idx_dir)
     assert idx_df["deleted_ids"] is None and idx_df["deleted_df"] is not None
 
     want = _results(idx_arr)
@@ -76,14 +78,16 @@ def test_query_path_identical_past_driver_cap(spark, tmp_root):
     assert _results(served) == want
 
 
-def test_gc_cogroup_rewrite_identical_past_driver_cap(spark, tmp_root):
+def test_gc_cogroup_rewrite_identical_past_driver_cap(spark, tmp_root,
+                                                     monkeypatch):
     idx_dir = _mk_index_with_tombstones(spark, tmp_root, "tscale_gc_idx")
     copy_dir = idx_dir + "_cogroup"
     shutil.copytree(idx_dir, copy_dir)
 
     res_a = gc_index(spark, idx_dir, n_shards=2)  # driver-array path
-    res_b = gc_index(spark, copy_dir, n_shards=2,
-                     driver_tombstone_cap=5, cogroup_salts=3)
+    monkeypatch.setattr(build, "TOMBSTONE_DRIVER_CAP", 5)
+    monkeypatch.setattr(build, "GC_COGROUP_SALTS", 3)
+    res_b = gc_index(spark, copy_dir, n_shards=2)
     assert res_a["purged"] == res_b["purged"] == 50
     assert res_a["n_docs"] == res_b["n_docs"] == 260
 
@@ -96,21 +100,23 @@ def test_gc_cogroup_rewrite_identical_past_driver_cap(spark, tmp_root):
     assert ia["ledger"].count() == ib["ledger"].count()
 
 
-def test_auto_compact_escalates_at_absolute_cap(spark, tmp_root):
+def test_auto_compact_escalates_at_absolute_cap(spark, tmp_root, monkeypatch):
     """50 tombstones on 260 live docs is under the 25% fraction trigger
     — but over a forced absolute cap, auto mode must GC anyway."""
     idx_dir = _mk_index_with_tombstones(spark, tmp_root, "tscale_cap_idx")
     # sanity: below both caps → stays minor (no new epochs → no-op)
     res = compact_index(spark, idx_dir, n_shards=2)
     assert res["mode"] == "minor"
-    res = compact_index(spark, idx_dir, n_shards=2, tombstone_gc_cap=10)
+    monkeypatch.setattr(build, "TOMBSTONE_GC_CAP", 10)
+    res = compact_index(spark, idx_dir, n_shards=2)
     assert res["mode"] == "gc" and res["purged"] == 50
     idx = load_index(spark, idx_dir)
     assert idx["manifest"]["n_docs"] == 260
     assert len(idx["deleted_ids"]) == 0
 
 
-def test_reshard_requires_major_and_keeps_mapping(spark, tmp_root):
+def test_reshard_requires_major_and_keeps_mapping(spark, tmp_root,
+                                                  monkeypatch):
     """Review r4: a minor compaction at a different n_shards than the
     index would fork the doc_id→shard mapping — rejected; a major
     re-shard re-merges everything, records the new n_shards, and the
@@ -124,16 +130,18 @@ def test_reshard_requires_major_and_keeps_mapping(spark, tmp_root):
     with pytest.raises(ValueError, match="re-sharding requires"):
         compact_index(spark, idx_dir, n_shards=3, mode="minor")
 
-    # driver_tombstone_cap=5 ALSO skips the merge-time purge, so the
+    # a driver cap of 5 ALSO skips the merge-time purge, so the
     # re-sharded postings still contain the 50 tombstoned docs — the
     # query-side filters must hide them under the NEW shard mapping
-    res = compact_index(spark, idx_dir, n_shards=3, mode="major",
-                        driver_tombstone_cap=5)
+    with monkeypatch.context() as mp:
+        mp.setattr(build, "TOMBSTONE_DRIVER_CAP", 5)
+        res = compact_index(spark, idx_dir, n_shards=3, mode="major")
     assert res["mode"] == "major"
     assert read_manifest(idx_dir)["n_shards"] == 3
 
     idx_arr = load_index(spark, idx_dir)  # array filter path
-    idx_df = load_index(spark, idx_dir, driver_tombstone_cap=5)  # cogroup
+    monkeypatch.setattr(build, "TOMBSTONE_DRIVER_CAP", 5)
+    idx_df = load_index(spark, idx_dir)  # cogroup
     assert len(idx_arr["deleted_ids"]) == 50
     assert idx_df["deleted_df"] is not None
     ra = _results(idx_arr)
@@ -144,7 +152,8 @@ def test_reshard_requires_major_and_keeps_mapping(spark, tmp_root):
     assert len(ra[("zztombver", "OR", None)]) == 50
 
 
-def test_reshard_misaligned_groups_mapping_exact(spark, tmp_root):
+def test_reshard_misaligned_groups_mapping_exact(spark, tmp_root,
+                                                 monkeypatch):
     """The case the naive doc_id//shard_group formula gets WRONG:
     build chunk group cg=2 (n_buckets=6, n_shards=3), re-shard major
     to shard group g=3 — bucket 3 lives in chunk part 2 → shard 0,
@@ -159,11 +168,14 @@ def test_reshard_misaligned_groups_mapping_exact(spark, tmp_root):
         "text", F.concat(F.col("text"), F.lit(" zztombver"))
     )
     apply_delta_batch(changed, 0, idx_dir, n_buckets=6, mode="upsert")
-    compact_index(spark, idx_dir, n_shards=2, mode="major",
-                  driver_tombstone_cap=5)  # reshard g=3, purge skipped
+    with monkeypatch.context() as mp:
+        mp.setattr(build, "TOMBSTONE_DRIVER_CAP", 5)
+        # reshard g=3, purge skipped
+        compact_index(spark, idx_dir, n_shards=2, mode="major")
 
     idx_arr = load_index(spark, idx_dir)
-    idx_df = load_index(spark, idx_dir, driver_tombstone_cap=5)
+    monkeypatch.setattr(build, "TOMBSTONE_DRIVER_CAP", 5)
+    idx_df = load_index(spark, idx_dir)
     assert len(idx_arr["deleted_ids"]) == 50
     assert idx_df["deleted_df"] is not None
     ra = _results(idx_arr)

@@ -37,7 +37,7 @@ def test_validate_healthy_through_lifecycle(spark, tmp_root):
     assert res["ok"], res
     assert "uncompacted" in res["checks"]["doc_stats_count"]["detail"]
 
-    compact_index(spark, idx_dir, n_shards=2, gc_after_deleted_frac=0.9)
+    compact_index(spark, idx_dir, n_shards=2, mode="minor")
     res = validate_index(spark, idx_dir, deep=True)
     assert res["ok"], res
     assert "uncompacted" not in res["checks"]["doc_stats_count"]["detail"]

@@ -241,82 +241,6 @@ def extract_image_features(media: DataFrame, batch_hint: int = 256) -> DataFrame
     )
 
 
-AUDIO_FEATURES_SCHEMA = (
-    "media_id long, duration_ms int, sample_rate int, sha256 string, "
-    "mfcc_stub array<float>"
-)
-
-
-def _audio_impl(payload: bytes) -> tuple[int, int, np.ndarray]:
-    digest = hashlib.sha256(payload).digest()
-    dur_ms = len(payload) * 8 // 16  # nominal 16 kbit/s stub
-    mfcc = np.frombuffer(digest, np.uint8)[:13].astype(np.float32) / 255.0
-    return dur_ms, 16000, mfcc
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """Audio twin of extract_image_features: Arrow batches of binary
-    payloads → typed feature rows. The DECODER is stubbed (duration
-    faked from payload length at a nominal bitrate; MFCC vector derived
-    deterministically from the digest) — swap `_audio_impl` for
-    soundfile/librosa on a cluster that ships them; schema, batching
-    and partitioning are the real contract."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "duration_ms": [], "sample_rate": [],
-                    "sha256": [], "mfcc_stub": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                dur, sr, mfcc = _audio_impl(b)
-                rows["media_id"].append(mid)
-                rows["duration_ms"].append(dur)
-                rows["sample_rate"].append(sr)
-                rows["sha256"].append(hashlib.sha256(b).hexdigest())
-                rows["mfcc_stub"].append(mfcc.tolist())
-            yield pd.DataFrame(rows)
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        fn, schema=AUDIO_FEATURES_SCHEMA
-    )
-
-
-def resize_image_plan(media: DataFrame, max_dim: int = 256) -> DataFrame:
-    """Resize *plan*: target dimensions per image (aspect-preserving
-    clamp to max_dim), computed from the stub header — pure column
-    expressions; the pixel resample itself belongs in the (stubbed)
-    decoder. Output: (media_id, width, height, target_w, target_h)."""
-    img = media.filter(F.col("kind") == "image")
-    # stub header: little-endian u32 width/height in payload[0:8]
-    def _u32le(off: int):
-        b = [F.conv(F.hex(F.substring("payload", off + i, 1)), 16, 10)
-             .cast("long") for i in range(1, 5)]
-        return b[0] + b[1] * 256 + b[2] * 65536 + b[3] * 16777216
-
-    w, h = _u32le(0), _u32le(4)
-    scale = F.least(
-        F.lit(1.0), F.lit(float(max_dim)) / F.greatest(w, h).cast("double")
-    )
-    return img.select(
-        "media_id",
-        w.cast("int").alias("width"),
-        h.cast("int").alias("height"),
-        F.ceil(w * scale).cast("int").alias("target_w"),
-        F.ceil(h * scale).cast("int").alias("target_h"),
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per sampled frame
-    index (decode stubbed — frame count faked from payload length).
-    Real impl swaps the count expression for ffprobe metadata."""
-    n_frames = (F.length("payload") / 1000).cast("int") + 1
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))).alias("frame_idx"))
-    )
-
-
 IMAGE_DECODE_SCHEMA = (
     "media_id long, width int, height int, n_channels int, "
     "mean_byte double"

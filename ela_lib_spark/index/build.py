@@ -168,6 +168,9 @@ TOMBSTONE_GC_CAP = 100_000_000
 GC_AFTER_DELETED_FRAC = 0.25
 MAJOR_AFTER_TIERS = 4
 GC_COGROUP_SALTS = 16
+# The live-ingest dirs apply_delta_batch writes, one `epoch=N` subdir
+# per micro-batch: chunk input, delete log, doc dictionary.
+DELTA_DIRS = ("delta_chunks", "delta_deletes", "delta_doc_stats")
 
 
 def bucket_expr(n_buckets: int):
@@ -875,44 +878,29 @@ def corpus_stats_path(out_dir: str, manifest: dict | None = None) -> str:
     return os.path.join(out_dir, m.get("corpus_stats_dir") or "corpus_stats")
 
 
-def delta_doc_stats_dirs(out_dir: str,
-                         manifest: dict | None = None) -> list[str]:
-    """Existing delta doc-dictionary dirs: the GC-consolidated dir the
-    manifest points at (if any) plus the default live dir new epochs
-    keep writing into. Deduped, existing-only."""
-    m = manifest if manifest is not None else (read_manifest(out_dir) or {})
-    names = []
-    if m.get("delta_doc_stats_dir"):
-        names.append(m["delta_doc_stats_dir"])
-    # the live ingest dir — snapshot-retention GC rewrites archived
-    # manifests to point this at the relocated archive copy
-    names.append(m.get("delta_doc_stats_live_dir") or "delta_doc_stats")
-    out = []
-    for n in dict.fromkeys(names):
-        p = os.path.join(out_dir, n)
-        if os.path.exists(p):
-            out.append(p)
-    return out
-
-
-def delta_deletes_path(out_dir: str, manifest: dict | None = None) -> str:
-    """Delete-log dir. Live manifests use the default literal name;
-    archived (time-travel) manifests may point at a snapshot-retention
-    archive copy relocated by GC."""
-    m = manifest or {}
-    return os.path.join(out_dir, m.get("delta_deletes_dir") or "delta_deletes")
+def delta_deletes_path(out_dir: str) -> str:
+    return os.path.join(out_dir, "delta_deletes")
 
 
 def read_delta_doc_stats(spark: SparkSession, out_dir: str,
-                         manifest: dict | None = None) -> DataFrame | None:
-    """Union of the delta doc-dictionary dirs (doc_id, url, doc_len,
-    bucket, epoch), or None when there are none. Callers apply their
-    own epoch filter and projection."""
-    out = None
-    for d in delta_doc_stats_dirs(out_dir, manifest):
-        part = spark.read.option("basePath", d).parquet(d)
-        out = part if out is None else out.unionByName(part)
-    return out
+                         manifest: dict | None = None,
+                         epochs: list[int] | None = None) -> DataFrame | None:
+    """Delta doc dictionary (doc_id, url, doc_len, bucket, epoch): the
+    GC-consolidated dir the manifest points at (epoch -1), if any, plus
+    the `delta_doc_stats/epoch=N` dirs for N in `epochs` (None = the
+    live epochs). None when there are none."""
+    m = manifest if manifest is not None else (read_manifest(out_dir) or {})
+    parts = []
+    if m.get("delta_doc_stats_dir"):
+        d = os.path.join(out_dir, m["delta_doc_stats_dir"])
+        if os.path.exists(d):
+            parts.append(spark.read.option("basePath", d).parquet(d))
+    root = os.path.join(out_dir, "delta_doc_stats")
+    live = read_epochs(spark, root, live_epochs(root, m)
+                       if epochs is None else epochs)
+    if live is not None:
+        parts.append(live)
+    return functools.reduce(DataFrame.unionByName, parts) if parts else None
 
 
 def postings_dirs(out_dir: str, manifest: dict) -> list[str]:
@@ -933,7 +921,7 @@ def covered_epochs(manifest: dict) -> set[int]:
 
 def epochs_on_disk(root: str) -> list[int]:
     """Sorted N of the `epoch=N` subdirs of `root` ([] if absent) —
-    delta_chunks and the delete log use this layout."""
+    the layout of the three delta dirs (DELTA_DIRS)."""
     if not os.path.exists(root):
         return []
     return sorted(
@@ -943,21 +931,42 @@ def epochs_on_disk(root: str) -> list[int]:
     )
 
 
+def live_epochs(root: str, manifest: dict) -> list[int]:
+    """The epochs of `root` a live read sees: those on disk minus the
+    ones a GC already consumed (manifest `gc_epochs`). A GC commits by
+    recording its epochs, so the dirs it consumed may outlive the
+    commit — kept for retained snapshots, or left by a crash before
+    cleanup — and every live reader skips them through this helper."""
+    done = set(manifest.get("gc_epochs", []))
+    return [e for e in epochs_on_disk(root) if e not in done]
+
+
+def read_epochs(spark: SparkSession, root: str,
+                epochs: list[int]) -> DataFrame | None:
+    """The `epoch=N` subdirs of `root` for N in `epochs` that exist on
+    disk, with `epoch` as a column; None when there are none."""
+    want = set(epochs)
+    paths = [os.path.join(root, f"epoch={e}")
+             for e in epochs_on_disk(root) if e in want]
+    if not paths:
+        return None
+    return spark.read.option("basePath", root).parquet(*paths)
+
+
 def read_tombstones(spark: SparkSession, out_dir: str,
                     epochs: list[int] | None = None,
                     manifest: dict | None = None) -> DataFrame | None:
     """Tombstoned doc ids from upsert/delete delta batches
     (delta_deletes/epoch=N, one `doc_id long` column). `epochs`
-    restricts to a snapshot's pinned set (time travel); None = all.
-    `manifest` resolves the delete-log dir (time-traveled manifests
-    may point at a retention-archive copy)."""
-    p = delta_deletes_path(out_dir, manifest)
-    if not os.path.exists(p):
-        return None
-    df = spark.read.option("basePath", p).parquet(p)
-    if epochs is not None:
-        df = df.filter(F.col("epoch").isin([int(e) for e in epochs]))
-    return df.select("doc_id")
+    restricts to a pinned set (a snapshot's, or a compaction's
+    listing); None = the live epochs of `manifest` (default: the live
+    manifest)."""
+    p = delta_deletes_path(out_dir)
+    if epochs is None:
+        m = manifest if manifest is not None else (read_manifest(out_dir) or {})
+        epochs = live_epochs(p, m)
+    df = read_epochs(spark, p, epochs)
+    return None if df is None else df.select("doc_id")
 
 
 def tombstone_set(spark: SparkSession, out_dir: str,
@@ -1183,42 +1192,39 @@ def load_index(spark: SparkSession, out_dir: str,
         # streamed docs' dictionary rows live beside the bulk docs table
         # (delta_doc_stats/epoch=N, written by apply_delta_batch; plus
         # the GC-consolidated dir when one exists) — the doc-stats
-        # surface must cover them too after compaction
-        # time-traveled loads pin the delta doc-dictionary to the
+        # surface must cover them too after compaction.
+        # Time-traveled loads pin the delta doc-dictionary to the
         # epochs the snapshot's POSTINGS cover (base_epochs + tier
-        # epochs; -1 = the GC-consolidated dir a post-GC manifest
-        # points at): epochs ingested after the snapshot are invisible
-        # to its postings, so they must be invisible to its doc
-        # surface too. Live loads see everything on disk.
-        extra = read_delta_doc_stats(spark, out_dir, manifest)
+        # epochs; the GC-consolidated dir a post-GC manifest points at
+        # is always read): epochs ingested after the snapshot are
+        # invisible to its postings, so they must be invisible to its
+        # doc surface too. Live loads see the live epochs.
+        extra = read_delta_doc_stats(
+            spark, out_dir, manifest,
+            sorted(covered_epochs(manifest)) if snapshot_id is not None
+            else None)
         if extra is not None:
-            if snapshot_id is not None:
-                pinned = {-1} | covered_epochs(manifest)
-                extra = extra.filter(
-                    F.col("epoch").isin([int(e) for e in pinned]))
             doc_stats = doc_stats.unionByName(
                 extra.select("doc_id", "url", "doc_len", "bucket")
             )
-        # tombstones (upsert/delete delta batches): live loads see every
-        # delete epoch on disk; time-traveled loads see the epoch set
+        # tombstones (upsert/delete delta batches): live loads see the
+        # live delete epochs; time-traveled loads see the epoch set
         # pinned in the snapshot manifest (absent field = none existed)
         del_epochs = (manifest.get("delete_epochs", [])
                       if snapshot_id is not None else None)
-        deleted_ids, tomb = tombstone_set(spark, out_dir, del_epochs,
-                                          manifest)
-        if del_epochs and tomb is None:
-            # the snapshot PINS delete epochs but its delete log is
-            # gone — treating that as "no tombstones" would silently
-            # resurrect deleted docs. Fail loudly instead (a crashed
-            # GC relocation is auto-repaired by the next maintenance
-            # op's _replay_relocations; otherwise the snapshot's data
-            # has been expired).
+        missing = sorted(set(del_epochs or ())
+                         - set(epochs_on_disk(delta_deletes_path(out_dir))))
+        if missing:
+            # the snapshot PINS delete epochs whose delete log is gone —
+            # treating that as "no tombstones" would silently resurrect
+            # deleted docs. Fail loudly instead.
             raise IndexCorruptError(
                 f"snapshot {snapshot_id!r} pins delete epochs "
-                f"{del_epochs} but its delete log is missing — run a "
-                "maintenance op to replay a crashed relocation, or "
-                "the snapshot has been expired"
+                f"{del_epochs} but the delete log is missing epochs "
+                f"{missing} — the snapshot's data has been expired"
             )
+        deleted_ids, tomb = tombstone_set(spark, out_dir, del_epochs,
+                                          manifest)
         if tomb is not None:
             doc_stats = doc_stats.join(tomb, "doc_id", "left_anti")
         deleted_df = tomb if deleted_ids is None else None

@@ -97,7 +97,7 @@ def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
     from ela_lib_spark.index.build import (
         covered_epochs,
         delta_deletes_path,
-        epochs_on_disk,
+        live_epochs,
         read_delta_doc_stats,
         read_tombstones,
     )
@@ -124,7 +124,7 @@ def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
     extra = read_delta_doc_stats(spark, index_dir, manifest)
     if extra is not None:
         docs = docs.unionByName(extra.select("doc_id"))
-    tomb = read_tombstones(spark, index_dir)
+    tomb = read_tombstones(spark, index_dir, manifest=manifest)
     live = docs.join(tomb, "doc_id", "left_anti") if tomb is not None else docs
     agg = live.agg(
         F.count("*").alias("n"),
@@ -134,10 +134,10 @@ def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
     # yet covered by a publish legitimately shift the live count — an
     # expected pre-compaction state, not corruption
     pending = (
-        set(epochs_on_disk(os.path.join(index_dir, "delta_chunks")))
+        set(live_epochs(os.path.join(index_dir, "delta_chunks"), manifest))
         - covered_epochs(manifest)
     ) or (
-        set(epochs_on_disk(delta_deletes_path(index_dir)))
+        set(live_epochs(delta_deletes_path(index_dir), manifest))
         - set(manifest.get("delete_epochs", []))
     )
     if pending:

@@ -322,11 +322,16 @@ def incremental_index_maintenance(
     )
 
 
-def read_delta_postings(spark: SparkSession, index_dir: str) -> DataFrame | None:
+def read_delta_postings(spark: SparkSession, index_dir: str,
+                        epochs: list[int] | None = None) -> DataFrame | None:
+    """Delta chunk rows (with `epoch`) of `epochs`; None = the live
+    epochs (build.live_epochs)."""
+    from ela_lib_spark.index.build import live_epochs, read_epochs, read_manifest
+
     p = os.path.join(index_dir, "delta_chunks")
-    if not os.path.exists(p):
-        return None
-    return spark.read.option("basePath", p).parquet(p)
+    if epochs is None:
+        epochs = live_epochs(p, read_manifest(index_dir) or {})
+    return read_epochs(spark, p, epochs)
 
 
 # -------------------------------------------------- snapshot retention
@@ -339,15 +344,15 @@ def read_delta_postings(spark: SparkSession, index_dir: str) -> DataFrame | None
 # snapshots and frees everything only they referenced. Without the
 # setting (default) maintenance frees superseded dirs immediately.
 #
-# Versioned dirs (postings-*, docs-g*, chunks-g*, tiers, …) are simply
-# left in place while protected. The literal live-ingest dirs the GC
-# must clear for live correctness (`delta_deletes`, `delta_doc_stats`)
-# are instead RELOCATED under snapshots/archive/<gc-snapshot>/ and
-# every archived manifest that referenced them is re-pointed at the
-# archive copy (readers resolve those dirs through manifest fields:
-# delta_deletes_dir / delta_doc_stats_live_dir). `delta_chunks` is
-# merge input only — no time-traveled READ path touches it — so it is
-# always freed.
+# One reference rule covers every dir: versioned dirs (postings-*,
+# docs-g*, chunks-g*, tiers, …) by name, and the delta epochs a GC
+# consumed (manifest `gc_epochs`) by `epoch=N` subdir — a snapshot
+# references `delta_deletes/epoch=N` for its delete_epochs and
+# `delta_doc_stats/epoch=N` for the epochs its postings cover.
+# `delta_chunks` is merge input only — no time-traveled READ path
+# touches it — so its consumed epochs are always freed. Live readers
+# skip consumed epochs (build.live_epochs), so freeing them only
+# reclaims space.
 
 _RETAINABLE_FIELDS = ("postings_dir", "chunks_dir", "docs_dir",
                       "delta_doc_stats_dir", "ledger_dir",
@@ -406,135 +411,46 @@ def _retained_old_snapshots(index_dir: str, manifest: dict) -> list[dict]:
 
 def _referenced_dir_names(manifests: list[dict]) -> set[str]:
     """Every index-relative dir name some manifest's READ path can
-    touch (explicit fields, tier postings, and the implicit live delta
-    dirs each manifest resolves via its defaults)."""
+    touch: explicit fields, tier postings, and the delta epoch subdirs
+    a time-traveled load pins (delete log: delete_epochs; doc
+    dictionary: the epochs its postings cover)."""
+    from ela_lib_spark.index.build import covered_epochs
+
     names: set[str] = set()
     for m in manifests:
         for fld in _RETAINABLE_FIELDS:
             if m.get(fld):
                 names.add(m[fld])
-        names.add(m.get("delta_deletes_dir") or "delta_deletes")
-        names.add(m.get("delta_doc_stats_live_dir") or "delta_doc_stats")
         for t in m.get("tiers", []):
             names.add(t["postings_dir"])
+        names.update(f"delta_deletes/epoch={e}"
+                     for e in m.get("delete_epochs", []))
+        names.update(f"delta_doc_stats/epoch={e}"
+                     for e in covered_epochs(m))
     return names
 
 
-def _archive_literal_delta_dirs(index_dir: str, snapshot: str,
-                                protected: set[str]) -> None:
-    """Relocate the literal delta dirs a finished GC must clear out of
-    the live tree into snapshots/archive/<gc-snapshot>/, then re-point
-    every archived manifest still referencing the literal names at the
-    copies. delta_chunks (merge input, never read by time travel) is
-    deleted outright.
+def _free_gc_epochs(index_dir: str, manifest: dict,
+                    keep: set[str]) -> list[str]:
+    """Delete every consumed delta epoch subdir (manifest `gc_epochs`)
+    whose name is not in `keep`; return the freed names. A delta dir
+    left empty is removed with os.rmdir, which fails — and so keeps
+    it — if a concurrent ingest has just written an epoch into it."""
+    from ela_lib_spark.index.build import DELTA_DIRS
 
-    Crash safety: a crash between the renames and the manifest
-    re-point would leave archived manifests referencing literal dirs
-    that no longer exist — and a missing delete log reads as "no
-    tombstones", i.e. silently WRONG time travel. So the planned moves
-    are journaled (.relocation.json inside the archive dir) BEFORE the
-    first rename, the journal is removed only after every manifest is
-    re-pointed, and `_replay_relocations` re-applies any pending
-    journal at the start of the next locked maintenance op. The
-    rewrite is idempotent (only fields still holding the literal name
-    are touched). load_index additionally refuses to time-travel a
-    snapshot whose pinned delete epochs cannot be resolved."""
-    moved: dict[str, tuple[str, str]] = {}
-    arch_root = os.path.join(index_dir, "snapshots", "archive", snapshot)
-    plan: dict[str, tuple[str, str]] = {}
-    for literal, field in (("delta_deletes", "delta_deletes_dir"),
-                          ("delta_doc_stats", "delta_doc_stats_live_dir")):
-        src = os.path.join(index_dir, literal)
-        if not os.path.exists(src):
-            continue
-        if literal in protected:
-            plan[literal] = (field, os.path.relpath(
-                os.path.join(arch_root, literal), index_dir))
-        else:
-            shutil.rmtree(src, ignore_errors=True)
-    if plan:
-        os.makedirs(arch_root, exist_ok=True)
-        jpath = os.path.join(arch_root, ".relocation.json")
-        jtmp = jpath + ".tmp"
-        with open(jtmp, "w") as f:
-            json.dump({"skip": snapshot,
-                       "moves": {lit: {"field": fld, "rel": rel}
-                                 for lit, (fld, rel) in plan.items()}}, f)
-        os.replace(jtmp, jpath)
-        for literal, (field, rel) in plan.items():
-            src = os.path.join(index_dir, literal)
-            if os.path.exists(src):  # replay-safe: may already be moved
-                os.rename(src, os.path.join(index_dir, rel))
-            moved[literal] = (field, rel)
-    shutil.rmtree(os.path.join(index_dir, "delta_chunks"),
-                  ignore_errors=True)
-    if not moved:
-        return
-    _repoint_archived_manifests(index_dir, snapshot, moved)
-    try:
-        os.remove(os.path.join(arch_root, ".relocation.json"))
-    except OSError:
-        pass
-
-
-def _repoint_archived_manifests(index_dir: str, skip_snapshot: str | None,
-                                moved: dict[str, tuple[str, str]]) -> None:
-    sdir = os.path.join(index_dir, "snapshots")
-    for e in os.listdir(sdir):
-        if not e.endswith(".json") or e == f"{skip_snapshot}.json":
-            continue
-        p = os.path.join(sdir, e)
+    freed = []
+    for d in DELTA_DIRS:
+        for e in manifest.get("gc_epochs", []):
+            name = f"{d}/epoch={e}"
+            p = os.path.join(index_dir, name)
+            if name not in keep and os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+                freed.append(name)
         try:
-            with open(p) as f:
-                sm = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        changed = False
-        for literal, (field, rel) in moved.items():
-            if (sm.get(field) or literal) == literal:
-                sm[field] = rel
-                changed = True
-        if changed:
-            tmp = p + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(sm, f, indent=1)
-            os.replace(tmp, p)
-
-
-def _replay_relocations(index_dir: str) -> int:
-    """Finish any relocation a crashed GC left half-done (journal
-    present). Idempotent; runs under the maintenance lock. Returns the
-    number of journals replayed."""
-    arch = os.path.join(index_dir, "snapshots", "archive")
-    if not os.path.isdir(arch):
-        return 0
-    replayed = 0
-    for gen in os.listdir(arch):
-        jpath = os.path.join(arch, gen, ".relocation.json")
-        if not os.path.exists(jpath):
-            continue
-        try:
-            with open(jpath) as f:
-                journal = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        moved = {}
-        for literal, spec in journal.get("moves", {}).items():
-            src = os.path.join(index_dir, literal)
-            dst = os.path.join(index_dir, spec["rel"])
-            if os.path.exists(src) and not os.path.exists(dst):
-                os.rename(src, dst)
-            if os.path.exists(dst):
-                moved[literal] = (spec["field"], spec["rel"])
-        if moved:
-            _repoint_archived_manifests(index_dir, journal.get("skip"),
-                                        moved)
-        try:
-            os.remove(jpath)
+            os.rmdir(os.path.join(index_dir, d))
         except OSError:
             pass
-        replayed += 1
-    return replayed
+    return freed
 
 
 def set_snapshot_retention(index_dir: str, keep_last: int) -> dict:
@@ -575,7 +491,6 @@ def expire_snapshots(index_dir: str, keep_last: int | None = None) -> dict:
     Reference analog: the import manifest's pinned-files model
     (service/task/migrator.go:1566-1580) + Iceberg expire_snapshots."""
     with _maintenance_lock(index_dir):
-        _replay_relocations(index_dir)
         return _expire_snapshots_impl(index_dir, keep_last)
 
 
@@ -627,44 +542,21 @@ def _expire_snapshots_impl(index_dir: str,
         m = _load_archived_snapshot(index_dir, sid)
         if m is not None:
             survivors.append(m)
-    referenced = {
-        os.path.abspath(os.path.join(index_dir, n))
-        for n in _referenced_dir_names(survivors)
-    }
-
-    freed: list[str] = []
-    # archive copies only expired snapshots pointed at
-    arch = os.path.join(sdir, "archive")
-    if os.path.isdir(arch):
-        for gen in os.listdir(arch):
-            gdir = os.path.join(arch, gen)
-            for name in (os.listdir(gdir) if os.path.isdir(gdir) else []):
-                p = os.path.join(gdir, name)
-                # skip plain files (e.g. a pending .relocation.json —
-                # replay, which ran first under this lock, owns it)
-                if not os.path.isdir(p):
-                    continue
-                if os.path.abspath(p) not in referenced:
-                    shutil.rmtree(p, ignore_errors=True)
-                    freed.append(os.path.relpath(p, index_dir))
-            if os.path.isdir(gdir) and not os.listdir(gdir):
-                os.rmdir(gdir)
+    referenced = _referenced_dir_names(survivors)
+    freed = _free_gc_epochs(index_dir, manifest, referenced)
     # superseded top-level artifact dirs nothing references any
     # more. Only the known artifact families are candidates, and
-    # the literal live-ingest dirs are NEVER candidates (they hold
-    # un-GC'd live data by definition).
+    # the literal live-ingest dir is NEVER a candidate.
     fam = re.compile(
         r"^(postings|chunks|docs|delta_doc_stats|ledger|corpus_stats)"
         r"(-|$)"
     )
-    live_literals = {"delta_chunks", "delta_deletes", "delta_doc_stats",
-                     "snapshots"}
     for e in os.listdir(index_dir):
         p = os.path.join(index_dir, e)
-        if (e in live_literals or not os.path.isdir(p)
+        if (e == "delta_doc_stats" or not os.path.isdir(p)
                 or not fam.match(e)):
             continue
-        if os.path.abspath(p) not in referenced:
+        if e not in referenced:
             shutil.rmtree(p, ignore_errors=True)
             freed.append(e)
 
@@ -861,29 +753,31 @@ def _chunk_gc_cogroup_fn(decrements: dict):
 
 
 def _free_superseded(index_dir: str, manifest: dict,
-                     superseded: list[str]) -> set[str]:
+                     superseded: list[str]) -> None:
     """Post-commit cleanup, one rule for every mode: delete each
-    superseded dir unless the live manifest or a snapshot inside the
-    retention window references it (expire_snapshots frees those
-    later). Orphaned versioned control tables are swept by the same
-    rule: a run that crashed between writing ledger-*/corpus_stats-*
-    and the manifest flip leaves dirs nothing references (snapshot
-    archives keep their own ledger copies). Returns the names retained
-    snapshots reference."""
-    protected = _referenced_dir_names(
-        _retained_old_snapshots(index_dir, manifest))
-    keep = protected | _referenced_dir_names([manifest])
+    superseded dir, and each delta epoch subdir a GC consumed, unless
+    the live manifest or a snapshot inside the retention window
+    references it (expire_snapshots frees those later). Orphaned
+    versioned control tables are swept by the same rule: a run that
+    crashed between writing ledger-*/corpus_stats-* and the manifest
+    flip leaves dirs nothing references (snapshot archives keep their
+    own ledger copies). Cleanup only reclaims space: a crash inside it
+    leaves a correct index, and the next op finishes the job."""
+    keep = _referenced_dir_names(
+        [manifest] + _retained_old_snapshots(index_dir, manifest))
     orphans = [os.path.join(index_dir, e) for e in os.listdir(index_dir)
                if e.startswith(("ledger-", "corpus_stats-"))]
     for d in superseded + orphans:
         if os.path.basename(d) not in keep:
             shutil.rmtree(d, ignore_errors=True)
-    return protected
+    _free_gc_epochs(index_dir, manifest, keep)
 
 
 def _gc_index_impl(spark: SparkSession, index_dir: str, manifest: dict,
                    store: DataFrame, deleted, tomb: DataFrame | None,
-                   decrements: dict) -> tuple[DataFrame, dict, list[str]]:
+                   decrements: dict,
+                   listed: dict[str, list[int]]) -> tuple[DataFrame, dict,
+                                                          list[str]]:
     """GC's own steps — the Lucene segment-rewrite analog and the
     amortized reclaim path for tombstones and delta fragmentation. One
     O(chunk store) pass (NO text re-extraction or re-tokenization —
@@ -893,20 +787,29 @@ def _gc_index_impl(spark: SparkSession, index_dir: str, manifest: dict,
        `chunks-g{gen}` dir (decode→filter→re-encode), metrics rows
        decremented per bucket;
     2. rewrite the doc dictionaries minus tombstones (bulk docs table;
-       delta doc-stats consolidated into one epoch=-1 dir).
+       the listed delta doc-stats epochs consolidated into one
+       epoch=-1 dir).
+
+    `listed` is the compaction's one listing of the live delta epochs
+    ({delta dir: epochs}); `store` and `tomb` hold exactly its chunk
+    and delete epochs. GC consumes every listed epoch and records them
+    in the manifest (`gc_epochs`, with earlier recorded epochs whose
+    dirs are still on disk), so the manifest flip is its only commit:
+    live readers skip recorded epochs (build.live_epochs), and an
+    epoch ingested after the listing stays live.
 
     _compact_index_impl then major-merges the clean store into fresh
     postings (stored df is exact again → `df_stale` clears), flips the
-    manifest, frees the superseded dirs and clears the literal delta
-    dirs (_archive_literal_delta_dirs). After GC the index is
-    indistinguishable from a fresh bulk build of the live corpus (same
-    doc ids — postings reference them, so ids are never remapped).
+    manifest and frees what it superseded, consumed epoch dirs
+    included. After GC the index is indistinguishable from a fresh bulk
+    build of the live corpus (same doc ids — postings reference them,
+    so ids are never remapped).
 
     Returns (clean store, GC's manifest fields, superseded dirs)."""
     from ela_lib_spark.index import build
     from ela_lib_spark.index.build import (
+        DELTA_DIRS,
         METRICS_TERM_ID,
-        delta_doc_stats_dirs,
         docs_dir_path,
         read_delta_doc_stats,
         tombstone_part_expr,
@@ -966,28 +869,37 @@ def _gc_index_impl(spark: SparkSession, index_dir: str, manifest: dict,
     clean_docs.repartition(docs_parts, "bucket") \
         .sortWithinPartitions("bucket", "url") \
         .write.mode("overwrite").parquet(os.path.join(index_dir, docs_name))
-    old_dds_dirs = delta_doc_stats_dirs(index_dir, manifest)
+    dds = read_delta_doc_stats(spark, index_dir, manifest,
+                               listed["delta_doc_stats"])
     dds_name = None
-    if old_dds_dirs:
+    if dds is not None:
         dds_name = f"delta_doc_stats-g{gen}"
-        dds = read_delta_doc_stats(spark, index_dir, manifest).select(
-            "doc_id", "url", "doc_len", "bucket")
+        dds = dds.select("doc_id", "url", "doc_len", "bucket")
         if tomb is not None:
             dds = dds.join(tomb, "doc_id", "left_anti")
         dds.withColumn("epoch", F.lit(-1)).write.mode("overwrite") \
             .partitionBy("epoch").parquet(os.path.join(index_dir, dds_name))
 
+    consumed = set().union(*listed.values())
+    consumed.update(
+        e for e in manifest.get("gc_epochs", [])
+        if any(os.path.isdir(os.path.join(index_dir, d, f"epoch={e}"))
+               for d in DELTA_DIRS))
     fields = {
         "chunks_dir": chunks_name,
         "docs_dir": docs_name,
         "delta_doc_stats_dir": dds_name,
         "base_epochs": [],
         "delete_epochs": [],
+        "gc_epochs": sorted(consumed),
         "df_stale": False,
         "gc_gen": gen,
     }
     superseded = [os.path.join(index_dir, manifest["chunks_dir"]),
-                  old_docs_dir] + old_dds_dirs
+                  old_docs_dir]
+    if manifest.get("delta_doc_stats_dir"):
+        superseded.append(
+            os.path.join(index_dir, manifest["delta_doc_stats_dir"]))
     return (spark.read.parquet(os.path.join(index_dir, chunks_name)),
             fields, superseded)
 
@@ -1037,16 +949,23 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
 
     Crash safety: every data write targets a deterministic, versioned
     dir with mode=overwrite (replay-idempotent); the manifest pointer
-    flip (os.replace) is the single commit point; deletes happen only
-    post-commit.
+    flip (os.replace) is the single commit point. Once the flip is
+    done, cleanup only reclaims space: it deletes dirs and consumed
+    delta epochs no kept manifest reads, renames nothing, and a crash
+    inside it leaves a correct index whose leftovers the next op frees.
+
+    Listing: every mode lists the live delta epochs once, at the start
+    (build.live_epochs), and reads exactly those — chunks, delete log
+    and (GC) doc dictionary. An epoch ingested during the run is left
+    for the next one.
     """
     from ela_lib_spark.index import build
     from ela_lib_spark.index.build import (
+        DELTA_DIRS,
         METRICS_TERM_ID,
         chunks_path,
         covered_epochs,
-        delta_deletes_path,
-        epochs_on_disk,
+        live_epochs,
         merge_chunks,
         new_snapshot_id,
         postings_dirs,
@@ -1085,16 +1004,17 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
         )
     manifest["n_shards"] = n_shards
     tiers = list(manifest.get("tiers", []))
-    epochs = epochs_on_disk(os.path.join(index_dir, "delta_chunks"))
+    listed = {d: live_epochs(os.path.join(index_dir, d), manifest)
+              for d in DELTA_DIRS}
+    epochs, delete_epochs = listed["delta_chunks"], listed["delta_deletes"]
     new_epochs = [e for e in epochs if e not in covered_epochs(manifest)]
-    delete_epochs = epochs_on_disk(delta_deletes_path(index_dir))
 
     # Above the driver cap `deleted` is None: merges keep tombstoned
     # rows (the query path filters them via deleted_df) until GC
     # rewrites the store — and auto mode forces that GC at the absolute
     # cap. Only the frame is known then: count it (the auto trigger and
     # GC's report need the exact number).
-    deleted, tomb = tombstone_set(spark, index_dir)
+    deleted, tomb = tombstone_set(spark, index_dir, delete_epochs)
     n_tomb = len(deleted) if deleted is not None else tomb.distinct().count()
     if mode == "auto":
         # GC at a live-fraction OR an ABSOLUTE tombstone cap (VERDICT
@@ -1116,7 +1036,7 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
     decrements = _tombstone_decrements(spark, index_dir, tomb) if n_tomb else {}
     # the chunk store every mode starts from: base chunks ∪ delta epochs
     base = spark.read.parquet(chunks_path(index_dir))
-    delta = read_delta_postings(spark, index_dir)
+    delta = read_delta_postings(spark, index_dir, epochs)
     store = base if delta is None else base.unionByName(delta.drop("epoch"))
     fields: dict = {"delete_epochs": delete_epochs}
     if n_tomb:
@@ -1128,7 +1048,8 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
     superseded: list[str] = []
     if mode == "gc":
         store, gc_fields, superseded = _gc_index_impl(
-            spark, index_dir, manifest, store, deleted, tomb, decrements)
+            spark, index_dir, manifest, store, deleted, tomb, decrements,
+            listed)
         fields.update(gc_fields)
         # the rewrite already purged the postings and decremented the
         # metrics rows — no second purge, no double subtraction
@@ -1178,11 +1099,7 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
     superseded += _flip_control_tables(index_dir, manifest, led_name, cs_name)
     manifest.update(fields, n_docs=n_docs, avg_dl=avg_dl, snapshot_id=snapshot)
     manifest = write_manifest(index_dir, manifest)
-    protected = _free_superseded(index_dir, manifest, superseded)
-    if mode == "gc":
-        # the chunk store no longer needs delta_chunks; the literal live
-        # delta dirs are relocated for retained snapshots, else deleted
-        _archive_literal_delta_dirs(index_dir, snapshot, protected)
+    _free_superseded(index_dir, manifest, superseded)
     res["n_docs"] = n_docs
     return res
 
@@ -1213,7 +1130,6 @@ def compact_index(spark: SparkSession, index_dir: str,
     excludes that. Raises MaintenanceLockError if maintenance is
     already running on this index."""
     with _maintenance_lock(index_dir):
-        _replay_relocations(index_dir)
         res = _compact_index_impl(spark, index_dir, n_shards, mode)
         _auto_expire(index_dir, res)
         return res

@@ -409,6 +409,45 @@ def test_gc_index_reclaims_tombstones_and_deltas(spark, tmp_root):
     assert wand_topk(idx2, ["term0000"], "OR", 10).count() == 10
 
 
+def test_ingest_during_gc_keeps_its_epoch(spark, tmp_root, monkeypatch):
+    """Delta ingest takes no lock. An epoch committed while GC runs —
+    after GC listed its epochs, before its manifest flip — is not among
+    the epochs GC consumes, so it stays live and the next minor
+    compaction merges it."""
+    import ela_lib_spark.streaming.incremental as inc
+    from ela_lib_spark.index.validate import validate_index
+    from ela_lib_spark.schemas import WEB_PAGES
+    from ela_lib_spark.streaming.incremental import gc_index
+
+    idx_dir = os.path.join(tmp_root, "gc_ingest_idx")
+    pages = synth_pages_df(spark, 120).cache()
+    build_index(spark, pages, idx_dir, n_buckets=4, n_shards=2)
+    apply_delta_batch(pages.limit(10).select("url"), 0, idx_dir,
+                      n_buckets=4, mode="delete")
+    late_urls = [f"http://late.example/{i}" for i in range(5)]
+    late = spark.createDataFrame(
+        [(u, None, None, f"zzlateword page {i}", "en")
+         for i, u in enumerate(late_urls)], WEB_PAGES)
+    refresh = inc._refresh_control_tables
+
+    def ingest_then_refresh(*a, **k):
+        apply_delta_batch(late, 1, idx_dir, n_buckets=4, mode="upsert")
+        return refresh(*a, **k)
+
+    monkeypatch.setattr(inc, "_refresh_control_tables", ingest_then_refresh)
+    assert gc_index(spark, idx_dir, n_shards=2)["purged"] == 10
+    monkeypatch.undo()
+    assert compact_index(spark, idx_dir, n_shards=2,
+                         mode="minor")["compacted_epochs"] == 1
+
+    idx = load_index(spark, idx_dir)
+    got = idx["doc_stats"].filter(F.col("url").isin(late_urls))
+    assert sorted(r.url for r in got.collect()) == late_urls
+    assert wand_topk(idx, ["zzlateword"], "OR", 10).count() == 5
+    v = validate_index(spark, idx_dir)
+    assert v["ok"], v
+
+
 def test_compact_auto_escalates_to_gc(spark, tmp_root):
     """auto mode runs GC (not a tier merge) once tombstones exceed the
     configured fraction of the live corpus."""

@@ -368,53 +368,6 @@ def test_ann_ivf_planted_neighbor(spark):
     assert rows[0].cosine > 0.99
 
 
-def test_multimodal_audio_and_resize_and_frames(spark):
-    """Audio features, resize plan and frame sampling over the synth
-    media table — the full multimodal plumbing surface."""
-    import hashlib as _hashlib
-    import struct as _struct
-
-    from ela_lib_spark.functions.multimodal import (
-        extract_audio_features,
-        frame_sample_plan,
-        resize_image_plan,
-        synth_media_df,
-    )
-
-    media = synth_media_df(spark, 32)
-
-    audio = {r.media_id: r for r in extract_audio_features(media).collect()}
-    assert set(audio) == {i for i in range(32) if i % 4 == 2}
-    for i, r in audio.items():
-        w, h = 64 + (i % 8) * 16, 48 + (i % 5) * 16
-        payload = _struct.pack("<II", w, h) + bytes(
-            (i * 7 + j) % 256 for j in range(120)
-        )
-        assert r.sha256 == _hashlib.sha256(payload).hexdigest()
-        assert r.duration_ms == len(payload) * 8 // 16
-        assert len(r.mfcc_stub) == 13 and r.sample_rate == 16000
-
-    rs = {r.media_id: r for r in resize_image_plan(media, max_dim=100).collect()}
-    for i, r in rs.items():
-        w, h = 64 + (i % 8) * 16, 48 + (i % 5) * 16
-        assert (r.width, r.height) == (w, h)
-        sc = min(1.0, 100.0 / max(w, h))
-        import math as _math
-
-        assert (r.target_w, r.target_h) == (_math.ceil(w * sc), _math.ceil(h * sc))
-        assert max(r.target_w, r.target_h) <= 100
-
-    frames = frame_sample_plan(media, every_n=10).collect()
-    vids = {r.media_id for r in frames}
-    assert vids == {i for i in range(32) if i % 4 == 3}
-    per_vid = {}
-    for r in frames:
-        per_vid.setdefault(r.media_id, []).append(r.frame_idx)
-    for v, idxs in per_vid.items():
-        assert idxs == sorted(idxs) and idxs[0] == 0
-        assert all(ix % 10 == 0 for ix in idxs)
-
-
 def test_export_num_files(spark, docs, tmp_root):
     """S14: the size-batched sink worker maps to an explicit file
     fan-out — num_files controls the part-file count."""

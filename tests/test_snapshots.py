@@ -139,55 +139,87 @@ def test_expire_cli_verbs(tmp_root, spark):
     assert m["history"] == [m["snapshot_id"]]
 
 
-def test_crashed_relocation_is_loud_then_replayed(spark, tmp_root, monkeypatch):
-    """Crash window between GC's delta-dir renames and the archived-
-    manifest re-point: a snapshot that PINS delete epochs must refuse
-    to load (silently reading "no tombstones" would resurrect deleted
-    docs), and the next locked maintenance op must replay the journal,
-    after which the snapshot serves rank-identically again."""
-    import ela_lib_spark.streaming.incremental as inc
-    from ela_lib_spark.errors import IndexCorruptError
-
-    idx_dir = os.path.join(tmp_root, "crash_reloc_idx")
-    pages = synth_pages_df(spark, 140).cache()
+def _upsert_delete_minor(spark, idx_dir, pages):
+    """120-doc build with retention keep-4, an upsert epoch of 20 new
+    docs, a delete epoch of 10 originals, then a minor compaction whose
+    snapshot pins both delete epochs and the upsert's doc epoch."""
     build_index(spark, pages.limit(120), idx_dir, n_buckets=4, n_shards=2)
     set_snapshot_retention(idx_dir, keep_last=4)
     apply_delta_batch(pages.subtract(pages.limit(120)), 0, idx_dir,
                       n_buckets=4, mode="upsert")
     apply_delta_batch(pages.limit(10).select("url"), 1, idx_dir,
                       n_buckets=4, mode="delete")
-    res = compact_index(spark, idx_dir, mode="minor")
-    assert res["mode"] == "minor"
+    assert compact_index(spark, idx_dir, mode="minor")["mode"] == "minor"
+    assert read_manifest(idx_dir)["delete_epochs"] == [0, 1]
+
+
+def test_crash_after_gc_flip_leaves_correct_index(spark, tmp_root,
+                                                  monkeypatch):
+    """GC's manifest flip is its only commit: a crash in the cleanup
+    after it leaves the consumed epoch dirs on disk, but live readers
+    skip them (manifest gc_epochs), so the live index validates and
+    serves like a clean GC, the retained pre-GC snapshot still serves
+    rank-identically, the next minor merges nothing again, and its
+    cleanup frees the leftovers no retained snapshot pins."""
+    import ela_lib_spark.streaming.incremental as inc
+    from ela_lib_spark.index.validate import validate_index
+
+    pages = synth_pages_df(spark, 140).cache()
+    clean_dir = os.path.join(tmp_root, "gc_clean_idx")
+    _upsert_delete_minor(spark, clean_dir, pages)
+    gc_index(spark, clean_dir, n_shards=2)
+
+    idx_dir = os.path.join(tmp_root, "gc_crash_idx")
+    _upsert_delete_minor(spark, idx_dir, pages)
     s2 = read_manifest(idx_dir)["snapshot_id"]
-    assert read_manifest(idx_dir)["delete_epochs"]  # s2 pins deletes
     before = _topk(spark, idx_dir, snapshot_id=s2)
 
-    real = inc._repoint_archived_manifests
-    monkeypatch.setattr(
-        inc, "_repoint_archived_manifests",
-        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("injected")))
+    def crash(*a, **k):
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(inc, "_free_superseded", crash)
     with pytest.raises(RuntimeError, match="injected"):
         gc_index(spark, idx_dir, n_shards=2)
-    monkeypatch.setattr(inc, "_repoint_archived_manifests", real)
+    monkeypatch.undo()
 
-    # GC committed (manifest flipped) but the relocation journal is
-    # pending: the literal delete log is gone, s2's manifest still
-    # points at it — loading s2 must be LOUD, not silently wrong
-    assert os.path.exists(os.path.join(
-        idx_dir, "snapshots", "archive",
-        read_manifest(idx_dir)["snapshot_id"], ".relocation.json"))
-    with pytest.raises(IndexCorruptError, match="delete log is missing"):
-        load_index(spark, idx_dir, snapshot_id=s2)
+    v = validate_index(spark, idx_dir)
+    assert v["ok"], v
+    assert _topk(spark, idx_dir) == _topk(spark, clean_dir)
+    assert _topk(spark, idx_dir, snapshot_id=s2) == before
+    m = read_manifest(idx_dir)
+    assert m["snapshot_id"].startswith("gc-") and m["gc_epochs"] == [0, 1]
+    assert os.path.isdir(os.path.join(idx_dir, "delta_chunks", "epoch=0"))
 
-    # any locked maintenance op replays the journal (no-op compact)
     res = compact_index(spark, idx_dir, mode="minor")
     assert res["compacted_epochs"] == 0
+    assert read_manifest(idx_dir)["n_docs"] == 130
+    assert load_index(spark, idx_dir)["doc_stats"].count() == 130
+    # chunk epochs are merge input only: freed; s2 pins the rest
+    assert not os.path.exists(os.path.join(idx_dir, "delta_chunks"))
+    assert sorted(os.listdir(os.path.join(idx_dir, "delta_deletes"))) == [
+        "epoch=0", "epoch=1"]
     assert _topk(spark, idx_dir, snapshot_id=s2) == before
-    # journal consumed; live index unaffected throughout
-    arch = os.path.join(idx_dir, "snapshots", "archive")
-    assert not any(".relocation.json" in files
-                   for _, _, files in os.walk(arch))
-    assert load_index(spark, idx_dir)["manifest"]["n_docs"] == 130
+
+    expire_snapshots(idx_dir, keep_last=1)
+    entries = set(os.listdir(idx_dir))
+    assert not entries & {"delta_chunks", "delta_deletes", "delta_doc_stats"}
+    assert _topk(spark, idx_dir) == _topk(spark, clean_dir)
+
+
+def test_missing_pinned_delete_epoch_is_loud(spark, tmp_root):
+    """A snapshot that pins a delete epoch whose dir is gone must refuse
+    to load: reading it as "no tombstones" would silently resurrect
+    deleted docs."""
+    import shutil
+
+    from ela_lib_spark.errors import IndexCorruptError
+
+    idx_dir = os.path.join(tmp_root, "missing_del_idx")
+    _upsert_delete_minor(spark, idx_dir, synth_pages_df(spark, 140).cache())
+    s2 = read_manifest(idx_dir)["snapshot_id"]
+    shutil.rmtree(os.path.join(idx_dir, "delta_deletes", "epoch=1"))
+    with pytest.raises(IndexCorruptError, match="delete log is missing"):
+        load_index(spark, idx_dir, snapshot_id=s2)
 
 
 def test_auto_expire_enforces_window_at_gc(spark, tmp_root):

@@ -54,30 +54,42 @@ def shingle_hash_col(tokens_col, n: int = 3) -> Column:
     return token_hash_col(shingle_col(tokens_col, n))
 
 
-def with_shingle_hashes(df, tokens_expr, n: int = 3, out_col: str = "_sh",
+def quote_col(name: str) -> str:
+    """A column name as an SQL identifier (backticked, so any name —
+    dots, spaces, keywords — parses as one column)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def token_hash_sql(tokens_sql: str) -> str:
+    """SQL for `token_hash_col`: array<string> → array<long> xxhash64."""
+    return f"transform({tokens_sql}, t -> xxhash64(t))"
+
+
+def with_shingle_hashes(df, tokens_sql: str, n: int = 3, out_col: str = "_sh",
                         keep: list[str] | None = None):
     """df → (keep..., out_col: array<long>) of shingle hashes, computed
     WITHOUT materializing shingle strings: tokens hash JVM-side to an
     int64 array (one projection — the column must be bound, or each
     element_at re-evaluates the whole inner transform, O(n²)), then the
     shingle hash chains multi-arg xxhash64 over the n token hashes.
+    `tokens_sql` is an SQL array<string> expression over df's columns.
 
     Hash basis (for oracles): h = 42; for each of the n token hashes
     t (signed int64): h = XXH64(little_endian_8bytes(t), seed=h) —
     Spark's multi-arg xxhash64 chaining. Measured 6-7× faster than the
-    string-shingle basis at ~300 shingles/doc."""
-    keep = keep if keep is not None else []
-    staged = df.select(*keep, token_hash_col(tokens_expr).alias("_th"))
-    idx = F.sequence(F.lit(1), F.size(F.col("_th")) - (n - 1))
-    sh = F.when(
-        F.size(F.col("_th")) >= n,
-        F.transform(
-            idx,
-            lambda i: F.xxhash64(*[F.element_at(F.col("_th"), i + j)
-                                   for j in range(n)]),
-        ),
-    ).otherwise(F.array().cast(T.ArrayType(T.LongType())))
-    return staged.select(*keep, sh.alias(out_col))
+    string-shingle basis at ~300 shingles/doc.
+
+    Both projections are SQL text: each wrapped Column call costs the
+    driver ~10 py4j round trips under Spark 4 (call-site capture), so
+    a chain built Column by Column costs more to plan than to run on
+    small inputs."""
+    keep = [quote_col(c) for c in (keep or [])]
+    staged = df.selectExpr(*keep, f"{token_hash_sql(tokens_sql)} AS _th")
+    chain = ", ".join(f"element_at(_th, i + {j})" for j in range(n))
+    sh = (f"CASE WHEN size(_th) >= {n} "
+          f"THEN transform(sequence(1, size(_th) - {n - 1}), i -> xxhash64({chain})) "
+          f"ELSE CAST(array() AS array<bigint>) END AS {quote_col(out_col)}")
+    return staged.selectExpr(*keep, sh)
 
 
 # ------------------------------------------- Mersenne-61 modular kernels
@@ -207,24 +219,25 @@ def make_simhash_udf(chunk_elems: int = 1024):
     return simhash
 
 
-def hamming64(c1, c2) -> Column:
-    """Popcount of xor — native codegen bit_count (Spark >= 3.5)."""
-    return F.bit_count(c1.bitwiseXOR(c2))
+def lsh_band_stack_sql(sig_col: str, num_bands: int, rows_per_band: int) -> str:
+    """LSH banding as one SQL generator: each signature band hashes to
+    `bh`, stacked to rows (band, bh); equal band-hash ⇒ candidate.
 
-
-def band_cols(sig_col, num_bands: int, rows_per_band: int) -> list[Column]:
-    """LSH banding: hash each signature band; equal band-hash ⇒ candidate.
-
-    Chained multi-arg xxhash64 over the band's signature values
-    directly (r6) — the previous concat_ws string basis built and
-    hashed a ~40-char string per (doc, band), ~3.2M long→string casts
-    per 50k docs at 16 bands, pure per-task overhead (guide §1.2 step
-    2). Numeric chaining is also strictly less collision-prone: the
-    string basis could alias across value boundaries ("1,23" vs
-    "12,3"); here each value is its own chained block. Equal bands
-    still hash equal, so candidate recall is unchanged."""
-    return [
-        F.xxhash64(*[sig_col.getItem(b * rows_per_band + r)
-                     for r in range(rows_per_band)]).alias(f"band_{b}")
-        for b in range(num_bands)
-    ]
+    Hash basis (for oracles): band b's hash chains multi-arg xxhash64
+    over the band's signature values directly: h = 42; for r in
+    0..rows_per_band-1: h = XXH64(little_endian_8bytes(sig[b·rows +
+    r]), seed=h). The previous concat_ws string basis built and hashed
+    a ~40-char string per (doc, band), ~3.2M long→string casts per 50k
+    docs at 16 bands, pure per-task overhead (guide §1.2 step 2).
+    Numeric chaining is also strictly less collision-prone: the string
+    basis could alias across value boundaries ("1,23" vs "12,3"); here
+    each value is its own chained block. Equal bands still hash equal,
+    so candidate recall is unchanged. One SQL string replaces the
+    num_bands × rows_per_band Column calls (each ~10 py4j round trips
+    under Spark 4) that dominated a near-dup pass's planning."""
+    sig = quote_col(sig_col)
+    bands = []
+    for b in range(num_bands):
+        vals = ", ".join(f"{sig}[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        bands.append(f"{b}, xxhash64({vals})")
+    return f"stack({num_bands}, {', '.join(bands)}) AS (band, bh)"

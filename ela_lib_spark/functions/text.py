@@ -68,11 +68,22 @@ def tokenize(s: pd.Series) -> pd.Series:
     return s.map(tokenize_list)
 
 
+# The separator class: the complement of TOKEN_RE's character class.
+_SPLIT_RE = "[^a-z0-9]+"
+
+
 def tokenize_col(col):
     """JVM-side tokenizer equivalent (no Python at all) — preferred in
     hot paths; provably identical to `tokenize` for this token class.
 
     split on non-[a-z0-9] then drop empties.
     """
-    parts = F.split(F.lower(col), "[^a-z0-9]+")
+    parts = F.split(F.lower(col), _SPLIT_RE)
     return F.filter(parts, lambda t: t != F.lit(""))
+
+
+def tokenize_sql(col_sql: str) -> str:
+    """`tokenize_col` as SQL text over the SQL expression `col_sql`:
+    the same expression tree, planned without a py4j round trip per
+    Column call."""
+    return f"filter(split(lower({col_sql}), '{_SPLIT_RE}'), t -> t != '')"

@@ -18,15 +18,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ela_lib_spark.functions.hashing import (
-    band_cols,
-    hamming64,
+    lsh_band_stack_sql,
     make_minhash_udf,
     make_simhash_udf,
+    quote_col,
     shingle_col,
-    token_hash_col,
+    token_hash_sql,
     with_shingle_hashes,
 )
-from ela_lib_spark.functions.text import tokenize_col
+from ela_lib_spark.functions.text import tokenize_col, tokenize_sql
 from ela_lib_spark.session import spread
 
 
@@ -69,9 +69,9 @@ def dedup_exact(df: DataFrame, key: str = "doc_id", text_col: str = "text") -> D
     groupBy(hash) → min(key) → semi-join back: no full-row shuffle,
     the winners table is (hash, key) only.
     """
-    h = F.xxhash64(F.col(text_col)).alias("_h")
-    hashed = df.withColumn("_h", h)
-    winners = hashed.groupBy("_h").agg(F.min(key).alias(key)).select(key)
+    hashed = df.selectExpr("*", f"xxhash64({quote_col(text_col)}) AS _h")
+    k = quote_col(key)
+    winners = hashed.groupBy("_h").agg(F.expr(f"min({k}) AS {k}")).select(key)
     return hashed.join(winners, key, "left_semi").drop("_h")
 
 
@@ -86,11 +86,11 @@ def minhash_signatures(
     Input is spread across the cluster first when the scan is
     under-parallel (session.spread)."""
     staged = with_shingle_hashes(
-        spread(df, [key, text_col]), tokenize_col(F.col(text_col)),
+        spread(df, [key, text_col]), tokenize_sql(quote_col(text_col)),
         shingle_n, "_sh", keep=[key]
     )
     mh = make_minhash_udf(num_hashes)
-    return staged.select(key, mh(F.col("_sh")).alias("sig"))
+    return staged.select(key, mh("_sh").alias("sig"))
 
 
 def lsh_candidate_pairs(
@@ -111,13 +111,7 @@ def lsh_candidate_pairs(
     (dedup_minhash_lsh), never multiplied through the band explode
     (r6; carrying them measured 346 MB per join side at sf1.0 against
     a 26 MB signature frame)."""
-    banded = sigs.select(key, *band_cols(F.col("sig"), num_bands, rows_per_band))
-    stacked = banded.selectExpr(
-        key,
-        "stack({}, {}) as (band, bh)".format(
-            num_bands, ", ".join(f"{b}, band_{b}" for b in range(num_bands))
-        ),
-    )
+    stacked = sigs.selectExpr(quote_col(key), lsh_band_stack_sql("sig", num_bands, rows_per_band))
     return _guarded_pairs(stacked, key, ["band", "bh"], max_bucket_size)
 
 
@@ -149,22 +143,15 @@ def _guarded_pairs(stacked: DataFrame, key: str, bucket_cols: list[str],
     executor fails a later read instead of recomputing it. Dropping
     singleton buckets is output-invariant: a bucket of one doc can
     never produce a pair."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*bucket_cols)
+    bucket = [quote_col(c) for c in bucket_cols]
     guarded = (
-        stacked.withColumn("_n", F.count("*").over(w))
-        .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
+        stacked.selectExpr("*", f"count(*) OVER (PARTITION BY {', '.join(bucket)}) AS _n")
+        .where(f"_n >= 2 AND _n <= {max_bucket_size}")
         .drop("_n")
     ).localCheckpoint(eager=True)
-    l = guarded.select(F.col(key).alias("a"), *bucket_cols)
-    r = guarded.select(F.col(key).alias("b"), *bucket_cols)
-    return (
-        l.join(r, bucket_cols)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    l = guarded.selectExpr(f"{quote_col(key)} AS a", *bucket)
+    r = guarded.selectExpr(f"{quote_col(key)} AS b", *bucket)
+    return l.join(r, bucket_cols).where("a < b").select("a", "b").distinct()
 
 
 # Driver short-circuit bound for connected_components: 2M edges ≈
@@ -350,24 +337,18 @@ def dedup_minhash_lsh(
         # Above the cap the attach joins stay shuffled — at 10⁹ docs
         # the frame is ~0.5 TB and must never be broadcast.
         sig_bytes = n_sigs * (num_hashes * 8 + 24)
-        a = _broadcast_if_fits(
-            sigs.select(F.col(key).alias("a"), F.col("sig").alias("sig_a")), sig_bytes)
-        b = _broadcast_if_fits(
-            sigs.select(F.col(key).alias("b"), F.col("sig").alias("sig_b")), sig_bytes)
-        eq = F.size(F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        ))
+        a = _broadcast_if_fits(sigs.selectExpr(f"{quote_col(key)} AS a", "sig AS sig_a"), sig_bytes)
+        b = _broadcast_if_fits(sigs.selectExpr(f"{quote_col(key)} AS b", "sig AS sig_b"), sig_bytes)
+        eq = "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
         dup_edges = (
             cand.join(a, "a").join(b, "b")
-            .filter((eq / F.size("sig_a")) >= threshold)
+            .where(f"{eq} / size(sig_a) >= {float(threshold)!r}D")
             .select("a", "b")
         )
         # connected_components materializes eagerly (per-iteration
         # checkpoint), so sigs can be released afterwards
         comps = connected_components(dup_edges)
-        losers = comps.filter(F.col("node") != F.col("comp")).select(
-            F.col("node").alias(key)
-        )
+        losers = comps.where("node != comp").selectExpr(f"node AS {quote_col(key)}")
         return df.join(losers, key, "left_anti")
     finally:
         sigs.unpersist()
@@ -378,9 +359,8 @@ def simhash_signatures(df: DataFrame, key: str = "doc_id", text_col: str = "text
     Input is spread across the cluster first when the scan is
     under-parallel (session.spread)."""
     sh = make_simhash_udf()
-    return spread(df, [key, text_col]).select(
-        key, sh(token_hash_col(tokenize_col(F.col(text_col)))).alias("simhash")
-    )
+    th = F.expr(token_hash_sql(tokenize_sql(quote_col(text_col))))
+    return spread(df, [key, text_col]).select(key, sh(th).alias("simhash"))
 
 
 def simhash_near_dup_pairs(
@@ -411,20 +391,10 @@ def simhash_near_dup_pairs(
     widths = [(64 // n_blocks) + (1 if i < 64 % n_blocks else 0)
               for i in range(n_blocks)]
     offsets = [sum(widths[:i]) for i in range(n_blocks)]
-    blocks = [
-        F.shiftrightunsigned("simhash", offsets[i])
-        .bitwiseAND(F.lit((1 << widths[i]) - 1))
-        .alias(f"blk{i}")
-        for i in range(n_blocks)
-    ]
-    base = sigs.select(key, "simhash", *blocks)
-    pair_keys = []
-    for i in range(n_blocks):
-        for j in range(i + 1, n_blocks):
-            pair_keys.append(
-                F.shiftleft(F.col(f"blk{i}").cast("long"), 32)
-                .bitwiseOR(F.col(f"blk{j}"))
-            )
+    blocks = [f"(shiftrightunsigned(simhash, {offsets[i]}) & {(1 << widths[i]) - 1})"
+              for i in range(n_blocks)]
+    pair_keys = [f"(shiftleft({blocks[i]}, 32) | {blocks[j]})"
+                 for i in range(n_blocks) for j in range(i + 1, n_blocks)]
     # Key-only candidate generation (r6, mirrors lsh_candidate_pairs): the
     # stacked frame, guard aggregate and pair self-join see only
     # (key, kid, kval) — the simhash payload is attached to the
@@ -438,24 +408,21 @@ def simhash_near_dup_pairs(
     # pairs → exact hamming ≤ max_hamming.
     # posexplode: the array position IS the pair-key id, so the
     # exploded frame needs no struct wrapping (r6 — smaller codegen'd
-    # expression tree, same (key, kid, kval) rows)
-    stacked = base.select(
-        key, F.posexplode(F.array(*pair_keys)).alias("kid", "kval")
-    )
+    # expression tree, same (key, kid, kval) rows). Blocks and pair
+    # keys are one SQL string (one parse, no per-Column round trips).
+    stacked = sigs.selectExpr(
+        quote_col(key), f"posexplode(array({', '.join(pair_keys)})) AS (kid, kval)")
     pairs = _guarded_pairs(stacked, key, ["kid", "kval"], max_bucket_size)
     # exact count, one job over the checkpointed 16 B rows
     n_sigs = sigs.count()
     # measured-size broadcast gate, same rationale as the LSH attach
     # (guide §3.1); (key, simhash) is 16 B + row overhead
-    ha = _broadcast_if_fits(
-        sigs.select(F.col(key).alias("a"), F.col("simhash").alias("ha")), n_sigs * 24)
-    hb = _broadcast_if_fits(
-        sigs.select(F.col(key).alias("b"), F.col("simhash").alias("hb")), n_sigs * 24)
+    ha = _broadcast_if_fits(sigs.selectExpr(f"{quote_col(key)} AS a", "simhash AS ha"), n_sigs * 24)
+    hb = _broadcast_if_fits(sigs.selectExpr(f"{quote_col(key)} AS b", "simhash AS hb"), n_sigs * 24)
     return (
         pairs.join(ha, "a").join(hb, "b")
-        .withColumn("hamming", hamming64(F.col("ha"), F.col("hb")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
+        .selectExpr("a", "b", "bit_count(ha ^ hb) AS hamming")
+        .where(f"hamming <= {max_hamming}")
     )
 
 

@@ -9,7 +9,10 @@ re-expressed as partitions / shuffle parallelism / Arrow batch size.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -17,12 +20,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _ship_package(spark: SparkSession) -> None:
-    """Make ela_lib_spark importable on executor Python workers —
-    equivalent of `spark-submit --py-files ela_lib_spark.zip`.
-    Needed because pandas-UDF closures reference the package by name."""
+@functools.cache
+def _package_zip() -> str:
+    """The package zipped once per process, into a directory of its own.
+    A path shared between processes breaks both: a second engine
+    process overwrites the first one's zip, and Spark then fails the
+    first one's tasks ("exists and does not match contents")."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "ela_lib_spark_pkg.zip")
+    zdir = tempfile.mkdtemp(prefix="ela_lib_spark_pkg-")
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = os.path.join(zdir, "ela_lib_spark_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:
@@ -30,7 +37,14 @@ def _ship_package(spark: SparkSession) -> None:
                     full = os.path.join(root, fn)
                     rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                     z.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
+    return zpath
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Make ela_lib_spark importable on executor Python workers —
+    equivalent of `spark-submit --py-files ela_lib_spark.zip`.
+    Needed because pandas-UDF closures reference the package by name."""
+    spark.sparkContext.addPyFile(_package_zip())
 
 
 def get_spark(

@@ -4,12 +4,34 @@ import os
 import shutil
 import sys
 import tempfile
+from contextlib import contextmanager
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ela_lib_spark.session import get_spark  # noqa: E402
+
+@contextmanager
+def py4j_calls():
+    """Collects the py4j commands the block sends to the JVM (one
+    entry per round trip, the command's first line: `c` a method call,
+    `r` a reflection lookup, `m` a proxy release)."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent: list[str] = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command.split("\n", 1)[0])
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield sent
+    finally:
+        ClientServerConnection.send_command = send
+
 
 N_TEST_DOCS = 1500
 N_BUCKETS = 8

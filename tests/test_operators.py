@@ -1,5 +1,6 @@
 """Dedup, similarity, diff, DSL, export/import, analysis, multimodal."""
 
+import collections
 import uuid
 from contextlib import contextmanager
 
@@ -505,6 +506,40 @@ def test_dedup_operators_leave_no_session_cache(spark, docs):
         leaked[name] = cm.numCachedEntries() - n
     assert leaked == dict.fromkeys(ops, 0)
     assert cm.isEmpty() == (n_before == 0)
+
+
+def test_near_dup_pass_plans_in_few_py4j_calls(spark, tmp_path):
+    """A warm exact + minhash-LSH pass plans its wide expressions as SQL
+    text: each Column call costs ~10 py4j round trips under Spark 4, and
+    building the band hashes Column by Column sent ~3,500 commands per
+    pass. The headroom over the ~600 measured is for proxy releases
+    that the garbage collector times."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from conftest import py4j_calls
+
+    rng = np.random.default_rng(7)
+    texts = [" ".join(f"w{t}" for t in rng.integers(0, 5000, rng.integers(120, 200)))
+             for _ in range(450)]
+    for j, src in enumerate(rng.choice(450, 50, replace=False).tolist()):
+        toks = texts[src].split(" ")
+        if j % 2:  # a near copy: one token replaced
+            toks[int(rng.integers(1, len(toks) - 1))] = f"edit{j}"
+        texts.append(" ".join(toks))
+    path = str(tmp_path / "dups.parquet")
+    pq.write_table(pa.table({"doc_id": list(range(len(texts))), "text": texts}), path)
+    df = spark.read.parquet(path)
+
+    def one_pass():
+        return {r.doc_id for r in dedup_minhash_lsh(dedup_exact(df)).select("doc_id").collect()}
+
+    assert len(one_pass()) == 450  # cold: worker start-up, JIT
+    with _jobs_in(spark) as jobs, py4j_calls() as sent:
+        kept = one_pass()
+    assert len(kept) == 450
+    assert len(sent) <= 800, collections.Counter(sent).most_common(8)
+    assert len(jobs) <= 16
 
 
 def test_materialized_rowcount_needs_a_full_cache(spark):

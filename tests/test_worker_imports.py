@@ -157,3 +157,27 @@ def test_pin_is_noop_on_driver(tmp_path):
         sys.path.remove(path)
         sys.path_importer_cache.pop(path, None)
         sys.modules.pop(name, None)
+
+
+def test_shipped_package_zip_is_per_process():
+    """Each engine process ships a zip of its own. With one shared path a
+    second process rewrites the first one's zip under Spark, which then
+    fails the first one's tasks ("exists and does not match contents")."""
+    from types import SimpleNamespace
+
+    from ela_lib_spark import session
+
+    added = []
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=added.append))
+    session._ship_package(spark)
+    session._ship_package(spark)  # a repeated get_spark in one process
+    code = ("import sys, types\n"
+            "sys.path.insert(0, sys.argv[1])\n"
+            "from ela_lib_spark import session\n"
+            "ctx = types.SimpleNamespace(addPyFile=print)\n"
+            "session._ship_package(types.SimpleNamespace(sparkContext=ctx))\n")
+    other = subprocess.run([sys.executable, "-c", code, REPO], capture_output=True,
+                           text=True, check=True, timeout=300).stdout.strip()
+    assert added[0] == added[1] != other
+    with zipfile.ZipFile(added[0]) as z:
+        assert "ela_lib_spark/session.py" in z.namelist()

@@ -27,3 +27,7 @@ class SettingsError(EngineError):
 
 class MaintenanceLockError(EngineError):
     """Another compaction/GC holds the index's maintenance lock."""
+
+
+class FlatCorpusError(EngineError):
+    """Flat BM25 input is not in query/bm25.prepare_flat's shape."""

@@ -171,6 +171,14 @@ GC_COGROUP_SALTS = 16
 # The live-ingest dirs apply_delta_batch writes, one `epoch=N` subdir
 # per micro-batch: chunk input, delete log, doc dictionary.
 DELTA_DIRS = ("delta_chunks", "delta_deletes", "delta_doc_stats")
+# An epoch is live only once committed: apply_delta_batch writes the
+# empty file `delta_commits/epoch=N` after the epoch's last write and
+# removes it before a replay's first; GC frees it with the epoch.
+DELTA_COMMITS = "delta_commits"
+
+
+def epoch_marker(out_dir: str, epoch: int) -> str:
+    return os.path.join(out_dir, DELTA_COMMITS, f"epoch={epoch}")
 
 
 def bucket_expr(n_buckets: int):
@@ -920,14 +928,17 @@ def covered_epochs(manifest: dict) -> set[int]:
 
 
 def epochs_on_disk(root: str) -> list[int]:
-    """Sorted N of the `epoch=N` subdirs of `root` ([] if absent) —
-    the layout of the three delta dirs (DELTA_DIRS)."""
+    """Sorted N of the committed `epoch=N` subdirs of `root` ([] if
+    absent) — the layout of the three delta dirs (DELTA_DIRS), whose
+    parent is the index dir holding the commit markers."""
     if not os.path.exists(root):
         return []
+    commits = os.path.join(os.path.dirname(root), DELTA_COMMITS)
     return sorted(
         int(e.split("=", 1)[1])
         for e in os.listdir(root)
         if e.startswith("epoch=") and os.path.isdir(os.path.join(root, e))
+        and os.path.exists(os.path.join(commits, e))
     )
 
 
@@ -945,9 +956,8 @@ def read_epochs(spark: SparkSession, root: str,
                 epochs: list[int]) -> DataFrame | None:
     """The `epoch=N` subdirs of `root` for N in `epochs` that exist on
     disk, with `epoch` as a column; None when there are none."""
-    want = set(epochs)
-    paths = [os.path.join(root, f"epoch={e}")
-             for e in epochs_on_disk(root) if e in want]
+    paths = [os.path.join(root, f"epoch={e}") for e in sorted(set(epochs))]
+    paths = [p for p in paths if os.path.isdir(p)]
     if not paths:
         return None
     return spark.read.option("basePath", root).parquet(*paths)
@@ -1212,8 +1222,8 @@ def load_index(spark: SparkSession, out_dir: str,
         # pinned in the snapshot manifest (absent field = none existed)
         del_epochs = (manifest.get("delete_epochs", [])
                       if snapshot_id is not None else None)
-        missing = sorted(set(del_epochs or ())
-                         - set(epochs_on_disk(delta_deletes_path(out_dir))))
+        missing = sorted(e for e in set(del_epochs or ()) if not os.path.isdir(
+            os.path.join(delta_deletes_path(out_dir), f"epoch={e}")))
         if missing:
             # the snapshot PINS delete epochs whose delete log is gone —
             # treating that as "no tombstones" would silently resurrect

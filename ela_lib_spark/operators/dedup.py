@@ -112,14 +112,16 @@ def lsh_candidate_pairs(
     (r6; carrying them measured 346 MB per join side at sf1.0 against
     a 26 MB signature frame)."""
     stacked = sigs.selectExpr(quote_col(key), lsh_band_stack_sql("sig", num_bands, rows_per_band))
-    return _guarded_pairs(stacked, key, ["band", "bh"], max_bucket_size)
+    return _guarded_pairs(stacked, key, ["band", "bh"], max_bucket_size).distinct()
 
 
 def _guarded_pairs(stacked: DataFrame, key: str, bucket_cols: list[str],
-                   max_bucket_size: int) -> DataFrame:
-    """Distinct candidate pairs (a < b) from a KEY-ONLY stacked frame
-    (key, *bucket_cols), restricted to buckets with 2..max_bucket_size
-    members.
+                   max_bucket_size: int | None = None) -> DataFrame:
+    """The shared-key self-join: one (a, b) row, a < b, per bucket two
+    members of a KEY-ONLY stacked frame (key, *bucket_cols) share,
+    restricted to buckets with 2..max_bucket_size members (None: no
+    upper bound). Callers reduce the rows: distinct() for candidate
+    pairs, a per-pair count for shared-key overlap.
 
     Guard = a count window over the bucket key: because the stacked
     frame is KEY-ONLY (~24 B/row), windowing it is cheap, computes the
@@ -144,14 +146,15 @@ def _guarded_pairs(stacked: DataFrame, key: str, bucket_cols: list[str],
     singleton buckets is output-invariant: a bucket of one doc can
     never produce a pair."""
     bucket = [quote_col(c) for c in bucket_cols]
+    size = "_n >= 2" if max_bucket_size is None else f"_n >= 2 AND _n <= {max_bucket_size}"
     guarded = (
         stacked.selectExpr("*", f"count(*) OVER (PARTITION BY {', '.join(bucket)}) AS _n")
-        .where(f"_n >= 2 AND _n <= {max_bucket_size}")
+        .where(size)
         .drop("_n")
     ).localCheckpoint(eager=True)
     l = guarded.selectExpr(f"{quote_col(key)} AS a", *bucket)
     r = guarded.selectExpr(f"{quote_col(key)} AS b", *bucket)
-    return l.join(r, bucket_cols).where("a < b").select("a", "b").distinct()
+    return l.join(r, bucket_cols).where("a < b").select("a", "b")
 
 
 # Driver short-circuit bound for connected_components: 2M edges ≈
@@ -412,7 +415,7 @@ def simhash_near_dup_pairs(
     # keys are one SQL string (one parse, no per-Column round trips).
     stacked = sigs.selectExpr(
         quote_col(key), f"posexplode(array({', '.join(pair_keys)})) AS (kid, kval)")
-    pairs = _guarded_pairs(stacked, key, ["kid", "kval"], max_bucket_size)
+    pairs = _guarded_pairs(stacked, key, ["kid", "kval"], max_bucket_size).distinct()
     # exact count, one job over the checkpointed 16 B rows
     n_sigs = sigs.count()
     # measured-size broadcast gate, same rationale as the LSH attach
@@ -435,37 +438,21 @@ def winnow_overlap_pairs(
     (Schleimer/Wilkerson/Aiken, SIGMOD'03): docs sharing ≥ min_common
     selected k-gram hashes share a ≥(k+w-1)-token passage candidate.
 
-    Plan shape mirrors ngram_jaccard_pairs: explode fingerprints,
-    self-join on fingerprint, count per pair. `max_fp_df` drops
-    boilerplate fingerprints before the join (a fingerprint in n docs
-    costs n² join rows) — same guard, same rationale."""
+    Plan shape mirrors ngram_jaccard_pairs: explode fingerprints, the
+    shared-key self-join on fingerprint (_guarded_pairs), count per
+    pair. `max_fp_df` drops boilerplate fingerprints before the join
+    (a fingerprint in n docs costs n² join rows) — same guard, same
+    rationale."""
     from ela_lib_spark.functions.analysis import winnow_fingerprints
 
     fp = winnow_fingerprints(df, key=key, text_col=text_col, k=k, w=w)
+    # fingerprints in one doc only can't pair: the shared-key guard
+    # drops them before the self-join (output-invariant)
     ex = fp.select(key, F.explode("fingerprints").alias("fp"))
-    # Shared-key pruning (r5): a fingerprint in exactly one doc can't
-    # contribute to any pair, so only df ≥ 2 keys enter the self-join —
-    # the surviving frame is small enough for AQE to broadcast in the
-    # sparse case. Output-invariant (pair counts only see shared fps).
-    keep = (F.col("_df") >= 2) if max_fp_df is None \
-        else (F.col("_df") >= 2) & (F.col("_df") <= max_fp_df)
-    dfreq = ex.groupBy("fp").agg(F.count("*").alias("_df"))
-    # checkpoint the guarded frame (r6): the guard aggregate and both
-    # self-join sides are independent AQE leaf stages that would each
-    # recompute the winnowing UDF + explode from scratch (same failure
-    # mode measured on the LSH path — see _guarded_pairs); the
-    # surviving shared-fingerprint members are small in the sparse
-    # case, so both sides read a few MB of blocks that live as long as
-    # the returned frame
-    ex = ex.join(dfreq.filter(keep).drop("_df"), "fp").localCheckpoint(eager=True)
-    l = ex.select(F.col(key).alias("a"), "fp")
-    r = ex.select(F.col(key).alias("b"), "fp")
     return (
-        l.join(r, "fp")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("long").alias("common_fps"))
-        .filter(F.col("common_fps") >= min_common)
+        _guarded_pairs(ex, key, ["fp"], max_fp_df)
+        .groupBy("a", "b").count().withColumnRenamed("count", "common_fps")
+        .where(f"common_fps >= {int(min_common)}")
     )
 
 
@@ -486,25 +473,12 @@ def ngram_jaccard_pairs(
         F.array_distinct(shingle_col(tokenize_col(F.col(text_col)), shingle_n)).alias("sh"),
     )
     sizes = sh.select(key, F.size("sh").alias("n_sh"))
+    # |A|/|B| come from `sizes`, computed on the FULL shingle sets, so
+    # dropping singleton shingles in the shared-key guard leaves the
+    # Jaccard denominator unaffected (output-invariant)
     ex = sh.select(key, F.explode("sh").alias("g"))
-    # Shared-key pruning (r5): singleton shingles can't contribute to
-    # any intersection — drop them before the self-join (|A|/|B| come
-    # from `sizes`, computed on the FULL shingle sets, so the Jaccard
-    # denominator is unaffected). Output-invariant.
-    keep = (F.col("_df") >= 2) if max_shingle_df is None \
-        else (F.col("_df") >= 2) & (F.col("_df") <= max_shingle_df)
-    dfreq = ex.groupBy("g").agg(F.count("*").alias("_df"))
-    # checkpoint the guarded frame (r6): same AQE leaf-stage recompute
-    # fix as winnow_overlap_pairs / _guarded_pairs — without it the
-    # shingle explode is recomputed for the guard and both self-join
-    # sides
-    ex = ex.join(dfreq.filter(keep).drop("_df"), "g").localCheckpoint(eager=True)
-    l = ex.select(F.col(key).alias("a"), "g")
-    r = ex.select(F.col(key).alias("b"), "g")
-    common = (
-        l.join(r, "g").filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b").agg(F.count("*").alias("common"))
-    )
+    common = (_guarded_pairs(ex, key, ["g"], max_shingle_df)
+              .groupBy("a", "b").count().withColumnRenamed("count", "common"))
     sa = sizes.select(F.col(key).alias("a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col(key).alias("b"), F.col("n_sh").alias("nb"))
     return (

@@ -1,11 +1,15 @@
-"""Closed-form BM25 over flat postings — pure `pyspark.sql.functions`
-(zero Python in the plan; whole-stage codegen end to end).
+"""Closed-form BM25 over a prepared flat corpus — pure
+`pyspark.sql.functions` (zero Python in the plan). It doubles as the
+SQL-expressible oracle surface (DuckDB runs the equivalent SQL); the
+block-max WAND executor (query/wand.py) is the scale path.
 
-This is the Step-1 path from SURVEY.md §7: join query terms to
-postings, join doc stats, groupBy-sum, orderBy-limit. It doubles as the
-SQL-expressible oracle surface (DuckDB runs the equivalent SQL), while
-the block-max WAND executor (query/wand.py) is the scale path over the
-compressed index.
+`prepare_flat` owns the corpus format, as `wand.prepare_serving` owns
+the WAND serving cache: postings (term, doc_id, tf, doc_len, df),
+cached, hash-partitioned by doc_id into FLAT_PARTITIONS and
+term-sorted within each partition. The partitioning satisfies each
+query's groupBy(doc_id), so a query runs one job with no shuffle; the
+term sort lets the term filter prune cached batches by their stats.
+`bm25_topk_flat` scores that one shape.
 """
 
 from __future__ import annotations
@@ -14,6 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ela_lib_spark import BM25_B, BM25_K1
+from ela_lib_spark.errors import FlatCorpusError
+
+FLAT_PARTITIONS = 8
 
 
 def flat_postings(tokens_df: DataFrame) -> DataFrame:
@@ -27,6 +34,25 @@ def doc_lens(tokens_df: DataFrame) -> DataFrame:
     return tokens_df.select(
         "doc_id", F.size("tokens").cast("long").alias("doc_len")
     )
+
+
+def prepare_flat(tokens_df: DataFrame) -> dict:
+    """(doc_id, tokens:array) → {postings, n_docs, avg_dl}, the flat
+    corpus (layout in the module docstring). doc_len and df are corpus
+    invariants, so queries neither join nor count them. The postings
+    cache is built here, not at query time; the caller unpersists it."""
+    dl = doc_lens(tokens_df)
+    fp = flat_postings(tokens_df)
+    dfs = fp.groupBy("term").agg(F.count("*").alias("df"))
+    postings = (
+        fp.join(dl, "doc_id").join(dfs, "term")
+        .repartition(FLAT_PARTITIONS, "doc_id")
+        .sortWithinPartitions("term").cache()
+    )
+    postings.count()
+    stats = dl.agg(F.count("*").alias("n"), F.avg("doc_len").alias("avg")).first()
+    return {"postings": postings, "n_docs": int(stats.n),
+            "avg_dl": float(stats.avg)}
 
 
 def bm25_score_col(tf, doc_len, df, n_docs: int, avg_dl: float):
@@ -43,7 +69,7 @@ def bm25_score_col(tf, doc_len, df, n_docs: int, avg_dl: float):
 
 def bm25_topk_flat(
     postings: DataFrame,
-    doc_stats: DataFrame,
+    doc_stats: None,
     n_docs: int,
     avg_dl: float,
     terms: list[str],
@@ -51,32 +77,19 @@ def bm25_topk_flat(
     k: int = 10,
     min_match: int | None = None,
 ) -> DataFrame:
-    """Top-k BM25 with built-ins only. `postings` must cover the whole
-    corpus (df is derived by counting within the term filter).
-    `min_match=m` requires ≥ m distinct matched terms per doc.
-
-    When `postings` already carries a `doc_len` column (a corpus
-    prepared with the length pre-joined — the serving-cache layout),
-    pass doc_stats=None: the per-query doc-stats join disappears from
-    the plan entirely (r6 — the join cost was re-paid on every query
-    for an invariant corpus attribute). A pre-attached `df` column is
-    honored the same way (r6): per-term document frequency is as much
-    a corpus invariant as doc_len, so a prepared corpus can carry it
-    and the per-query groupBy + broadcast-join subquery disappears —
-    the query plan becomes one linear pass over the pruned postings.
-    The values are identical by construction: the filter keeps whole
-    term groups, so counting within it equals the global per-term
-    count."""
-    q = postings.filter(F.col("term").isin(terms))
-    if "df" in postings.columns:
-        joined = q
-    else:
-        dfs = q.groupBy("term").agg(F.count("*").alias("df"))
-        # dfs has ≤ len(terms) rows — broadcast, no shuffle this join
-        joined = q.join(F.broadcast(dfs), "term")
+    """Top-k BM25 with built-ins only, over postings that carry
+    `doc_len` and `df` (prepare_flat's shape): filter terms → score →
+    groupBy(doc_id) → threshold → top-k. `min_match=m` requires ≥ m
+    distinct matched terms per doc; AND requires all of them.
+    `doc_stats` must be None: doc lengths ride in the postings."""
     if doc_stats is not None:
-        joined = joined.join(doc_stats, "doc_id")
-    scored = joined.select(
+        raise FlatCorpusError(
+            "doc_stats must be None: doc_len rides in prepare_flat's postings")
+    missing = sorted({"doc_len", "df"} - set(postings.columns))
+    if missing:
+        raise FlatCorpusError(
+            f"flat postings lack {missing}; build them with prepare_flat")
+    scored = postings.filter(F.col("term").isin(terms)).select(
         "doc_id",
         bm25_score_col(
             F.col("tf").cast("double"), F.col("doc_len"), F.col("df"), n_docs, avg_dl

@@ -4,6 +4,7 @@ import os
 import shutil
 import sys
 import tempfile
+import uuid
 from contextlib import contextmanager
 
 import pytest
@@ -31,6 +32,22 @@ def py4j_calls():
         yield sent
     finally:
         ClientServerConnection.send_command = send
+
+
+@contextmanager
+def jobs_in(spark):
+    """Collects the ids of the Spark jobs the block runs."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 N_TEST_DOCS = 1500

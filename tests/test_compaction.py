@@ -448,6 +448,50 @@ def test_ingest_during_gc_keeps_its_epoch(spark, tmp_root, monkeypatch):
     assert v["ok"], v
 
 
+def test_partial_epoch_is_not_live(spark, tmp_root, monkeypatch):
+    """An epoch goes live only after its last write. A batch that fails
+    between its delta_chunks and delta_doc_stats writes leaves an
+    uncommitted epoch: GC does not consume it, so its replay stays live
+    and the next minor compaction merges it. A replay takes a committed
+    epoch down before its first write."""
+    import ela_lib_spark.index.build as build
+    from ela_lib_spark.index.validate import validate_index
+    from ela_lib_spark.streaming.incremental import gc_index
+
+    idx_dir = os.path.join(tmp_root, "partial_epoch_idx")
+    pages = synth_pages_df(spark, 140).cache()
+    build_index(spark, pages.limit(120), idx_dir, n_buckets=4, n_shards=2)
+    batch = pages.subtract(pages.limit(120))
+
+    def crash(*a, **k):
+        raise RuntimeError("injected: doc dictionary write")
+
+    def ingest(fail):
+        if fail:
+            monkeypatch.setattr(build, "doc_stats_from_docs", crash)
+            with pytest.raises(RuntimeError, match="injected"):
+                apply_delta_batch(batch, 2, idx_dir, n_buckets=4, mode="upsert")
+            monkeypatch.undo()
+        else:
+            apply_delta_batch(batch, 2, idx_dir, n_buckets=4, mode="upsert")
+        chunks = os.path.join(idx_dir, "delta_chunks")
+        assert os.path.isdir(os.path.join(chunks, "epoch=2"))
+        return build.live_epochs(chunks, build.read_manifest(idx_dir))
+
+    assert ingest(fail=True) == []
+    gc_index(spark, idx_dir, n_shards=2)
+    assert ingest(fail=False) == [2]
+    assert ingest(fail=True) == []  # a failed replay takes the epoch down
+    assert ingest(fail=False) == [2]
+    assert compact_index(spark, idx_dir, n_shards=2,
+                         mode="minor")["compacted_epochs"] == 1
+
+    v = validate_index(spark, idx_dir)
+    assert v["ok"], v
+    assert build.read_manifest(idx_dir)["n_docs"] == 140
+    assert load_index(spark, idx_dir)["doc_stats"].count() == 140
+
+
 def test_compact_auto_escalates_to_gc(spark, tmp_root):
     """auto mode runs GC (not a tier merge) once tombstones exceed the
     configured fraction of the live corpus."""

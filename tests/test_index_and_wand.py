@@ -8,7 +8,8 @@ from ela_lib_spark.functions.xxh import spark_xxhash64
 from ela_lib_spark.index.build import METRICS_TERM_ID
 from ela_lib_spark.index.codecs import decode_block
 from ela_lib_spark.oracle.brute import brute_topk
-from ela_lib_spark.query.bm25 import bm25_topk_flat, flat_postings
+from ela_lib_spark.errors import FlatCorpusError
+from ela_lib_spark.query.bm25 import bm25_topk_flat, flat_postings, prepare_flat
 from ela_lib_spark.query.wand import wand_topk
 from ela_lib_spark.sources.synth import reference_queries
 from tests.conftest import N_TEST_DOCS
@@ -99,18 +100,28 @@ def test_flat_path_matches_brute_ranks(spark, index, corpus_tokens):
     tokens_df = spark.createDataFrame(
         [(d, t) for d, t in corpus_tokens.items()], "doc_id long, tokens array<string>"
     )
-    postings = flat_postings(tokens_df)
-    for q in reference_queries()[:2]:
-        want = brute_topk(corpus_tokens, q["terms"], q["mode"], k=10,
-                          n_docs=m["n_docs"], avg_dl=m["avg_dl"])
-        got = bm25_topk_flat(
-            postings, index["doc_stats"], m["n_docs"], m["avg_dl"],
-            q["terms"], q["mode"], k=10,
-        ).collect()
-        assert [r.doc_id for r in got] == [d for d, _ in want], q["name"]
-        assert all(
-            abs(r.score - ws) < 1e-9 for r, (_, ws) in zip(got, want)
-        ), q["name"]
+    flat = prepare_flat(tokens_df)
+    try:
+        assert flat["n_docs"] == m["n_docs"]
+        assert abs(flat["avg_dl"] - m["avg_dl"]) < 1e-9
+        for q in reference_queries()[:2]:
+            want = brute_topk(corpus_tokens, q["terms"], q["mode"], k=10,
+                              n_docs=m["n_docs"], avg_dl=m["avg_dl"])
+            got = bm25_topk_flat(
+                flat["postings"], None, m["n_docs"], m["avg_dl"],
+                q["terms"], q["mode"], k=10,
+            ).collect()
+            assert [r.doc_id for r in got] == [d for d, _ in want], q["name"]
+            assert all(
+                abs(r.score - ws) < 1e-9 for r, (_, ws) in zip(got, want)
+            ), q["name"]
+        # one input shape: unprepared postings and a doc_stats join are refused
+        with pytest.raises(FlatCorpusError, match="prepare_flat"):
+            bm25_topk_flat(flat_postings(tokens_df), None, 1, 1.0, ["term0001"])
+        with pytest.raises(FlatCorpusError, match="doc_stats"):
+            bm25_topk_flat(flat["postings"], index["doc_stats"], 1, 1.0, ["term0001"])
+    finally:
+        flat["postings"].unpersist()
 
 
 def test_serving_envelope_prefilter_rank_identical(spark, index, corpus_tokens):
@@ -250,8 +261,7 @@ def test_scattered_bucket_lifecycle_deep_fsck(spark, tmp_root):
                 tokenize_col(extract_text(F.col("html"))).alias("tokens"))
             .join(live, "url").select("doc_id", "tokens")
         )
-        flat = flat_postings(toks)
-        ds = idx["doc_stats"].select("doc_id", "doc_len")
+        flat = prepare_flat(toks)["postings"]
         for terms, mode in ((["term0000", "term0002"], "AND"),
                             (["term0001"], "OR"),
                             (["term0004", "term0010"], "AND")):
@@ -259,9 +269,10 @@ def test_scattered_bucket_lifecycle_deep_fsck(spark, tmp_root):
                    for r in wand_topk(idx, terms, mode, 10).collect()]
             want = [(r.doc_id, round(r.score, 9))
                     for r in bm25_topk_flat(
-                        flat, ds, m["n_docs"], m["avg_dl"], terms, mode, 10
+                        flat, None, m["n_docs"], m["avg_dl"], terms, mode, 10
                     ).collect()]
             assert got == want, (step, terms, mode, got[:3], want[:3])
+        flat.unpersist()
 
     check("pre-compact", compare_flat=False)
     res = compact_index(spark, idx_dir, mode="minor")

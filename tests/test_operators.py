@@ -1,8 +1,6 @@
 """Dedup, similarity, diff, DSL, export/import, analysis, multimodal."""
 
 import collections
-import uuid
-from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -24,6 +22,7 @@ from ela_lib_spark.operators.diff import classify_diff, diff_result, sync_diff_a
 from ela_lib_spark.operators.similarity import ann_topk_srp, cosine_topk
 from ela_lib_spark.plans.dsl import DslError, dsl_filter, dsl_to_column
 from ela_lib_spark.sources.ndjson import export_index, import_index
+from tests.conftest import jobs_in
 
 
 @pytest.fixture(scope="module")
@@ -445,22 +444,6 @@ def test_connected_components_paths_agree(spark):
 
 
 
-@contextmanager
-def _jobs_in(spark):
-    """Collects the ids of the Spark jobs the block runs."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_spread_input_runs_no_job(spark, docs, tmp_path):
     """The spread is decided from the plan: asking an AQE-shuffled
     input for its partition count would execute the upstream stages."""
@@ -468,10 +451,10 @@ def test_spread_input_runs_no_job(spark, docs, tmp_path):
 
     docs.write.parquet(str(tmp_path / "docs"))
     df = spark.read.parquet(str(tmp_path / "docs"))
-    with _jobs_in(spark) as probe:
+    with jobs_in(spark) as probe:
         dedup_exact(df).select("doc_id", "text").rdd.getNumPartitions()
     assert probe  # the old decision's cost; also shows the counter sees jobs
-    with _jobs_in(spark) as jobs:
+    with jobs_in(spark) as jobs:
         out = spread(dedup_exact(df), ["doc_id", "text"])
     assert jobs == []
     # a few rows behind a shuffle: AQE would coalesce them to one task
@@ -535,7 +518,7 @@ def test_near_dup_pass_plans_in_few_py4j_calls(spark, tmp_path):
         return {r.doc_id for r in dedup_minhash_lsh(dedup_exact(df)).select("doc_id").collect()}
 
     assert len(one_pass()) == 450  # cold: worker start-up, JIT
-    with _jobs_in(spark) as jobs, py4j_calls() as sent:
+    with jobs_in(spark) as jobs, py4j_calls() as sent:
         kept = one_pass()
     assert len(kept) == 450
     assert len(sent) <= 800, collections.Counter(sent).most_common(8)
@@ -549,7 +532,7 @@ def test_materialized_rowcount_needs_a_full_cache(spark):
     try:
         df.limit(1).collect()  # builds only part of the cache
         assert _materialized_rowcount(df) == 1000
-        with _jobs_in(spark) as jobs:  # now fully built: read without a job
+        with jobs_in(spark) as jobs:  # now fully built: read without a job
             assert _materialized_rowcount(df) == 1000
         assert jobs == []
     finally:

@@ -42,18 +42,28 @@ def test_dsl_filter_pushdown_to_parquet(spark, pages_path):
     assert "html" not in read_schema and "text" not in read_schema
 
 
-def test_flat_bm25_broadcasts_df_table(spark, index, corpus_tokens):
-    from ela_lib_spark.query.bm25 import bm25_topk_flat, flat_postings
+def test_flat_bm25_runs_one_job_per_query(spark, corpus_tokens):
+    """prepare_flat hash-partitions the cached postings by doc_id, which
+    already satisfies each query's groupBy(doc_id): an OR, AND or m-of-n
+    query runs one job with no exchange (a corpus partitioned by term
+    pays a shuffle stage, two jobs, per query)."""
+    from conftest import jobs_in
 
-    tokens_df = spark.createDataFrame(
-        [(d, t) for d, t in list(corpus_tokens.items())[:500]],
-        "doc_id long, tokens array<string>",
-    )
-    postings = flat_postings(tokens_df)
-    top = bm25_topk_flat(postings, index["doc_stats"], 3000, 150.0,
-                         ["term0001", "term0002"], "OR", 10)
-    plan = explain_str(top)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    from ela_lib_spark.query.bm25 import bm25_topk_flat, prepare_flat
+
+    flat = prepare_flat(spark.createDataFrame(
+        list(corpus_tokens.items()), "doc_id long, tokens array<string>"))
+    try:
+        for terms, mode, min_match in ((["term0001", "term0002"], "OR", None),
+                                       (["term0001", "term0002"], "AND", None),
+                                       (["term0000", "term0001", "term0002"], "OR", 2)):
+            top = bm25_topk_flat(flat["postings"], None, flat["n_docs"], flat["avg_dl"],
+                                 terms, mode, 10, min_match=min_match)
+            with jobs_in(spark) as jobs:
+                assert len(top.collect()) == 10
+            assert len(jobs) == 1, (mode, min_match, jobs)
+    finally:
+        flat["postings"].unpersist()
 
 
 def test_agg_is_partial_and_columnar(spark, pages_path):
@@ -365,29 +375,3 @@ def test_union_find_losers_join_broadcasts(spark, pages_path):
     plan = kept._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan[:3000]
     assert "SortMergeJoin" not in plan.split("LeftAnti")[0].splitlines()[-1]
-
-
-def test_bm25_flat_pre_attached_df_identical(spark, pages_path):
-    """r6: a prepared corpus may carry per-term df; the scoring path
-    must produce bit-identical top-k with and without the pre-attached
-    column (the df-less path derives df by counting inside the term
-    filter — same values because the filter keeps whole term groups)."""
-    from pyspark.sql import functions as F
-
-    from ela_lib_spark.index.build import pages_with_tokens
-    from ela_lib_spark.query.bm25 import bm25_topk_flat, doc_lens, flat_postings
-
-    toks = pages_with_tokens(spark.read.parquet(pages_path),
-                             use_html=True).withColumnRenamed("url", "doc_id")
-    dl = doc_lens(toks)
-    fp = flat_postings(toks)
-    n_docs = dl.count()
-    avg_dl = float(dl.agg(F.avg("doc_len")).first()[0])
-    plain = fp.join(dl, "doc_id")
-    pre = plain.join(fp.groupBy("term").agg(F.count("*").alias("df")), "term")
-    terms = ["term0000", "term0012"]
-    a = [(r.doc_id, round(r.score, 9))
-         for r in bm25_topk_flat(plain, None, n_docs, avg_dl, terms, "OR", 10).collect()]
-    b = [(r.doc_id, round(r.score, 9))
-         for r in bm25_topk_flat(pre, None, n_docs, avg_dl, terms, "OR", 10).collect()]
-    assert a == b and len(a) == 10

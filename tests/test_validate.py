@@ -76,13 +76,19 @@ def test_validate_catches_corruptions(spark, tmp_root):
     assert validate_index(spark, idx_dir)["checks"][
         "corpus_stats_vs_manifest"]["ok"]
 
-    # b) dangling tombstone (delete log referencing an unknown doc)
+    # b) dangling tombstone (a committed delete log referencing an
+    # unknown doc)
+    from ela_lib_spark.index.build import DELTA_COMMITS, epoch_marker
+
     os.makedirs(os.path.join(idx_dir, "delta_deletes"), exist_ok=True)
     spark.createDataFrame([(1 << 62,)], "doc_id long").write.mode(
         "overwrite").parquet(os.path.join(idx_dir, "delta_deletes", "epoch=9"))
+    os.makedirs(os.path.join(idx_dir, DELTA_COMMITS), exist_ok=True)
+    open(epoch_marker(idx_dir, 9), "w").close()
     res = validate_index(spark, idx_dir)
     assert not res["checks"]["tombstones_resolve"]["ok"]
     shutil.rmtree(os.path.join(idx_dir, "delta_deletes"))
+    shutil.rmtree(os.path.join(idx_dir, DELTA_COMMITS))
 
     # c) missing data dir
     shutil.move(os.path.join(idx_dir, "postings"),

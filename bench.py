@@ -612,7 +612,7 @@ Serving-mode note (VERDICT r2 #6): AND queries now run as ONE Spark
 job — `prepare_serving` pins a per-(shard, term) block-envelope table
 and the prefilter pushes literal per-shard doc-range bounds into the
 postings scan, replacing r2's two in-plan aggregations + broadcast
-join (query/wand.py:_literal_and_prefilter; rank-identity preserved,
+join (query/wand.py:and_window; rank-identity preserved,
 tests/test_index_and_wand.py). Measured on one host window: and2/and3
 2.4-2.9s → ~1.0s. The p50/p95 above were taken at the END of the
 bench run; the membw table (measured minutes later) shows what the

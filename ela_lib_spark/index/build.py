@@ -517,9 +517,9 @@ def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float, codec: str,
     # hash-partitioned by bucket, so one read split's chunk covers a
     # scattered bucket subset (e.g. {65, 94}) that straddles another
     # split's ({70, 80}) — concatenation alone emits misordered blocks
-    # and inverted [first, last] envelopes, which the AND block
-    # prefilter then prunes wrongly (caught by validate --deep's
-    # full-decode audit at 512-bucket scale, r5; small indexes place
+    # and inverted [first, last] envelopes, which the AND window
+    # (query/wand.and_window) then prunes wrongly (caught by validate
+    # --deep's full-decode audit at 512-bucket scale, r5; small indexes place
     # ≤1 bucket per file, which is why rank-identity tests never saw
     # it). Stable lexsort on (group, id); skipped when already sorted
     # (the common small-index / single-bucket-per-split case).
@@ -554,8 +554,7 @@ def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float, codec: str,
             ("term_id", "int64"), ("shard", "int32"), ("block_id", "int32"),
             ("first_doc_id", "int64"), ("last_doc_id", "int64"),
             ("doc_ids_delta", "object"), ("tfs", "object"), ("dls", "object"),
-            ("n_docs", "int32"), ("block_max_impact", "float64"),
-            ("df", "int64"))})
+            ("n_docs", "int32"), ("block_max_impact", "float64"))})
 
     impact = tfs / (tfs + k1 * (1 - b + b * dls / avg_dl))
 
@@ -608,7 +607,6 @@ def _merge_batch_vectorized(pdf: pd.DataFrame, avg_dl: float, codec: str,
             "dls": dl_enc,
             "n_docs": b_n.astype(np.int32),
             "block_max_impact": bmax,
-            "df": pdf["df"].to_numpy(np.int64)[g_chunk][blk_group],
         }
     )
 
@@ -653,27 +651,19 @@ def merge_chunks(
     deleted: np.ndarray | None = None,
 ) -> DataFrame:
     """Stage B: salted merge. shard = bucket-range group (order-preserving
-    salt); df per term aggregated from chunk metadata (cheap — no
-    decode), then carried into each salted group. The shuffle is an
-    explicit repartition on (term_id, shard) + in-partition sort; the
-    merge itself streams through mapInPandas (see _merge_stream_fn).
+    salt). The one shuffle is an explicit repartition on
+    (term_id, shard) + in-partition sort; the merge itself streams
+    through mapInPandas (see _merge_stream_fn).
 
     `deleted` (sorted int64 doc ids — tombstones from upsert/delete
-    delta batches) purges those docs' postings during the merge; the
-    STORED per-block df then still counts purged docs (it comes from
-    chunk metadata, which is immutable history), so compactions that
-    purge set `df_stale` in the manifest and the query path recomputes
-    live df per term (query/wand.py — the same cheap branch tiered
-    indexes use)."""
+    delta batches) purges those docs' postings during the merge. No df
+    is stored: a term's df is the sum of its blocks' `n_docs`, which
+    the query path reads per query (query/wand.term_lookup), so a
+    purge needs no df bookkeeping."""
     group = shard_group(n_buckets, n_shards)
     pre = chunks.filter(F.col("term_id") != METRICS_TERM_ID).withColumn(
         "shard", (F.col("part_id") / group).cast("int")
     )
-    df_tbl = pre.groupBy("term_id").agg(F.sum("n_docs").alias("df"))
-    # df_tbl is one row per term — tiny next to the chunk data; AQE
-    # turns this into a broadcast join when it fits, leaving the
-    # repartition below as the ONLY shuffle of chunk bytes.
-    joined = pre.join(df_tbl, "term_id")
     # explicit count — a bare repartition(cols) is subject to AQE
     # coalescing, which can collapse the merge to a near-serial task.
     # 1× slots (r6, was 2×): the merge kernel pays a fixed Python/Arrow
@@ -681,7 +671,7 @@ def merge_chunks(
     # group far below a partition, so one wave of full-width tasks wins
     # (A/B at 32 cores: merge 4.7 → 3.1 s).
     n_parts = max(chunks.sparkSession.sparkContext.defaultParallelism, 16)
-    part = joined.repartition(n_parts, "term_id", "shard")
+    part = pre.repartition(n_parts, "term_id", "shard")
     part = part.sortWithinPartitions("term_id", "shard", "first_doc_id")
     return part.mapInPandas(_merge_stream_fn(avg_dl, codec, deleted=deleted),
                             schema=POSTINGS)
@@ -917,6 +907,17 @@ def postings_dirs(out_dir: str, manifest: dict) -> list[str]:
         os.path.join(out_dir, t["postings_dir"])
         for t in manifest.get("tiers", [])
     ]
+
+
+def read_postings(spark: SparkSession, out_dir: str,
+                  manifest: dict) -> DataFrame:
+    """The index's postings: the union of its postings dirs, projected
+    to `schemas.POSTINGS` — a dir written by an older build may carry
+    columns this one no longer writes (a stored `df`)."""
+    cols = POSTINGS.fieldNames()
+    return functools.reduce(DataFrame.unionByName, (
+        spark.read.parquet(p).select(*cols)
+        for p in postings_dirs(out_dir, manifest)))
 
 
 def covered_epochs(manifest: dict) -> set[int]:
@@ -1177,9 +1178,9 @@ def load_index(spark: SparkSession, out_dir: str,
 
     With tiered delta compaction (streaming/incremental.py) the
     manifest may carry `tiers`: extra postings directories merged from
-    delta segments. `postings` is the union; tier rows
-    may carry per-tier df values — query paths recompute global df
-    per term when `manifest['tiers']` is present (query/wand.py)."""
+    delta segments. `postings` is their union (read_postings); no df is
+    stored in it — a term's df is the sum of its blocks' `n_docs`,
+    read per query (query/wand.term_lookup)."""
     from ela_lib_spark.errors import IndexCorruptError, IndexNotFoundError
 
     if snapshot_id is not None:
@@ -1238,8 +1239,7 @@ def load_index(spark: SparkSession, out_dir: str,
         if tomb is not None:
             doc_stats = doc_stats.join(tomb, "doc_id", "left_anti")
         deleted_df = tomb if deleted_ids is None else None
-        postings = functools.reduce(DataFrame.unionByName, (
-            spark.read.parquet(p) for p in postings_dirs(out_dir, manifest)))
+        postings = read_postings(spark, out_dir, manifest)
         if snapshot_id is not None:
             corpus_stats = spark.createDataFrame(
                 [(int(manifest["n_docs"]), float(manifest["avg_dl"]))],

@@ -18,9 +18,11 @@ streaming/incremental.py docstrings):
 5. the current snapshot_id is archived in the snapshot log;
 6. `deep=True`: decode every posting block's streams and re-check the
    decoder contract (n_docs > 0, first <= last id, ids strictly
-   ascending within the block, block length matches metadata) plus
-   df > 0 — a distributed full-scan pass, O(postings), for use after
-   suspected corruption rather than per publish.
+   ascending within the block, block length matches metadata) — a
+   distributed full-scan pass, O(postings), for use after suspected
+   corruption rather than per publish. No df is stored to check: a
+   term's df is the sum of its blocks' `n_docs`, which this audit
+   covers.
 
 Returns {"ok": bool, "checks": {name: {"ok", "detail"}}}; CLI
 `validate` exits non-zero when any check fails.
@@ -28,10 +30,9 @@ Returns {"ok": bool, "checks": {name: {"ok", "detail"}}}; CLI
 
 from __future__ import annotations
 
-import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -176,7 +177,7 @@ def _deep_postings_check(spark, manifest: dict, index_dir: str) -> dict:
     shuffle); returns aggregate violation counts."""
     import pandas as pd
 
-    from ela_lib_spark.index.build import postings_dirs
+    from ela_lib_spark.index.build import read_postings
 
     codec = manifest["codec"]
 
@@ -187,7 +188,7 @@ def _deep_postings_check(spark, manifest: dict, index_dir: str) -> dict:
         for pdf in it:
             for r in pdf.itertuples(index=False):
                 n_blocks += 1
-                if r.n_docs <= 0 or r.first_doc_id > r.last_doc_id or r.df <= 0:
+                if r.n_docs <= 0 or r.first_doc_id > r.last_doc_id:
                     bad_meta += 1
                     continue
                 try:
@@ -206,10 +207,8 @@ def _deep_postings_check(spark, manifest: dict, index_dir: str) -> dict:
                             "bad_decode": [bad_decode],
                             "bad_order": [bad_order]})
 
-    postings = functools.reduce(DataFrame.unionByName, (
-        spark.read.parquet(p) for p in postings_dirs(index_dir, manifest)))
     tot = (
-        postings.mapInPandas(
+        read_postings(spark, index_dir, manifest).mapInPandas(
             fn, "n_blocks long, bad_meta long, bad_decode long, bad_order long"
         ).agg(F.sum("n_blocks"), F.sum("bad_meta"), F.sum("bad_decode"),
               F.sum("bad_order")).first()

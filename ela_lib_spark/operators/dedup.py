@@ -63,6 +63,25 @@ def _broadcast_if_fits(df: DataFrame, nbytes: int) -> DataFrame:
     return F.broadcast(df) if nbytes <= BROADCAST_MAX_BYTES else df
 
 
+_UDFS: dict = {}
+
+
+def _session_udf(spark, make, *params):
+    """`make(*params)`, built once per SparkContext: a pandas UDF pickles
+    its kernel and registers a JVM function on first use, and keeps
+    that JVM object — so it is reused only within the application that
+    built it (keyed by application id; other contexts' entries are
+    dropped)."""
+    app = spark.sparkContext.applicationId
+    key = (make.__name__, params, app)
+    udf = _UDFS.get(key)
+    if udf is None:
+        for k in [k for k in _UDFS if k[2] != app]:
+            del _UDFS[k]
+        udf = _UDFS[key] = make(*params)
+    return udf
+
+
 def dedup_exact(df: DataFrame, key: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Keep the min-key representative per exact text hash.
 
@@ -89,7 +108,7 @@ def minhash_signatures(
         spread(df, [key, text_col]), tokenize_sql(quote_col(text_col)),
         shingle_n, "_sh", keep=[key]
     )
-    mh = make_minhash_udf(num_hashes)
+    mh = _session_udf(df.sparkSession, make_minhash_udf, num_hashes)
     return staged.select(key, mh("_sh").alias("sig"))
 
 
@@ -361,7 +380,7 @@ def simhash_signatures(df: DataFrame, key: str = "doc_id", text_col: str = "text
     """Token hashing runs JVM-side; the UDF only does the bit votes.
     Input is spread across the cluster first when the scan is
     under-parallel (session.spread)."""
-    sh = make_simhash_udf()
+    sh = _session_udf(df.sparkSession, make_simhash_udf)
     th = F.expr(token_hash_sql(tokenize_sql(quote_col(text_col))))
     return spread(df, [key, text_col]).select(key, sh(th).alias("simhash"))
 

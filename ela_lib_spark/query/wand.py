@@ -21,12 +21,15 @@ Rank-identity: contributions come from query/scoring.bm25_contrib —
 the same float64 expression the brute-force oracle uses — accumulated
 in lexicographic term order.
 
-Serving mode: `prepare_serving(load_index(...))` pins postings and a
-per-(shard, term) block-envelope table; AND queries then run as ONE
-Spark job with literal per-shard doc-range predicates instead of
-in-plan envelope aggregations (see _literal_and_prefilter). Tiered
-indexes (post minor-compaction) recompute global df per term and
-scale block-max bounds — see wand_topk.
+df has one rule: a term's df is the sum of `n_docs` over its blocks in
+the index's postings dirs (base and tiers). Every query reads it from
+one per-query term lookup (`term_lookup`) of per-(shard, term) block
+envelope rows (shard, term_id, _mn, _mx, _n); the same rows give AND
+its literal per-shard doc window (`and_window`). Serving mode
+(`prepare_serving(load_index(...))`) pins postings and the envelope
+table, so the lookup costs no Spark job and every query runs as ONE.
+Block-max bounds are scaled from the manifest to stay sound when
+corpus stats drift between tier merges — see wand_topk.
 """
 
 from __future__ import annotations
@@ -54,9 +57,12 @@ def _compact(ids: np.ndarray, scores: np.ndarray, k: int):
 
 
 def _shard_topk_fn(terms: list[str], mode: str, k: int, n_docs: int,
-                   avg_dl: float, codec: str, ub_scale: float = 1.0,
-                   deleted: np.ndarray | None = None,
+                   avg_dl: float, codec: str, df: dict[int, int],
+                   ub_scale: float = 1.0, deleted: np.ndarray | None = None,
                    min_match: int | None = None):
+    # `df` maps each query term_id present in the index to its df
+    # (term_lookup).
+    #
     # Postings are keyed by term_id = xxhash64(term); iteration stays in
     # lexicographic *string* order — rank-identity with the brute oracle
     # depends on the float accumulation order.
@@ -89,7 +95,7 @@ def _shard_topk_fn(terms: list[str], mode: str, k: int, n_docs: int,
         bounds = []
         for t, g in pdf.groupby("term_id"):
             g = g.sort_values("first_doc_id").reset_index(drop=True)
-            idf_t = float(idf(int(g["df"].iloc[0]), n_docs))
+            idf_t = float(idf(df[int(t)], n_docs))
             per[t] = {
                 "idf": idf_t,
                 "first": g["first_doc_id"].to_numpy(np.int64),
@@ -181,8 +187,8 @@ def _shard_topk_fn(terms: list[str], mode: str, k: int, n_docs: int,
 
 
 def _shard_topk_cogroup_fn(terms: list[str], mode: str, k: int, n_docs: int,
-                           avg_dl: float, codec: str, ub_scale: float = 1.0,
-                           min_match: int | None = None):
+                           avg_dl: float, codec: str, df: dict[int, int],
+                           ub_scale: float = 1.0, min_match: int | None = None):
     """Distributed-tombstone variant of the shard kernel: the tombstone
     set arrives CO-GROUPED by shard (right side of a cogroup) instead
     of as a closure-captured array, so no process ever holds more than
@@ -193,7 +199,7 @@ def _shard_topk_cogroup_fn(terms: list[str], mode: str, k: int, n_docs: int,
     def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         deleted = (np.unique(right["doc_id"].to_numpy(np.int64))
                    if len(right) else None)
-        inner = _shard_topk_fn(terms, mode, k, n_docs, avg_dl, codec,
+        inner = _shard_topk_fn(terms, mode, k, n_docs, avg_dl, codec, df,
                                ub_scale, deleted, min_match)
         return inner(left)
 
@@ -217,47 +223,17 @@ def tombstones_with_shard(tomb: DataFrame, manifest: dict) -> DataFrame:
     return tomb.select("doc_id", (part / g).cast("int").alias("shard"))
 
 
-def and_block_prefilter(q: DataFrame, n_terms: int) -> DataFrame:
-    """Segment-level pre-filter for AND over term-filtered postings
-    blocks: per shard keep only blocks overlapping the intersection of
-    every term's [min first_doc_id, max last_doc_id] envelope; drop
-    shards missing any term entirely."""
-    rng = q.groupBy("shard", "term_id").agg(
-        F.min("first_doc_id").alias("_mn"),
-        F.max("last_doc_id").alias("_mx"),
-    )
-    win = (
-        rng.groupBy("shard")
-        .agg(
-            F.max("_mn").alias("_lo"),
-            F.min("_mx").alias("_hi"),
-            F.countDistinct("term_id").alias("_nt"),
-        )
-        .filter(F.col("_nt") == n_terms)
-        .drop("_nt")
-    )
-    return (
-        q.join(F.broadcast(win), "shard")
-        .filter(
-            (F.col("last_doc_id") >= F.col("_lo"))
-            & (F.col("first_doc_id") <= F.col("_hi"))
-        )
-        .drop("_lo", "_hi")
-    )
-
-
 def precompute_envelopes(postings: DataFrame) -> DataFrame:
-    """Serving-mode helper: the per-(shard, term) block envelope table
-    — (shard, term_id, _mn, _mx) over ALL terms. Tiny (one row per
-    term per shard it appears in) and computed ONCE per index load;
-    `prepare_serving` caches it. With it, an AND query's prefilter
-    becomes: filter this table to the query terms (a handful of rows),
-    collect, and push per-shard [lo, hi] doc-range bounds into the
-    postings scan as LITERAL predicates — removing two aggregations
-    and a broadcast join from every AND query's plan."""
+    """The per-(shard, term) block envelope rows (shard, term_id, _mn,
+    _mx, _n): the term's doc-id range in the shard and its summed block
+    `n_docs` there. Σ _n over a term's shards is its df. Over all
+    postings it is the table `prepare_serving` pins; over a query's
+    term-filtered postings it is an unpinned query's lookup (a few rows
+    per term)."""
     return postings.groupBy("shard", "term_id").agg(
         F.min("first_doc_id").alias("_mn"),
         F.max("last_doc_id").alias("_mx"),
+        F.sum("n_docs").alias("_n"),
     )
 
 
@@ -265,17 +241,18 @@ DRIVER_ENV_MAX_ROWS = 2_000_000  # ~100 MB of tuples; above, stay distributed
 
 
 def prepare_serving(index: dict) -> dict:
-    """Pin the serving artifacts in memory: cached postings + the AND
-    envelope table. Mutates and returns `index`. The 100-TB analog is
-    a warm executor cache / Iceberg metadata table, refreshed per
+    """Pin the serving artifacts in memory: cached postings, the
+    envelope table and, past TOMBSTONE_DRIVER_CAP, the shard-keyed
+    tombstones. Mutates and returns `index`. The 100-TB analog is a
+    warm executor cache / Iceberg metadata table, refreshed per
     snapshot flip.
 
     When the envelope table is small enough (vocab × shards ≤
     DRIVER_ENV_MAX_ROWS) it is ALSO pinned driver-side as a dict, so
-    an AND query runs exactly ONE Spark job — the envelope lookup
-    costs a dict access instead of a collect. Above the cap, the
-    cached distributed table is filtered + collected per query (a
-    few-row job over an in-memory relation)."""
+    the per-query term lookup (df and the AND window) costs a dict
+    access and every query runs exactly ONE Spark job. Above the cap,
+    the cached table is filtered + collected per query (a few-row job
+    over an in-memory relation)."""
     # Pin the cache HASH-PARTITIONED BY SHARD with rows term-sorted
     # inside each partition (r6): the shard kernel's groupBy(shard)
     # requires ClusteredDistribution(shard), which the cached
@@ -288,7 +265,8 @@ def prepare_serving(index: dict) -> dict:
     # to the (amortized) snapshot flip, exactly like the envelope
     # precompute below. 4× n_shards partitions keeps hash collisions
     # between shard ids rare, so one task per shard w.h.p.
-    n_shards = int(index["manifest"].get("n_shards") or 8)
+    m = index["manifest"]
+    n_shards = int(m.get("n_shards") or 8)
     index["postings"] = (
         index["postings"].repartition(4 * n_shards, "shard")
         .sortWithinPartitions("term_id").cache()
@@ -301,12 +279,23 @@ def prepare_serving(index: dict) -> dict:
         by_term: dict[int, list] = {}
         for r in env.collect():
             by_term.setdefault(r.term_id, []).append(
-                (r.shard, r._mn, r._mx)
+                (r.shard, r._mn, r._mx, r._n)
             )
         index["envelopes_driver"] = by_term
+    if index.get("deleted_df") is not None:
+        # tombstones past TOMBSTONE_DRIVER_CAP, keyed by shard ONCE per
+        # pin (ADVICE r4: recomputing tombstone_part_expr + reshuffling
+        # ~n_tomb rows per query is a per-query latency cliff at the
+        # 10^8 GC cap); _revalidate_serving releases it on a flip
+        from pyspark import StorageLevel
+
+        tshard = tombstones_with_shard(index["deleted_df"], m).persist(
+            StorageLevel.MEMORY_AND_DISK)
+        tshard.count()
+        index["tombstones_sharded"] = tshard
     # pin the snapshot the cache was built from — wand_topk revalidates
     # against the live manifest and re-pins on a flip (VERDICT r3 #4)
-    index["serving_snapshot_id"] = index["manifest"].get("snapshot_id")
+    index["serving_snapshot_id"] = m.get("snapshot_id")
     return index
 
 
@@ -343,133 +332,106 @@ def _revalidate_serving(index: dict) -> None:
     prepare_serving(index)
 
 
-def _literal_and_prefilter(index: dict, q: DataFrame, ids: list[int]):
-    """Driver-side envelope intersection: look up the query terms'
-    (shard, _mn, _mx) rows — from the driver-pinned dict when present
-    (zero extra jobs), else a few-row collect over the cached envelope
-    table — drop shards missing any term, and return a literal
-    per-shard doc-range predicate, or None if no shard qualifies."""
+def term_lookup(index: dict, q: DataFrame, ids: list[int]) -> list[tuple]:
+    """The one per-query term lookup: the query terms' envelope rows
+    (shard, term_id, _mn, _mx, _n) — from the driver-pinned dict when
+    present (zero jobs), else a few-row collect over the cached
+    envelope table, else a few-row collect of `precompute_envelopes`
+    over the term-filtered postings `q`."""
     drv = index.get("envelopes_driver")
     if drv is not None:
-        rows = [(s, mn, mx, t) for t in ids for (s, mn, mx) in drv.get(t, [])]
-    else:
-        rows = [
-            (r.shard, r._mn, r._mx, r.term_id)
-            for r in index["envelopes"].filter(F.col("term_id").isin(ids)).collect()
-        ]
+        return [(s, t, mn, mx, n) for t in ids for (s, mn, mx, n) in drv.get(t, [])]
+    env = index.get("envelopes")
+    src = (precompute_envelopes(q) if env is None
+           else env.filter(F.col("term_id").isin(ids)))
+    return src.collect()
+
+
+def and_window(rows: list[tuple], n_terms: int):
+    """AND's literal per-shard doc-range predicate from the lookup rows:
+    a qualifying doc lies inside every term's [_mn, _mx] envelope in its
+    shard, so shards missing a term are dropped whole and blocks outside
+    the intersection are dropped. Sound for ranking: every block holding
+    an AND-result doc overlaps the window. For head∧rare queries this
+    prunes the head term's blocks down to the rare term's doc
+    neighborhood before the kernel reads them. None if no shard
+    qualifies."""
     by_shard: dict[int, list] = {}
-    for s, mn, mx, t in rows:
-        by_shard.setdefault(s, []).append((mn, mx, t))
+    for s, _, mn, mx, _ in rows:
+        by_shard.setdefault(s, []).append((mn, mx))
     conds = []
     for shard, rs in by_shard.items():
-        if len({t for _, _, t in rs}) < len(ids):
-            continue  # AND impossible: a term has no postings here
-        lo = max(mn for mn, _, _ in rs)
-        hi = min(mx for _, mx, _ in rs)
-        if lo > hi:
-            continue
-        conds.append(
-            (F.col("shard") == shard)
-            & (F.col("last_doc_id") >= lo)
-            & (F.col("first_doc_id") <= hi)
-        )
-    if not conds:
-        return None
-    out = conds[0]
-    for c in conds[1:]:
-        out = out | c
-    return out
+        lo = max(mn for mn, _ in rs)
+        hi = min(mx for _, mx in rs)
+        # one row per (shard, term): fewer rows = a term is missing here
+        if len(rs) == n_terms and lo <= hi:
+            conds.append(f"(shard = {shard} AND last_doc_id >= {lo}"
+                         f" AND first_doc_id <= {hi})")
+    return F.expr(" OR ".join(conds)) if conds else None
 
 
 def wand_topk(index: dict, terms: list[str], mode: str = "OR", k: int = 10,
               min_match: int | None = None) -> DataFrame:
-    """Distributed top-k. `index` is index.build.load_index output.
-    `min_match=m` requires ≥ m distinct query terms per result doc
-    (m-of-n semantics; OR = 1, AND = all).
+    """Distributed top-k. `index` is index.build.load_index output,
+    optionally pinned by `prepare_serving`. `min_match=m` requires ≥ m
+    distinct query terms per result doc (m-of-n semantics; OR = 1,
+    AND = all).
 
     The term_id filter pushes down to the postings parquet scan (files
     are sorted by term_id → row-group min/max pruning).
 
-    AND queries get a segment-level pre-filter BEFORE the shard
-    shuffle: per shard, a qualifying doc must lie inside every term's
-    [min first_doc_id, max last_doc_id] envelope, so (a) shards missing
-    any term are dropped whole, and (b) blocks outside the intersection
-    of the envelopes are dropped. Sound for ranking: an AND-result doc
-    is inside the window, and every block containing it overlaps the
-    window — so no contributing block is ever removed. For head∧rare
-    queries this prunes the head term's block shuffle down to the rare
-    term's doc neighborhood (block-max skipping saves decode CPU;
-    this saves shuffle IO — the r1 judge note).
+    df: each query term's df is the sum of its blocks' `n_docs` over
+    every postings dir the index reads, taken from the one term lookup
+    (`term_lookup`) and handed to the shard kernel as {term_id: df}.
+    AND queries filter the postings by the literal window the same
+    rows give (`and_window`) before the kernel reads them.
 
-    Tiered indexes (manifest['tiers'] non-empty): per-tier stored df
-    values are partial, so the global df per term is recomputed over
-    the term-filtered rows (an in-plan broadcast join over the pruned
-    scan — never a full postings pass), and block-max upper bounds are
-    scaled by max(1, avg_dl_now/min merge-time avg_dl) to stay sound.
-    Single-tier indexes keep the zero-extra-work fast path."""
+    Block-max upper bounds are scaled by max(1, avg_dl_now / the least
+    merge-time avg_dl over base and tiers) so pruning stays sound when
+    corpus stats drift between merges; it is 1.0 on a fresh build."""
     _revalidate_serving(index)
     m = index["manifest"]
+    spark = index["postings"].sparkSession
     ids = [spark_xxhash64(t) for t in sorted(set(terms))]
     if min_match is not None and min_match > len(ids):
-        spark = index["postings"].sparkSession
         return spark.createDataFrame([], RESULT_SCHEMA)
     q = index["postings"].filter(F.col("term_id").isin(ids))
+    rows = term_lookup(index, q, ids)
+    df: dict[int, int] = {}
+    for _, t, _, _, n in rows:
+        df[t] = df.get(t, 0) + n
+    if mode.upper() == "AND" and len(ids) > 1:
+        cond = and_window(rows, len(ids))
+        if cond is None:
+            return spark.createDataFrame([], RESULT_SCHEMA)
+        q = q.filter(cond)
+    merge_avgs = [float(m.get("avg_dl_at_merge", m["avg_dl"]))] + [
+        float(t["avg_dl"]) for t in m.get("tiers") or []
+    ]
+    ub_scale = max(1.0, float(m["avg_dl"]) / min(merge_avgs))
     deleted = index.get("deleted_ids")
     if deleted is not None and len(deleted) == 0:
         deleted = None
-    tiers = m.get("tiers") or []
-    ub_scale = 1.0
-    if tiers or m.get("df_stale"):
-        df_tbl = q.groupBy("term_id").agg(
-            F.sum("n_docs").cast("long").alias("_df_global")
-        )
-        q = (
-            q.drop("df")
-            .join(F.broadcast(df_tbl), "term_id")
-            .withColumnRenamed("_df_global", "df")
-        )
-        merge_avgs = [float(m.get("avg_dl_at_merge", m["avg_dl"]))] + [
-            float(t["avg_dl"]) for t in tiers
-        ]
-        ub_scale = max(1.0, float(m["avg_dl"]) / min(merge_avgs))
-    if mode.upper() == "AND" and len(ids) > 1:
-        env = index.get("envelopes")
-        if env is not None:
-            cond = _literal_and_prefilter(index, q, ids)
-            if cond is None:
-                spark = q.sparkSession
-                return spark.createDataFrame([], RESULT_SCHEMA)
-            q = q.filter(cond)
-        else:
-            q = and_block_prefilter(q, len(ids))
     tomb_df = index.get("deleted_df")
     if tomb_df is not None:
         # tombstones past TOMBSTONE_DRIVER_CAP: co-group them with the
         # postings by shard — the set is shuffled (partitioned like the
-        # postings), never collected or closure-shipped. The shard-keyed
-        # frame is computed ONCE per index pin and persisted (ADVICE
-        # r4: recomputing tombstone_part_expr + reshuffling ~n_tomb
-        # rows per query is a per-query latency cliff at the 10^8 GC
-        # cap); _revalidate_serving unpersists it on a snapshot flip.
+        # postings), never collected or closure-shipped. prepare_serving
+        # pins the shard-keyed frame; an unpinned query keys it in-plan.
         tshard = index.get("tombstones_sharded")
         if tshard is None:
-            from pyspark import StorageLevel
-
-            tshard = tombstones_with_shard(tomb_df, m).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            index["tombstones_sharded"] = tshard
+            tshard = tombstones_with_shard(tomb_df, m)
         shard_tops = q.groupBy("shard").cogroup(
             tshard.groupBy("shard")
         ).applyInPandas(
             _shard_topk_cogroup_fn(terms, mode, k, m["n_docs"], m["avg_dl"],
-                                   m["codec"], ub_scale, min_match),
+                                   m["codec"], df, ub_scale, min_match),
             schema=RESULT_SCHEMA,
         )
     else:
         shard_tops = q.groupBy("shard").applyInPandas(
             _shard_topk_fn(terms, mode, k, m["n_docs"], m["avg_dl"],
-                           m["codec"], ub_scale, deleted, min_match),
+                           m["codec"], df, ub_scale, deleted, min_match),
             schema=RESULT_SCHEMA,
         )
     return shard_tops.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

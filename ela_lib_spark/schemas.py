@@ -74,9 +74,10 @@ POSTINGS = T.StructType(
         T.StructField("dls", T.BinaryType(), False),
         T.StructField("n_docs", T.IntegerType(), False),
         # max over block of tf/(tf + k1*(1-b+b*dl/avgdl)); score bound =
-        # idf * (k1+1) * block_max_impact. idf needs df, stored per row.
+        # idf * (k1+1) * block_max_impact. idf needs df, which is not
+        # stored: a term's df is the sum of n_docs over its blocks in
+        # every postings dir, read per query (query/wand.term_lookup).
         T.StructField("block_max_impact", T.DoubleType(), False),
-        T.StructField("df", T.LongType(), False),
     ]
 )
 

@@ -816,9 +816,8 @@ def _gc_index_impl(spark: SparkSession, index_dir: str, manifest: dict,
     epoch ingested after the listing stays live.
 
     _compact_index_impl then major-merges the clean store into fresh
-    postings (stored df is exact again → `df_stale` clears), flips the
-    manifest and frees what it superseded, consumed epoch dirs
-    included. After GC the index is indistinguishable from a fresh bulk
+    postings, flips the manifest and frees what it superseded,
+    consumed epoch dirs included. After GC the index is indistinguishable from a fresh bulk
     build of the live corpus (same doc ids — postings reference them,
     so ids are never remapped).
 
@@ -909,7 +908,6 @@ def _gc_index_impl(spark: SparkSession, index_dir: str, manifest: dict,
         "base_epochs": [],
         "delete_epochs": [],
         "gc_epochs": sorted(consumed),
-        "df_stale": False,
         "gc_gen": gen,
     }
     superseded = [os.path.join(index_dir, manifest["chunks_dir"]),
@@ -958,11 +956,11 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
     Query correctness across tiers: each doc's postings live entirely
     in one tier (a doc is ingested in exactly one epoch) and shard key
     ranges are disjoint across base/tiers, so WAND's shard-local
-    doc-at-a-time invariant holds. Per-tier `df` values are partial —
-    query/wand.py recomputes global df per term (cheap: over the
-    term-filtered rows only) and scales block-max upper bounds by
-    max(1, avg_dl_now/avg_dl_at_merge) to keep pruning sound when
-    corpus stats drift between tier merges.
+    doc-at-a-time invariant holds. No mode writes df: a term's df is
+    the sum of its blocks' `n_docs` over base and tiers, which
+    query/wand.term_lookup reads per query; the query path also scales
+    block-max upper bounds by max(1, avg_dl_now/avg_dl_at_merge) to
+    keep pruning sound when corpus stats drift between tier merges.
 
     Crash safety: every data write targets a deterministic, versioned
     dir with mode=overwrite (replay-idempotent); the manifest pointer
@@ -1056,12 +1054,6 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
     delta = read_delta_postings(spark, index_dir, epochs)
     store = base if delta is None else base.unionByName(delta.drop("epoch"))
     fields: dict = {"delete_epochs": delete_epochs}
-    if n_tomb:
-        # stored per-block df comes from immutable chunk metadata and
-        # still counts purged docs — route queries through the live-df
-        # recompute (same branch tiered reads use). Minor purges only
-        # its new tier: the base keeps the superseded versions.
-        fields["df_stale"] = True
     superseded: list[str] = []
     if mode == "gc":
         store, gc_fields, superseded = _gc_index_impl(

@@ -27,19 +27,25 @@ def test_doc_ids_unique_and_sorted_within_shard(index):
     assert ds.select("doc_id").distinct().count() == ds.count()
 
 
-def test_df_metadata_matches_truth(index, corpus_tokens):
-    # df stored on posting rows == number of docs containing the term
-    for term in ["term0000", "term0050", "term3000"]:
-        truth = sum(1 for toks in corpus_tokens.values() if term in toks)
-        rows = (
-            index["postings"]
-            .filter(F.col("term_id") == spark_xxhash64(term))
-            .select("df").distinct().collect()
-        )
-        if truth == 0:
-            assert rows == []
-        else:
-            assert len(rows) == 1 and rows[0].df == truth
+def test_term_lookup_df_matches_truth(index, corpus_tokens):
+    """A term's df is the sum of its blocks' n_docs, read by the one
+    per-query term lookup: pinned (the driver-side envelope rows) and
+    unpinned (a collect over the term-filtered postings). Both equal the
+    number of docs containing the term."""
+    from ela_lib_spark.query.wand import prepare_serving, term_lookup
+
+    served = prepare_serving(dict(index))
+    try:
+        assert "envelopes" not in index and "envelopes_driver" in served
+        for term in ["term0000", "term0050", "term3000"]:
+            truth = sum(1 for toks in corpus_tokens.values() if term in toks)
+            tid = spark_xxhash64(term)
+            for idx in (index, served):
+                q = idx["postings"].filter(F.col("term_id") == tid)
+                assert sum(r[4] for r in term_lookup(idx, q, [tid])) == truth
+    finally:
+        served["postings"].unpersist()
+        served["envelopes"].unpersist()
 
 
 def test_postings_decode_matches_truth(index, corpus_tokens):

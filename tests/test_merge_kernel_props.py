@@ -7,7 +7,7 @@ produce), a random tombstone set, and a random split of the sorted
 chunk rows into input batches. For both block codecs the merged
 blocks must decode to exactly the input postings minus the
 tombstones, tiled into `block_size` blocks in doc order, with the
-block's max BM25 impact and the term's chunk-metadata df.
+block's max BM25 impact. Neither input nor output carries a df.
 """
 
 import numpy as np
@@ -61,9 +61,7 @@ def merge_input(draw):
                      "dls": varint_encode(np.ones(1, np.int64)),
                      "n_docs": 1, "first_doc_id": 0})
         truth[(0, 0)] = [(0, 1, 1)]
-    pdf = pd.DataFrame(rows)
-    pdf["df"] = pdf.groupby("term_id")["n_docs"].transform("sum")
-    pdf = pdf.sort_values(["term_id", "shard", "first_doc_id"],
+    pdf = pd.DataFrame(rows).sort_values(["term_id", "shard", "first_doc_id"],
                           ignore_index=True)
     all_docs = sorted({p[0] for v in truth.values() for p in v})
     dead = np.array(sorted(draw(st.sets(st.sampled_from(all_docs),
@@ -76,7 +74,6 @@ def merge_input(draw):
 
 def _expected(pdf, truth, dead, block_size):
     dead_set = set(dead.tolist())
-    df = dict(zip(pdf["term_id"], pdf["df"]))
     out = {}
     for (term, shard), posts in truth.items():
         live = sorted(p for p in posts if p[0] not in dead_set)
@@ -85,8 +82,7 @@ def _expected(pdf, truth, dead, block_size):
                              for x in zip(*live[s:s + block_size]))
             impact = tfs / (tfs + BM25_K1 * (1 - BM25_B + BM25_B * dls / AVG_DL))
             out[(term, shard, blk)] = (ids.tolist(), tfs.tolist(),
-                                       dls.tolist(), float(impact.max()),
-                                       int(df[term]))
+                                       dls.tolist(), float(impact.max()))
     return out
 
 
@@ -109,5 +105,6 @@ def test_merge_kernel_purges_tombstones_and_tiles_blocks(case):
                 key = (int(r.term_id), int(r.shard), int(r.block_id))
                 assert key not in got
                 got[key] = (ids.tolist(), tfs.tolist(), dls.tolist(),
-                            float(r.block_max_impact), int(r.df))
+                            float(r.block_max_impact))
+                assert "df" not in f.columns
         assert got == want, codec

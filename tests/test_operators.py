@@ -462,6 +462,38 @@ def test_spread_input_runs_no_job(spark, docs, tmp_path):
     assert sorted(r.doc_id for r in out.collect()) == [1, 3, 4, 5, 6, 7]
 
 
+def test_signature_udfs_built_once_per_context(spark, monkeypatch):
+    """minhash/simhash signatures reuse one pandas UDF per SparkContext
+    (building one pickles the kernel and registers a JVM function), and
+    build a new one for a different application."""
+    from pyspark import SparkContext
+
+    from ela_lib_spark.functions import hashing
+    from ela_lib_spark.operators import dedup
+
+    built = []
+
+    def counting(make):
+        def fn(*params):
+            built.append(make.__name__)
+            return make(*params)
+        fn.__name__ = make.__name__
+        return fn
+
+    monkeypatch.setattr(dedup, "_UDFS", {})
+    monkeypatch.setattr(dedup, "make_minhash_udf", counting(hashing.make_minhash_udf))
+    monkeypatch.setattr(dedup, "make_simhash_udf", counting(hashing.make_simhash_udf))
+    df = spark.createDataFrame([(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string")
+    for _ in range(2):
+        assert dedup.minhash_signatures(df, num_hashes=8).count() == 2
+        assert dedup.simhash_signatures(df).count() == 2
+    assert sorted(built) == ["make_minhash_udf", "make_simhash_udf"]
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda self: "another-app"))
+    dedup.minhash_signatures(df, num_hashes=8)
+    dedup.simhash_signatures(df)
+    assert len(built) == 4 and len(dedup._UDFS) == 2
+
+
 def test_dedup_operators_leave_no_session_cache(spark, docs):
     """Every frame a dedup operator pins is either checkpointed (read
     by the lazy result) or persisted and released before it returns,

@@ -5,6 +5,8 @@ doesn't push its filter or a dim join that doesn't broadcast would pass
 correctness and still be wrong at scale.
 """
 
+import os
+
 from pyspark.sql import functions as F
 
 from ela_lib_spark.plans.dsl import dsl_filter
@@ -111,20 +113,58 @@ def test_metrics_sidecar_partition_pruning(spark, index_dir):
     assert os.path.isdir(os.path.join(chunks_path(index_dir), "is_m=1"))
 
 
-def test_and_block_prefilter_prunes_shuffle(spark, index):
-    """head∧rare AND: the pre-filter must drop a meaningful share of
-    the head term's blocks before the shard shuffle (shuffle-IO saving
-    on top of block-max decode skipping), and never drop a block that
-    could hold an AND-result doc (rank-identity is asserted separately
-    by test_index_and_wand over AND queries)."""
+def test_and_window_prunes_head_blocks(spark, index):
+    """head∧rare AND: the literal window an unpinned AND query builds
+    from its term lookup must drop a meaningful share of the head
+    term's blocks before the shard kernel reads them (IO saving on top
+    of block-max decode skipping), and never drop a block that could
+    hold an AND-result doc (rank-identity is asserted separately by
+    test_index_and_wand over AND queries)."""
     from ela_lib_spark.functions.xxh import spark_xxhash64
-    from ela_lib_spark.query.wand import and_block_prefilter
+    from ela_lib_spark.query.wand import and_window, term_lookup
 
+    assert "envelopes" not in index  # the unpinned lookup
     ids = [spark_xxhash64(t) for t in ("term0003", "term5011")]
     q = index["postings"].filter(F.col("term_id").isin(ids))
     before = q.count()
-    after = and_block_prefilter(q, 2).count()
+    after = q.filter(and_window(term_lookup(index, q, ids), 2)).count()
     assert after < before, (before, after)
+
+
+def test_pinned_wand_runs_one_job(spark, tmp_root, index):
+    """A pinned index reads every query's df and AND window from the
+    driver-side envelope rows, so OR, AND and m-of-n queries each run
+    exactly ONE Spark job — on a fresh index and on a minor-compacted
+    (tiered) one."""
+    from ela_lib_spark.index.build import build_index, load_index
+    from ela_lib_spark.query.wand import prepare_serving, wand_topk
+    from ela_lib_spark.sources.synth import synth_pages_df
+    from ela_lib_spark.streaming.incremental import apply_delta_batch, compact_index
+
+    from conftest import jobs_in
+
+    idx_dir = os.path.join(tmp_root, "one_job_tiered_idx")
+    pages = synth_pages_df(spark, 300)
+    h = F.pmod(F.xxhash64("url"), F.lit(4))
+    build_index(spark, pages.filter(h != 0), idx_dir, n_buckets=4, n_shards=2)
+    apply_delta_batch(pages.filter(h == 0), 0, idx_dir, n_buckets=4)
+    assert compact_index(spark, idx_dir, mode="minor")["compacted_epochs"] == 1
+    served = [prepare_serving(dict(index)),
+              prepare_serving(load_index(spark, idx_dir))]
+    assert served[1]["manifest"]["tiers"]
+    queries = ((["term0000", "term0002"], "OR", None),
+               (["term0002", "term0045"], "AND", None),
+               (["term0005", "term0417", "term0003"], "OR", 2))
+    try:
+        for idx in served:
+            for terms, mode, mm in queries:
+                with jobs_in(spark) as jobs:
+                    rows = wand_topk(idx, terms, mode, 10, min_match=mm).collect()
+                assert rows and len(jobs) == 1, (terms, mode, mm, jobs)
+    finally:
+        for idx in served:
+            idx["postings"].unpersist()
+            idx["envelopes"].unpersist()
 
 
 def test_typed_errors(spark, tmp_root):

@@ -25,7 +25,7 @@ def _postings_fingerprint(postings):
         postings.select(
             F.bit_xor(F.xxhash64("term_id", "shard", "block_id", "first_doc_id",
                                  "last_doc_id", "doc_ids_delta", "tfs", "dls",
-                                 "n_docs", "df")).alias("h"),
+                                 "n_docs")).alias("h"),
             F.count("*").alias("n"),
         )
         .first()

@@ -78,6 +78,22 @@ def test_query_path_identical_past_driver_cap(spark, tmp_root, monkeypatch):
     assert _results(served) == want
 
 
+def test_unpinned_queries_past_driver_cap_persist_nothing(spark, tmp_root,
+                                                         monkeypatch):
+    """Only prepare_serving pins the shard-keyed tombstones; an unpinned
+    query keys them in its own plan, so loading and querying an index
+    past the cap again and again leaves no persisted frame behind."""
+    idx_dir = _mk_index_with_tombstones(spark, tmp_root, "tscale_leak_idx")
+    monkeypatch.setattr(build, "TOMBSTONE_DRIVER_CAP", 5)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(10):
+        idx = load_index(spark, idx_dir)
+        assert idx["deleted_df"] is not None
+        assert wand_topk(idx, ["zztombver"], "OR", 10).count() == 10
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_gc_cogroup_rewrite_identical_past_driver_cap(spark, tmp_root,
                                                      monkeypatch):
     idx_dir = _mk_index_with_tombstones(spark, tmp_root, "tscale_gc_idx")

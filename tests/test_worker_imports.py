@@ -41,9 +41,10 @@ def _engine_kernels():
         "srp_bucket": similarity._srp_bucket_udf(np.ones((4, 3))).func,
         "spimi": build._spimi_fn(),
         "merge": build._merge_stream_fn(10.0, "pfor"),
-        "wand_shard": wand._shard_topk_fn(["a"], "OR", 10, 100, 10.0, "pfor"),
+        "wand_shard": wand._shard_topk_fn(["a"], "OR", 10, 100, 10.0, "pfor",
+                                          {1: 3}),
         "wand_cogroup": wand._shard_topk_cogroup_fn(["a"], "OR", 10, 100, 10.0,
-                                                    "pfor", 1.0, None),
+                                                    "pfor", {1: 3}, 1.0, None),
         "chunk_gc": incremental._chunk_gc_fn(np.zeros(0, np.int64), {}),
         "chunk_gc_cogroup": incremental._chunk_gc_cogroup_fn({}),
         "bloom_dedup": stateful._bloom_fn(4),

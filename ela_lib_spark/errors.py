@@ -31,3 +31,8 @@ class MaintenanceLockError(EngineError):
 
 class FlatCorpusError(EngineError):
     """Flat BM25 input is not in query/bm25.prepare_flat's shape."""
+
+
+class SqlLiteralError(EngineError, ValueError):
+    """A value has no exact SQL literal (NaN, inf, an int outside
+    int64, or an unsupported type)."""

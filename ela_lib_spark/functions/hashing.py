@@ -19,6 +19,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ela_lib_spark.errors import SqlLiteralError
+
 MERSENNE61 = (1 << 61) - 1
 _M61 = np.uint64(MERSENNE61)
 _MASK32 = np.uint64(0xFFFFFFFF)
@@ -58,6 +60,34 @@ def quote_col(name: str) -> str:
     """A column name as an SQL identifier (backticked, so any name —
     dots, spaces, keywords — parses as one column)."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def sql_lit(v) -> str:
+    """A Python value as the SQL literal of the type `F.lit` gives it,
+    exact on a round trip: strings quoted with `\\` and `'` escaped
+    (any other character stands as itself), bools as TRUE/FALSE, ints
+    as digits (Spark types them int, else bigint), floats as their
+    shortest repr with a `D` suffix (a bare `0.25` is DECIMAL)."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, (bool, np.bool_)):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, (int, np.integer)):
+        if not -(1 << 63) <= int(v) < 1 << 63:
+            raise SqlLiteralError(f"int {v} is outside int64")
+        return str(int(v))
+    if isinstance(v, (float, np.floating)):
+        if not np.isfinite(v):
+            raise SqlLiteralError(f"float {v} has no SQL literal")
+        return repr(float(v)) + "D"
+    raise SqlLiteralError(f"no SQL literal for {type(v).__name__}: {v!r}")
+
+
+def sql_in(expr: str, values) -> str:
+    """`expr IN (values…)` as SQL text; FALSE for no values, as
+    `Column.isin([])` plans."""
+    values = list(values)
+    return f"{expr} IN ({', '.join(map(sql_lit, values))})" if values else "FALSE"
 
 
 def token_hash_sql(tokens_sql: str) -> str:

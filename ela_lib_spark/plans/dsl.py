@@ -1,4 +1,4 @@
-"""ES query-DSL subset → Catalyst Column predicates.
+"""ES query-DSL subset → Catalyst predicates, compiled as SQL text.
 
 The reference treats the user's query JSON as opaque and pushes it into
 every ES scan (/root/reference/pkg/es/es5.go:113-114, merged with id
@@ -9,114 +9,111 @@ compiles it to declarative filters, so Catalyst pushes them into the
 parquet/Iceberg scan (PushedFilters) instead of an opaque remote query.
 
 Supported: match_all, term, terms, ids, exists, range
-(gt/gte/lt/lte), match (analyzed OR over tokens), bool
-(must/filter/should/must_not).
+(gt/gte/lt/lte), match (analyzed OR over tokens), prefix, wildcard,
+match_phrase, bool (must/filter/should/must_not).
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ela_lib_spark.functions.text import tokenize_col
+from ela_lib_spark.errors import EngineError
+from ela_lib_spark.functions.hashing import quote_col, sql_in, sql_lit
+from ela_lib_spark.functions.text import tokenize_list, tokenize_sql
 
 ID_FIELD = "_id"  # ES meta-field; maps to our primary key column
-
-
-from ela_lib_spark.errors import EngineError
+_SEP = "\x1f"  # match_phrase's token separator: no token contains it
 
 
 class DslError(EngineError, ValueError):
     """Unknown/invalid query-DSL clause (O9 typed error taxonomy)."""
 
 
-def _field(name: str, key_col: str) -> Column:
-    return F.col(key_col if name == ID_FIELD else name)
+def _col(name: str) -> str:
+    """A field name as SQL text, resolved as `F.col(name)` resolves it:
+    dots step into struct fields."""
+    return ".".join(quote_col(p) for p in name.split("."))
 
 
-def dsl_to_column(query: dict, key_col: str = "url", text_cols: tuple = ("text",)) -> Column:
+def _field(name: str, key_col: str) -> str:
+    return _col(key_col if name == ID_FIELD else name)
+
+
+def _leaf(body: dict, key: str) -> tuple[str, object]:
+    """(field, value) of a one-field clause; the value may be wrapped
+    as {key: value}."""
+    (f, v), = body.items()
+    return f, (v[key] if isinstance(v, dict) else v)
+
+
+def _any(preds: list[str]) -> str:
+    return "(" + " OR ".join(preds) + ")" if preds else "FALSE"
+
+
+def dsl_to_sql(query: dict, key_col: str = "url", text_cols: tuple = ("text",)) -> str:
+    """The query as one SQL boolean expression. Planned as text, a
+    query costs the driver one py4j round trip, not several per Column
+    call, and the parquet scan still gets its PushedFilters."""
     if not isinstance(query, dict) or len(query) != 1:
         raise DslError(f"query must have exactly one top-level clause: {query!r}")
     (kind, body), = query.items()
     if kind == "match_all":
-        return F.lit(True)
+        return "TRUE"
     if kind == "term":
-        (f, v), = body.items()
-        if isinstance(v, dict):
-            v = v["value"]
-        return _field(f, key_col) == F.lit(v)
+        f, v = _leaf(body, "value")
+        return f"{_field(f, key_col)} = {sql_lit(v)}"
     if kind == "terms":
         (f, vals), = body.items()
-        return _field(f, key_col).isin(list(vals))
+        return sql_in(_field(f, key_col), vals)
     if kind == "ids":
-        return F.col(key_col).isin(list(body["values"]))
+        return sql_in(_col(key_col), body["values"])
     if kind == "exists":
-        return F.col(body["field"]).isNotNull()
+        return f"{_col(body['field'])} IS NOT NULL"
     if kind == "range":
         (f, spec), = body.items()
-        c, preds = _field(f, key_col), []
-        ops = {"gt": c.__gt__, "gte": c.__ge__, "lt": c.__lt__, "lte": c.__le__}
+        ops = {"gt": ">", "gte": ">=", "lt": "<", "lte": "<="}
+        if not spec:
+            raise DslError(f"range on {f} has no bounds")
+        preds = []
         for op, v in spec.items():
             if op not in ops:
                 raise DslError(f"range op {op}")
-            preds.append(ops[op](F.lit(v)))
-        out = preds[0]
-        for p in preds[1:]:
-            out = out & p
-        return out
+            preds.append(f"{_field(f, key_col)} {ops[op]} {sql_lit(v)}")
+        return "(" + " AND ".join(preds) + ")"
     if kind == "match":
-        (f, v), = body.items()
-        if isinstance(v, dict):
-            v = v["query"]
+        f, v = _leaf(body, "query")
         # analyzed match: any query token present in the analyzed field
-        toks = tokenize_col(F.col(f)) if f in text_cols else F.array(F.col(f))
-        from ela_lib_spark.functions.text import tokenize_list
-
-        qtoks = tokenize_list(str(v))
-        preds = [F.array_contains(toks, t) for t in qtoks] or [F.lit(False)]
-        out = preds[0]
-        for p in preds[1:]:
-            out = out | p
-        return out
+        toks = tokenize_sql(_col(f)) if f in text_cols else f"array({_col(f)})"
+        return _any([f"array_contains({toks}, {sql_lit(t)})"
+                     for t in tokenize_list(str(v))])
     if kind == "prefix":
-        (f, v), = body.items()
-        if isinstance(v, dict):
-            v = v["value"]
-        return _field(f, key_col).startswith(str(v))
+        f, v = _leaf(body, "value")
+        return f"startswith({_field(f, key_col)}, {sql_lit(str(v))})"
     if kind == "wildcard":
-        (f, v), = body.items()
-        if isinstance(v, dict):
-            v = v["value"]
+        f, v = _leaf(body, "value")
         # ES wildcard: * = any run, ? = one char; anchor both ends
-        import re as _re
-
         rx = "".join(
-            ".*" if ch == "*" else "." if ch == "?" else _re.escape(ch)
+            ".*" if ch == "*" else "." if ch == "?" else re.escape(ch)
             for ch in str(v)
         )
-        return _field(f, key_col).rlike(f"^{rx}$")
+        return f"{_field(f, key_col)} RLIKE {sql_lit(f'^{rx}$')}"
     if kind == "match_phrase":
-        (f, v), = body.items()
-        if isinstance(v, dict):
-            v = v["query"]
-        from ela_lib_spark.functions.text import tokenize_list
-
+        f, v = _leaf(body, "query")
         qtoks = tokenize_list(str(v))
         if not qtoks:
-            return F.lit(False)
+            return "FALSE"
         # analyzed-phrase containment: the normalized token stream of the
         # field contains the query tokens consecutively
-        joined = F.concat(F.lit("\x1f"),
-                          F.concat_ws("\x1f", tokenize_col(F.col(f))),
-                          F.lit("\x1f"))
-        needle = "\x1f" + "\x1f".join(qtoks) + "\x1f"
-        return joined.contains(needle)
+        sep = sql_lit(_SEP)
+        joined = f"concat({sep}, concat_ws({sep}, {tokenize_sql(_col(f))}), {sep})"
+        return f"contains({joined}, {sql_lit(_SEP + _SEP.join(qtoks) + _SEP)})"
     if kind == "bool":
-        out = F.lit(True)
         must = body.get("must", []) + body.get("filter", [])
-        for clause in must:
-            out = out & dsl_to_column(clause, key_col, text_cols)
-        should = [dsl_to_column(c, key_col, text_cols) for c in body.get("should", [])]
+        out = ["TRUE"] + [f"({dsl_to_sql(c, key_col, text_cols)})" for c in must]
+        should = [f"({dsl_to_sql(c, key_col, text_cols)})" for c in body.get("should", [])]
         # ES semantics: minimum_should_match defaults to 1 only when the
         # bool has NO must/filter clauses; otherwise should is purely a
         # scoring signal and must not filter. An explicit
@@ -125,18 +122,19 @@ def dsl_to_column(query: dict, key_col: str = "url", text_cols: tuple = ("text",
         if msm not in (0, 1):
             raise DslError(f"minimum_should_match {msm} unsupported (0 or 1)")
         if should and msm >= 1:
-            s = should[0]
-            for p in should[1:]:
-                s = s | p
-            out = out & s
-        for clause in body.get("must_not", []):
-            out = out & ~dsl_to_column(clause, key_col, text_cols)
-        return out
+            out.append(_any(should))
+        out += [f"NOT ({dsl_to_sql(c, key_col, text_cols)})"
+                for c in body.get("must_not", [])]
+        return "(" + " AND ".join(out) + ")"
     raise DslError(f"unsupported clause: {kind}")
+
+
+def dsl_to_column(query: dict, key_col: str = "url", text_cols: tuple = ("text",)) -> Column:
+    return F.expr(dsl_to_sql(query, key_col, text_cols))
 
 
 def dsl_filter(df: DataFrame, query: dict | None, key_col: str = "url",
                text_cols: tuple = ("text",)) -> DataFrame:
     if not query:
         return df
-    return df.filter(dsl_to_column(query, key_col, text_cols))
+    return df.where(dsl_to_sql(query, key_col, text_cols))

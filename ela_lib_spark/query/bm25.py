@@ -1,5 +1,5 @@
-"""Closed-form BM25 over a prepared flat corpus — pure
-`pyspark.sql.functions` (zero Python in the plan). It doubles as the
+"""Closed-form BM25 over a prepared flat corpus — built-in Spark SQL,
+planned as SQL text (zero Python in the plan). It doubles as the
 SQL-expressible oracle surface (DuckDB runs the equivalent SQL); the
 block-max WAND executor (query/wand.py) is the scale path.
 
@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ela_lib_spark import BM25_B, BM25_K1
 from ela_lib_spark.errors import FlatCorpusError
+from ela_lib_spark.functions.hashing import sql_in, sql_lit
 
 FLAT_PARTITIONS = 8
 
@@ -55,16 +56,14 @@ def prepare_flat(tokens_df: DataFrame) -> dict:
             "avg_dl": float(stats.avg)}
 
 
-def bm25_score_col(tf, doc_len, df, n_docs: int, avg_dl: float):
-    idf = F.log(
-        1.0 + (F.lit(float(n_docs)) - df + 0.5) / (df + 0.5)
-    )
-    return (
-        idf
-        * F.lit(BM25_K1 + 1.0)
-        * tf
-        / (tf + F.lit(BM25_K1) * (1.0 - BM25_B + F.lit(BM25_B) * doc_len / F.lit(avg_dl)))
-    )
+def bm25_score_sql(tf: str, doc_len: str, df: str, n_docs: int, avg_dl: float) -> str:
+    """One posting's BM25 contribution as SQL text over the SQL
+    expressions `tf` (double), `doc_len` and `df`."""
+    lit = sql_lit
+    idf = f"ln(1.0D + ({lit(float(n_docs))} - {df} + 0.5D) / ({df} + 0.5D))"
+    norm = (f"({tf} + {lit(BM25_K1)} * ({lit(1.0 - BM25_B)}"
+            f" + {lit(BM25_B)} * {doc_len} / {lit(float(avg_dl))}))")
+    return f"{idf} * {lit(BM25_K1 + 1.0)} * {tf} / {norm}"
 
 
 def bm25_topk_flat(
@@ -89,21 +88,16 @@ def bm25_topk_flat(
     if missing:
         raise FlatCorpusError(
             f"flat postings lack {missing}; build them with prepare_flat")
-    scored = postings.filter(F.col("term").isin(terms)).select(
-        "doc_id",
-        bm25_score_col(
-            F.col("tf").cast("double"), F.col("doc_len"), F.col("df"), n_docs, avg_dl
-        ).alias("contrib"),
-    )
-    agg = scored.groupBy("doc_id").agg(
-        F.sum("contrib").alias("score"), F.count("*").alias("n_terms")
-    )
     need = (len(set(terms)) if mode.upper() == "AND"
             else max(1, int(min_match or 1)))
-    if need > 1:
-        agg = agg.filter(F.col("n_terms") >= need)
-    return (
-        agg.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    having = f"HAVING count(1) >= {need} " if need > 1 else ""
+    score = bm25_score_sql("CAST(tf AS DOUBLE)", "doc_len", "df", n_docs, avg_dl)
+    # Planned as SQL text: each wrapped Column call costs the driver
+    # several py4j round trips. `p` must be a frame derived from the
+    # postings, never the cached frame itself: spark.sql drops the temp
+    # view it registers for `p`, and dropping a view of a cached frame
+    # uncaches it.
+    hits = postings.where(sql_in("term", terms))
+    return postings.sparkSession.sql(
+        f"SELECT doc_id, sum({score}) AS score FROM {{p}} GROUP BY doc_id "
+        f"{having}ORDER BY score DESC, doc_id LIMIT {int(k)}", p=hits)

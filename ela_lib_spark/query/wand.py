@@ -5,7 +5,7 @@ disjoint **doc-id range** (shard = bucket-range group — index/build.py),
 so grouping a query's postings by shard gives every task a complete,
 self-contained doc-at-a-time scoring problem: all query terms' postings
 for that doc range. Shard-local exact top-k → global
-`orderBy(score desc, doc_id asc).limit(k)` — correct because the global
+`ORDER BY score DESC, doc_id LIMIT k` — correct because the global
 top-k is a subset of the union of shard top-ks; AND semantics are exact
 per shard because a doc's postings for *every* term live in its shard.
 
@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ela_lib_spark import BM25_K1
+from ela_lib_spark.functions.hashing import sql_in
 from ela_lib_spark.functions.xxh import spark_xxhash64
 from ela_lib_spark.index.codecs import decode_block, isin_sorted
 from ela_lib_spark.query.scoring import bm25_contrib, idf
@@ -332,30 +333,31 @@ def _revalidate_serving(index: dict) -> None:
     prepare_serving(index)
 
 
-def term_lookup(index: dict, q: DataFrame, ids: list[int]) -> list[tuple]:
+def term_lookup(index: dict, q: DataFrame | None, ids: list[int]) -> list[tuple]:
     """The one per-query term lookup: the query terms' envelope rows
     (shard, term_id, _mn, _mx, _n) — from the driver-pinned dict when
     present (zero jobs), else a few-row collect over the cached
     envelope table, else a few-row collect of `precompute_envelopes`
-    over the term-filtered postings `q`."""
+    over the term-filtered postings `q` (read only when the index is
+    not pinned)."""
     drv = index.get("envelopes_driver")
     if drv is not None:
         return [(s, t, mn, mx, n) for t in ids for (s, mn, mx, n) in drv.get(t, [])]
     env = index.get("envelopes")
     src = (precompute_envelopes(q) if env is None
-           else env.filter(F.col("term_id").isin(ids)))
+           else env.where(sql_in("term_id", ids)))
     return src.collect()
 
 
-def and_window(rows: list[tuple], n_terms: int):
-    """AND's literal per-shard doc-range predicate from the lookup rows:
-    a qualifying doc lies inside every term's [_mn, _mx] envelope in its
-    shard, so shards missing a term are dropped whole and blocks outside
-    the intersection are dropped. Sound for ranking: every block holding
-    an AND-result doc overlaps the window. For head∧rare queries this
-    prunes the head term's blocks down to the rare term's doc
-    neighborhood before the kernel reads them. None if no shard
-    qualifies."""
+def and_window(rows: list[tuple], n_terms: int) -> str | None:
+    """AND's literal per-shard doc-range predicate, as SQL text, from
+    the lookup rows: a qualifying doc lies inside every term's [_mn, _mx]
+    envelope in its shard, so shards missing a term are dropped whole
+    and blocks outside the intersection are dropped. Sound for ranking:
+    every block holding an AND-result doc overlaps the window. For
+    head∧rare queries this prunes the head term's blocks down to the
+    rare term's doc neighborhood before the kernel reads them. None if
+    no shard qualifies."""
     by_shard: dict[int, list] = {}
     for s, _, mn, mx, _ in rows:
         by_shard.setdefault(s, []).append((mn, mx))
@@ -367,7 +369,7 @@ def and_window(rows: list[tuple], n_terms: int):
         if len(rs) == n_terms and lo <= hi:
             conds.append(f"(shard = {shard} AND last_doc_id >= {lo}"
                          f" AND first_doc_id <= {hi})")
-    return F.expr(" OR ".join(conds)) if conds else None
+    return " OR ".join(conds) if conds else None
 
 
 def wand_topk(index: dict, terms: list[str], mode: str = "OR", k: int = 10,
@@ -395,16 +397,20 @@ def wand_topk(index: dict, terms: list[str], mode: str = "OR", k: int = 10,
     ids = [spark_xxhash64(t) for t in sorted(set(terms))]
     if min_match is not None and min_match > len(ids):
         return spark.createDataFrame([], RESULT_SCHEMA)
-    q = index["postings"].filter(F.col("term_id").isin(ids))
+    hit = sql_in("term_id", ids)
+    # only an unpinned lookup reads the term-filtered postings
+    q = None if index.get("envelopes") is not None else index["postings"].where(hit)
     rows = term_lookup(index, q, ids)
     df: dict[int, int] = {}
     for _, t, _, _, n in rows:
         df[t] = df.get(t, 0) + n
     if mode.upper() == "AND" and len(ids) > 1:
-        cond = and_window(rows, len(ids))
-        if cond is None:
+        window = and_window(rows, len(ids))
+        if window is None:
             return spark.createDataFrame([], RESULT_SCHEMA)
-        q = q.filter(cond)
+        q = index["postings"].where(f"{hit} AND ({window})")
+    elif q is None:
+        q = index["postings"].where(hit)
     merge_avgs = [float(m.get("avg_dl_at_merge", m["avg_dl"]))] + [
         float(t["avg_dl"]) for t in m.get("tiers") or []
     ]
@@ -434,4 +440,9 @@ def wand_topk(index: dict, terms: list[str], mode: str = "OR", k: int = 10,
                            m["codec"], df, ub_scale, deleted, min_match),
             schema=RESULT_SCHEMA,
         )
-    return shard_tops.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    # SQL text: 7 py4j commands where orderBy + limit send 14, though
+    # the temp view it registers for `t` costs ~10 ms more plan time
+    # (ROADMAP item 3 weighs the two); query/bm25.py says why `t` must
+    # not be a cached frame
+    return spark.sql("SELECT doc_id, score FROM {t} ORDER BY score DESC, doc_id "
+                     f"LIMIT {int(k)}", t=shard_tops)

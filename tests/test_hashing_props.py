@@ -1,6 +1,7 @@
 """Property tests for the uint64 Mersenne-61 modular kernels — the
-arithmetic core of the MinHash path — and for the JVM hash bases that
-feed and band them.
+arithmetic core of the MinHash path — for the JVM hash bases that
+feed and band them, and for the SQL literals that search plans are
+built from.
 
 The kernels avoid Python bigints via the 2^61 ≡ 1 / 2^64 ≡ 8 split;
 these tests pin them against exact bigint arithmetic over adversarial
@@ -9,7 +10,10 @@ pure-Python XXH64 chain, so LSH bucket identity does not depend on how
 the Spark expression is built.
 """
 
+import math
+
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -18,8 +22,10 @@ from ela_lib_spark.functions.hashing import (
     _fold_m61,
     _mulmod_m61,
     lsh_band_stack_sql,
+    sql_lit,
     with_shingle_hashes,
 )
+from ela_lib_spark.errors import SqlLiteralError
 from ela_lib_spark.functions.text import tokenize_sql
 from ela_lib_spark.functions.xxh import spark_xxhash64, xxhash64_bytes
 
@@ -109,3 +115,35 @@ def test_sql_band_hashes_match_python_chain(spark, sigs):
            df.selectExpr("id", lsh_band_stack_sql("sig", 4, 4)).collect()}
     assert got == {(i, b): _chain(s[4 * b:4 * b + 4])
                    for i, s in enumerate(sigs) for b in range(4)}
+
+
+SQL_LITERALS = st.one_of(
+    st.text(max_size=12),
+    st.text(alphabet="'\\{}\x1f\n\r\t é中\U0001F600%_$?ab", max_size=12),
+    st.integers(-(1 << 63), (1 << 63) - 1),
+    st.sampled_from([2**31, -(2**31) - 1, 2**63 - 1, -(2**63)]),
+    st.floats(allow_nan=False, allow_infinity=False),
+    st.sampled_from([5e-324, -0.0, 1.7976931348623157e308, 0.1, 1e16]),
+    st.booleans(),
+)
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.lists(SQL_LITERALS, min_size=1, max_size=16))
+def test_sql_lit_round_trips_through_one_select(spark, values):
+    """Every literal comes back from one SELECT as the same value of the
+    same Python type: strings with quotes, backslashes, braces and
+    control or non-ASCII characters; ints past int32; floats bit-exact
+    (doubles, not DECIMAL)."""
+    row = spark.sql("SELECT " + ", ".join(
+        f"{sql_lit(v)} AS c{i}" for i, v in enumerate(values))).first()
+    for v, got in zip(values, row):
+        assert type(got) is type(v), (v, got)
+        assert repr(got) == repr(v) if isinstance(v, float) else got == v, (v, got)
+
+
+@pytest.mark.parametrize("v", [math.nan, math.inf, -math.inf, 1 << 63, -(1 << 63) - 1,
+                               None, b"x", [1]])
+def test_sql_lit_rejects_values_without_an_exact_literal(v):
+    with pytest.raises(SqlLiteralError):
+        sql_lit(v)

@@ -5,8 +5,10 @@ doesn't push its filter or a dim join that doesn't broadcast would pass
 correctness and still be wrong at scale.
 """
 
+import collections
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ela_lib_spark.plans.dsl import dsl_filter
@@ -165,6 +167,88 @@ def test_pinned_wand_runs_one_job(spark, tmp_root, index):
         for idx in served:
             idx["postings"].unpersist()
             idx["envelopes"].unpersist()
+
+
+SEARCH_QUERIES = ((["term0000", "term0002"], "OR", None),
+                  (["term0002", "term0045"], "AND", None),
+                  (["term0005", "term0417", "term0003"], "OR", 2))
+# a 3-clause bool over a parquet scan: must, should (analyzed match), must_not
+BOOL_DSL = {"bool": {"must": [{"term": {"lang": "de"}}],
+                     "should": [{"match": {"text": "term0001 term0002"}}],
+                     "must_not": [{"range": {"warc_ts": {"lt": "2024-01-01"}}}]}}
+
+
+@pytest.fixture(scope="module")
+def served(spark, index, corpus_tokens, pages_path):
+    """A pinned WAND index, a prepared flat corpus and the pages: the
+    three search servers' inputs."""
+    from ela_lib_spark.query.bm25 import prepare_flat
+    from ela_lib_spark.query.wand import prepare_serving
+
+    idx = prepare_serving(dict(index))
+    flat = prepare_flat(spark.createDataFrame(
+        list(corpus_tokens.items()), "doc_id long, tokens array<string>"))
+    yield {"wand": idx, "flat": flat, "pages": spark.read.parquet(pages_path)}
+    for df in (idx["postings"], idx["envelopes"], flat["postings"]):
+        df.unpersist()
+
+
+def _search_plans(served, terms, mode, mm):
+    from ela_lib_spark.query.bm25 import bm25_topk_flat
+    from ela_lib_spark.query.wand import wand_topk
+
+    flat = served["flat"]
+    return {
+        "wand": lambda: wand_topk(served["wand"], terms, mode, 10, min_match=mm),
+        "flat": lambda: bm25_topk_flat(flat["postings"], None, flat["n_docs"],
+                                       flat["avg_dl"], terms, mode, 10, min_match=mm),
+        "match": lambda: dsl_filter(served["pages"], {"bool": {
+            "must" if mode == "AND" else "should":
+                [{"match": {"text": t}} for t in terms]}}),
+    }
+
+
+def test_search_plans_in_few_py4j_calls(served):
+    """Search plans are SQL text: a Column built call by call costs the
+    driver several py4j round trips per call under Spark 4. A warm
+    query plans WAND in ≤ 75 commands (~50 are applyInPandas itself),
+    flat BM25 in ≤ 12 and a 3-clause DSL bool in ≤ 3. Proxy releases
+    (`m`) are not counted: py4j's finalizer thread sends them when it
+    wakes, for garbage of any earlier call."""
+    from conftest import py4j_calls
+
+    caps = {"wand": 75, "flat": 12}
+    for terms, mode, mm in SEARCH_QUERIES:
+        for name, plan in _search_plans(served, terms, mode, mm).items():
+            if name not in caps:
+                continue
+            plan().collect()  # cold: worker start-up, first UDF registration
+            with py4j_calls() as sent:
+                df = plan()
+            calls = [c for c in sent if c != "m"]
+            assert len(calls) <= caps[name], (name, terms, mode,
+                                              collections.Counter(calls).most_common(6))
+            assert df.collect()
+    dsl_filter(served["pages"], BOOL_DSL).collect()
+    with py4j_calls() as sent:
+        dsl_filter(served["pages"], BOOL_DSL)
+    assert len([c for c in sent if c != "m"]) <= 3, sent
+
+
+def test_serving_caches_survive_queries(spark, served):
+    """spark.sql drops the temp view of each frame a statement names,
+    and dropping a view of a cached frame uncaches it: after a mix of
+    WAND, flat and match queries every serving cache must still be in
+    the cache manager."""
+    for terms, mode, mm in SEARCH_QUERIES:
+        for plan in _search_plans(served, terms, mode, mm).values():
+            plan().collect()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    pinned = {"wand postings": served["wand"]["postings"],
+              "wand envelopes": served["wand"]["envelopes"],
+              "flat postings": served["flat"]["postings"]}
+    assert {n: cm.lookupCachedData(df._jdf).isDefined() for n, df in pinned.items()} \
+        == dict.fromkeys(pinned, True)
 
 
 def test_typed_errors(spark, tmp_root):

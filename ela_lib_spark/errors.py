@@ -36,3 +36,8 @@ class FlatCorpusError(EngineError):
 class SqlLiteralError(EngineError, ValueError):
     """A value has no exact SQL literal (NaN, inf, an int outside
     int64, or an unsupported type)."""
+
+
+class DeltaEpochError(EngineError, ValueError):
+    """A delta epoch id is negative or maps its docs past the doc-id
+    range (streaming/incremental.apply_delta_batch)."""

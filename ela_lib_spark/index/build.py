@@ -681,10 +681,10 @@ def merge_chunks(
 
 
 def _write_small_parquet(path: str, columns: dict, schema_str: str) -> None:
-    """Driver-side parquet write for tiny control tables (ledger,
-    corpus_stats) — a Spark job per kilobyte-sized write is pure
-    scheduling overhead. Layout matches a Spark write (dir + _SUCCESS)
-    so spark.read.parquet() reads it back unchanged."""
+    """Driver-side parquet write for the tiny ledger table — a Spark
+    job per kilobyte-sized write is pure scheduling overhead. Layout
+    matches a Spark write (dir + _SUCCESS) so spark.read.parquet()
+    reads it back unchanged."""
     import shutil
 
     import pyarrow as pa
@@ -701,12 +701,12 @@ def _write_small_parquet(path: str, columns: dict, schema_str: str) -> None:
     open(os.path.join(path, "_SUCCESS"), "w").close()
 
 
-def write_control_tables(index_dir: str, ledger_rows: list, snapshot: str,
-                         ledger_name: str, cs_name: str) -> tuple[int, float]:
+def write_ledger(index_dir: str, ledger_rows: list, snapshot: str,
+                 ledger_name: str) -> tuple[int, float]:
     """Write the ledger (one row per bucket: part_id, n_docs, n_tokens,
-    secs) and corpus_stats tables under `index_dir` — the one writer
-    for both the build (`ledger`/`corpus_stats`) and maintenance
-    (versioned `-{snapshot}` dirs). Returns (n_docs, avg_dl)."""
+    secs) to `index_dir/ledger_name` — the one writer for both the
+    build (`ledger`) and maintenance (versioned `ledger-{snapshot}`).
+    Returns the corpus stats (n_docs, avg_dl) the manifest records."""
     n_docs = sum(r.n_docs for r in ledger_rows)
     n_tokens = sum(r.n_tokens for r in ledger_rows)
     avg_dl = float(n_tokens) / float(n_docs) if n_docs else 0.0
@@ -722,11 +722,6 @@ def write_control_tables(index_dir: str, ledger_rows: list, snapshot: str,
         },
         "part_id int32, status string, n_docs int64, n_tokens int64, "
         "secs double, snapshot_id string",
-    )
-    _write_small_parquet(
-        os.path.join(index_dir, cs_name),
-        {"n_docs": [int(n_docs)], "avg_dl": [float(avg_dl)]},
-        "n_docs int64, avg_dl double",
     )
     return int(n_docs), avg_dl
 
@@ -871,11 +866,6 @@ def ledger_path(out_dir: str, manifest: dict | None = None) -> str:
     return os.path.join(out_dir, m.get("ledger_dir") or "ledger")
 
 
-def corpus_stats_path(out_dir: str, manifest: dict | None = None) -> str:
-    m = manifest if manifest is not None else (read_manifest(out_dir) or {})
-    return os.path.join(out_dir, m.get("corpus_stats_dir") or "corpus_stats")
-
-
 def delta_deletes_path(out_dir: str) -> str:
     return os.path.join(out_dir, "delta_deletes")
 
@@ -899,6 +889,20 @@ def read_delta_doc_stats(spark: SparkSession, out_dir: str,
     if live is not None:
         parts.append(live)
     return functools.reduce(DataFrame.unionByName, parts) if parts else None
+
+
+def read_doc_dict(spark: SparkSession, out_dir: str, manifest: dict,
+                  epochs: list[int] | None = None) -> DataFrame:
+    """The doc dictionary (doc_id, url, doc_len, bucket): the
+    manifest's bulk docs dir plus the delta doc dictionary of `epochs`
+    (read_delta_doc_stats; None = the live epochs). Tombstones are not
+    applied."""
+    docs = doc_stats_from_docs(
+        spark.read.parquet(docs_dir_path(out_dir, manifest)))
+    extra = read_delta_doc_stats(spark, out_dir, manifest, epochs)
+    if extra is None:
+        return docs
+    return docs.unionByName(extra.select(*docs.columns))
 
 
 def postings_dirs(out_dir: str, manifest: dict) -> list[str]:
@@ -1109,8 +1113,9 @@ def build_index(
     chunks = spark.read.parquet(ch_dir)
 
     # ledger + corpus stats, derived from committed metrics rows: ONE
-    # partition-pruned scan; the (tiny) ledger/corpus_stats tables are
-    # then written driver-side with pyarrow — no extra Spark jobs.
+    # partition-pruned scan; the (tiny) ledger is then written
+    # driver-side with pyarrow — no extra Spark jobs — and the stats
+    # go into the manifest.
     _t = time.monotonic()
     sc.setJobDescription("build:ledger")
     ledger_rows = ledger_rows_from_metrics(
@@ -1118,8 +1123,7 @@ def build_index(
                       & (F.col("term_id") == METRICS_TERM_ID))
     )
     snapshot = new_snapshot_id("build")
-    n_docs, avg_dl = write_control_tables(out_dir, ledger_rows, snapshot,
-                                          "ledger", "corpus_stats")
+    n_docs, avg_dl = write_ledger(out_dir, ledger_rows, snapshot, "ledger")
     stage_secs["ledger"] = round(time.monotonic() - _t, 2)
 
     # job 3: salted merge → final postings. Written directly: each merge
@@ -1153,7 +1157,6 @@ def build_index(
         "postings_dir": "postings",
         "chunks_dir": "chunks",
         "ledger_dir": "ledger",
-        "corpus_stats_dir": "corpus_stats",
         "docs_dir": os.path.basename(docs_dir),
         "snapshot_id": snapshot,
         "delete_epochs": epochs_on_disk(delta_deletes_path(out_dir)),
@@ -1168,10 +1171,10 @@ def load_index(spark: SparkSession, out_dir: str,
     archived snapshot manifest (snapshots/<id>.json) — readable as
     long as compaction hasn't pruned the data dirs it references.
 
-    Snapshot consistency: a time-traveled load returns `corpus_stats`
-    SYNTHESIZED from the snapshot manifest (n_docs/avg_dl as written
-    at publish time) and the `ledger` archived beside the snapshot —
-    never the live tables, which later compactions overwrite. The
+    `corpus_stats` is built from the loaded manifest's n_docs/avg_dl,
+    the one record of them. Snapshot consistency: a time-traveled load
+    also returns the `ledger` archived beside the snapshot — never the
+    live table, which later compactions replace. The
     `docs`/`doc_stats` surface is the live doc dictionary (doc rows
     are append-only between full rebuilds, so snapshot doc ids all
     resolve; rows added after the snapshot may also be present).
@@ -1199,25 +1202,16 @@ def load_index(spark: SparkSession, out_dir: str,
         )
     try:
         docs = spark.read.parquet(docs_dir_path(out_dir, manifest))
-        doc_stats = doc_stats_from_docs(docs)
-        # streamed docs' dictionary rows live beside the bulk docs table
-        # (delta_doc_stats/epoch=N, written by apply_delta_batch; plus
-        # the GC-consolidated dir when one exists) — the doc-stats
-        # surface must cover them too after compaction.
         # Time-traveled loads pin the delta doc-dictionary to the
         # epochs the snapshot's POSTINGS cover (base_epochs + tier
         # epochs; the GC-consolidated dir a post-GC manifest points at
         # is always read): epochs ingested after the snapshot are
         # invisible to its postings, so they must be invisible to its
         # doc surface too. Live loads see the live epochs.
-        extra = read_delta_doc_stats(
+        doc_stats = read_doc_dict(
             spark, out_dir, manifest,
             sorted(covered_epochs(manifest)) if snapshot_id is not None
             else None)
-        if extra is not None:
-            doc_stats = doc_stats.unionByName(
-                extra.select("doc_id", "url", "doc_len", "bucket")
-            )
         # tombstones (upsert/delete delta batches): live loads see the
         # live delete epochs; time-traveled loads see the epoch set
         # pinned in the snapshot manifest (absent field = none existed)
@@ -1240,23 +1234,17 @@ def load_index(spark: SparkSession, out_dir: str,
             doc_stats = doc_stats.join(tomb, "doc_id", "left_anti")
         deleted_df = tomb if deleted_ids is None else None
         postings = read_postings(spark, out_dir, manifest)
+        corpus_stats = spark.createDataFrame(
+            [(int(manifest["n_docs"]), float(manifest["avg_dl"]))],
+            "n_docs long, avg_dl double",
+        )
+        ledger = ledger_path(out_dir, manifest)
         if snapshot_id is not None:
-            corpus_stats = spark.createDataFrame(
-                [(int(manifest["n_docs"]), float(manifest["avg_dl"]))],
-                "n_docs long, avg_dl double",
-            )
-            snap_ledger = os.path.join(
-                out_dir, "snapshots", f"{snapshot_id}-ledger"
-            )
-            ledger = spark.read.parquet(
-                snap_ledger if os.path.exists(snap_ledger)
-                else ledger_path(out_dir, manifest)
-            )
-        else:
-            corpus_stats = spark.read.parquet(
-                corpus_stats_path(out_dir, manifest)
-            )
-            ledger = spark.read.parquet(ledger_path(out_dir, manifest))
+            snap_ledger = os.path.join(out_dir, "snapshots",
+                                       f"{snapshot_id}-ledger")
+            if os.path.exists(snap_ledger):
+                ledger = snap_ledger
+        ledger = spark.read.parquet(ledger)
         out = {
             "manifest": manifest,
             "postings": postings,

@@ -8,9 +8,10 @@ streaming/incremental.py docstrings):
 
 1. manifest present with required keys; every referenced data dir
    exists and is readable;
-2. control tables agree with the manifest (corpus_stats == manifest
-   n_docs/avg_dl; ledger totals == corpus_stats) — the contradiction
-   the r4 versioned-control-table flip makes impossible, verified;
+2. the ledger agrees with the manifest's corpus stats (Σn_docs ==
+   n_docs, Σn_tokens/Σn_docs == avg_dl) — the ledger is derived from
+   the metrics rows on its own path, and the versioned ledger flips
+   with the manifest, so a contradiction means corruption;
 3. the live doc-stats surface has exactly n_docs rows and unique
    doc_ids;
 4. every tombstone resolves to a known doc id (a dangling tombstone
@@ -43,7 +44,6 @@ def _check(out: dict, name: str, ok: bool, detail: str = "") -> None:
 def validate_index(spark: SparkSession, index_dir: str,
                    deep: bool = False) -> dict:
     from ela_lib_spark.index.build import (
-        corpus_stats_path,
         docs_dir_path,
         ledger_path,
         postings_dirs,
@@ -72,7 +72,6 @@ def validate_index(spark: SparkSession, index_dir: str,
         "chunks": os.path.join(index_dir, manifest["chunks_dir"]),
         "docs": docs_dir_path(index_dir, manifest),
         "ledger": ledger_path(index_dir, manifest),
-        "corpus_stats": corpus_stats_path(index_dir, manifest),
     }
     for p in tiers:
         dirs[f"tier:{os.path.basename(p)}"] = p
@@ -99,32 +98,23 @@ def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
         covered_epochs,
         delta_deletes_path,
         live_epochs,
-        read_delta_doc_stats,
+        read_doc_dict,
         read_tombstones,
     )
 
-    # 2. control tables vs manifest
-    cs = spark.read.parquet(dirs["corpus_stats"]).first()
-    if cs is None:  # dir exists but holds zero rows — corrupt table
-        _check(checks, "corpus_stats_vs_manifest", False,
-               "corpus_stats table is empty")
-        return
-    ok_cs = (int(cs.n_docs) == int(manifest["n_docs"])
-             and abs(float(cs.avg_dl) - float(manifest["avg_dl"])) < 1e-6)
-    _check(checks, "corpus_stats_vs_manifest", ok_cs,
-           f"table ({cs.n_docs}, {cs.avg_dl:.4f}) vs manifest "
+    # 2. ledger vs the manifest's corpus stats
+    led_docs, led_tokens = spark.read.parquet(dirs["ledger"]).agg(
+        F.sum("n_docs"), F.sum("n_tokens")).first()
+    led_docs, led_tokens = int(led_docs or 0), int(led_tokens or 0)
+    led_avg = led_tokens / led_docs if led_docs else 0.0
+    _check(checks, "ledger_vs_manifest",
+           led_docs == int(manifest["n_docs"])
+           and abs(led_avg - float(manifest["avg_dl"])) < 1e-6,
+           f"ledger ({led_docs}, {led_avg:.4f}) vs manifest "
            f"({manifest['n_docs']}, {manifest['avg_dl']:.4f})")
-    led = spark.read.parquet(dirs["ledger"])
-    led_docs = led.agg(F.sum("n_docs")).first()[0] or 0
-    _check(checks, "ledger_vs_corpus_stats",
-           int(led_docs) == int(cs.n_docs),
-           f"ledger Σn_docs={led_docs} vs corpus_stats={cs.n_docs}")
 
     # 3. doc-stats surface: n rows + unique ids (bulk + delta − tombs)
-    docs = spark.read.parquet(dirs["docs"]).select("doc_id")
-    extra = read_delta_doc_stats(spark, index_dir, manifest)
-    if extra is not None:
-        docs = docs.unionByName(extra.select("doc_id"))
+    docs = read_doc_dict(spark, index_dir, manifest).select("doc_id")
     tomb = read_tombstones(spark, index_dir, manifest=manifest)
     live = docs.join(tomb, "doc_id", "left_anti") if tomb is not None else docs
     agg = live.agg(

@@ -81,13 +81,6 @@ POSTINGS = T.StructType(
     ]
 )
 
-CORPUS_STATS = T.StructType(
-    [
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("avg_dl", T.DoubleType(), False),
-    ]
-)
-
 # Resumable-build lineage ledger (north rule: per-partition lineage).
 BUILD_LEDGER = T.StructType(
     [

@@ -17,14 +17,18 @@ from ela_lib_spark.session import get_spark  # noqa: E402
 def py4j_calls():
     """Collects the py4j commands the block sends to the JVM (one
     entry per round trip, the command's first line: `c` a method call,
-    `r` a reflection lookup, `m` a proxy release)."""
+    `r` a reflection lookup, …). Proxy releases (`m`) are left out:
+    py4j's finalizer thread sends them when it wakes, for garbage of
+    any earlier call, so they do not measure the block."""
     from py4j.clientserver import ClientServerConnection
 
     sent: list[str] = []
     send = ClientServerConnection.send_command
 
     def counting(self, command):
-        sent.append(command.split("\n", 1)[0])
+        head = command.split("\n", 1)[0]
+        if head != "m":
+            sent.append(head)
         return send(self, command)
 
     ClientServerConnection.send_command = counting

@@ -698,7 +698,6 @@ def test_control_tables_flip_with_manifest(spark, tmp_root):
     assert res["n_docs"] == 250
     m = read_manifest(idx_dir)
     assert m["ledger_dir"].startswith("ledger-compact-")
-    assert m["corpus_stats_dir"].startswith("corpus_stats-compact-")
     assert not os.path.exists(os.path.join(idx_dir, "ledger"))
     assert not os.path.exists(os.path.join(idx_dir, "corpus_stats"))
     idx2 = load_index(spark, idx_dir)
@@ -920,11 +919,15 @@ _ARTIFACT_DIR = re.compile(
 
 
 def test_maintenance_leaves_only_referenced_artifacts(spark, tmp_root):
-    """One cleanup rule for minor, major and GC: with retention off,
+    """One reclaim rule for minor, major and GC: with retention off,
     after every step each top-level artifact dir is one the live
-    manifest references, and an orphaned control-table pair (a
-    compaction that crashed before its manifest flip) is swept by the
-    next minor compaction."""
+    manifest references, and the leftovers of a compaction that crashed
+    before its manifest flip (a ledger, an unflipped tier and chunk
+    store) are freed by the next minor compaction. With keep-2
+    retention, a dir only the previous snapshot references survives
+    one commit and is freed at the commit that drops that snapshot
+    from the window. No corpus_stats dir is ever written: the manifest
+    holds the corpus stats."""
     from ela_lib_spark.index.build import (
         METRICS_TERM_ID,
         chunks_path,
@@ -934,13 +937,13 @@ def test_maintenance_leaves_only_referenced_artifacts(spark, tmp_root):
         _refresh_control_tables,
         gc_index,
         read_delta_postings,
+        set_snapshot_retention,
     )
 
     def unreferenced():
         m = read_manifest(idx_dir)
         refs = {m.get(f) for f in ("postings_dir", "chunks_dir", "docs_dir",
-                                   "delta_doc_stats_dir", "ledger_dir",
-                                   "corpus_stats_dir")}
+                                   "delta_doc_stats_dir", "ledger_dir")}
         refs |= {t["postings_dir"] for t in m.get("tiers", [])}
         refs.add("delta_doc_stats")  # the live ingest dir
         return sorted(e for e in os.listdir(idx_dir)
@@ -962,8 +965,11 @@ def test_maintenance_leaves_only_referenced_artifacts(spark, tmp_root):
         read_delta_postings(spark, idx_dir).drop("epoch")
     ).filter(F.col("term_id") == METRICS_TERM_ID)
     _refresh_control_tables(spark, idx_dir, metrics, "crashed-snap")
-    assert unreferenced() == ["corpus_stats-crashed-snap",
-                              "ledger-crashed-snap"]
+    assert unreferenced() == ["ledger-crashed-snap"]
+    for leftover in ("postings-t9", "chunks-g9"):
+        os.makedirs(os.path.join(idx_dir, leftover, "is_m=0"))
+    assert unreferenced() == ["chunks-g9", "ledger-crashed-snap",
+                              "postings-t9"]
 
     assert compact_index(spark, idx_dir, n_shards=2,
                          mode="minor")["mode"] == "minor"
@@ -973,3 +979,15 @@ def test_maintenance_leaves_only_referenced_artifacts(spark, tmp_root):
     assert unreferenced() == []
     assert gc_index(spark, idx_dir, n_shards=2)["purged"] == 30
     assert unreferenced() == []
+
+    def own_dirs():
+        m = read_manifest(idx_dir)
+        return sorted([m["ledger_dir"], m["postings_dir"]])
+
+    set_snapshot_retention(idx_dir, keep_last=2)
+    gc_dirs = own_dirs()
+    compact_index(spark, idx_dir, n_shards=2, mode="major")
+    assert unreferenced() == gc_dirs  # kept for the retained GC snapshot
+    major_dirs = own_dirs()
+    compact_index(spark, idx_dir, n_shards=2, mode="major")
+    assert unreferenced() == major_dirs  # the GC snapshot left the window

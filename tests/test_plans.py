@@ -212,9 +212,8 @@ def test_search_plans_in_few_py4j_calls(served):
     """Search plans are SQL text: a Column built call by call costs the
     driver several py4j round trips per call under Spark 4. A warm
     query plans WAND in ≤ 75 commands (~50 are applyInPandas itself),
-    flat BM25 in ≤ 12 and a 3-clause DSL bool in ≤ 3. Proxy releases
-    (`m`) are not counted: py4j's finalizer thread sends them when it
-    wakes, for garbage of any earlier call."""
+    flat BM25 in ≤ 12 and a 3-clause DSL bool in ≤ 3 (py4j_calls leaves
+    out proxy releases)."""
     from conftest import py4j_calls
 
     caps = {"wand": 75, "flat": 12}
@@ -225,14 +224,13 @@ def test_search_plans_in_few_py4j_calls(served):
             plan().collect()  # cold: worker start-up, first UDF registration
             with py4j_calls() as sent:
                 df = plan()
-            calls = [c for c in sent if c != "m"]
-            assert len(calls) <= caps[name], (name, terms, mode,
-                                              collections.Counter(calls).most_common(6))
+            assert len(sent) <= caps[name], (name, terms, mode,
+                                             collections.Counter(sent).most_common(6))
             assert df.collect()
     dsl_filter(served["pages"], BOOL_DSL).collect()
     with py4j_calls() as sent:
         dsl_filter(served["pages"], BOOL_DSL)
-    assert len([c for c in sent if c != "m"]) <= 3, sent
+    assert len(sent) <= 3, sent
 
 
 def test_serving_caches_survive_queries(spark, served):

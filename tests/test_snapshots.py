@@ -177,7 +177,7 @@ def test_crash_after_gc_flip_leaves_correct_index(spark, tmp_root,
     def crash(*a, **k):
         raise RuntimeError("injected")
 
-    monkeypatch.setattr(inc, "_free_superseded", crash)
+    monkeypatch.setattr(inc, "_reclaim", crash)
     with pytest.raises(RuntimeError, match="injected"):
         gc_index(spark, idx_dir, n_shards=2)
     monkeypatch.undo()

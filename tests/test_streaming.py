@@ -2,11 +2,13 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ela_lib_spark.index.build import METRICS_TERM_ID
 from ela_lib_spark.sources.synth import synth_pages_df
 from ela_lib_spark.streaming.incremental import (
+    apply_delta_batch,
     incremental_index_maintenance,
     read_delta_postings,
 )
@@ -89,3 +91,24 @@ def test_streaming_upsert_end_to_end(spark, tmp_root):
     got = {r.doc_id for r in
            wand_topk(idx, ["term0000"], "OR", 300).collect()}
     assert not (got & dead)
+
+
+def test_out_of_range_epoch_id_raises_before_any_write(spark, tmp_root):
+    """A doc id is `bucket << DOC_BITS` and epoch N's buckets start at
+    DELTA_BUCKET_BASE + N * n_buckets, so with 8 buckets 917,503 is the
+    last epoch whose buckets fit the doc-id range. The next id, and a
+    negative one, raise a typed error before anything is written —
+    no delete log, no chunks, no commit marker."""
+    from ela_lib_spark.errors import DeltaEpochError
+    from ela_lib_spark.index.build import build_index
+
+    idx_dir = os.path.join(tmp_root, "epoch_range_idx")
+    pages = synth_pages_df(spark, 40).cache()
+    build_index(spark, pages, idx_dir, n_buckets=4, n_shards=2)
+    before = sorted(os.listdir(idx_dir))
+    for epoch in (917_504, -1):
+        with pytest.raises(DeltaEpochError, match=str(epoch)):
+            apply_delta_batch(pages.limit(5), epoch, idx_dir, n_buckets=8,
+                              mode="upsert")
+    # no delta_* dir, so no epoch=N subdir and no delta_commits marker
+    assert sorted(os.listdir(idx_dir)) == before

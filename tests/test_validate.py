@@ -62,19 +62,20 @@ def test_validate_catches_corruptions(spark, tmp_root):
     assert not res["ok"] and not res["checks"]["manifest"]["ok"]
     assert "postings_dir" in res["checks"]["manifest"]["detail"]
 
-    # a) manifest/corpus_stats contradiction
+    # a) manifest/ledger contradiction, in either corpus stat
     m["postings_dir"] = good_postings
-    m["n_docs"] = 999
-    m["snapshot_id"] = "val-test-snap-1"
-    write_manifest(idx_dir, m)
-    res = validate_index(spark, idx_dir)
-    assert not res["ok"]
-    assert not res["checks"]["corpus_stats_vs_manifest"]["ok"]
-    m["n_docs"] = 150
+    for key, bad in (("n_docs", 999), ("avg_dl", m["avg_dl"] + 1.0)):
+        good, m[key] = m[key], bad
+        m["snapshot_id"] = f"val-test-snap-1-{key}"
+        write_manifest(idx_dir, m)
+        res = validate_index(spark, idx_dir)
+        assert not res["ok"]
+        assert not res["checks"]["ledger_vs_manifest"]["ok"], key
+        m[key] = good
     m["snapshot_id"] = "val-test-snap-2"
     write_manifest(idx_dir, m)
     assert validate_index(spark, idx_dir)["checks"][
-        "corpus_stats_vs_manifest"]["ok"]
+        "ledger_vs_manifest"]["ok"]
 
     # b) dangling tombstone (a committed delete log referencing an
     # unknown doc)
@@ -144,7 +145,7 @@ def test_validate_reports_unreadable_dataset(spark, tmp_root):
     idx_dir = os.path.join(tmp_root, "val_unreadable_idx")
     build_index(spark, synth_pages_df(spark, 80), idx_dir,
                 n_buckets=4, n_shards=2)
-    for f in glob.glob(os.path.join(idx_dir, "corpus_stats", "*.parquet")):
+    for f in glob.glob(os.path.join(idx_dir, "ledger", "*.parquet")):
         with open(f, "wb") as fh:
             fh.write(b"not a parquet file")
         crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")

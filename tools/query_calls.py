@@ -66,7 +66,7 @@ def main() -> None:
                     df.collect()
                     if i >= 0:
                         st = stats[server]
-                        st["py4j_plan"].append(sum(c != "m" for c in sent))
+                        st["py4j_plan"].append(len(sent))
                         st["plan_ms"].append((t1 - t0) * 1e3)
                         st["exec_ms"].append((time.perf_counter() - t1) * 1e3)
         finally:

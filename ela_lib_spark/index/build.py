@@ -33,8 +33,8 @@ JVM-side at build time and via the bit-identical pure-Python XXH64
 SPIMI/merge kernels pure int64 numpy — the string-object version was
 3–5× slower and memory-bandwidth-bound. Collision math: P(any
 collision among V terms) ≈ V²/2⁶⁵; V=10⁸ → ~3·10⁻⁴ (one merged pair
-in ~3000 corpora), detectable by building the optional vocab table
-(`vocab_from_pages`) and checking count(distinct term) per term_id.
+in ~3000 corpora), detectable by grouping the distinct terms by
+`xxhash64(term)` and checking count(distinct term) per term_id.
 
 **Doc-id scheme.** doc_id = (bucket << 40) | rank_within_bucket, where
 bucket = pmod(xxhash64(url), n_buckets) and rank is the row_number over
@@ -319,20 +319,6 @@ def docs_with_term_ids(
 def doc_stats_from_docs(docs_df: DataFrame) -> DataFrame:
     """Pruned projection — parquet reads skip the term_ids column."""
     return docs_df.select("doc_id", "url", "doc_len", "bucket")
-
-
-def vocab_from_pages(pages: DataFrame, use_html: bool = False) -> DataFrame:
-    """Optional (term, term_id, df) dictionary — for term listings and
-    hash-collision audits (count(distinct term) per term_id). One
-    explode+groupBy pass over the raw pages; not on the build critical
-    path."""
-    text = extract_text(F.col("html")) if use_html else F.col("text")
-    ex = pages.select(
-        F.explode(F.array_distinct(tokenize_col(text))).alias("term")
-    )
-    return ex.groupBy("term").agg(F.count("*").alias("df")).withColumn(
-        "term_id", F.xxhash64("term")
-    )
 
 
 # ------------------------------------------------------------- stage A
@@ -1175,7 +1161,7 @@ def load_index(spark: SparkSession, out_dir: str,
     the one record of them. Snapshot consistency: a time-traveled load
     also returns the `ledger` archived beside the snapshot — never the
     live table, which later compactions replace. The
-    `docs`/`doc_stats` surface is the live doc dictionary (doc rows
+    `doc_stats` surface is the live doc dictionary (doc rows
     are append-only between full rebuilds, so snapshot doc ids all
     resolve; rows added after the snapshot may also be present).
 
@@ -1201,7 +1187,6 @@ def load_index(spark: SparkSession, out_dir: str,
             f"no manifest.json under {out_dir!r} — not a published index"
         )
     try:
-        docs = spark.read.parquet(docs_dir_path(out_dir, manifest))
         # Time-traveled loads pin the delta doc-dictionary to the
         # epochs the snapshot's POSTINGS cover (base_epochs + tier
         # epochs; the GC-consolidated dir a post-GC manifest points at
@@ -1248,7 +1233,6 @@ def load_index(spark: SparkSession, out_dir: str,
         out = {
             "manifest": manifest,
             "postings": postings,
-            "docs": docs,
             "doc_stats": doc_stats,
             "corpus_stats": corpus_stats,
             "ledger": ledger,

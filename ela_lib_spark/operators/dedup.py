@@ -231,12 +231,18 @@ def _driver_union_find(pdf, edges: DataFrame) -> DataFrame:
     return _broadcast_if_fits(spark.createDataFrame(rows, schema), nbytes)
 
 
-def connected_components(edges: DataFrame, max_iter: int = 10,
-                         check_every: int = 2,
+def _free_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a `localCheckpoint`ed frame that nothing reads
+    any more — now, not whenever a JVM GC lets Spark's cleaner see it."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def connected_components(edges: DataFrame,
                          driver_max_edges: int = DRIVER_CC_MAX_EDGES) -> DataFrame:
     """Min-label propagation over undirected edges (a, b) →
-    (node, component). Converges in O(diameter) rounds; dedup cluster
-    diameters are tiny, and max_iter bounds the worst case.
+    (node, component). Runs until no label changes: labels only
+    decrease, so that takes at most diameter + 1 propagation steps
+    (dedup cluster diameters are tiny).
 
     Small graphs (≤ `driver_max_edges`, counted first) short-circuit
     to a driver union-find: near-dup edge sets after the Jaccard
@@ -249,7 +255,7 @@ def connected_components(edges: DataFrame, max_iter: int = 10,
     labels: comp = min node id of the component.
 
     Driver-barrier hygiene on the iterative path (ADVICE r2):
-    `check_every` propagation steps run between convergence checks
+    two propagation steps run between convergence checks
     (halving the driver action count for the common 2-3-round case),
     the checkpoint lands BEFORE the changed-count so each round's
     propagation computes once (the r2 shape recomputed it for the
@@ -277,11 +283,9 @@ def connected_components(edges: DataFrame, max_iter: int = 10,
         sym.select(F.col("a").alias("node")).distinct()
         .withColumn("comp", F.col("node"))
     ).localCheckpoint(eager=True)
-    it = 0
-    while it < max_iter:
-        steps = min(check_every, max_iter - it)
+    while True:
         new_labels = labels
-        for _ in range(steps):
+        for _ in range(2):
             nbr_min = (
                 sym.join(new_labels, sym.b == new_labels.node)
                 .groupBy("a").agg(F.min("comp").alias("nbr_comp"))
@@ -301,11 +305,11 @@ def connected_components(edges: DataFrame, max_iter: int = 10,
             .limit(1)
             .count()
         )
+        _free_checkpoint(labels)
         labels = new_labels
-        it += steps
         if changed == 0:
-            break
-    return labels
+            _free_checkpoint(sym)
+            return labels
 
 
 def dedup_minhash_lsh(

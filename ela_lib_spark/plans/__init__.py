@@ -1,2 +1,2 @@
 from ela_lib_spark.plans.dsl import dsl_filter  # noqa: F401
-from ela_lib_spark.plans.explain import explain_str, find_in_plan  # noqa: F401
+from ela_lib_spark.plans.explain import explain_str  # noqa: F401

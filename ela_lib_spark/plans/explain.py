@@ -11,6 +11,3 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
         df._jdf.queryExecution(), mode
     )
 
-
-def find_in_plan(df: DataFrame, needle: str, mode: str = "formatted") -> bool:
-    return needle in explain_str(df, mode)

@@ -12,10 +12,12 @@ per shard because a doc's postings for *every* term live in its shard.
 Block-max pruning: per-term per-block upper bound
 ub = idf*(k1+1)*block_max_impact (the "zone map" Catalyst can't give
 us — it prunes files/partitions, not posting blocks). The doc space is
-walked in elementary segments between block boundaries; a segment is
-decoded only if Σ active-block ubs can beat the running k-th score
-(strictly: skipped only when ub < θ, so score ties that lose on the
-doc_id tie-break can never be wrongly pruned).
+cut into elementary segments at every block boundary; a segment's ub
+is Σ of its active blocks' ubs. Segments are scored in descending-ub
+order, in batches (k segments, then doubling), each batch's blocks
+decoded once and its docs scored together. Once the top-k is full the
+walk stops at the first segment with ub < θ, the running k-th score —
+strictly, so a score tie that wins on doc_id is never pruned.
 
 Rank-identity: contributions come from query/scoring.bm25_contrib —
 the same float64 expression the brute-force oracle uses — accumulated
@@ -33,6 +35,8 @@ corpus stats drift between tier merges — see wand_topk.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -76,112 +80,96 @@ def _shard_topk_fn(terms: list[str], mode: str, k: int, n_docs: int,
     # upper bound by that ratio can never prune a qualifying segment.
     terms_sorted = [spark_xxhash64(t) for t in sorted(set(terms))]
     nt = len(terms_sorted)
-    is_and = mode.upper() == "AND"
     # m-of-n semantics (the original WAND formulation): a doc must
     # match >= need distinct query terms. OR = 1, AND = nt; min_match
     # generalizes both. A doc's postings are shard-local, so the count
     # is exact per shard.
-    need = nt if is_and else max(1, int(min_match or 1))
+    need = nt if mode.upper() == "AND" else max(1, int(min_match or 1))
+
+    rank_of = {t: j for j, t in enumerate(terms_sorted)}
+    idfs = np.array([float(idf(df.get(t, 0), n_docs)) for t in terms_sorted])
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                               "score": pd.Series([], dtype="float64")})
         if len(pdf) == 0:  # cogrouped tombstone path: tombstone-only shard
             return empty
-        present = set(pdf["term_id"])
-        if need > 1 and sum(t in present for t in terms_sorted) < need:
+        rank = pdf["term_id"].map(rank_of).to_numpy(np.int64)
+        present = np.unique(rank)  # lexicographic term order
+        if len(present) < need:
             return empty
+        order = np.lexsort((pdf["first_doc_id"].to_numpy(np.int64), rank))
+        rank = rank[order]
+        first, last, bmi, n, deltas, tfs, dls = (pdf[c].to_numpy()[order] for c in (
+            "first_doc_id", "last_doc_id", "block_max_impact", "n_docs",
+            "doc_ids_delta", "tfs", "dls"))
+        # bmi is rounded apart from bm25_contrib, so a block's ub can sit
+        # an ulp under its best doc's score; the 1e-12 margin keeps the
+        # skip from pruning that doc when it ties θ and wins on doc_id
+        ub = idfs[rank] * (BM25_K1 + 1.0) * ub_scale * bmi * (1 + 1e-12)
 
-        per = {}
-        bounds = []
-        for t, g in pdf.groupby("term_id"):
-            g = g.sort_values("first_doc_id").reset_index(drop=True)
-            idf_t = float(idf(df[int(t)], n_docs))
-            per[t] = {
-                "idf": idf_t,
-                "first": g["first_doc_id"].to_numpy(np.int64),
-                "last": g["last_doc_id"].to_numpy(np.int64),
-                "ub": idf_t * (BM25_K1 + 1.0) * ub_scale
-                * g["block_max_impact"].to_numpy(),
-                "rows": g,
-                "decoded": {},
-            }
-            bounds.append(per[t]["first"])
-            bounds.append(per[t]["last"] + 1)
-        cuts = np.unique(np.concatenate(bounds))
+        # elementary segments between block boundaries; blk[seg, term]
+        # is the term's block covering the segment (-1: none)
+        cuts = np.unique(np.concatenate([first, last + 1]))
+        seg_lo = cuts[:-1]
+        blk = np.full((len(seg_lo), nt), -1)
+        ub_seg = np.zeros(len(seg_lo))
+        for j in present:
+            lo, hi = np.searchsorted(rank, [j, j + 1])
+            i = lo + np.searchsorted(first[lo:hi], seg_lo, side="right") - 1
+            on = (i >= lo) & (last[np.maximum(i, lo)] >= seg_lo)
+            blk[on, j] = i[on]
+            ub_seg[on] += ub[i[on]]
+        # NOTE on m-of-n bounds (r4, VERDICT r3 #7 considered and
+        # rejected): summing only the top-`need` active ubs is NOT a
+        # sound θ bound — a doc needs ≥ need matches but may match ALL
+        # n active terms, and its score sums every match, so the
+        # achievable maximum is Σ(all active ubs). The full sum stays.
+        cand = np.flatnonzero((blk >= 0).sum(axis=1) >= need)
+        cand = cand[np.argsort(-ub_seg[cand], kind="stable")]
+        neg_ub = -ub_seg[cand]  # ascending
+
+        @functools.cache  # each block decoded once, kept for later batches
+        def block(b):
+            return decode_block(deltas[b], tfs[b], dls[b], int(n[b]), int(first[b]), codec)
 
         top_ids = np.empty(0, np.int64)
         top_scores = np.empty(0, np.float64)
-        theta = -np.inf
-
-        for s, e in zip(cuts[:-1], cuts[1:]):
-            active = []
-            ub_sum = 0.0
-            for t in terms_sorted:
-                p = per.get(t)
-                if p is None:
-                    continue
-                i = int(np.searchsorted(p["first"], s, side="right")) - 1
-                if i >= 0 and p["last"][i] >= s and p["first"][i] < e:
-                    active.append((t, i))
-                    ub_sum += float(p["ub"][i])
-            if len(active) < need:
-                continue
-            if not active:
-                continue
-            # NOTE on m-of-n bounds (r4, VERDICT r3 #7 considered and
-            # rejected): summing only the top-`need` active ubs is NOT
-            # a sound θ bound — a doc needs ≥ need matches but may
-            # match ALL n active terms, and its score sums every match,
-            # so the achievable maximum is Σ(all active ubs). The full
-            # sum stays.
-            if len(top_ids) >= k and ub_sum < theta:
-                continue  # block-max skip: cannot beat current k-th score
-
+        pos, size, end = 0, k, len(cand)
+        while pos < end:
+            batch = cand[pos:min(pos + size, end)]
+            pos, size = pos + size, 2 * size
+            in_batch = np.zeros(len(seg_lo), bool)
+            in_batch[batch] = True
             arrs = []
-            for t, i in active:
-                p = per[t]
-                if i not in p["decoded"]:
-                    r = p["rows"].iloc[i]
-                    p["decoded"][i] = decode_block(
-                        r["doc_ids_delta"], r["tfs"], r["dls"],
-                        int(r["n_docs"]), int(r["first_doc_id"]), codec,
-                    )
-                ids_b, tfs_b, dls_b = p["decoded"][i]
-                lo, hi = np.searchsorted(ids_b, [s, e])
-                if lo < hi:
-                    arrs.append((ids_b[lo:hi], tfs_b[lo:hi], dls_b[lo:hi], p["idf"]))
-            if not arrs:
-                continue
+            for j in present:
+                bs = np.unique(blk[batch, j])
+                bs = bs[bs >= 0]
+                if not len(bs):
+                    continue
+                ids_t, tf_t, dl_t = (np.concatenate(x) for x in zip(*map(block, bs)))
+                # a doc of a segment outside the batch would score partially
+                m = in_batch[np.searchsorted(cuts, ids_t, side="right") - 1]
+                arrs.append((ids_t[m], tf_t[m], dl_t[m], idfs[j]))
             union = np.unique(np.concatenate([a[0] for a in arrs]))
             score = np.zeros(len(union), np.float64)
             cnt = np.zeros(len(union), np.int64)
             for ids_t, tf_t, dl_t, idf_t in arrs:  # lexicographic term order
-                pos = np.searchsorted(union, ids_t)
-                score[pos] += bm25_contrib(tf_t, dl_t, idf_t, avg_dl)
-                cnt[pos] += 1
-            if need > 1:
-                m = cnt >= need
-                union, score = union[m], score[m]
-            if deleted is not None and len(deleted) and len(union):
+                at = np.searchsorted(union, ids_t)
+                score[at] += bm25_contrib(tf_t, dl_t, idf_t, avg_dl)
+                cnt[at] += 1
+            keep = cnt >= need
+            if deleted is not None and len(deleted):
                 # tombstone filter INSIDE the shard top-k: a deleted
                 # doc must never displace a live one from the heap
-                live = ~isin_sorted(union, deleted)
-                union, score = union[live], score[live]
-            if len(union) == 0:
-                continue
-            top_ids = np.concatenate([top_ids, union])
-            top_scores = np.concatenate([top_scores, score])
-            if len(top_ids) > 4 * k:
-                top_ids, top_scores = _compact(top_ids, top_scores, k)
+                keep &= ~isin_sorted(union, deleted)
+            top_ids, top_scores = _compact(np.concatenate([top_ids, union[keep]]),
+                                           np.concatenate([top_scores, score[keep]]), k)
             if len(top_ids) >= k:
-                theta = (
-                    top_scores[np.argpartition(-top_scores, k - 1)[k - 1]]
-                    if len(top_scores) > k
-                    else top_scores.min()
-                )
-
-        top_ids, top_scores = _compact(top_ids, top_scores, k)
+                # block-max skip, strict: a segment is visited while its
+                # ub >= θ, the k-th score, so a tie can still win on doc_id
+                end = min(end, int(np.searchsorted(neg_ub, -top_scores.min(),
+                                                   side="right")))
         return pd.DataFrame({"doc_id": top_ids, "score": top_scores})
 
     return fn

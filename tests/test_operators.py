@@ -426,21 +426,26 @@ def test_ivf_driver_sample_capped_by_bytes(spark):
 def test_connected_components_paths_agree(spark):
     """The driver union-find short-circuit (small graphs) and the
     iterative min-label propagation must produce identical labels;
-    the cap routes between them."""
+    the cap routes between them. The chain 0-100-101-…-130-5 has
+    diameter 32, so the iterative path must run until no label
+    changes, not for a fixed number of rounds."""
     from ela_lib_spark.operators.dedup import connected_components
 
+    chain = [0, *range(100, 131), 5]
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 1)],
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 1)]
+        + list(zip(chain[:-1], chain[1:])),
         "a long, b long",
     )
     drv = sorted(map(tuple, connected_components(edges).collect()))
     it = sorted(map(tuple, connected_components(
         edges, driver_max_edges=0).collect()))  # force iterative
     over_cap = sorted(map(tuple, connected_components(
-        edges, driver_max_edges=3).collect()))  # 6 edges > cap → iterative
+        edges, driver_max_edges=3).collect()))  # 38 edges > cap → iterative
     assert drv == it == over_cap
-    assert drv == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
-                   (20, 20), (21, 20), (22, 20)]
+    assert drv == sorted([(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
+                          (20, 20), (21, 20), (22, 20)]
+                         + [(n, 0) for n in chain])
 
 
 

@@ -133,12 +133,16 @@ def test_and_window_prunes_head_blocks(spark, index):
     assert after < before, (before, after)
 
 
-def test_pinned_wand_runs_one_job(spark, tmp_root, index):
+def test_pinned_wand_runs_one_job(spark, tmp_root, index, corpus_tokens, monkeypatch):
     """A pinned index reads every query's df and AND window from the
     driver-side envelope rows, so OR, AND and m-of-n queries each run
     exactly ONE Spark job — on a fresh index and on a minor-compacted
-    (tiered) one."""
+    (tiered) one. Above DRIVER_ENV_MAX_ROWS (patched to 0 for a third
+    pin) the lookup filters and collects the cached envelope table
+    instead: at most one more job, and the same ranks as the oracle."""
     from ela_lib_spark.index.build import build_index, load_index
+    from ela_lib_spark.oracle.brute import brute_topk
+    from ela_lib_spark.query import wand
     from ela_lib_spark.query.wand import prepare_serving, wand_topk
     from ela_lib_spark.sources.synth import synth_pages_df
     from ela_lib_spark.streaming.incremental import apply_delta_batch, compact_index
@@ -154,17 +158,28 @@ def test_pinned_wand_runs_one_job(spark, tmp_root, index):
     served = [prepare_serving(dict(index)),
               prepare_serving(load_index(spark, idx_dir))]
     assert served[1]["manifest"]["tiers"]
+    monkeypatch.setattr(wand, "DRIVER_ENV_MAX_ROWS", 0)
+    env_table = prepare_serving(dict(index))
+    assert "envelopes_driver" not in env_table
     queries = ((["term0000", "term0002"], "OR", None),
                (["term0002", "term0045"], "AND", None),
                (["term0005", "term0417", "term0003"], "OR", 2))
+    m = index["manifest"]
     try:
         for idx in served:
             for terms, mode, mm in queries:
                 with jobs_in(spark) as jobs:
                     rows = wand_topk(idx, terms, mode, 10, min_match=mm).collect()
                 assert rows and len(jobs) == 1, (terms, mode, mm, jobs)
+        for terms, mode, mm in queries:
+            with jobs_in(spark) as jobs:
+                rows = wand_topk(env_table, terms, mode, 10, min_match=mm).collect()
+            assert len(jobs) <= 2, (terms, mode, mm, jobs)
+            assert [(r.doc_id, r.score) for r in rows] == brute_topk(
+                corpus_tokens, terms, mode, 10, n_docs=m["n_docs"],
+                avg_dl=m["avg_dl"], min_match=mm), (terms, mode, mm)
     finally:
-        for idx in served:
+        for idx in served + [env_table]:
             idx["postings"].unpersist()
             idx["envelopes"].unpersist()
 

@@ -49,8 +49,9 @@ resume/lineage granularity.
 Reference parity: the scan/slice surface maps to the reference's sliced
 scroll (pkg/es/es5.go:106-163, slice spec es5.go:116-122); `bucket`
 plays the role of the slice id; chunk flush size plays `scroll_size`;
-the ledger is the Progress analog (utils/progress.go:40-141) made
-durable for resume (north rule: per-partition lineage).
+the chunk store's per-bucket metrics rows are the Progress analog
+(utils/progress.go:40-141) made durable for resume (north rule:
+per-partition lineage).
 """
 
 from __future__ import annotations
@@ -78,8 +79,8 @@ from ela_lib_spark.index.codecs import (
 from ela_lib_spark.schemas import BLOCK_SIZE, POSTING_CHUNKS, POSTINGS
 
 DOC_BITS = 40
-# Sentinel term_id for per-bucket metrics rows (ledger feed). A real
-# token hashing exactly here has probability V/2^64 ≈ 0.
+# Sentinel term_id for per-bucket metrics rows (resume set and corpus
+# stats). A real token hashing exactly here has probability V/2^64 ≈ 0.
 METRICS_TERM_ID = -(1 << 63)
 # Metrics sidecar rows ride the POSTING_CHUNKS schema — they are
 # emitted inside the same mapInPandas stream as the posting chunks and
@@ -90,16 +91,13 @@ METRICS_TERM_ID = -(1 << 63)
 #   part_id      → bucket id                      (its normal meaning)
 #   n_docs       → docs seen in the bucket        (its normal meaning)
 #   first_doc_id → tokens seen in the bucket
-#   shard        → elapsed millis of the producing read-split
 # Writers go through metrics_rows_pdf (and metrics_rows_decremented
-# for GC rewrites); readers through ledger_rows_from_metrics. Nothing
-# else may touch the mapping.
+# for GC rewrites); readers through corpus_stats. Nothing else may
+# touch the mapping.
 _METRICS_N_TOKENS_COL = "first_doc_id"
-_METRICS_ELAPSED_MS_COL = "shard"
 
 
-def metrics_rows_pdf(bucket_docs: dict, bucket_tokens: dict,
-                     elapsed_ms: int) -> "pd.DataFrame":
+def metrics_rows_pdf(bucket_docs: dict, bucket_tokens: dict) -> "pd.DataFrame":
     """One POSTING_CHUNKS-shaped metrics row per bucket (writer side
     of the carrier mapping above)."""
     return pd.DataFrame(
@@ -108,7 +106,7 @@ def metrics_rows_pdf(bucket_docs: dict, bucket_tokens: dict,
             "part_id": np.fromiter(
                 bucket_docs.keys(), np.int64, len(bucket_docs)
             ).astype(np.int32),
-            _METRICS_ELAPSED_MS_COL: elapsed_ms,
+            "shard": 0,
             "doc_ids": b"",
             "tfs": b"",
             "dls": b"",
@@ -133,18 +131,21 @@ def metrics_rows_decremented(m: "pd.DataFrame",
     })
 
 
-def ledger_rows_from_metrics(metrics_df: DataFrame) -> list:
-    """Per-bucket ledger rows (part_id, n_docs, n_tokens, secs) from
-    committed metrics rows (reader side of the carrier mapping)."""
-    return (
-        metrics_df.groupBy("part_id")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum(_METRICS_N_TOKENS_COL).cast("long").alias("n_tokens"),
-            (F.max(_METRICS_ELAPSED_MS_COL) / 1000.0).alias("secs"),
-        )
-        .collect()
-    )
+def corpus_stats(metrics_df: DataFrame,
+                 decrements: dict | None = None) -> tuple[int, float]:
+    """(n_docs, avg_dl) the manifest records: one aggregate over
+    committed metrics rows (reader side of the carrier mapping), minus
+    the {part_id: (n_docs, n_tokens)} tombstone decrements."""
+    n_docs, n_tokens = metrics_df.agg(
+        F.sum("n_docs").cast("long"),
+        F.sum(_METRICS_N_TOKENS_COL).cast("long"),
+    ).first()
+    n_docs, n_tokens = int(n_docs or 0), int(n_tokens or 0)
+    for dn, dt in (decrements or {}).values():
+        n_docs, n_tokens = n_docs - dn, n_tokens - dt
+    return n_docs, (float(n_tokens) / float(n_docs) if n_docs else 0.0)
+
+
 FLUSH_POSTINGS = 2_000_000  # SPIMI in-memory segment bound per partition
 
 # Absolute tombstone bounds (VERDICT r3 #1 — the driver must never
@@ -341,10 +342,9 @@ def _spimi_fn(bucket_group: int = 1):
     shuffle for ~20 MB of postings at 512 buckets. part_id of a chunk
     is the group's first bucket, so merge_chunks' shard derivation
     (part_id // group) is unchanged; METRICS rows stay per-bucket
-    (resume/ledger granularity is unaffected)."""
+    (resume granularity is unaffected)."""
 
     def fn(it):
-        t0 = time.monotonic()
         bufs: list[tuple] = []  # (bucket_rep, term_ids, doc_rep, dl_rep)
         pending = 0
         bucket_docs: dict[int, int] = {}
@@ -428,10 +428,9 @@ def _spimi_fn(bucket_group: int = 1):
         out = flush()
         if out is not None:
             yield out
-        # one metrics row per bucket seen by this split (ledger feed)
+        # one metrics row per bucket seen by this split
         if bucket_docs:
-            elapsed_ms = int((time.monotonic() - t0) * 1000)
-            yield metrics_rows_pdf(bucket_docs, bucket_tokens, elapsed_ms)
+            yield metrics_rows_pdf(bucket_docs, bucket_tokens)
 
     return fn
 
@@ -457,7 +456,7 @@ def chunks_from_docs(docs_df: DataFrame, skip_buckets=None,
     (group=1) compatible.
 
     The output carries `is_m` (1 on per-bucket metrics rows, 0 on
-    posting chunks) — written with partitionBy("is_m") so the ledger /
+    posting chunks) — written with partitionBy("is_m") so the stats /
     resume scans read ONLY the tiny metrics sidecar via partition
     pruning instead of every chunk file."""
     if skip_buckets:
@@ -666,52 +665,6 @@ def merge_chunks(
 # ------------------------------------------------------------ pipeline
 
 
-def _write_small_parquet(path: str, columns: dict, schema_str: str) -> None:
-    """Driver-side parquet write for the tiny ledger table — a Spark
-    job per kilobyte-sized write is pure scheduling overhead. Layout
-    matches a Spark write (dir + _SUCCESS) so spark.read.parquet()
-    reads it back unchanged."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    types = {"int32": pa.int32(), "int64": pa.int64(),
-             "double": pa.float64(), "string": pa.string()}
-    fields = [pa.field(n, types[t]) for n, t in
-              (p.strip().split() for p in schema_str.split(","))]
-    tbl = pa.table({f.name: pa.array(columns[f.name], f.type) for f in fields})
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
-    open(os.path.join(path, "_SUCCESS"), "w").close()
-
-
-def write_ledger(index_dir: str, ledger_rows: list, snapshot: str,
-                 ledger_name: str) -> tuple[int, float]:
-    """Write the ledger (one row per bucket: part_id, n_docs, n_tokens,
-    secs) to `index_dir/ledger_name` — the one writer for both the
-    build (`ledger`) and maintenance (versioned `ledger-{snapshot}`).
-    Returns the corpus stats (n_docs, avg_dl) the manifest records."""
-    n_docs = sum(r.n_docs for r in ledger_rows)
-    n_tokens = sum(r.n_tokens for r in ledger_rows)
-    avg_dl = float(n_tokens) / float(n_docs) if n_docs else 0.0
-    _write_small_parquet(
-        os.path.join(index_dir, ledger_name),
-        {
-            "part_id": [int(r.part_id) for r in ledger_rows],
-            "status": ["done"] * len(ledger_rows),
-            "n_docs": [int(r.n_docs) for r in ledger_rows],
-            "n_tokens": [int(r.n_tokens) for r in ledger_rows],
-            "secs": [float(r.secs) for r in ledger_rows],
-            "snapshot_id": [snapshot] * len(ledger_rows),
-        },
-        "part_id int32, status string, n_docs int64, n_tokens int64, "
-        "secs double, snapshot_id string",
-    )
-    return int(n_docs), avg_dl
-
-
 def _read_if_exists(spark, path):
     try:
         return spark.read.parquet(path)
@@ -720,40 +673,23 @@ def _read_if_exists(spark, path):
 
 
 def done_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """Buckets whose chunks are durably committed. Derived from the
-    committed chunk METRICS rows (the data itself), with the ledger as
-    a secondary source — so a crash *between* the chunks commit and the
-    ledger write cannot cause buckets to be re-appended (which would
-    duplicate postings)."""
-    done: set[int] = set()
-    ch = chunks_path(out_dir)
-    if os.path.exists(ch):
-        df = _read_if_exists(spark, ch)
-        if df is not None:
-            if "is_m" in df.columns:  # partition-pruned metrics sidecar
-                df = df.filter(F.col("is_m") == 1)
-            done |= {
-                r.part_id
-                for r in df.filter(F.col("term_id") == METRICS_TERM_ID)
-                .select("part_id")
-                .distinct()
-                .collect()
-            }
-    # both the literal dir (pre-manifest crashed builds) and the
-    # manifest-resolved one (compactions version the control tables)
-    for led in dict.fromkeys(
-        (os.path.join(out_dir, "ledger"), ledger_path(out_dir))
-    ):
-        if os.path.exists(led):
-            df = _read_if_exists(spark, led)
-            if df is not None:
-                done |= {
-                    r.part_id
-                    for r in df.filter(F.col("status") == "done")
-                    .select("part_id")
-                    .collect()
-                }
-    return done
+    """Buckets whose chunks a build into `out_dir` durably committed:
+    the part ids of the metrics rows in `out_dir/chunks` (the data
+    itself, so no separate record can disagree with it and cause
+    buckets to be re-appended, which would duplicate postings)."""
+    ch = os.path.join(out_dir, "chunks")
+    df = _read_if_exists(spark, ch) if os.path.exists(ch) else None
+    if df is None:
+        return set()
+    if "is_m" in df.columns:  # partition-pruned metrics sidecar
+        df = df.filter(F.col("is_m") == 1)
+    return {
+        r.part_id
+        for r in df.filter(F.col("term_id") == METRICS_TERM_ID)
+        .select("part_id")
+        .distinct()
+        .collect()
+    }
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -789,8 +725,7 @@ def write_manifest(out_dir: str, manifest: dict) -> None:
     unique; see new_snapshot_id) — so `load_index(snapshot_id=...)`
     can time-travel to any published state whose data dirs still
     exist (compaction prunes old data; the log itself is append-only
-    and tiny). The snapshot archive also captures the ledger sidecar
-    (tiny) so time-traveled reads see snapshot-consistent lineage."""
+    and tiny)."""
     snap = manifest.get("snapshot_id")
     prior = read_manifest(out_dir) or {}
     hist = list(prior.get("history", []))
@@ -815,14 +750,6 @@ def write_manifest(out_dir: str, manifest: dict) -> None:
         with open(spath + ".tmp", "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(spath + ".tmp", spath)
-        ledger_dir = os.path.join(out_dir, manifest.get("ledger_dir") or "ledger")
-        if os.path.exists(ledger_dir):
-            import shutil
-
-            shutil.copytree(
-                ledger_dir, os.path.join(sdir, f"{snap}-ledger"),
-                dirs_exist_ok=True,
-            )
     os.replace(tmp, _manifest_path(out_dir))
     return manifest
 
@@ -841,15 +768,6 @@ def rewrite_manifest_in_place(out_dir: str, manifest: dict) -> None:
 def docs_dir_path(out_dir: str, manifest: dict | None = None) -> str:
     m = manifest if manifest is not None else (read_manifest(out_dir) or {})
     return os.path.join(out_dir, m.get("docs_dir") or "docs")
-
-
-def ledger_path(out_dir: str, manifest: dict | None = None) -> str:
-    """Manifest-resolved ledger dir. Compactions write VERSIONED
-    control tables (ledger-{snapshot}) and flip this pointer with the
-    manifest, so readers can never observe stats that contradict the
-    manifest's snapshot (ADVICE r3 crash-window fix)."""
-    m = manifest if manifest is not None else (read_manifest(out_dir) or {})
-    return os.path.join(out_dir, m.get("ledger_dir") or "ledger")
 
 
 def delta_deletes_path(out_dir: str) -> str:
@@ -1013,13 +931,16 @@ def build_index(
     use_html: bool = False,
     resume: bool = False,
 ) -> dict:
-    """Full build: docs (ids+term_ids) → chunks (resumable) → ledger →
-    merged postings. Returns the manifest dict.
+    """Full build: docs (ids+term_ids) → chunks (resumable) → corpus
+    stats → merged postings. Returns the manifest dict.
 
     Resumability (north rule): the chunk stage appends per-bucket; the
-    done-set is *derived from committed chunk data* (metrics rows), so
-    a crash between data and ledger writes cannot desynchronize them —
-    rerunning with resume=True recomputes done-buckets from the data.
+    done-set is *derived from committed chunk data* (metrics rows,
+    done_buckets), so rerunning with resume=True after a crash
+    recomputes it from the data. A build reads and writes its own
+    `docs` and `chunks` dirs, resumed or not — never the ones a
+    manifest points at (a GC's `docs-g*`/`chunks-g*` belong to the
+    index it published, which this build replaces).
     """
     t_start = time.monotonic()
     stage_secs: dict[str, float] = {}
@@ -1037,11 +958,7 @@ def build_index(
 
     # job 1: the docs table (skip if resuming and committed — ids are
     # (bucket, url)-deterministic; _SUCCESS guards a crashed write).
-    # Resume resolves the dir through the manifest: a chunk-store GC
-    # renames it (docs-g{gen}) — resuming must not rebuild a docs
-    # table that already exists under the manifest pointer.
-    docs_dir = (docs_dir_path(out_dir) if resume
-                else os.path.join(out_dir, "docs"))
+    docs_dir = os.path.join(out_dir, "docs")
     _t = time.monotonic()
     sc.setJobDescription("build:docs")
     if not (resume and os.path.exists(os.path.join(docs_dir, "_SUCCESS"))):
@@ -1053,7 +970,7 @@ def build_index(
         # A partitionBy("bucket") layout was tried in r4 and REVERTED:
         # with n_buckets = 16×cores it shattered the table into one
         # tiny file per bucket, exploding every downstream stage's task
-        # count (chunks/ledger 49 → 513 tasks) and cutting measured
+        # count (chunks/stats 49 → 513 tasks) and cutting measured
         # build throughput ~6× — per-file scheduling overhead dwarfed
         # the probe win. Row-group pruning gives the same IO bound with
         # zero write-path cost.
@@ -1065,8 +982,8 @@ def build_index(
 
     # job 2: SPIMI chunks (append missing buckets only). partitionBy
     # the is_m flag: metrics rows land in a tiny sidecar directory that
-    # ledger/resume scans read via partition pruning.
-    ch_dir = chunks_path(out_dir)
+    # stats/resume scans read via partition pruning.
+    ch_dir = os.path.join(out_dir, "chunks")
     _t = time.monotonic()
     sc.setJobDescription("build:chunks")
     # chunk at the merge's shard-group granularity (see chunks_from_docs)
@@ -1098,18 +1015,15 @@ def build_index(
     stage_secs["chunks"] = round(time.monotonic() - _t, 2)
     chunks = spark.read.parquet(ch_dir)
 
-    # ledger + corpus stats, derived from committed metrics rows: ONE
-    # partition-pruned scan; the (tiny) ledger is then written
-    # driver-side with pyarrow — no extra Spark jobs — and the stats
-    # go into the manifest.
+    # corpus stats for the manifest, from committed metrics rows: ONE
+    # partition-pruned scan (stage and job keep the name "ledger", which
+    # the bench's `index.build.ledger_s` keys read)
     _t = time.monotonic()
     sc.setJobDescription("build:ledger")
-    ledger_rows = ledger_rows_from_metrics(
+    n_docs, avg_dl = corpus_stats(
         chunks.filter((F.col("is_m") == 1)
                       & (F.col("term_id") == METRICS_TERM_ID))
     )
-    snapshot = new_snapshot_id("build")
-    n_docs, avg_dl = write_ledger(out_dir, ledger_rows, snapshot, "ledger")
     stage_secs["ledger"] = round(time.monotonic() - _t, 2)
 
     # job 3: salted merge → final postings. Written directly: each merge
@@ -1142,9 +1056,8 @@ def build_index(
         "extractor_version": 1,
         "postings_dir": "postings",
         "chunks_dir": "chunks",
-        "ledger_dir": "ledger",
-        "docs_dir": os.path.basename(docs_dir),
-        "snapshot_id": snapshot,
+        "docs_dir": "docs",
+        "snapshot_id": new_snapshot_id("build"),
         "delete_epochs": epochs_on_disk(delta_deletes_path(out_dir)),
     }
     write_manifest(out_dir, manifest)
@@ -1157,12 +1070,9 @@ def load_index(spark: SparkSession, out_dir: str,
     archived snapshot manifest (snapshots/<id>.json) — readable as
     long as compaction hasn't pruned the data dirs it references.
 
-    `corpus_stats` is built from the loaded manifest's n_docs/avg_dl,
-    the one record of them. Snapshot consistency: a time-traveled load
-    also returns the `ledger` archived beside the snapshot — never the
-    live table, which later compactions replace. The
-    `doc_stats` surface is the live doc dictionary (doc rows
-    are append-only between full rebuilds, so snapshot doc ids all
+    The loaded manifest is the one record of the corpus stats (n_docs,
+    avg_dl). The `doc_stats` surface is the live doc dictionary (doc
+    rows are append-only between full rebuilds, so snapshot doc ids all
     resolve; rows added after the snapshot may also be present).
 
     With tiered delta compaction (streaming/incremental.py) the
@@ -1219,23 +1129,10 @@ def load_index(spark: SparkSession, out_dir: str,
             doc_stats = doc_stats.join(tomb, "doc_id", "left_anti")
         deleted_df = tomb if deleted_ids is None else None
         postings = read_postings(spark, out_dir, manifest)
-        corpus_stats = spark.createDataFrame(
-            [(int(manifest["n_docs"]), float(manifest["avg_dl"]))],
-            "n_docs long, avg_dl double",
-        )
-        ledger = ledger_path(out_dir, manifest)
-        if snapshot_id is not None:
-            snap_ledger = os.path.join(out_dir, "snapshots",
-                                       f"{snapshot_id}-ledger")
-            if os.path.exists(snap_ledger):
-                ledger = snap_ledger
-        ledger = spark.read.parquet(ledger)
         out = {
             "manifest": manifest,
             "postings": postings,
             "doc_stats": doc_stats,
-            "corpus_stats": corpus_stats,
-            "ledger": ledger,
             "deleted_ids": deleted_ids,
             "deleted_df": deleted_df,
             # provenance for serving-cache revalidation (query/wand.py):

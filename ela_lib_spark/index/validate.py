@@ -8,12 +8,15 @@ streaming/incremental.py docstrings):
 
 1. manifest present with required keys; every referenced data dir
    exists and is readable;
-2. the ledger agrees with the manifest's corpus stats (Σn_docs ==
-   n_docs, Σn_tokens/Σn_docs == avg_dl) — the ledger is derived from
-   the metrics rows on its own path, and the versioned ledger flips
-   with the manifest, so a contradiction means corruption;
-3. the live doc-stats surface has exactly n_docs rows and unique
-   doc_ids;
+2. the manifest's corpus stats agree with the doc dictionary it
+   describes: the docs of the epochs its postings cover minus the
+   tombstones of its delete epochs (the frames a time-traveled
+   load_index reads) number n_docs with mean doc_len avg_dl. The
+   stats come from the chunk store's metrics rows, which are written
+   apart from the doc dictionary, so a contradiction means corruption
+   — pending epochs included;
+3. the live doc-stats surface has exactly n_docs rows (skipped while
+   epochs are pending) and unique doc_ids;
 4. every tombstone resolves to a known doc id (a dangling tombstone
    would silently no-op at GC);
 5. the current snapshot_id is archived in the snapshot log;
@@ -45,7 +48,6 @@ def validate_index(spark: SparkSession, index_dir: str,
                    deep: bool = False) -> dict:
     from ela_lib_spark.index.build import (
         docs_dir_path,
-        ledger_path,
         postings_dirs,
         read_manifest,
     )
@@ -71,7 +73,6 @@ def validate_index(spark: SparkSession, index_dir: str,
         "postings": base,
         "chunks": os.path.join(index_dir, manifest["chunks_dir"]),
         "docs": docs_dir_path(index_dir, manifest),
-        "ledger": ledger_path(index_dir, manifest),
     }
     for p in tiers:
         dirs[f"tier:{os.path.basename(p)}"] = p
@@ -85,15 +86,15 @@ def validate_index(spark: SparkSession, index_dir: str,
     # corrupt (truncated parquet, empty dirs): an unreadable dataset is
     # a FINDING for an fsck tool, never a crash (review r4)
     try:
-        _dataset_checks(spark, index_dir, manifest, dirs, checks, deep)
+        _dataset_checks(spark, index_dir, manifest, checks, deep)
     except Exception as e:
         _check(checks, "datasets_readable", False,
                f"{type(e).__name__}: {str(e)[:300]}")
     return {"ok": all(c["ok"] for c in checks.values()), "checks": checks}
 
 
-def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
-                    checks: dict, deep: bool) -> None:
+def _dataset_checks(spark, index_dir: str, manifest: dict, checks: dict,
+                    deep: bool) -> None:
     from ela_lib_spark.index.build import (
         covered_epochs,
         delta_deletes_path,
@@ -102,28 +103,19 @@ def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
         read_tombstones,
     )
 
-    # 2. ledger vs the manifest's corpus stats
-    led_docs, led_tokens = spark.read.parquet(dirs["ledger"]).agg(
-        F.sum("n_docs"), F.sum("n_tokens")).first()
-    led_docs, led_tokens = int(led_docs or 0), int(led_tokens or 0)
-    led_avg = led_tokens / led_docs if led_docs else 0.0
-    _check(checks, "ledger_vs_manifest",
-           led_docs == int(manifest["n_docs"])
-           and abs(led_avg - float(manifest["avg_dl"])) < 1e-6,
-           f"ledger ({led_docs}, {led_avg:.4f}) vs manifest "
-           f"({manifest['n_docs']}, {manifest['avg_dl']:.4f})")
-
-    # 3. doc-stats surface: n rows + unique ids (bulk + delta − tombs)
-    docs = read_doc_dict(spark, index_dir, manifest).select("doc_id")
+    # 2. and 3. doc-stats surface: n rows + unique ids (bulk + delta −
+    # tombs). Manifest n_docs refreshes at compaction; delta/delete
+    # epochs not yet covered by a publish legitimately shift the live
+    # count — an expected pre-compaction state, not corruption
+    docs = read_doc_dict(spark, index_dir, manifest).select("doc_id",
+                                                            "doc_len")
     tomb = read_tombstones(spark, index_dir, manifest=manifest)
     live = docs.join(tomb, "doc_id", "left_anti") if tomb is not None else docs
     agg = live.agg(
         F.count("*").alias("n"),
         F.countDistinct("doc_id").alias("nd"),
+        F.sum("doc_len").alias("toks"),
     ).first()
-    # manifest n_docs refreshes at compaction; delta/delete epochs not
-    # yet covered by a publish legitimately shift the live count — an
-    # expected pre-compaction state, not corruption
     pending = (
         set(live_epochs(os.path.join(index_dir, "delta_chunks"), manifest))
         - covered_epochs(manifest)
@@ -131,16 +123,33 @@ def _dataset_checks(spark, index_dir: str, manifest: dict, dirs: dict,
         set(live_epochs(delta_deletes_path(index_dir), manifest))
         - set(manifest.get("delete_epochs", []))
     )
+    # the corpus stats describe the manifest's covered and delete
+    # epochs: without pending epochs those are the live frames above
     if pending:
         _check(checks, "doc_stats_count", True,
                f"uncompacted epochs {sorted(pending)}: live rows={agg.n} "
                f"vs manifest n_docs={manifest['n_docs']} (refreshes at "
                "next compaction — skipped)")
+        pinned = read_doc_dict(spark, index_dir, manifest,
+                               sorted(covered_epochs(manifest)))
+        ptomb = read_tombstones(spark, index_dir,
+                                manifest.get("delete_epochs", []))
+        if ptomb is not None:
+            pinned = pinned.join(ptomb, "doc_id", "left_anti")
+        n, toks = pinned.agg(F.count("*"), F.sum("doc_len")).first()
     else:
         _check(checks, "doc_stats_count",
                int(agg.n) == int(manifest["n_docs"]),
                f"live doc rows={agg.n} vs manifest "
                f"n_docs={manifest['n_docs']}")
+        n, toks = agg.n, agg.toks
+    n, toks = int(n), int(toks or 0)
+    avg = toks / n if n else 0.0
+    _check(checks, "corpus_stats",
+           n == int(manifest["n_docs"])
+           and abs(avg - float(manifest["avg_dl"])) < 1e-6,
+           f"doc dictionary ({n}, {avg:.4f}) vs manifest "
+           f"({manifest['n_docs']}, {manifest['avg_dl']:.4f})")
     _check(checks, "doc_ids_unique", int(agg.n) == int(agg.nd),
            f"rows={agg.n} distinct={agg.nd}")
 

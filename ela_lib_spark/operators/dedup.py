@@ -7,9 +7,10 @@ only the signature kernels (functions/hashing.py) are pandas UDFs.
 Scale notes (100 TB): exact dedup is one hash-aggregate (map-side
 partial agg, no row data shuffled — only (hash, key)); LSH candidate
 generation shuffles (band, band_hash) pairs, NOT documents; pair
-verification joins signatures only. Cluster formation uses iterative
-min-label propagation (large-star/small-star family) with a bounded
-iteration count instead of driver-side union-find.
+verification joins signatures only. Cluster formation
+(connected_components) runs a driver union-find on graphs of at most
+DRIVER_CC_MAX_EDGES edges, and otherwise iterative min-label
+propagation (large-star/small-star family) until no label changes.
 """
 
 from __future__ import annotations

@@ -81,16 +81,4 @@ POSTINGS = T.StructType(
     ]
 )
 
-# Resumable-build lineage ledger (north rule: per-partition lineage).
-BUILD_LEDGER = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("n_tokens", T.LongType(), False),
-        T.StructField("secs", T.DoubleType(), False),
-        T.StructField("snapshot_id", T.StringType(), False),
-    ]
-)
-
 BLOCK_SIZE = 128

@@ -384,10 +384,10 @@ def read_delta_postings(spark: SparkSession, index_dir: str,
 
 # manifest field -> the dir its reader falls back to when it is unset
 _RETAINABLE_FIELDS = {"postings_dir": "postings", "chunks_dir": "chunks",
-                      "docs_dir": "docs", "ledger_dir": "ledger",
-                      "delta_doc_stats_dir": None}
+                      "docs_dir": "docs", "delta_doc_stats_dir": None}
 # the artifact families _reclaim may free; the literal live-ingest dir
 # `delta_doc_stats` is never a candidate, only its `-g{gen}` copies
+# (`ledger` dirs are only written by older builds: a commit frees them)
 _ARTIFACT_FAMILY = re.compile(
     r"^((postings|chunks|docs|ledger)(-|$)|delta_doc_stats-)")
 
@@ -550,12 +550,9 @@ def _reclaim(index_dir: str, keep_last: int) -> dict:
     if keep_last > 0:
         keep_ids = set(hist[-keep_last:]) | {manifest.get("snapshot_id")}
         expired = [s for s in hist if s not in keep_ids]
-        sdir = os.path.join(index_dir, "snapshots")
         for sid in expired:
             with contextlib.suppress(FileNotFoundError):
                 os.remove(_snapshot_path(index_dir, sid))
-            shutil.rmtree(os.path.join(sdir, f"{sid}-ledger"),
-                          ignore_errors=True)
         kept += [m for m in (_load_archived_snapshot(index_dir, sid)
                              for sid in hist if sid in keep_ids) if m]
     referenced = _referenced_dir_names(kept)
@@ -588,38 +585,6 @@ def _tombstone_decrements(spark, index_dir: str, manifest: dict,
         .collect()
     )
     return {int(r.bucket): (int(r.dn), int(r.dt)) for r in rows}
-
-
-def _refresh_control_tables(spark, index_dir: str, metrics, snapshot: str,
-                            decrements: dict | None = None):
-    """Write the ledger from the union of committed metrics rows (base
-    sidecar is partition-pruned; delta epochs are tiny), minus
-    per-bucket tombstone decrements.
-
-    The ledger lands in a VERSIONED dir (ledger-{snapshot}); the caller
-    records the returned name in the manifest before the os.replace
-    flip, so it becomes visible atomically WITH the manifest's corpus
-    stats (ADVICE r3: overwriting the live dir before the postings
-    merge finished left a crash window where load_index saw new stats
-    under the old manifest). Returns (n_docs, avg_dl, ledger_name)."""
-    from ela_lib_spark.index.build import ledger_rows_from_metrics, write_ledger
-
-    # named decode of the metrics carrier columns lives in build.py
-    # next to the writer (VERDICT r4 #4 — no more silent overloading)
-    ledger_rows = ledger_rows_from_metrics(metrics)
-    if decrements:
-        from types import SimpleNamespace
-
-        adj = []
-        for r in ledger_rows:
-            dn, dt = decrements.get(int(r.part_id), (0, 0))
-            adj.append(SimpleNamespace(part_id=r.part_id, n_docs=r.n_docs - dn,
-                                       n_tokens=r.n_tokens - dt, secs=r.secs))
-        ledger_rows = adj
-    ledger_name = f"ledger-{snapshot}"
-    n_docs, avg_dl = write_ledger(index_dir, ledger_rows, snapshot,
-                                  ledger_name)
-    return n_docs, avg_dl, ledger_name
 
 
 def _gc_transform(pdf, deleted, decrements: dict) -> list:
@@ -880,7 +845,7 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
       size/count-tiered triggers (constants in index/build.py).
 
     Every mode runs one pipeline: read the tombstones once
-    (build.tombstone_set), write the ledger, merge the mode's chunk
+    (build.tombstone_set), scan the corpus stats, merge the mode's chunk
     input, flip the manifest; compact_index then reclaims (_reclaim).
     A mode supplies only its chunk input, postings dir name and
     manifest fields.
@@ -995,11 +960,8 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
         # the rewrite already purged the postings and decremented the
         # metrics rows — no second purge, no double subtraction
         deleted, decrements = None, {}
-    snapshot = new_snapshot_id("gc" if mode == "gc" else "compact")
-    n_docs, avg_dl, fields["ledger_dir"] = _refresh_control_tables(
-        spark, index_dir, store.filter(F.col("term_id") == METRICS_TERM_ID),
-        snapshot, decrements,
-    )
+    n_docs, avg_dl = build.corpus_stats(
+        store.filter(F.col("term_id") == METRICS_TERM_ID), decrements)
     if mode == "minor":
         gen = int(manifest.get("tier_gen", 0)) + 1
         postings_name = f"postings-t{gen}"
@@ -1036,7 +998,9 @@ def _compact_index_impl(spark: SparkSession, index_dir: str,
                      manifest["codec"], deleted=deleted) \
             .write.mode("overwrite").parquet(
                 os.path.join(index_dir, postings_name))
-    manifest.update(fields, n_docs=n_docs, avg_dl=avg_dl, snapshot_id=snapshot)
+    manifest.update(fields, n_docs=n_docs, avg_dl=avg_dl,
+                    snapshot_id=new_snapshot_id(
+                        "gc" if mode == "gc" else "compact"))
     write_manifest(index_dir, manifest)
     res["n_docs"] = n_docs
     return res

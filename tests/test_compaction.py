@@ -170,8 +170,8 @@ def test_snapshot_log_and_time_travel(spark, tmp_root):
     metadata-log analog). Minor compaction preserves old snapshots'
     readability (base postings survive); a major compaction prunes the
     superseded postings dirs, after which loading the stale snapshot
-    raises the typed corruption error. Time-traveled loads return
-    snapshot-consistent corpus_stats/ledger (ADVICE r2)."""
+    raises the typed corruption error. Time-traveled loads return the
+    snapshot's own corpus stats (ADVICE r2)."""
     import pytest as _pytest
 
     from ela_lib_spark.errors import IndexCorruptError, IndexNotFoundError
@@ -196,17 +196,14 @@ def test_snapshot_log_and_time_travel(spark, tmp_root):
     ] == 300
 
     # time travel to the PRE-compaction snapshot still works after a
-    # minor compact (nothing pruned), and its corpus_stats/ledger are
-    # the snapshot's own, not the live (post-compaction) tables
+    # minor compact (nothing pruned), and its corpus stats are the
+    # snapshot's own, not the live (post-compaction) manifest's
     old = load_index(spark, idx_dir, snapshot_id=snap0)
-    assert old["manifest"]["n_docs"] == 200
     assert old["postings"].count() > 0
-    cs = old["corpus_stats"].first()
-    assert cs.n_docs == 200
-    assert abs(cs.avg_dl - old["manifest"]["avg_dl"]) < 1e-9
-    assert sum(r.n_docs for r in old["ledger"].collect()) == 200
-    # live tables meanwhile describe the compacted corpus
-    assert load_index(spark, idx_dir)["corpus_stats"].first().n_docs == 300
+    om = old["manifest"]
+    assert (om["n_docs"], om["avg_dl"]) == (200, m0["avg_dl"])
+    # the live manifest meanwhile describes the compacted corpus
+    assert load_index(spark, idx_dir)["manifest"]["n_docs"] == 300
 
     # major compaction prunes the old base postings dir → stale
     # snapshot now raises the typed corruption error
@@ -218,10 +215,10 @@ def test_snapshot_log_and_time_travel(spark, tmp_root):
 
 
 def test_compaction_refreshes_control_tables(spark, tmp_root):
-    """Review r2: after compaction, corpus_stats / ledger / doc_stats
-    must agree with the manifest (not describe the pre-compaction
-    corpus), and the chunk store must keep the is_m sidecar
-    partitioning so resume/ledger scans stay partition-pruned."""
+    """Review r2: after compaction, the manifest's corpus stats and
+    doc_stats must describe the compacted corpus, and the chunk store
+    must keep the is_m sidecar partitioning so stats/resume scans stay
+    partition-pruned."""
     idx_dir = os.path.join(tmp_root, "ctrl_idx")
     pages = synth_pages_df(spark, 300).cache()
     build_index(spark, pages.limit(200), idx_dir, n_buckets=4, n_shards=2)
@@ -230,9 +227,6 @@ def test_compaction_refreshes_control_tables(spark, tmp_root):
 
     idx = load_index(spark, idx_dir)
     assert idx["manifest"]["n_docs"] == 300
-    cs = idx["corpus_stats"].first()
-    assert cs.n_docs == 300
-    assert sum(r.n_docs for r in idx["ledger"].collect()) == 300
     assert idx["doc_stats"].count() == 300
     assert idx["doc_stats"].select("doc_id").distinct().count() == 300
     chunks_dir = os.path.join(idx_dir, idx["manifest"]["chunks_dir"])
@@ -281,7 +275,6 @@ def test_upsert_delete_tombstones_and_purge(spark, tmp_root):
     assert res["mode"] == "minor"
     idx2 = load_index(spark, idx_dir)
     assert idx2["manifest"]["n_docs"] == 350  # 300 - 50 + 100
-    assert idx2["corpus_stats"].first().n_docs == 350
     upd = {r.doc_id for r in
            wand_topk(idx2, ["zzupdated"], "OR", 100).collect()}
     assert len(upd) == 50 and not (upd & old_ids)
@@ -414,7 +407,6 @@ def test_gc_index_reclaims_tombstones_and_deltas(spark, tmp_root):
     assert m["delete_epochs"] == [] and m["tiers"] == []
     assert len(idx["deleted_ids"]) == 0
     assert idx["doc_stats"].count() == 320
-    assert idx["corpus_stats"].first().n_docs == 320
 
     # ground truth over the live corpus — ids unchanged by GC
     old_ids = set()  # recompute which base ids were replaced
@@ -462,7 +454,7 @@ def test_ingest_during_gc_keeps_its_epoch(spark, tmp_root, monkeypatch):
     after GC listed its epochs, before its manifest flip — is not among
     the epochs GC consumes, so it stays live and the next minor
     compaction merges it."""
-    import ela_lib_spark.streaming.incremental as inc
+    import ela_lib_spark.index.build as build
     from ela_lib_spark.index.validate import validate_index
     from ela_lib_spark.schemas import WEB_PAGES
     from ela_lib_spark.streaming.incremental import gc_index
@@ -476,13 +468,13 @@ def test_ingest_during_gc_keeps_its_epoch(spark, tmp_root, monkeypatch):
     late = spark.createDataFrame(
         [(u, None, None, f"zzlateword page {i}", "en")
          for i, u in enumerate(late_urls)], WEB_PAGES)
-    refresh = inc._refresh_control_tables
+    stats = build.corpus_stats
 
-    def ingest_then_refresh(*a, **k):
+    def ingest_then_stats(*a, **k):
         apply_delta_batch(late, 1, idx_dir, n_buckets=4, mode="upsert")
-        return refresh(*a, **k)
+        return stats(*a, **k)
 
-    monkeypatch.setattr(inc, "_refresh_control_tables", ingest_then_refresh)
+    monkeypatch.setattr(build, "corpus_stats", ingest_then_stats)
     assert gc_index(spark, idx_dir, n_shards=2)["purged"] == 10
     monkeypatch.undo()
     assert compact_index(spark, idx_dir, n_shards=2,
@@ -572,7 +564,6 @@ def test_delete_only_epoch_refreshes_stats(spark, tmp_root):
     assert res["mode"] == "minor" and res["compacted_epochs"] == 0
     idx = load_index(spark, idx_dir)
     assert idx["manifest"]["n_docs"] == 170
-    assert idx["corpus_stats"].first().n_docs == 170
     assert "df_stale" not in idx["manifest"]
     assert idx["manifest"]["delete_epochs"] == [0]
     # second minor with nothing new: true no-op
@@ -659,19 +650,10 @@ def test_upsert_intra_batch_last_write_deterministic(spark, tmp_root):
 
 
 def test_control_tables_flip_with_manifest(spark, tmp_root):
-    """ADVICE r3: control tables are written to VERSIONED dirs and
-    become visible only with the manifest flip. A simulated crash after
-    the new tables land but before the flip leaves load_index on the
-    OLD stats — never a manifest/table contradiction."""
-    from ela_lib_spark.index.build import (
-        METRICS_TERM_ID,
-        chunks_path,
-        read_manifest,
-    )
-    from ela_lib_spark.streaming.incremental import (
-        _refresh_control_tables,
-        read_delta_postings,
-    )
+    """ADVICE r3: a compaction's corpus stats become visible only with
+    its manifest flip. The manifest is their one record: no ledger or
+    corpus_stats table is written that could contradict it."""
+    from ela_lib_spark.index.build import read_manifest
 
     idx_dir = os.path.join(tmp_root, "ctrlflip_idx")
     pages = synth_pages_df(spark, 250).cache()
@@ -679,30 +661,15 @@ def test_control_tables_flip_with_manifest(spark, tmp_root):
     extra = pages.subtract(base).cache()
     build_index(spark, base, idx_dir, n_buckets=4, n_shards=2)
     apply_delta_batch(extra, 0, idx_dir, n_buckets=4)
+    assert load_index(spark, idx_dir)["manifest"]["n_docs"] == 200
 
-    # simulate the compaction crash window: control tables written,
-    # manifest NOT flipped
-    all_chunks = spark.read.parquet(chunks_path(idx_dir)).unionByName(
-        read_delta_postings(spark, idx_dir).drop("epoch")
-    )
-    metrics = all_chunks.filter(F.col("term_id") == METRICS_TERM_ID)
-    _refresh_control_tables(spark, idx_dir, metrics, "crashed-snap")
-
-    idx = load_index(spark, idx_dir)
-    assert idx["corpus_stats"].first().n_docs == 200  # still the OLD stats
-    assert idx["manifest"]["n_docs"] == 200
-
-    # the real compaction flips manifest + control tables together and
-    # cleans up the superseded dirs
     res = compact_index(spark, idx_dir, n_shards=2)
     assert res["n_docs"] == 250
     m = read_manifest(idx_dir)
-    assert m["ledger_dir"].startswith("ledger-compact-")
-    assert not os.path.exists(os.path.join(idx_dir, "ledger"))
-    assert not os.path.exists(os.path.join(idx_dir, "corpus_stats"))
-    idx2 = load_index(spark, idx_dir)
-    assert idx2["corpus_stats"].first().n_docs == 250
-    assert idx2["ledger"].count() > 0
+    assert "ledger_dir" not in m
+    assert not [e for e in os.listdir(idx_dir)
+                if e.startswith(("ledger", "corpus_stats"))]
+    assert load_index(spark, idx_dir)["manifest"]["n_docs"] == 250
 
 
 def test_serving_cache_revalidates_on_snapshot_flip(spark, tmp_root):
@@ -922,28 +889,22 @@ def test_maintenance_leaves_only_referenced_artifacts(spark, tmp_root):
     """One reclaim rule for minor, major and GC: with retention off,
     after every step each top-level artifact dir is one the live
     manifest references, and the leftovers of a compaction that crashed
-    before its manifest flip (a ledger, an unflipped tier and chunk
-    store) are freed by the next minor compaction. With keep-2
-    retention, a dir only the previous snapshot references survives
-    one commit and is freed at the commit that drops that snapshot
-    from the window. No corpus_stats dir is ever written: the manifest
-    holds the corpus stats."""
-    from ela_lib_spark.index.build import (
-        METRICS_TERM_ID,
-        chunks_path,
-        read_manifest,
-    )
+    before its manifest flip (an unflipped tier and chunk store) are
+    freed by the next minor compaction. With keep-2 retention, a dir
+    only the previous snapshot references survives one commit and is
+    freed at the commit that drops that snapshot from the window. No
+    ledger or corpus_stats dir is ever written: the manifest holds the
+    corpus stats."""
+    from ela_lib_spark.index.build import read_manifest
     from ela_lib_spark.streaming.incremental import (
-        _refresh_control_tables,
         gc_index,
-        read_delta_postings,
         set_snapshot_retention,
     )
 
     def unreferenced():
         m = read_manifest(idx_dir)
         refs = {m.get(f) for f in ("postings_dir", "chunks_dir", "docs_dir",
-                                   "delta_doc_stats_dir", "ledger_dir")}
+                                   "delta_doc_stats_dir")}
         refs |= {t["postings_dir"] for t in m.get("tiers", [])}
         refs.add("delta_doc_stats")  # the live ingest dir
         return sorted(e for e in os.listdir(idx_dir)
@@ -961,15 +922,9 @@ def test_maintenance_leaves_only_referenced_artifacts(spark, tmp_root):
                       n_buckets=4, mode="upsert")
     assert unreferenced() == []
 
-    metrics = spark.read.parquet(chunks_path(idx_dir)).unionByName(
-        read_delta_postings(spark, idx_dir).drop("epoch")
-    ).filter(F.col("term_id") == METRICS_TERM_ID)
-    _refresh_control_tables(spark, idx_dir, metrics, "crashed-snap")
-    assert unreferenced() == ["ledger-crashed-snap"]
     for leftover in ("postings-t9", "chunks-g9"):
         os.makedirs(os.path.join(idx_dir, leftover, "is_m=0"))
-    assert unreferenced() == ["chunks-g9", "ledger-crashed-snap",
-                              "postings-t9"]
+    assert unreferenced() == ["chunks-g9", "postings-t9"]
 
     assert compact_index(spark, idx_dir, n_shards=2,
                          mode="minor")["mode"] == "minor"
@@ -981,8 +936,7 @@ def test_maintenance_leaves_only_referenced_artifacts(spark, tmp_root):
     assert unreferenced() == []
 
     def own_dirs():
-        m = read_manifest(idx_dir)
-        return sorted([m["ledger_dir"], m["postings_dir"]])
+        return [read_manifest(idx_dir)["postings_dir"]]
 
     set_snapshot_retention(idx_dir, keep_last=2)
     gc_dirs = own_dirs()

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ela_lib_spark.functions.xxh import spark_xxhash64
-from ela_lib_spark.index.build import METRICS_TERM_ID
+from ela_lib_spark.index.build import METRICS_TERM_ID, chunks_path, done_buckets
 from ela_lib_spark.index.codecs import decode_block
 from ela_lib_spark.oracle.brute import brute_topk
 from ela_lib_spark.errors import FlatCorpusError
@@ -72,14 +72,20 @@ def test_postings_decode_matches_truth(index, corpus_tokens):
     assert got == truth
 
 
-def test_ledger_covers_all_buckets(index):
+def test_ledger_covers_all_buckets(spark, index):
+    """The chunk store's per-bucket metrics rows (the resume set and the
+    source of the corpus stats) count every doc, and only there."""
     from tests.conftest import N_BUCKETS
 
-    ledger = index["ledger"]
-    rows = ledger.collect()
-    assert {r.status for r in rows} == {"done"}
+    rows = (
+        spark.read.parquet(chunks_path(index["dir"]))
+        .filter((F.col("is_m") == 1) & (F.col("term_id") == METRICS_TERM_ID))
+        .groupBy("part_id").agg(F.sum("n_docs").alias("n_docs"))
+        .collect()
+    )
     assert sum(r.n_docs for r in rows) == N_TEST_DOCS
     assert len(rows) <= N_BUCKETS
+    assert done_buckets(spark, index["dir"]) == {r.part_id for r in rows}
     assert index["postings"].filter(F.col("term_id") == METRICS_TERM_ID).count() == 0
 
 

@@ -97,7 +97,7 @@ def test_exact_dedup_no_full_row_shuffle(spark, pages_path):
 
 
 def test_metrics_sidecar_partition_pruning(spark, index_dir):
-    """The ledger/resume scan must touch only the is_m=1 sidecar
+    """The stats/resume scan must touch only the is_m=1 sidecar
     partition — at 10^12 docs the posting partition is ~500 TB and the
     sidecar is megabytes."""
     import os

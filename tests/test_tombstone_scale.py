@@ -86,12 +86,14 @@ def test_unpinned_queries_past_driver_cap_persist_nothing(spark, tmp_root,
     idx_dir = _mk_index_with_tombstones(spark, tmp_root, "tscale_leak_idx")
     monkeypatch.setattr(build, "TOMBSTONE_DRIVER_CAP", 5)
     jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+    # compare id sets, not sizes: the cleaner may drop an RDD an
+    # earlier test left persisted while this loop runs
+    before = set(jsc.getPersistentRDDs())
     for _ in range(10):
         idx = load_index(spark, idx_dir)
         assert idx["deleted_df"] is not None
         assert wand_topk(idx, ["zztombver"], "OR", 10).count() == 10
-    assert jsc.getPersistentRDDs().size() == before
+    assert set(jsc.getPersistentRDDs()) <= before
 
 
 def test_gc_cogroup_rewrite_identical_past_driver_cap(spark, tmp_root,
@@ -112,8 +114,8 @@ def test_gc_cogroup_rewrite_identical_past_driver_cap(spark, tmp_root,
     assert ra == rb
     assert len(ra[("zztombver", "OR", None)]) == 50
     # post-GC corpus stats agree between the paths
-    assert ia["corpus_stats"].first() == ib["corpus_stats"].first()
-    assert ia["ledger"].count() == ib["ledger"].count()
+    ma, mb = ia["manifest"], ib["manifest"]
+    assert (ma["n_docs"], ma["avg_dl"]) == (mb["n_docs"], mb["avg_dl"])
 
 
 def test_auto_compact_escalates_at_absolute_cap(spark, tmp_root, monkeypatch):

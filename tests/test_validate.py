@@ -62,20 +62,37 @@ def test_validate_catches_corruptions(spark, tmp_root):
     assert not res["ok"] and not res["checks"]["manifest"]["ok"]
     assert "postings_dir" in res["checks"]["manifest"]["detail"]
 
-    # a) manifest/ledger contradiction, in either corpus stat
     m["postings_dir"] = good_postings
-    for key, bad in (("n_docs", 999), ("avg_dl", m["avg_dl"] + 1.0)):
-        good, m[key] = m[key], bad
-        m["snapshot_id"] = f"val-test-snap-1-{key}"
-        write_manifest(idx_dir, m)
-        res = validate_index(spark, idx_dir)
-        assert not res["ok"]
-        assert not res["checks"]["ledger_vs_manifest"]["ok"], key
-        m[key] = good
-    m["snapshot_id"] = "val-test-snap-2"
+    m["snapshot_id"] = "val-test-snap-1"
     write_manifest(idx_dir, m)
-    assert validate_index(spark, idx_dir)["checks"][
-        "ledger_vs_manifest"]["ok"]
+
+    # a) manifest/doc-dictionary contradiction, in either corpus stat —
+    # also on an index holding an uncompacted upsert epoch, where
+    # doc_stats_count skips and only the corpus_stats check looks
+    pend_dir = os.path.join(tmp_root, "val_bad_pending_idx")
+    pages = synth_pages_df(spark, 150)
+    build_index(spark, pages, pend_dir, n_buckets=4, n_shards=2)
+    changed = pages.limit(20).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" zzval")))
+    apply_delta_batch(changed, 0, pend_dir, n_buckets=4, mode="upsert")
+    res = validate_index(spark, pend_dir)
+    assert res["ok"], res
+    assert "uncompacted" in res["checks"]["doc_stats_count"]["detail"]
+    for d in (idx_dir, pend_dir):
+        m = read_manifest(d)
+        for key, bad in (("n_docs", m["n_docs"] + 1),
+                         ("avg_dl", m["avg_dl"] + 1.0)):
+            good, m[key] = m[key], bad
+            m["snapshot_id"] = f"val-test-snap-2-{key}"
+            write_manifest(d, m)
+            res = validate_index(spark, d)
+            assert not res["ok"]
+            assert not res["checks"]["corpus_stats"]["ok"], (d, key)
+            m[key] = good
+        m["snapshot_id"] = "val-test-snap-3"
+        write_manifest(d, m)
+        res = validate_index(spark, d)
+        assert res["ok"], res
 
     # b) dangling tombstone (a committed delete log referencing an
     # unknown doc)
@@ -145,7 +162,7 @@ def test_validate_reports_unreadable_dataset(spark, tmp_root):
     idx_dir = os.path.join(tmp_root, "val_unreadable_idx")
     build_index(spark, synth_pages_df(spark, 80), idx_dir,
                 n_buckets=4, n_shards=2)
-    for f in glob.glob(os.path.join(idx_dir, "ledger", "*.parquet")):
+    for f in glob.glob(os.path.join(idx_dir, "docs", "*.parquet")):
         with open(f, "wb") as fh:
             fh.write(b"not a parquet file")
         crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
